@@ -161,28 +161,6 @@ def main() -> None:
     # is the remainder.  Informational only: every gate stays on totals.
     sections: dict[str, dict[str, float]] = {}
 
-    release_off = os.environ.get(
-        "SPARK_GRAFT_BENCH_NO_RELEASE", ""
-    ).strip().lower() in ("1", "true", "yes", "on")
-
-    def release_leaked_blocks() -> None:
-        if release_off:
-            return
-        # r14 (inter-query hygiene, OUTSIDE the timed region): queries
-        # that localCheckpoint multi-consumer intermediates leave their
-        # materialized RDD blocks pinned in the shared session
-        # (~dozens per index/dedup entry).  Across 70+ queries the
-        # accumulation degrades LATER queries (measured: end-of-session
-        # gate re-runs 3-8x their in-loop time).  Dropping finished
-        # queries' blocks between timings frees memory without reusing
-        # anything — every query still computes from the parquet inputs.
-        try:
-            jrdds = spark.sparkContext._jsc.getPersistentRDDs()
-            for jrdd in jrdds.values():
-                jrdd.rdd().unpersist(False)
-        except Exception:
-            pass
-
     def run_once(name: str) -> float:
         fn = catalog.ALL_QUERIES[name]
         catalog.SECTION_TIMES.pop(name, None)
@@ -195,7 +173,6 @@ def main() -> None:
                 "build": round(sec["build"], 3),
                 "probe": round(max(dt - sec["build"], 0.0), 3),
             }
-        release_leaked_blocks()
         return dt
 
     times: dict[str, float] = {}

@@ -1,47 +1,48 @@
-"""Engine-owned lifecycle for ``localCheckpoint`` blocks (r15; r14 VERDICT
-"Next round" #5).
+"""Engine-owned lifecycle for what a catalog query leaves behind.
 
-``localCheckpoint`` pins its materialized RDD blocks in the session's
-storage memory until someone unpersists them.  The query paths declare
-checkpoints for multi-consumer intermediates (dedup signature passes, IVF
-routing, crawl-loop state, CC label rounds); in a long-lived session those
-blocks accumulated without bound — measured in r14 as end-of-session
-re-runs degrading to 3-8x their in-loop time, worked around by a bench-side
-scrub (``bench.py:release_leaked_blocks``).  This module moves ownership
-into the engine:
+A catalog query can leave two kinds of session state behind it:
+``localCheckpoint`` blocks pinned in storage memory (dedup signature passes,
+IVF routing, crawl-loop state, CC label rounds) and scratch dirs made by
+``catalog._rt_tmpdir`` (round-trip sinks, index files, stream checkpoints).
+Both must outlive the builder, because the returned DataFrame is lazy and its
+consumer evaluates it after the builder returns.  Neither may outlive the
+next query, or a long-lived session piles them up.
 
-- :func:`checkpoint` — ``df.localCheckpoint(eager=...)`` plus registration
-  of the checkpointed RDD in the ACTIVE QUERY SCOPE.  With no scope active
-  (direct library use, streaming state that manages its own lineage) it
-  degrades to a bare ``localCheckpoint``.
-- :func:`query_scope` — every ``catalog.ALL_QUERIES`` entry runs inside
-  one.  Entering a new TOP-LEVEL scope first releases every block left by
-  previously finished scopes: by the time the next query is being built,
-  the previous query's consumer (its write/collect) has finished.  Nested
-  builders (suite entries composing other entries) share the outer scope.
-- :func:`release` — immediate targeted release for a checkpoint that is
-  fully consumed INSIDE a builder (a collected edge list, a superseded
-  iteration state, a frame whose derived result was itself materialized).
-  This is the piece that bounds memory WITHIN one query: iterative
-  algorithms release round N-1's blocks as soon as round N's checkpoint
-  is materialized.
+:func:`query_scope` owns both.  ``catalog.ALL_QUERIES`` runs every entry in
+one, so ``catalog.QUERIES`` and ``__spark_entry__.queries()`` do too.  No
+call site registers its checkpoints:
 
-Contract: a DataFrame returned by a catalog query stays valid until the
-next catalog query is BUILT — the stage-materialize posture the Pipeline
-orchestrator already imposes (each stage's output is consumed before the
-next stage starts).  For interleaved multi-query consumption set
-``SPARK_GRAFT_KEEP_BLOCKS=1``: checkpoints stay pinned for the session
-and the caller owns cleanup (the pre-r15 behavior).
+- blocks: the scope reads the ids of ``getPersistentRDDs()`` at entry and at
+  exit; the RDDs that appeared in between belong to the query.  A lazy
+  ``localCheckpoint`` is persistent from the moment it is declared, so lazy
+  and eager checkpoints are both caught.
+- scratch dirs: :func:`own_dir` records a dir in the open scope.
+
+Entering the next top-level scope unpersists (async) and deletes what earlier
+scopes recorded.  Nested scopes (a suite building its parts) share the outer
+one.  Anything made outside a scope, such as a direct library call or a
+serving client's persisted index, is never touched.
+
+Contract: a DataFrame returned by a catalog query is valid until the next
+catalog query is built; consume it (collect or write) first.  With
+``SPARK_GRAFT_KEEP_BLOCKS=1`` entering a scope releases nothing: blocks and
+scratch dirs stay until the caller runs :func:`release_pending`.
+:func:`release` unpersists one checkpoint a builder has fully consumed (a
+no-op under the same switch).
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 from contextlib import contextmanager
 
+from pyspark import SparkContext
 from pyspark.sql import DataFrame
 
-__all__ = ["checkpoint", "release", "query_scope", "release_pending"]
+__all__ = [
+    "checkpoint", "release", "query_scope", "release_pending", "own_dir",
+]
 
 
 def _keep_blocks() -> bool:
@@ -53,10 +54,24 @@ def _keep_blocks() -> bool:
     )
 
 
-# JVM RDD handles (not DataFrames: holding the py4j RDD object keeps release
-# independent of the DataFrame's lifetime and costs one py4j call to drop).
-_scope: list | None = None  # collecting while a top-level query builds
-_pending: list = []  # finished scopes' RDDs, released at the next entry
+# (persistent RDD ids at entry, scratch dirs) of the open top-level scope
+_open: tuple[set[int], list[str]] | None = None
+# finished scopes' leftovers, released when the next scope is entered; the
+# RDDs are JVM handles, so a release never hits a later context's reused id
+_pending_rdds: list = []
+_pending_dirs: list[str] = []
+
+
+def _persistent_rdds():
+    """The active context's ``{id: JavaRDD}`` map, or None without one."""
+    sc = SparkContext._active_spark_context
+    return None if sc is None else sc._jsc.getPersistentRDDs()
+
+
+def _ids(rdds) -> set[int]:
+    # "[3, 7]" from the JVM in one py4j call, not one per key
+    text = rdds.keySet().toString().strip("[]") if rdds is not None else ""
+    return {int(k) for k in text.split(",") if k.strip()}
 
 
 def _ckpt_jrdd(df: DataFrame):
@@ -64,8 +79,8 @@ def _ckpt_jrdd(df: DataFrame):
 
     ``Dataset.localCheckpoint`` (eager or lazy) returns a Dataset over a
     ``LogicalRDD`` wrapping the internal RDD it marked persistent; that RDD
-    is exactly what ``unpersist`` must hit.  Defensive: any plan shape that
-    isn't a plain LogicalRDD yields None (caller skips registration).
+    is exactly what ``unpersist`` must hit.  Any other plan shape yields
+    None.
     """
     try:
         plan = df._jdf.queryExecution().analyzed()
@@ -77,13 +92,8 @@ def _ckpt_jrdd(df: DataFrame):
 
 
 def checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
-    """``df.localCheckpoint(eager=eager)`` with scope-registered blocks."""
-    out = df.localCheckpoint(eager=eager)
-    if _scope is not None and not _keep_blocks():
-        jrdd = _ckpt_jrdd(out)
-        if jrdd is not None:
-            _scope.append(jrdd)
-    return out
+    """``df.localCheckpoint(eager=eager)``; an open scope owns its blocks."""
+    return df.localCheckpoint(eager=eager)
 
 
 def release(df: DataFrame | None) -> None:
@@ -91,8 +101,7 @@ def release(df: DataFrame | None) -> None:
 
     For intermediates fully consumed inside a builder: the caller asserts
     nothing will evaluate ``df`` again.  No-op on None, non-checkpoint
-    frames, and under ``SPARK_GRAFT_KEEP_BLOCKS=1`` (so an A/B of the
-    lifecycle can hold everything pinned).
+    frames, and under ``SPARK_GRAFT_KEEP_BLOCKS=1``.
     """
     if df is None or _keep_blocks():
         return
@@ -104,35 +113,47 @@ def release(df: DataFrame | None) -> None:
             pass
 
 
+def own_dir(path: str) -> str:
+    """Record scratch dir ``path`` in the open scope; returns ``path``."""
+    if _open is not None:
+        _open[1].append(path)
+    return path
+
+
 def release_pending() -> None:
-    """Release every block left by already-finished query scopes."""
-    global _pending
-    stale, _pending = _pending, []
-    for jrdd in stale:
+    """Release every block and scratch dir left by finished query scopes."""
+    global _pending_rdds, _pending_dirs
+    rdds, dirs = _pending_rdds, _pending_dirs
+    _pending_rdds, _pending_dirs = [], []
+    for jrdd in rdds:
         try:
             jrdd.unpersist(False)
-        except Exception:
+        except Exception:  # its context is gone
             pass
+    for path in dirs:
+        shutil.rmtree(path, ignore_errors=True)
 
 
 @contextmanager
 def query_scope():
-    """Scope one top-level catalog query's checkpoint blocks.
+    """Own everything one top-level catalog query leaves behind.
 
-    Entering a NEW top-level scope releases previous scopes' blocks
-    (their consumers have finished — catalog queries are consumed before
-    the next one is built).  Nested entries inherit the outer scope, so a
-    suite's sub-builders register into the suite's scope.
+    Entering a new top-level scope first releases what earlier scopes left
+    (their results were consumed before this query is built).  Nested
+    scopes share the outer one.
     """
-    global _scope, _pending
-    if _scope is not None:  # nested builder: share the outer scope
+    global _open
+    if _open is not None:
         yield
         return
     if not _keep_blocks():
         release_pending()
-    _scope = []
+    _open = (_ids(_persistent_rdds()), [])
     try:
         yield
     finally:
-        _pending.extend(_scope)
-        _scope = None
+        before, dirs = _open
+        _open = None
+        rdds = _persistent_rdds()
+        _pending_rdds.extend(rdds.get(i) for i in _ids(rdds) - before)
+        _pending_dirs.extend(dirs)

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from . import blocks
 from .local_rel import local_rows_df as _local_rows
 from .expressions import (
     compile_ssis_expression,
@@ -2069,10 +2070,12 @@ def _record_build(entry: str, seconds: float) -> None:
 def _rt_tmpdir(name: str) -> str:
     """Fresh per-call scratch dir.  NOT cleaned up inside the query function:
     the returned DataFrame is lazy and the driver collects it after we
-    return, so the files must outlive the call (tmpfs reaps them)."""
+    return, so the files must outlive the call.  An open query scope owns
+    the dir and deletes it when the next catalog query is built; outside
+    one, the caller owns it."""
     import tempfile
 
-    return tempfile.mkdtemp(prefix=f"ssis_rt_{name}_")
+    return blocks.own_dir(tempfile.mkdtemp(prefix=f"ssis_rt_{name}_"))
 
 
 def q_roundtrip_append(spark, sf_dir):
@@ -10627,6 +10630,13 @@ ALL_QUERIES = {
     "semantic_decontam_embeddings": q_semantic_decontam_embeddings,
     "semantic_decontam_ivf": q_semantic_decontam_ivf,
     "shuffle_shards_docs": q_shuffle_shards_docs,
+}
+
+# Every entry runs in its own query scope (``query_scope()`` is a context
+# decorator): its checkpoint blocks and scratch dirs are released when the
+# next catalog query is built.
+ALL_QUERIES = {
+    name: blocks.query_scope()(fn) for name, fn in ALL_QUERIES.items()
 }
 
 ALL_ORACLES = {

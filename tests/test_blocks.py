@@ -117,3 +117,29 @@ class TestCatalogScope:
         df2 = catalog.ALL_QUERIES["exact_dedup_docs"](spark, self.SF)
         assert _persistent_ids(spark).isdisjoint(leaked)
         df2.write.format("noop").mode("overwrite").save()
+
+    def test_catalog_scratch_dirs_reaped_at_next_query(self, spark):
+        import glob
+        import os
+        import shutil
+        import tempfile
+
+        from ssis_to_dbt_spark import catalog
+
+        pattern = os.path.join(tempfile.gettempdir(), "ssis_rt_append_*")
+        before = set(glob.glob(pattern))
+        df = catalog.ALL_QUERIES["roundtrip_append"](spark, self.SF)
+        assert df.count() > 0
+        (made,) = set(glob.glob(pattern)) - before
+        assert os.path.isdir(made)  # the consumer above still needed it
+
+        # building the next catalog query reaps the previous one's dir
+        catalog.ALL_QUERIES["stg_sales_transactions"](spark, self.SF)
+        assert not os.path.exists(made)
+
+        # a direct call outside any scope leaves its dir to the caller
+        assert catalog.q_roundtrip_append(spark, self.SF).count() > 0
+        (direct,) = set(glob.glob(pattern)) - before
+        catalog.ALL_QUERIES["stg_sales_transactions"](spark, self.SF)
+        assert os.path.isdir(direct)
+        shutil.rmtree(direct)
