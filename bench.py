@@ -155,25 +155,11 @@ def main() -> None:
         lambda pdf: pdf, "id long"
     ).collect()
 
-    # r14 (r13 VERDICT #8): build/probe split for the entries that
-    # construct a persisted index inside the timed body — the entry
-    # records its build wall in catalog.SECTION_TIMES; the probe share
-    # is the remainder.  Informational only: every gate stays on totals.
-    sections: dict[str, dict[str, float]] = {}
-
     def run_once(name: str) -> float:
         fn = catalog.ALL_QUERIES[name]
-        catalog.SECTION_TIMES.pop(name, None)
         t0 = time.time()
         fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        dt = time.time() - t0
-        sec = catalog.SECTION_TIMES.pop(name, None)
-        if sec and "build" in sec:
-            sections[name] = {
-                "build": round(sec["build"], 3),
-                "probe": round(max(dt - sec["build"], 0.0), 3),
-            }
-        return dt
+        return time.time() - t0
 
     times: dict[str, float] = {}
     for name in HEADLINE:
@@ -253,8 +239,7 @@ def main() -> None:
          "queries": times, "core20_wall_sec": core20,
          "regressions": regressions, "sf": sf,
          "ratio_vs_anchor": ratio_vs_anchor,
-         "ratio_vs_rolling": ratio_vs_rolling,
-         "sections": sections},
+         "ratio_vs_rolling": ratio_vs_rolling},
         separators=(",", ":"),
     ))
     # r15 (r14 VERDICT #2): the FINAL line — the only one guaranteed to

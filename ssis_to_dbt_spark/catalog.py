@@ -2054,19 +2054,6 @@ FROM orders
 # ---------------------------------------------------------------------------
 
 
-# r14 (r13 VERDICT "What's wrong" #2 / Next #8): entries that BUILD a
-# persisted index inside the timed query body record the build's wall
-# here, keyed by entry name.  bench.py reads (and clears) this after
-# each timed run and reports {build, probe} alongside the total, so a
-# probe regression can't hide behind build noise.  Gates stay on totals.
-SECTION_TIMES: dict[str, dict[str, float]] = {}
-
-
-def _record_build(entry: str, seconds: float) -> None:
-    sec = SECTION_TIMES.setdefault(entry, {})
-    sec["build"] = round(sec.get("build", 0.0) + seconds, 3)
-
-
 def _rt_tmpdir(name: str) -> str:
     """Fresh per-call scratch dir.  NOT cleaned up inside the query function:
     the returned DataFrame is lazy and the driver collects it after we
@@ -5394,15 +5381,11 @@ def q_ivf_index_probe(spark, sf_dir):
     )
 
     emb = _t(spark, sf_dir)["embeddings"]
-    import time as _time
-
     base = emb.filter(F.col("vec_id") % 7 != 0)
     delta = emb.filter(F.col("vec_id") % 7 == 0)
     path = _rt_tmpdir("ivf_index")
-    _t0 = _time.time()
     idx0 = write_ivf_index(base, path, n_cells=8)
     idx = append_ivf_index(spark, path, delta, index=idx0)
-    _record_build("ivf_index_probe", _time.time() - _t0)
     queries = emb.filter(F.col("vec_id") % 50 == 0).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
@@ -5476,15 +5459,11 @@ def q_ivf_recall_audit(spark, sf_dir):
     probes, and hit counts for all three nprobe arms from the same
     centroid construction.  The nprobe=8 arm doubles as the sanity
     bound: n_hits = k for every query."""
-    import time as _time
-
     from .text.similarity import ivf_recall_at_k, write_ivf_index
 
     emb = _t(spark, sf_dir)["embeddings"]
     path = _rt_tmpdir("ivf_recall")
-    _t0 = _time.time()
     idx = write_ivf_index(emb, path, n_cells=8)
-    _record_build("ivf_recall_audit", _time.time() - _t0)
     queries = emb.filter(F.col("vec_id") % 50 == 0).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
@@ -6077,20 +6056,14 @@ def q_hybrid_rrf_indexed(spark, sf_dir):
 
     docs = _t(spark, sf_dir)["documents"]
     emb = _t(spark, sf_dir)["embeddings"]
-    import time as _time
-
     path = _rt_tmpdir("hybrid_idx")
     prefix = "bm25h_" + _os.path.basename(path).rsplit("_", 1)[-1]
     try:
-        _t0 = _time.time()
         bidx = write_bm25_index(docs, prefix, f"{path}/t")
-        _record_build("hybrid_rrf_indexed", _time.time() - _t0)
         bm = bm25_index_probe(bidx, _BM25_QUERIES, top_k=10).select(
             "query_id", "doc_id", "rn"
         )
-        _t0 = _time.time()
         iidx = write_ivf_index(emb, f"{path}/ivf", n_cells=8)
-        _record_build("hybrid_rrf_indexed", _time.time() - _t0)
         qv = emb.filter(F.col("vec_id").isin([0, 50, 100])).select(
             F.when(F.col("vec_id") == 0, F.lit("q_hash_join"))
             .when(F.col("vec_id") == 50, F.lit("q_scan_batch"))
@@ -7409,14 +7382,10 @@ def q_image_phash_index(spark, sf_dir):
     fp = image_phash(media, method="dhash").localCheckpoint(eager=False)
     b1 = fp.filter(F.col("media_id") % 60 == 0)
     b2 = fp.filter(F.col("media_id") % 60 == 30)
-    import time as _time
-
     path = _rt_tmpdir("phash_index")
     prefix = "phidx_" + _os.path.basename(path).rsplit("_", 1)[-1]
     try:
-        _t0 = _time.time()
         write_phash_index(b1, prefix, f"{path}/t")
-        _record_build("image_phash_index", _time.time() - _t0)
         res = ingest_media_batch(spark, b2, prefix, batch_id=1)
         out = _union_all([
             res.kept.select(
@@ -9313,8 +9282,6 @@ def q_dtsx_packages(spark, sf_dir):
     )
     return _union_all([sales, cdl, inv, invf, rt, cdlm, cdlt, sagg])
 
-
-_NULL_TS = "CAST(NULL AS TIMESTAMP)"
 
 SQL_DTSX_PACKAGES = f"""
 SELECT 'sales_fact' AS component, CAST(sale_id AS BIGINT) AS id,

@@ -1,10 +1,9 @@
 """Engine-owned localCheckpoint block lifecycle (r15; r14 VERDICT #5).
 
-The bench-side scrub in bench.py stays as belt-and-braces; these tests pin
-the ENGINE's own behavior: a catalog query's checkpoint blocks are released
-when the next top-level query is built, nested builders share the outer
-scope, in-builder supersession releases eagerly, and the
-SPARK_GRAFT_KEEP_BLOCKS escape hatch keeps everything pinned.
+These tests pin the ENGINE's own behavior: a catalog query's checkpoint
+blocks are released when the next top-level query is built, nested
+builders share the outer scope, in-builder supersession releases eagerly,
+and the SPARK_GRAFT_KEEP_BLOCKS escape hatch keeps everything pinned.
 """
 
 from __future__ import annotations

@@ -3798,9 +3798,11 @@ class TestIndexSkewLifecycle:
     def test_ivf_recall_audit_dial(self, spark, tmp_path):
         """r13 (r12 VERDICT #7): ivf_recall_at_k — exact arm recovers
         everything (n_hits = k at nprobe = n_cells), per-query hit
-        counts are monotone in nprobe, and every query appears in every
-        arm (zero-hit queries included)."""
+        counts are monotone in nprobe, every query appears in every arm
+        (zero-hit queries included), and each count equals the overlap
+        of that arm's ivf_probe_batch top-k with the exact arm's."""
         from ssis_to_dbt_spark.text.similarity import (
+            ivf_probe_batch,
             ivf_recall_at_k,
             write_ivf_index,
         )
@@ -3826,6 +3828,21 @@ class TestIndexSkewLifecycle:
         # monotone per query: more probed cells never lose neighbors
         for qid in by_np[1]:
             assert by_np[1][qid] <= by_np[2][qid] <= by_np[8][qid]
+
+        # values: each (nprobe, query)'s n_hits is the overlap of that
+        # arm's top-k ids with the exact (nprobe = n_cells) top-k ids
+        def topk_ids(nprobe):
+            ids = {}
+            for r in ivf_probe_batch(idx, q, k=5, nprobe=nprobe).collect():
+                ids.setdefault(r["query_id"], set()).add(r["vec_id"])
+            return ids
+
+        probed = {np_: topk_ids(np_) for np_ in (1, 2, 8)}
+        for np_, hits in by_np.items():
+            for qid, n_hits in hits.items():
+                assert n_hits == len(
+                    probed[np_].get(qid, set()) & probed[8][qid]
+                )
 
     def test_maintain_ivf_index_three_branches(self, spark, tmp_path):
         """r13: the executable audit->recall->recluster cycle.
@@ -4029,6 +4046,57 @@ class TestIndexEdgeCases:
         # at most the probed cell's population; rn stays dense from 1
         assert 0 < len(r) <= 6
         assert sorted(x["rn"] for x in r) == list(range(1, len(r) + 1))
+
+    @pytest.mark.parametrize(
+        "probe",
+        [
+            pytest.param(
+                lambda s, idx, q: s.ivf_probe_batch(idx, q, nprobe=0),
+                id="probe_zero",
+            ),
+            pytest.param(
+                lambda s, idx, q: s.ivf_probe_batch(idx, q, nprobe=-1),
+                id="probe_negative",
+            ),
+            pytest.param(
+                lambda s, idx, q: s.ivf_probe_batch_arms(idx, q, nprobes=()),
+                id="arms_empty",
+            ),
+            pytest.param(
+                lambda s, idx, q: s.ivf_probe_batch_arms(
+                    idx, q, nprobes=(2, -1)
+                ),
+                id="arms_negative",
+            ),
+            pytest.param(
+                lambda s, idx, q: s.ivf_recall_at_k(idx, q, nprobes=()),
+                id="recall_empty",
+            ),
+            pytest.param(
+                lambda s, idx, q: s.semantic_decontam_indexed(
+                    q.withColumnRenamed("query_id", "vec_id"), idx,
+                    nprobe=0,
+                ),
+                id="decontam_zero",
+            ),
+        ],
+    )
+    def test_ivf_probe_rejects_bad_nprobe(self, spark, probe):
+        """Every IVF probe entry point rejects nprobe < 1 and an empty
+        arm set when the probe is built, before any Spark job runs."""
+        from ssis_to_dbt_spark.text import similarity
+        from ssis_to_dbt_spark.text.similarity import IvfIndex
+
+        vecs = spark.createDataFrame(
+            [(0, 0, [1.0, 0.0]), (1, 1, [0.0, 1.0])],
+            "cell int, vec_id long, embedding array<double>",
+        )
+        idx = IvfIndex(
+            centroids=[(0, [1.0, 0.0]), (1, [0.0, 1.0])], assign=vecs
+        )
+        q = vecs.select(F.col("vec_id").alias("query_id"), "embedding")
+        with pytest.raises(ValueError, match="nprobe"):
+            probe(similarity, idx, q)
 
     def test_nearest_reference_empty_ref_yields_empty(self, spark):
         from ssis_to_dbt_spark.text.similarity import nearest_reference

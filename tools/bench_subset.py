@@ -77,16 +77,12 @@ def main() -> None:
                 fh.write(plan)
         ts = []
         for _ in range(reps):
-            catalog.SECTION_TIMES.pop(name, None)
             spark.sparkContext.setJobDescription(f"bench_subset:{name}")
             t0 = time.time()
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             ts.append(round(time.time() - t0, 3))
             spark.sparkContext.setJobDescription(None)
-        sec = catalog.SECTION_TIMES.pop(name, None)
         rec = {"reps": ts, "median": sorted(ts)[len(ts) // 2]}
-        if sec:
-            rec["sections"] = {k: round(v, 3) for k, v in sec.items()}
         results[name] = rec
         print(json.dumps({name: rec}), flush=True)
     print(json.dumps({"all": results, "sf_dir": sf_dir}))

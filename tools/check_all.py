@@ -32,7 +32,10 @@ def main():
     if "--json" in args:
         i = args.index("--json")
         if i + 1 >= len(args):
-            print("usage: check_all.py [sf_dir] [--json OUT]", file=sys.stderr)
+            print(
+                "usage: check_all.py [sf_dir] [--json OUT] [--only n1,n2,...]",
+                file=sys.stderr,
+            )
             sys.exit(2)
         json_out = args[i + 1]
         del args[i : i + 2]
