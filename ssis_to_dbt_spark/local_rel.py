@@ -6,7 +6,8 @@ round-trip per slice (~32 of them for a 3-row table on local[32]) plus
 pickling.  For the bounded, model-sized tables the engine embeds in query
 plans (query-term lists, arm tables, centroid rows, literal fixtures) the
 same relation renders as a literal ``inline(array(named_struct(...)))``
-projection over ``spark.range(1)`` — a pure-JVM LocalRelation: one task,
+over the one-row relation — pure JVM and ONE partition (so one task
+wherever it is scanned or broadcast, whatever the default parallelism),
 no Python workers, no shuffle, and the optimizer sees foldable literals.
 
 Only for BOUNDED model-sized inputs (the same contract as a broadcast
@@ -56,12 +57,12 @@ def local_rows_df(spark, rows, schema: str) -> DataFrame:
         name, typ = part.strip().split(None, 1)
         cols.append((name, typ))
     if not rows:
-        return spark.range(0).selectExpr(
-            *[
-                f"CAST(NULL AS {'BIGINT' if t.strip().lower() == 'long' else t}) AS `{n}`"
-                for n, t in cols
-            ]
+        nulls = ", ".join(
+            f"CAST(NULL AS {'BIGINT' if t.strip().lower() == 'long' else t})"
+            f" AS `{n}`"
+            for n, t in cols
         )
+        return spark.sql(f"SELECT {nulls} WHERE false")
     structs = ", ".join(
         "named_struct("
         + ", ".join(
@@ -71,4 +72,4 @@ def local_rows_df(spark, rows, schema: str) -> DataFrame:
         + ")"
         for row in rows
     )
-    return spark.range(1).selectExpr(f"inline(array({structs}))")
+    return spark.sql(f"SELECT inline(array({structs}))")

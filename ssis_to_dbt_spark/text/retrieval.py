@@ -32,6 +32,12 @@ Spark's parallel partial aggregation and bit-equal across engines whose
   (N, avgdl) reach the score via a broadcast 1-row crossJoin.  Final
   top-k is a per-query WindowGroupLimit (k rows per query cross the
   exchange, not the corpus).
+- BM25 index probe: ONE scan of the query terms' postings buckets.
+  Postings carry the document length, so no doc-length table is read
+  (at 100 TB that join would read the whole doclen table per probe);
+  df_t is a window over the term-bucketed scan (no exchange); corpus
+  scalars are literals held on the index handle.  The only exchanges
+  are the (query, doc) aggregate's and the top-k window's.
 - NB fit: one (label, term) hash agg with map-side combine; the model
   grid is |vocab| x |labels| rows — bounded model state, not data.
 - NB apply: one (doc, term) count agg, one join against the model grid
@@ -47,7 +53,9 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..local_rel import _sql_str, local_rows_df
 from .dedup import _tokens
+from .similarity import _sql_dlit, _sql_ident
 
 _UNIT = 1_000_000
 
@@ -71,8 +79,6 @@ def _query_terms_df(spark, queries: dict[str, list[str]]) -> DataFrame:
     # JVM LocalRelation (r14 perf): the query-term table is request-
     # sized and sits in every probe plan; the Python-slice spread of
     # createDataFrame paid ~one worker round-trip per slice per probe
-    from ..local_rel import local_rows_df
-
     return local_rows_df(
         spark,
         sorted({(q, t) for q, terms in queries.items() for t in terms}),
@@ -80,7 +86,7 @@ def _query_terms_df(spark, queries: dict[str, list[str]]) -> DataFrame:
     )
 
 
-def _bm25_units(k1: float, b: float) -> Column:
+def _bm25_units(k1: float, b: float) -> str:
     """The per-(doc, term) BM25 contribution as exact micro-units, over
     columns ``tf, df_t, dl, n_docs, total_dl``:
 
@@ -88,68 +94,48 @@ def _bm25_units(k1: float, b: float) -> Column:
     with the Lucene-style non-negative idf
         idf(t) = ln(1 + (N - df_t + 0.5) / (df_t + 0.5)).
 
-    ONE expression tree shared by :func:`bm25_topk` and the persisted
-    index probe — the equality of the two paths is structural, not
-    re-derived."""
-    n = F.col("n_docs").cast("double")
-    df_t = F.col("df_t").cast("double")
-    idf = F.log(
-        F.lit(1.0) + (n - df_t + F.lit(0.5)) / (df_t + F.lit(0.5))
-    )
-    avgdl = F.col("total_dl").cast("double") / n
-    tfd = F.col("tf").cast("double")
+    ONE expression shared by :func:`bm25_topk` and the persisted index
+    probe — the equality of the two paths is structural, not
+    re-derived.  SQL text (one ``selectExpr`` argument) rather than a
+    Column chain, which would cost one py4j round trip per operator on
+    every probe; literal doubles render via repr() (shortest round-trip,
+    same bits)."""
+    n = "CAST(n_docs AS DOUBLE)"
+    df_t = "CAST(df_t AS DOUBLE)"
+    idf = f"ln((1.0D + ((({n} - {df_t}) + 0.5D) / ({df_t} + 0.5D))))"
+    avgdl = f"(CAST(total_dl AS DOUBLE) / {n})"
+    tfd = "CAST(tf AS DOUBLE)"
+    k1s = _sql_dlit(k1)
     tfp = (
-        tfd * (F.lit(k1) + 1.0)
-        / (tfd + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * F.col("dl") / avgdl))
+        f"(({tfd} * ({k1s} + 1.0D)) / ({tfd} + ({k1s} * "
+        f"({_sql_dlit(1.0 - b)} + (({_sql_dlit(b)} * dl) / {avgdl})))))"
     )
     return (
-        F.round(idf * tfp, 6).cast(T.DecimalType(18, 6)) * _UNIT
-    ).cast("long")
+        f"CAST((CAST(round(({idf} * {tfp}), 6) AS DECIMAL(18,6)) "
+        f"* {_UNIT}) AS BIGINT)"
+    )
 
 
-def _bm25_rank(
-    tf: DataFrame,
-    dl: DataFrame,
-    scalars: DataFrame,
-    qterms: DataFrame,
-    top_k: int,
-    k1: float,
-    b: float,
-    id_col: str,
+def _bm25_top(
+    per_term: DataFrame, top_k: int, id_col: str
 ) -> DataFrame:
-    """Shared BM25 ranking tail: (doc, term, tf) hits + (doc, dl) lengths
-    + 1-row (n_docs, total_dl) scalars -> per-query top-k.  df_t is
-    derived from the hits themselves (identical to the corpus-wide value
-    for those terms, since hits carry every doc containing them)."""
-    dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df_t"))
-    scored = (
-        tf.join(F.broadcast(dfreq), "term")
-        .join(dl, id_col)
-        .crossJoin(F.broadcast(scalars))
-    )
-    per_term = scored.select(
-        id_col, "term", _bm25_units(k1, b).alias("u")
-    )
-    per_q = (
-        per_term.join(F.broadcast(qterms), "term")
-        .groupBy("query_id", id_col)
-        .agg(
-            F.count(F.lit(1)).alias("n_terms"),
-            F.sum("u").alias("score_units"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score_units").desc(), F.col(id_col)
+    """Shared BM25 ranking tail: one ``(query_id, doc, u)`` row per
+    matched (query, doc, term) -> per-query top-k ``(query_id, doc,
+    n_terms, score_units, rn)``, ties on ascending doc."""
+    idq = _sql_ident(id_col)
+    per_q = per_term.groupBy("query_id", id_col).agg(
+        F.expr("count(1) AS n_terms"), F.expr("sum(u) AS score_units")
     )
     return (
-        per_q.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= top_k)
-        .select(
-            "query_id",
-            id_col,
-            F.col("n_terms").cast("long").alias("n_terms"),
-            "score_units",
-            F.col("rn").cast("int").alias("rn"),
+        per_q.selectExpr(
+            "*",
+            "row_number() OVER (PARTITION BY query_id "
+            f"ORDER BY score_units DESC, {idq}) AS rn",
+        )
+        .filter(f"rn <= {int(top_k)}")
+        .selectExpr(
+            "query_id", idq, "CAST(n_terms AS BIGINT) AS n_terms",
+            "score_units", "CAST(rn AS INT) AS rn",
         )
     )
 
@@ -180,7 +166,7 @@ def bm25_topk(
     For repeated probing without re-tokenizing the corpus, persist the
     postings with :func:`write_bm25_index` and probe via
     :func:`bm25_index_probe` — same scores by construction (shared
-    :func:`_bm25_units` / :func:`_bm25_rank` tail, pytest-pinned).
+    :func:`_bm25_units` / :func:`_bm25_top` tail, pytest-pinned).
     """
     spark = df.sparkSession
     qterms = _query_terms_df(spark, queries)
@@ -197,7 +183,17 @@ def bm25_topk(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(_doc_len(F.col(text_col))).alias("total_dl"),
     )
-    return _bm25_rank(tf, dl, scalars, qterms, top_k, k1, b, id_col)
+    # df_t from the hits themselves (identical to the corpus-wide value
+    # for those terms: the hits carry every doc containing them)
+    dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df_t"))
+    per_term = (
+        tf.join(F.broadcast(dfreq), "term")
+        .join(dl, id_col)
+        .crossJoin(F.broadcast(scalars))
+        .selectExpr(_sql_ident(id_col), "term", f"{_bm25_units(k1, b)} AS u")
+        .join(F.broadcast(qterms), "term")
+    )
+    return _bm25_top(per_term, top_k, id_col)
 
 
 @dataclass
@@ -353,11 +349,22 @@ def nb_predict(
 
 @dataclass
 class Bm25Index:
-    """Persisted BM25 index handle: term-bucketed postings, doc-length
-    table, and the 1-row (n_docs, total_dl) stats relation.  All three
-    read straight off tables — a probe's ``term IN (...)`` literal filter
-    becomes BUCKET PRUNING on the postings (SelectedBucketsCount in the
-    plan), so query cost scales with the query's terms, not the corpus.
+    """Persisted BM25 index handle: term-bucketed postings (each row
+    carries its document's length ``dl``), the doc-length table, the
+    1-row (n_docs, total_dl) stats table and the stopterm table, plus
+    the model-sized state a probe needs as plain values: ``n_docs``,
+    ``total_dl`` and the ``stopped`` term set.  A probe's
+    ``term IN (...)`` literal filter becomes BUCKET PRUNING on the
+    postings (SelectedBucketsCount in the plan), so query cost scales
+    with the query's terms, not the corpus, and building a probe starts
+    no Spark job.
+
+    The values are read ONCE, when the handle is opened
+    (:func:`read_bm25_index`; :func:`write_bm25_index`,
+    :func:`append_bm25_index` and :func:`compact_bm25_index` return a
+    fresh handle), so a handle reflects the index as of its opening:
+    after :func:`stop_bm25_terms`, re-open it to probe without the new
+    stopterms.
 
     ``stopterms`` (r12, r11 VERDICT #6) is the persisted excluded-term
     table (may be ``None`` on legacy indexes written before it existed):
@@ -366,10 +373,88 @@ class Bm25Index:
     postings and is dropped from probe queries — it carries almost no
     BM25 signal anyway (df near N drives idf toward ln(1 + ~0))."""
 
-    postings: DataFrame  # (term, doc_id, tf)
+    postings: DataFrame  # (term, doc_id, tf, dl)
     doclen: DataFrame    # (doc_id, dl)
     stats: DataFrame     # (n_docs long, total_dl long) — one row
-    stopterms: DataFrame | None = None  # (term) — excluded terms
+    stopterms: DataFrame | None  # (term) — excluded terms
+    n_docs: int
+    total_dl: int
+    stopped: frozenset[str]
+
+
+def _open_bm25(
+    spark, table_prefix: str, n_docs: int, total_dl: int, stopped
+) -> Bm25Index:
+    """A handle over the index tables holding the given state."""
+    stop = None
+    if spark.catalog.tableExists(f"{table_prefix}_stopterms"):
+        stop = spark.table(f"{table_prefix}_stopterms")
+    return Bm25Index(
+        postings=spark.table(f"{table_prefix}_postings"),
+        doclen=spark.table(f"{table_prefix}_doclen"),
+        stats=spark.table(f"{table_prefix}_stats"),
+        stopterms=stop,
+        n_docs=n_docs,
+        total_dl=total_dl,
+        stopped=frozenset(stopped),
+    )
+
+
+def _read_bm25_state(spark, table_prefix: str) -> tuple[int, int, set]:
+    """``(n_docs, total_dl, stopterm set)`` in ONE collect (the stats
+    row and the stopterm rows as one union).  ``or 0`` on both stats:
+    a legacy index written before write_bm25_index learned to COALESCE
+    may store a NULL total_dl over an empty corpus."""
+    sql = (
+        "SELECT true AS s, n_docs, total_dl, CAST(NULL AS STRING) AS term "
+        f"FROM {table_prefix}_stats"
+    )
+    if spark.catalog.tableExists(f"{table_prefix}_stopterms"):
+        sql += (
+            " UNION ALL SELECT false, NULL, NULL, term "
+            f"FROM {table_prefix}_stopterms"
+        )
+    rows = spark.sql(sql).collect()
+    stats = next((r for r in rows if r["s"]), None)
+    return (
+        int((stats and stats["n_docs"]) or 0),
+        int((stats and stats["total_dl"]) or 0),
+        {r["term"] for r in rows if not r["s"]},
+    )
+
+
+def _require_dl(postings: DataFrame, caller: str) -> None:
+    """Postings written before they carried ``dl`` have one remedy."""
+    if "dl" not in postings.columns:
+        raise ValueError(
+            f"{caller}: the postings have no dl column (written before "
+            "postings carried document lengths); run compact_bm25_index "
+            "once to add it"
+        )
+
+
+def _postings(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """``(term, doc, tf, dl)`` from ONE tokenizing pass: ``dl`` is a
+    function of the doc, so grouping on it adds no job and no row.  It
+    is projected BEFORE the explode: beside a generator it would be
+    evaluated once per token instead of once per doc."""
+    text = F.col(text_col)
+    return (
+        df.select(F.col(id_col), text, _doc_len(text).alias("dl"))
+        .select(id_col, "dl", F.explode(_tokens(text)).alias("term"))
+        .groupBy("term", id_col, "dl")
+        .agg(F.count(F.lit(1)).alias("tf"))
+        .select("term", id_col, "tf", "dl")
+    )
+
+
+def _not_stopped(postings: DataFrame, stopped) -> DataFrame:
+    """Drop stopterm postings with a literal filter (the set is
+    model-sized) — no broadcast job."""
+    if not stopped:
+        return postings
+    terms = ", ".join(_sql_str(t) for t in sorted(stopped))
+    return postings.filter(f"term NOT IN ({terms})")
 
 
 def _max_df_threshold(max_df: int | float, n_docs: int) -> int:
@@ -391,8 +476,9 @@ def write_bm25_index(
     max_df: int | float | None = None,
 ) -> Bm25Index:
     """Tokenize the corpus ONCE into ``{prefix}_postings`` (bucketed +
-    sorted on ``term``), ``{prefix}_doclen`` (bucketed on ``id_col``),
-    the 1-row additive ``{prefix}_stats`` table, and the
+    sorted on ``term``; each row carries its document's length ``dl``,
+    from the same tokenizing pass), ``{prefix}_doclen`` (bucketed on
+    ``id_col``), the 1-row additive ``{prefix}_stats`` table, and the
     ``{prefix}_stopterms`` exclusion table.
 
     ``stopwords`` / ``max_df`` (r12, r11 VERDICT #6) bound posting-list
@@ -414,12 +500,7 @@ def write_bm25_index(
     spark = df.sparkSession
     from ..sources.writers import write_bucketed
 
-    toks = df.select(
-        F.col(id_col), F.explode(_tokens(F.col(text_col))).alias("term")
-    )
-    postings = toks.groupBy("term", id_col).agg(
-        F.count(F.lit(1)).alias("tf")
-    )
+    postings = _postings(df, id_col, text_col)
     # stopword seed as a JVM LocalRelation (r14 perf): a createDataFrame
     # of a local list spreads over default-parallelism Python slices and
     # its write pays a repartition shuffle; the literal explode is one
@@ -516,19 +597,15 @@ def _heal_bm25_compaction(spark, table_prefix: str) -> None:
 
 
 def read_bm25_index(spark, table_prefix: str) -> Bm25Index:
+    """Open the index: one bounded collect of the stats row and the
+    stopterm set (stopterms is optional for legacy-index compat: indexes
+    written before r12 carry no exclusion table and behave as
+    uncapped)."""
     # self-heal a crashed compaction swap (same contract as the dedup
     # index: the rename completes on read, no operator action)
     _heal_bm25_compaction(spark, table_prefix)
-    # stopterms is optional for legacy-index compat: indexes written
-    # before r12 carry no exclusion table and behave as uncapped
-    stop = None
-    if spark.catalog.tableExists(f"{table_prefix}_stopterms"):
-        stop = spark.table(f"{table_prefix}_stopterms")
-    return Bm25Index(
-        postings=spark.table(f"{table_prefix}_postings"),
-        doclen=spark.table(f"{table_prefix}_doclen"),
-        stats=spark.table(f"{table_prefix}_stats"),
-        stopterms=stop,
+    return _open_bm25(
+        spark, table_prefix, *_read_bm25_state(spark, table_prefix)
     )
 
 
@@ -544,7 +621,9 @@ def compact_bm25_index(
     per-append files into one bucketed generation.  Rebuilds the
     postings table FROM THE STORED POSTINGS (anti-joined against the
     stopterm set) — the corpus text is never re-read; doclen, stats,
-    and stopterms are untouched.
+    and stopterms are untouched.  Postings written before they carried
+    ``dl`` get it here, from ONE join against the doclen table; this is
+    the only upgrade path (probe and append reject such postings).
 
     Crash-safe by the dedup index's recipe: the new generation writes
     to a FRESH versioned path ``{path_prefix}_postings_compact_v{k}``
@@ -559,6 +638,12 @@ def compact_bm25_index(
 
     _heal_bm25_compaction(spark, table_prefix)
     postings = spark.table(f"{table_prefix}_postings")
+    if "dl" not in postings.columns:
+        doclen = spark.table(f"{table_prefix}_doclen")
+        (id_col,) = [c for c in doclen.columns if c != "dl"]
+        postings = postings.join(doclen, id_col).select(
+            "term", id_col, "tf", "dl"
+        )
     if spark.catalog.tableExists(f"{table_prefix}_stopterms"):
         postings = postings.join(
             F.broadcast(spark.table(f"{table_prefix}_stopterms")),
@@ -612,10 +697,13 @@ def append_bm25_index(
     batch's scalar agg — a bounded driver-side read, like a watermark).
     The existing postings are untouched: term frequencies are per-doc,
     and df_t is derived at probe time from the postings themselves, so
-    append needs no global recount.
+    append needs no global recount.  The returned handle is built from
+    the stats and stopterm set the append just wrote — nothing is
+    re-read.  Postings without ``dl`` (written before postings carried
+    it) raise ``ValueError``: run :func:`compact_bm25_index` once.
 
     Stopterm cap (r12): the batch's postings exclude the STORED
-    stopterm set (broadcast anti-join — the set is model-sized), and
+    stopterm set (a literal filter — the set is model-sized), and
     with ``max_df`` set, any term whose BATCH df alone exceeds the cap
     (measured against the post-append n_docs) is newly stopped: added
     to ``{prefix}_stopterms`` and written no postings.  This bounds
@@ -627,10 +715,10 @@ def append_bm25_index(
 
     PRECONDITION — disjoint doc_ids: the batch's ``id_col`` values must
     not already exist in the index.  An overlapping append does NOT just
-    duplicate rows — it corrupts scores corpus-wide: the duplicated
-    doclen rows MULTIPLY every hit row for that doc in the rank join,
-    and the split tf rows inflate the derived df_t.  ``on_overlap``
-    picks the enforcement:
+    duplicate rows — it corrupts scores corpus-wide: the doc's postings
+    rows land twice, which doubles its hits and inflates the derived
+    df_t of every term it contains.  ``on_overlap`` picks the
+    enforcement:
 
     - ``"allow"`` (default): trust the caller — zero extra reads.
     - ``"skip"``: anti-join the batch against the existing doclen ids
@@ -645,6 +733,11 @@ def append_bm25_index(
     corrupts scores); use ``"skip"`` for replay-safe appends."""
     if on_overlap not in ("allow", "skip", "error"):
         raise ValueError(f"on_overlap: unknown mode {on_overlap!r}")
+    _heal_bm25_compaction(spark, table_prefix)
+    _require_dl(
+        spark.table(f"{table_prefix}_postings"), "append_bm25_index"
+    )
+    n_old, dl_old, stopped = _read_bm25_state(spark, table_prefix)
     if on_overlap != "allow":
         existing = spark.table(f"{table_prefix}_doclen").select(id_col)
         if on_overlap == "error":
@@ -653,8 +746,8 @@ def append_bm25_index(
                 raise ValueError(
                     f"append_bm25_index: {n_dup} doc_id(s) already "
                     f"indexed in {table_prefix}_doclen — overlapping "
-                    "appends corrupt scores (duplicate doclen rows "
-                    "multiply hits; split tf inflates df_t)"
+                    "appends corrupt scores (duplicate postings double "
+                    "hits and inflate df_t)"
                 )
         else:
             # localCheckpoint PINS the anti-join result before any write:
@@ -665,37 +758,25 @@ def append_bm25_index(
             new_df = new_df.join(existing, id_col, "anti").localCheckpoint(
                 eager=True
             )
-    toks = new_df.select(
-        F.col(id_col), F.explode(_tokens(F.col(text_col))).alias("term")
-    )
-    postings = toks.groupBy("term", id_col).agg(
-        F.count(F.lit(1)).alias("tf")
-    )
-    has_stop = spark.catalog.tableExists(f"{table_prefix}_stopterms")
-    if has_stop:
-        postings = postings.join(
-            F.broadcast(spark.table(f"{table_prefix}_stopterms")),
-            "term",
-            "anti",
-        )
+    postings = _not_stopped(_postings(new_df, id_col, text_col), stopped)
     if max_df is not None:
-        # batch-level detection against the POST-append corpus size;
-        # pin the over-cap term set before the postings write consumes it
-        old0 = spark.table(f"{table_prefix}_stats").first()
-        n_total = int(old0["n_docs"] or 0) + new_df.count()
-        thr = _max_df_threshold(max_df, n_total)
-        newly = (
-            postings.groupBy("term")
+        # batch-level detection against the POST-append corpus size
+        thr = _max_df_threshold(max_df, n_old + new_df.count())
+        newly = sorted(
+            r["term"]
+            for r in postings.groupBy("term")
             .agg(F.count(F.lit(1)).alias("df_t"))
             .filter(F.col("df_t") > thr)
-            .select("term")
-            .localCheckpoint(eager=True)
+            .collect()
         )
-        postings = postings.join(F.broadcast(newly), "term", "anti")
+        postings = _not_stopped(postings, newly)
+        stopped |= set(newly)
         # append creates the table when a legacy index lacks it
         # (managed location — functional, though outside the original
         # path_prefix layout)
-        newly.write.mode("append").format("parquet").saveAsTable(
+        local_rows_df(
+            spark, [(t,) for t in newly], "term string"
+        ).write.mode("append").format("parquet").saveAsTable(
             f"{table_prefix}_stopterms"
         )
     dl = new_df.select(
@@ -711,36 +792,26 @@ def append_bm25_index(
         .bucketBy(num_buckets, id_col).sortBy(id_col)
         .saveAsTable(f"{table_prefix}_doclen")
     )
-    old = spark.table(f"{table_prefix}_stats").first()
     delta = new_df.agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.sum(_doc_len(F.col(text_col))).cast("long").alias("total_dl"),
     ).first()
+    n_docs = n_old + int(delta["n_docs"])
+    # the delta's SUM is NULL for an all-empty batch
+    total_dl = dl_old + int(delta["total_dl"] or 0)
     # overwrite the FILES at the stats table's existing external location
     # (then refresh) rather than drop/recreate the table: saveAsTable
     # would re-register it as MANAGED at the warehouse path — colliding
     # with any leftover directory from a prior generation — and would
     # silently detach it from the caller's path_prefix layout
-    loc = (
-        spark.sql(f"DESCRIBE TABLE EXTENDED {table_prefix}_stats")
-        .filter(F.col("col_name") == "Location")
-        .first()["data_type"]
-    )
-    # `or 0` on BOTH sides: the delta's SUM is NULL for an all-empty
-    # batch, and a legacy index written before write_bm25_index learned
-    # to COALESCE may have stored a NULL total_dl over an empty corpus
-    from ..local_rel import local_rows_df
-
     local_rows_df(
-        spark,
-        [(
-            int(old["n_docs"] or 0) + int(delta["n_docs"]),
-            int(old["total_dl"] or 0) + int(delta["total_dl"] or 0),
-        )],
-        "n_docs long, total_dl long",
-    ).write.mode("overwrite").parquet(loc)
+        spark, [(n_docs, total_dl)], "n_docs long, total_dl long"
+    ).write.mode("overwrite").parquet(
+        _table_location(spark, f"{table_prefix}_stats")
+    )
     spark.catalog.refreshTable(f"{table_prefix}_stats")
-    return read_bm25_index(spark, table_prefix)
+    # the handle is built from the state just written: nothing re-read
+    return _open_bm25(spark, table_prefix, n_docs, total_dl, stopped)
 
 
 def bm25_index_probe(
@@ -751,52 +822,55 @@ def bm25_index_probe(
     b: float = 0.75,
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """Probe the persisted postings: filter the postings to the query
-    terms (a literal ``IN`` over the term-bucketed table -> BUCKET
-    PRUNING; the corpus is never re-tokenized), then run the SAME
-    ranking tail as :func:`bm25_topk` (:func:`_bm25_rank`) — scores are
-    identical to the in-memory operator over the same corpus by
-    construction.
+    """Probe the persisted postings in ONE scan: filter the postings to
+    the query terms (a literal ``IN`` over the term-bucketed table ->
+    BUCKET PRUNING; the corpus is never re-tokenized), take ``df_t`` as
+    a per-term count window over that scan, and score with the SAME
+    expression and ranking tail as :func:`bm25_topk`
+    (:func:`_bm25_units`, :func:`_bm25_top`) — scores are identical to
+    the in-memory operator over the same corpus by construction.
 
-    Stopped terms (``index.stopterms``) are dropped from the query
-    term set before the scan — the fetch is bounded by the QUERY's term
+    Stopped terms (``index.stopped``) are dropped from the query term
+    set before the scan — the fetch is bounded by the QUERY's term
     count, not the stopterm table — so a term stopped AFTER some of its
     postings were written scores nothing, consistently with a term
-    stopped at write time.
+    stopped at write time.  Building the probe starts no Spark job: the
+    stopterm set and the corpus scalars are values on the handle, and
+    the query terms are a one-partition LocalRelation.  Postings without
+    ``dl`` (written before postings carried it) raise ``ValueError``:
+    run :func:`compact_bm25_index` once.
 
-    100 TB shape: corpus-side read = the query terms' buckets only;
-    df_t derives from the pruned hits (exact — hits carry every doc
-    containing those terms); the doc-length join touches only hit docs;
-    the stats row broadcasts."""
+    100 TB shape: corpus-side read = the query terms' buckets only, and
+    nothing else — no doc-length join; df_t is exact (the pruned scan
+    carries every doc containing those terms) and needs no exchange,
+    since the scan is bucketed on ``term``; the stats are literals."""
+    _require_dl(index.postings, "bm25_index_probe")
     spark = index.postings.sparkSession
+    queries = {
+        q: [t for t in ts if t not in index.stopped]
+        for q, ts in queries.items()
+    }
+    queries = {q: ts for q, ts in queries.items() if ts}
     terms = sorted({t for ts in queries.values() for t in ts})
-    if index.stopterms is not None and terms:
-        stopped = {
-            r["term"]
-            for r in index.stopterms.filter(
-                F.col("term").isin(terms)
-            ).collect()
-        }
-        if stopped:
-            terms = [t for t in terms if t not in stopped]
-            queries = {
-                q: [t for t in ts if t not in stopped]
-                for q, ts in queries.items()
-            }
-            queries = {q: ts for q, ts in queries.items() if ts}
     if not terms:
-        return spark.createDataFrame(
-            [],
+        return local_rows_df(
+            spark, [],
             f"query_id string, {id_col} long, n_terms long, "
             "score_units long, rn int",
         )
-    qterms = _query_terms_df(spark, queries)
-    tf = index.postings.filter(F.col("term").isin(terms)).select(
-        id_col, "term", "tf"
+    idq = _sql_ident(id_col)
+    hits = index.postings.filter(
+        f"term IN ({', '.join(_sql_str(t) for t in terms)})"
+    ).selectExpr(
+        "term", idq, "tf", "dl",
+        "count(1) OVER (PARTITION BY term) AS df_t",
+        f"CAST({index.n_docs} AS BIGINT) AS n_docs",
+        f"CAST({index.total_dl} AS BIGINT) AS total_dl",
     )
-    return _bm25_rank(
-        tf, index.doclen, index.stats, qterms, top_k, k1, b, id_col
-    )
+    per_term = hits.join(
+        F.broadcast(_query_terms_df(spark, queries)), "term"
+    ).selectExpr("query_id", idq, f"{_bm25_units(k1, b)} AS u")
+    return _bm25_top(per_term, top_k, id_col)
 
 
 def bm25_index_term_audit(

@@ -74,8 +74,13 @@ def _sql_l2(c: str) -> str:
     )
 
 
-def _sql_cosine(a: str, b: str) -> str:
-    den = f"({_sql_l2(a)} * {_sql_l2(b)})"
+def _sql_cosine(a: str, b: str, norms: tuple[str, str] | None = None) -> str:
+    """Cosine of two double arrays; ``norms`` names columns that already
+    hold ``_sql_l2(a)`` and ``_sql_l2(b)``, so each norm is computed once
+    per side instead of twice per pair (same operands, same order, same
+    bits)."""
+    na, nb = norms or (_sql_l2(a), _sql_l2(b))
+    den = f"({na} * {nb})"
     return (
         f"CASE WHEN {den} > 0 THEN {_sql_dot(a, b)} / {den} "
         "ELSE 0.0D END"
@@ -1513,9 +1518,11 @@ def _semdedup_arrow(
 class IvfIndex:
     """Persisted IVF index handle: the (bounded, model-sized) centroid
     list plus the cell-partitioned assignment frame.  ``assign`` reads
-    straight off the partitioned parquet layout, so a probe's
-    ``cell IN (...)`` literal filter becomes PARTITION PRUNING — the
-    100 TB corpus is never re-scanned or re-assigned per query batch."""
+    straight off the partitioned parquet layout, so a probe's cell join
+    against its broadcast routed queries becomes DYNAMIC PARTITION
+    PRUNING inside the plan (no build-time job) — the 100 TB corpus is
+    never re-scanned or re-assigned per query batch.  Appends return a
+    fresh handle with the same centroids (they never change on append)."""
 
     centroids: list[tuple[int, list[float]]]
     assign: DataFrame  # (cell int, vec_id, embedding)
@@ -1573,14 +1580,18 @@ def write_ivf_index(
     # the handle is constructible without re-reading what we just wrote:
     # centroids are in hand, the assignment frame is lazy on the
     # partitioned layout (read_ivf_index yields the identical handle)
-    assign = spark.read.parquet(f"{path}/assign").select(
-        F.col("cell").cast("int").alias("cell"), id_col, vec_col
-    )
     return IvfIndex(
         centroids=sorted(
             (int(c), [float(x) for x in v]) for c, v in centroids
         ),
-        assign=assign,
+        assign=_assign_scan(spark, path, id_col, vec_col),
+    )
+
+
+def _assign_scan(spark, path: str, id_col: str, vec_col: str) -> DataFrame:
+    """The lazy cell-partitioned assignment frame of an index."""
+    return spark.read.parquet(f"{path}/assign").select(
+        F.col("cell").cast("int").alias("cell"), id_col, vec_col
     )
 
 
@@ -1634,10 +1645,10 @@ def read_ivf_index(
         (int(r["cell"]), [float(x) for x in r["centroid"]])
         for r in cent_rows
     )
-    assign = spark.read.parquet(f"{path}/assign").select(
-        F.col("cell").cast("int").alias("cell"), id_col, vec_col
+    return IvfIndex(
+        centroids=centroids,
+        assign=_assign_scan(spark, path, id_col, vec_col),
     )
-    return IvfIndex(centroids=centroids, assign=assign)
 
 
 def append_ivf_index(
@@ -1661,7 +1672,9 @@ def append_ivf_index(
 
     ``index``: pass an already-open handle (e.g. the return of
     :func:`write_ivf_index`) to skip the centroid re-read — the append
-    still assigns under exactly those stored centroids."""
+    still assigns under exactly those stored centroids.  The returned
+    handle keeps the centroids it assigned under (an append never
+    changes them) over a fresh assignment scan: no re-read."""
     # Heal UNCONDITIONALLY before writing (r13 ADVICE): when an open
     # ``index=`` handle is passed, a crashed recluster may have left a
     # committed _recluster_stage — without the heal the append lands in
@@ -1684,7 +1697,9 @@ def append_ivf_index(
     assigned.select("cell", id_col, vec_col).write.mode(
         "append"
     ).partitionBy("cell").parquet(f"{path}/assign")
-    return read_ivf_index(spark, path, id_col, vec_col)
+    return IvfIndex(
+        idx.centroids, _assign_scan(spark, path, id_col, vec_col)
+    )
 
 
 def ivf_index_cell_audit(
@@ -1833,17 +1848,29 @@ def route_queries_ranked(
     set exactly).  One map pass serves every nprobe arm of a recall
     audit — instead of one routing pass (plus its probed-cell-set
     action) per arm."""
+    vec = _sql_ident(vec_col)
+    return _route_ranked(queries_df, centroids, id_col, vec_col, [vec], [vec])
+
+
+def _route_ranked(
+    queries_df: DataFrame,
+    centroids,
+    id_col: str,
+    vec_col: str,
+    carry: list[str],
+    names: list[str],
+) -> DataFrame:
+    """:func:`route_queries_ranked` carrying the SQL projections
+    ``carry`` (over the query row, which also holds the ``_norm`` of the
+    query vector) through the cell explode as columns ``names``."""
     q = _with_centroid_sims(queries_df, centroids, vec_col)
     ranked_sql = _ranked_cells_sql(centroids)
+    qid = _sql_ident(id_col)
     return (
-        q.selectExpr(
-            _sql_ident(id_col),
-            _sql_ident(vec_col),
-            f"posexplode({ranked_sql}) AS (_pos, _c)",
-        )
+        q.selectExpr(qid, *carry, f"posexplode({ranked_sql}) AS (_pos, _c)")
         .selectExpr(
-            _sql_ident(id_col),
-            _sql_ident(vec_col),
+            qid,
+            *names,
             "CAST(-(_c.nc) AS INT) AS cell",
             "CAST(_pos + 1 AS INT) AS crn",
         )
@@ -1861,30 +1888,6 @@ def _probe_arms(nprobes) -> list[int]:
     return arms
 
 
-def _prune_to_probed_cells(
-    index: IvfIndex, routed: DataFrame, nprobe: int
-) -> tuple[DataFrame, DataFrame]:
-    """The cell-prune policy of every IVF probe: which part of the
-    assignment a probe of ``routed`` (one row per probed ``cell``) at
-    ``nprobe`` scans.  Returns ``(routed, cand)`` — the routed frame to
-    join and the candidate assignment scan.
-
-    ``nprobe >= n_cells`` covers every cell, so the prune is a no-op and
-    is skipped outright (no action at all).  Otherwise the routed frame
-    is ``localCheckpoint``ed lazily, so the cell-set collect materializes
-    it ONCE and the cell join reuses the checkpointed blocks instead of
-    re-running the routing map, and the scan keeps only the
-    collected cells — a literal ``IN`` over a ``<= n_cells`` set, i.e.
-    PARTITION PRUNING on the on-disk layout."""
-    if nprobe >= len(index.centroids):
-        return routed, index.assign
-    routed = routed.localCheckpoint(eager=False)
-    cells = sorted(
-        r["cell"] for r in routed.select("cell").distinct().collect()
-    )
-    return routed, index.assign.filter(F.col("cell").isin(cells))
-
-
 def ivf_probe_batch(
     index: IvfIndex,
     queries_df: DataFrame,
@@ -1896,11 +1899,10 @@ def ivf_probe_batch(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Probe a persisted IVF index with a BATCH of queries: route every
-    query to its ``nprobe`` nearest cells (map-only), prune the
-    assignment scan to the union of probed cells
-    (:func:`_prune_to_probed_cells` -> PARTITION PRUNING on the on-disk
-    layout), broadcast the routed queries against the surviving
-    candidates on the cell key, and rank per query.
+    query to its ``nprobe`` nearest cells (map-only), broadcast the
+    routed queries against the assignment scan on the cell key — which
+    prunes that scan to the probed cells' partitions in the plan
+    (dynamic partition pruning) — and rank per query.
 
     The single-arm view of :func:`ivf_probe_batch_arms`, which holds the
     one probe path (scores round-6 quantized before the per-query top-k
@@ -1927,11 +1929,19 @@ def ivf_probe_batch_arms(
     more ``nprobe`` arms from ONE scan — the one IVF probe
     path (:func:`ivf_probe_batch` and :func:`ivf_recall_at_k` are views
     of it): route once with cell ranks (:func:`route_queries_ranked`),
-    scan the union of the LARGEST arm's probed cells once
-    (:func:`_prune_to_probed_cells`; the full assignment when that arm
-    is nprobe >= n_cells), broadcast the routed queries onto the
-    candidates on the cell key, score each candidate once, then fan the
-    scored rows into arms by ``crn <= nprobe`` and rank per (arm, query).
+    keep the LARGEST arm's probed cells, broadcast the routed queries
+    onto the assignment scan on the cell key, score each candidate once,
+    then fan the scored rows into arms by ``crn <= nprobe`` and rank per
+    (arm, query).
+
+    The scan reads only the probed cells' partitions: the broadcast
+    routed side serves a dynamic partition pruning filter
+    (``dynamicpruningexpression(cell IN dynamicpruning#..)``, a
+    ``SubqueryBroadcast`` reusing the join's broadcast) on the
+    partition column, so pruning costs no build-time job — building the
+    probe starts no Spark job at all.  Each l2 norm is computed once per
+    side: the query's ``_norm`` comes from routing, the vector's from a
+    projection on the scan.
 
     Scores are round-6 quantized BEFORE the top-k window (ties ->
     ascending ``vec_id``), so ranking is engine-portable.  The ranked
@@ -1950,19 +1960,22 @@ def ivf_probe_batch_arms(
     n_cells = len(index.centroids)
     arms = _probe_arms(nprobes)
     amax = min(arms[-1], n_cells)
-    routed = route_queries_ranked(
-        queries_df, index.centroids, query_id_col, query_vec_col
-    ).withColumnRenamed(query_vec_col, "_qv")
+    # SQL text rather than Column expressions: every Column operation is
+    # its own py4j round trip, and this runs per request
+    qid, vid = _sql_ident(query_id_col), _sql_ident(id_col)
+    vec = _sql_as_double(_sql_ident(vec_col))
+    routed = _route_ranked(
+        queries_df, index.centroids, query_id_col, query_vec_col,
+        [f"{_sql_ident(query_vec_col)} AS _qv", "_norm AS _qn"],
+        ["_qv", "_qn"],
+    )
     if amax < n_cells:
         routed = routed.filter(f"crn <= {amax}")
-    routed, cand = _prune_to_probed_cells(index, routed, amax)
-    joined = cand.join(F.broadcast(routed), "cell")
-    cos_sql = _sql_cosine(
-        _sql_as_double(_sql_ident(vec_col)), _sql_as_double("`_qv`")
+    cand = index.assign.selectExpr(
+        "cell", vid, _sql_ident(vec_col), f"{_sql_l2(vec)} AS _vn"
     )
-    # SQL text rather than Column expressions from here on: every Column
-    # operation is its own py4j round trip, and this runs per request
-    qid, vid = _sql_ident(query_id_col), _sql_ident(id_col)
+    joined = cand.join(F.broadcast(routed), "cell")
+    cos_sql = _sql_cosine(vec, _sql_as_double("`_qv`"), ("_vn", "_qn"))
     arms_sql = ", ".join(str(a) for a in arms)
     scored = joined.selectExpr(
         qid, vid, f"round({cos_sql}, 6) AS cosine_r", "crn"
@@ -2058,7 +2071,7 @@ def semantic_decontam_indexed(
        — map-only, the centroids are a literal expression;
     2. prune the eval assignment scan to the union of probed cells (a
        bounded ``<= n_cells`` driver-side set -> PARTITION PRUNING on
-       the on-disk layout);
+       the on-disk layout; skipped when ``nprobe >= n_cells``);
     3. CELL-KEYED equi-join (an ordinary shuffle join — NO broadcast of
        the eval side, unlike :func:`ivf_probe_batch` which broadcasts
        the routed QUERY batch and is therefore the small-query-side
@@ -2084,14 +2097,22 @@ def semantic_decontam_indexed(
     (nprobe,) = _probe_arms((nprobe,))
     # the probing side here is the CORPUS: route_queries explodes only
     # the nprobe probed cells per row (the ranked router would explode
-    # all n_cells), and the shared prune policy routes it ONCE
-    routed, cand = _prune_to_probed_cells(
-        index,
-        route_queries(
-            df, index.centroids, nprobe, id_col, vec_col
-        ).withColumnRenamed(vec_col, "_qv"),
-        nprobe,
-    )
+    # all n_cells)
+    routed = route_queries(
+        df, index.centroids, nprobe, id_col, vec_col
+    ).withColumnRenamed(vec_col, "_qv")
+    cand = index.assign
+    if nprobe < len(index.centroids):
+        # a corpus-sized routed side reaches a SHUFFLE join, where Spark
+        # plans no dynamic partition pruning (it only reuses a broadcast
+        # the join already has), so prune with a literal cell set: the
+        # lazy checkpoint lets the cell-set collect route the corpus
+        # ONCE, and the join reads the checkpointed blocks
+        routed = routed.localCheckpoint(eager=False)
+        cells = sorted(
+            r["cell"] for r in routed.select("cell").distinct().collect()
+        )
+        cand = cand.filter(F.col("cell").isin(cells))
     cand = cand.select(
         "cell",
         F.col(index_id_col).alias(ref_id_col),

@@ -10,6 +10,39 @@ def docs_df(spark, rows):
     return spark.createDataFrame(rows, "doc_id int, text string")
 
 
+def jobs_started(spark, fn):
+    """``(fn(), number of Spark jobs fn started)``, counted by a job tag
+    (tags nest, so this never disturbs a caller's job group)."""
+    import uuid
+
+    sc = spark.sparkContext
+    tag = "t" + uuid.uuid4().hex
+    sc.addJobTag(tag)
+    try:
+        out = fn()
+    finally:
+        sc.removeJobTag(tag)
+    return out, len(sc._jsc.sc().statusTracker().getJobIdsForTag(tag))
+
+
+def executed_scans(df):
+    """The file scans of ``df``'s executed plan (after an action),
+    looking through adaptive query stages."""
+    todo, scans = [df._jdf.queryExecution().executedPlan()], []
+    while todo:
+        node = todo.pop()
+        name = node.getClass().getSimpleName()
+        if name == "AdaptiveSparkPlanExec":
+            todo.append(node.executedPlan())
+        elif name.endswith("QueryStageExec"):
+            todo.append(node.plan())
+        elif name == "FileSourceScanExec":
+            scans.append(node)
+        children = node.children()
+        todo.extend(children.apply(i) for i in range(children.size()))
+    return scans
+
+
 class TestExactDedup:
     def test_whitespace_case_normalized(self, spark):
         df = docs_df(spark, [(1, "Hello  World"), (2, "hello world "), (3, "other")])
@@ -3011,12 +3044,17 @@ class TestPersistedIvfIndex:
         assert "PartitionFilters" in fmt and "cell" in fmt
         assert "cell IN" in fmt or "cell#" in fmt
         assert "BroadcastHashJoin" in fmt
-        # only 2 of 8 cell partitions are actually read
-        scan = [
-            ln for ln in fmt.splitlines() if "partitions read" in ln.lower()
+        # only 2 of the 8 cell partitions are actually read: the executed
+        # scan's 'number of partitions read' metric
+        assert len(out.collect()) == 5
+        assign_dir = tmp_path / "ivf" / "assign"
+        assert all((assign_dir / f"cell={c}").is_dir() for c in range(8))
+        read = [
+            s.metrics().get("numPartitions").get().value()
+            for s in executed_scans(out)
+            if "cell" in s.relation().partitionSchema().fieldNames()
         ]
-        if scan:  # Spark prints 'number of partitions read: N'
-            assert any("2" in ln for ln in scan)
+        assert read == [2]
 
     def test_route_queries_tiebreak_lowest_cell(self, spark):
         from ssis_to_dbt_spark.text.similarity import route_queries
@@ -3112,6 +3150,70 @@ class TestPersistedBm25Index:
         import re
         m = re.search(r"SelectedBucketsCount: (\d+) out of (\d+)", fmt)
         assert m and int(m.group(1)) < int(m.group(2))
+
+    def test_probe_is_one_postings_scan_built_without_jobs(
+        self, spark, tmp_path
+    ):
+        """The probe reads the postings once and nothing else: no
+        doc-length scan (postings carry dl), no stats or stopterm read
+        (the handle holds them), so building it starts no Spark job."""
+        from ssis_to_dbt_spark.text.retrieval import (
+            bm25_index_probe,
+            write_bm25_index,
+        )
+
+        docs = self._docs(spark).filter(F.col("doc_id") % 5 == 0)
+        prefix = "bm25one_" + tmp_path.name
+        idx = write_bm25_index(docs, prefix, str(tmp_path / "t"))
+        q = {"q1": ["hash", "join"], "q2": ["window"]}
+        out, n_jobs = jobs_started(
+            spark, lambda: bm25_index_probe(idx, q, top_k=5)
+        )
+        assert n_jobs == 0
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        scans = [ln for ln in plan.splitlines() if "FileScan" in ln]
+        assert len(scans) == 1 and f"{prefix}_postings" in scans[0]
+        assert f"{prefix}_doclen" not in plan
+
+    def test_postings_without_dl_rejected_until_compacted(
+        self, spark, tmp_path
+    ):
+        """Postings written before they carried dl: probe and append
+        raise naming compact_bm25_index; after it, the probe equals the
+        in-memory operator."""
+        import pytest
+
+        from ssis_to_dbt_spark.sources.writers import write_bucketed
+        from ssis_to_dbt_spark.text.retrieval import (
+            append_bm25_index,
+            bm25_index_probe,
+            bm25_topk,
+            compact_bm25_index,
+            read_bm25_index,
+            write_bm25_index,
+        )
+
+        docs = self._docs(spark).filter(F.col("doc_id") % 5 == 0)
+        prefix = "bm25leg_" + tmp_path.name
+        write_bm25_index(docs, prefix, str(tmp_path / "t"))
+        # the postings layout before dl: (term, doc_id, tf)
+        write_bucketed(
+            spark.table(f"{prefix}_postings").select("term", "doc_id", "tf"),
+            f"{prefix}_legacy", str(tmp_path / "legacy"), ["term"],
+            num_buckets=64, sort_cols=["term"],
+        )
+        spark.sql(f"DROP TABLE {prefix}_postings")
+        spark.sql(f"ALTER TABLE {prefix}_legacy RENAME TO {prefix}_postings")
+        q = {"q1": ["hash", "join"], "q2": ["window"]}
+        idx = read_bm25_index(spark, prefix)
+        with pytest.raises(ValueError, match="compact_bm25_index"):
+            bm25_index_probe(idx, q)
+        with pytest.raises(ValueError, match="compact_bm25_index"):
+            append_bm25_index(spark, prefix, docs)
+        idx = compact_bm25_index(spark, prefix, str(tmp_path / "t"))
+        got = sorted(map(tuple, bm25_index_probe(idx, q).collect()))
+        exp = sorted(map(tuple, bm25_topk(docs, q).collect()))
+        assert got == exp and len(got) > 0
 
 
 class TestBm25IndexLifecycleEdges:
@@ -4222,7 +4324,10 @@ class TestIndexEdgeCases:
         join's query side reads the checkpointed blocks (Scan
         ExistingRDD in the plan) instead of recomputing route_queries;
         nprobe >= n_cells: the prune is skipped outright — no checkpoint,
-        no IN-filter, no action at build time."""
+        no IN-filter, no action at build time.  The query-batch probe
+        has no cell-set action at all: its assign scan carries a dynamic
+        partition pruning filter served by the join's own broadcast, so
+        building it starts no job."""
         from ssis_to_dbt_spark.text.similarity import (
             ivf_probe_batch,
             nearest_reference,
@@ -4259,14 +4364,26 @@ class TestIndexEdgeCases:
         ).collect()))
         assert got == exp
 
-        # same discipline on the query-batch probe
+        # the query-batch probe: routing runs once, inside the plan
         q = emb.limit(4).select(
             F.col("vec_id").alias("query_id"), "embedding"
         )
-        probed = ivf_probe_batch(idx, q, k=3, nprobe=2)
-        assert "ExistingRDD" in probed._jdf.queryExecution().toString()
-        unpruned = ivf_probe_batch(idx, q, k=3, nprobe=8)
-        assert "ExistingRDD" not in (
+        probed, n_jobs = jobs_started(
+            spark, lambda: ivf_probe_batch(idx, q, k=3, nprobe=2)
+        )
+        assert n_jobs == 0
+        # the planned assign scan carries the dynamic pruning filter,
+        # served by the join's broadcast (SubqueryAdaptiveBroadcast, which
+        # adaptive execution turns into a SubqueryBroadcast reusing it;
+        # the run-time prune is pinned by test_probe_scan_partition_prunes)
+        plan = probed._jdf.queryExecution().executedPlan().toString()
+        assert "dynamicpruningexpression(cell#" in plan
+        assert "SubqueryAdaptiveBroadcast dynamicpruning#" in plan
+        unpruned, n_jobs = jobs_started(
+            spark, lambda: ivf_probe_batch(idx, q, k=3, nprobe=8)
+        )
+        assert n_jobs == 0
+        assert "dynamicpruning" not in (
             unpruned._jdf.queryExecution().toString()
         )
 
@@ -4302,6 +4419,8 @@ class TestIndexEdgeCases:
         schema = "a int, b string, c double, d long"
         ref = spark.createDataFrame(rows, schema)
         got = local_rows_df(spark, rows, schema)
+        # one partition: one task wherever it is scanned or broadcast
+        assert got.rdd.getNumPartitions() == 1
         assert [
             (f.name, f.dataType.simpleString()) for f in got.schema.fields
         ] == [

@@ -57,8 +57,8 @@ SHOWCASE = {
     "jpeg_decode_stats": "real JPEG entropy decode: one map-only mapInPandas chain (encode -> decode), pruned (doc_id) scan, no shuffle",
     "bm25_search_docs": "BM25: literal query-term broadcast prunes the token explode map-side; 1-row scalar crossJoin; WindowGroupLimit per-query top-k",
     "nb_classifier_docs": "NB fit+apply: (label,term) hash agg with map-side combine; model grid broadcast back; per-doc argmax window; no cartesian",
-    "ivf_index_probe": "persisted IVF probe: in-plan query routing, partition-pruned assignment scan (PartitionFilters on cell), routed queries broadcast, per-query WindowGroupLimit",
-    "bm25_index_probe": "persisted BM25 probe: term IN-filter bucket-prunes the postings scan (SelectedBucketsCount), 1-row stats broadcast, shared ranking tail with bm25_search_docs",
+    "ivf_index_probe": "persisted IVF probe: in-plan query routing, routed queries broadcast, assignment scan pruned by dynamic partition pruning on cell (served by the reused broadcast), per-query WindowGroupLimit",
+    "bm25_index_probe": "persisted BM25 probe: one postings scan, bucket-pruned by the term IN-filter (SelectedBucketsCount); df_t is a term window on that bucketed scan and dl rides on the postings (no doclen join); stats are literals; shared scoring expression and ranking tail with bm25_search_docs",
     "semantic_decontam_ivf": "corpus-scale decontam through the IVF index: map-only routing, PartitionFilters on the eval assign scan, cell-keyed shuffle join — NO broadcast of either side, per-item WindowGroupLimit argmax",
     "ci_group_customers": "CI GROUP BY/DISTINCT/dup/sort: the lower() fold is a map-side projection riding the same hash agg (partial combine intact); MIN-case representative rides the combine",
     "hybrid_rrf_docs": "RRF hybrid retrieval: both input rankings are per-query WindowGroupLimit top-k relations; the fuse is a model-sized union + (query, doc) hash agg — the corpus is only touched inside the two retrievers",
