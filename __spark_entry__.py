@@ -37,20 +37,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """Exactly 50 entries (the driver's verdict window — the driver
     verifies at most 50): every SURVEY.md §2 operator family plus the
     LLM-pipeline extensions, with same-family queries packaged as tagged
-    UNION ALL suites (COVERAGE.md maps suite components; individual
-    queries stay in catalog.ALL_QUERIES).  r9 adds ``crawl_ingest_docs``
-    — the two-batch continuous-crawl ingest loop — in the slot freed by
-    folding the k-NN join into ``ann_topk_suite`` (component ``knn``).
-    r11 folds the two r10 registry-only operators into window suites
-    for driver-visible verdicts: JPEG decode as ``multimodal_decode``
-    component ``jpeg``, within-batch ingest dedup as
-    ``crawl_ingest_docs`` components ``wb_pruned/wb_reject/wb_accept``.
-    r12 folds the five r11 registry-only operators the same way:
-    ``ci_collation_customers`` -> ``join_strategies`` (``ci_*``),
-    ``time_contract_events`` -> ``events_windows`` (``time_contract``),
-    ``semantic_decontam_embeddings``/``streaming_ivf_probe`` ->
-    ``ann_topk_suite`` (``decontam``/``sivf``), and
-    ``shuffle_shards_docs`` -> ``sampling_splits`` (``shards``)."""
+    suites generated from ``catalog._SUITES`` (COVERAGE.md maps suite
+    components; individual queries stay in catalog.ALL_QUERIES)."""
     def wrap(fn):
         def run(spark: SparkSession, sf_dir: str) -> DataFrame:
             tune_for_correctness(spark)

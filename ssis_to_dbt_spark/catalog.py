@@ -860,29 +860,14 @@ FROM b LEFT JOIN runs ON runs.doc_id = b.doc_id
 # 18. Exact n-gram Jaccard via inverted index (extension: dedup)
 # ---------------------------------------------------------------------------
 
-def q_ngram_jaccard_docs(spark, sf_dir):
-    """Suite (round 6): exact n-gram Jaccard pairs + winnowing fingerprint
-    checksums and candidate pairs (`q_winnow_docs` components re-slotted)."""
+def q_ngram_jaccard_pairs_docs(spark, sf_dir):
+    """Exact n-gram Jaccard pairs (>= 0.2) via the inverted index."""
     docs = _t(spark, sf_dir)["documents"]
-    j = ngram_jaccard_pairs(docs, min_jaccard=0.2).select(
-        F.lit("jaccard").alias("component"),
-        F.col("doc_a").cast("long").alias("id_a"),
-        F.col("doc_b").cast("long").alias("id_b"),
-        F.col("jaccard").cast("double").alias("v1"),
-        _nul("long").alias("n1"),
-        _nul("long").alias("n2"),
-        _nul("long").alias("n3"),
+    return ngram_jaccard_pairs(docs, min_jaccard=0.2).select(
+        F.col("doc_a").cast("long").alias("doc_a"),
+        F.col("doc_b").cast("long").alias("doc_b"),
+        F.col("jaccard").cast("double").alias("jaccard"),
     )
-    wn = q_winnow_docs(spark, sf_dir).select(
-        F.concat(F.lit("winnow_"), F.col("component")).alias("component"),
-        "id_a",
-        "id_b",
-        _nul("double").alias("v1"),
-        "n1",
-        "n2",
-        "n3",
-    )
-    return _union_all([j, wn])
 
 
 SQL_NGRAM_JACCARD = r"""
@@ -967,7 +952,6 @@ def q_split_leakage_docs(spark, sf_dir, pairs=None):
     )
     leaks = tagged.filter(F.col("split_a") != F.col("split_b"))
     p = leaks.select(
-        F.lit("pair").alias("component"),
         F.col("doc_a").cast("long").alias("doc_a"),
         F.col("doc_b").cast("long").alias("doc_b"),
         F.col("split_a").cast("string").alias("split_a"),
@@ -977,13 +961,10 @@ def q_split_leakage_docs(spark, sf_dir, pairs=None):
         F.count(F.lit(1)).alias("_n"),
         F.sum((F.col("split_a") != F.col("split_b")).cast("int")).alias("_l"),
     ).select(
-        F.lit("summary").alias("component"),
         F.col("_n").cast("long").alias("doc_a"),
         F.coalesce(F.col("_l"), F.lit(0)).cast("long").alias("doc_b"),
-        _nul("string").alias("split_a"),
-        _nul("string").alias("split_b"),
     )
-    return _union_all([p, s])
+    return _suite_frame("split_leakage_docs", [("pair", p), ("summary", s)])
 
 
 def q_minhash_pairs_md5(spark, sf_dir):
@@ -999,18 +980,14 @@ def q_minhash_pairs_md5(spark, sf_dir):
         eager=False
     )
     cand = pairs0.select(
-        F.lit("cand").alias("component"),
         F.col("doc_a").cast("long").alias("doc_a"),
         F.col("doc_b").cast("long").alias("doc_b"),
         F.col("est_jaccard").cast("double").alias("v1"),
-        _nul("string").alias("s1"),
-        _nul("string").alias("s2"),
     )
     lk = q_split_leakage_docs(spark, sf_dir, pairs=pairs0).select(
-        F.concat(F.lit("leak_"), F.col("component")).alias("component"),
+        "component",
         "doc_a",
         "doc_b",
-        _nul("double").alias("v1"),
         F.col("split_a").alias("s1"),
         F.col("split_b").alias("s2"),
     )
@@ -1020,31 +997,25 @@ def q_minhash_pairs_md5(spark, sf_dir):
     # re-running label propagation.
     pruned = q_neardup_prune_docs(spark, sf_dir, pairs=pairs0)
     pr = pruned.select(
-        F.lit("prune").alias("component"),
         F.col("doc_id").alias("doc_a"),
         F.col("cluster_id").alias("doc_b"),
         F.col("cluster_size").cast("double").alias("v1"),
         F.col("kept").cast("string").alias("s1"),
-        _nul("string").alias("s2"),
     )
     ss = _cluster_split(pruned).select(
-        F.lit("safe_split").alias("component"),
         F.col("doc_id").alias("doc_a"),
         F.col("cluster_id").alias("doc_b"),
-        _nul("double").alias("v1"),
         F.col("split").alias("s1"),
-        _nul("string").alias("s2"),
     )
     xd = q_cross_dedup_docs(spark, sf_dir).select(
-        F.lit("cross").alias("component"),
         F.col("new_id").alias("doc_a"),
         F.col("corpus_id").alias("doc_b"),
         F.col("est_jaccard").alias("v1"),
-        _nul("string").alias("s1"),
-        _nul("string").alias("s2"),
     )
-    return _union_all([cand, lk, pr, ss, xd])
-
+    return _suite_frame("minhash_pairs_md5", [
+        ("cand", cand), ("leak_", lk), ("prune", pr), ("safe_split", ss),
+        ("cross", xd),
+    ])
 
 
 SQL_MINHASH_MD5 = f"""
@@ -1079,18 +1050,6 @@ SELECT 'summary', CAST(COUNT(*) AS BIGINT),
             AS BIGINT),
        CAST(NULL AS VARCHAR), CAST(NULL AS VARCHAR)
 FROM tagged
-"""
-
-
-SQL_MINHASH_MD5_SUITE = f"""
-SELECT 'cand' AS component, CAST(doc_a AS BIGINT) AS doc_a,
-       CAST(doc_b AS BIGINT) AS doc_b, CAST(est_jaccard AS DOUBLE) AS v1,
-       CAST(NULL AS VARCHAR) AS s1, CAST(NULL AS VARCHAR) AS s2
-FROM ({SQL_MINHASH_MD5}) _c
-UNION ALL
-SELECT 'leak_' || component, doc_a, doc_b, CAST(NULL AS DOUBLE), split_a,
-       split_b
-FROM ({SQL_SPLIT_LEAKAGE}) _l
 """
 
 
@@ -1799,7 +1758,6 @@ def q_gopher_quality_docs(spark, sf_dir):
         F.col("stop_hits").cast("int").alias("stop_hits"),
         "gopher_pass",
     )
-
 
 
 # The curation suite joins the same signal battery (per-doc values are
@@ -2624,8 +2582,6 @@ FROM passed LEFT JOIN dim d ON d.c_custkey = passed.o_custkey
 """
 
 
-
-
 def q_streaming_roundtrip(spark, sf_dir):
     """ST2 + ST3 driven end-to-end: stage events to a file source, run a real
     checkpointed availableNow micro-batch stream (watermarked tumbling window
@@ -2912,7 +2868,6 @@ def q_neardup_clusters(spark, sf_dir):
         F.col("label").alias("canonical_id"),
         "cluster_size",
     )
-
 
 
 SQL_NEARDUP_CLUSTERS = f"""
@@ -3260,25 +3215,24 @@ def q_funnel_events(spark, sf_dir):
 
     ev = _t(spark, sf_dir)["events"]
     per_user = funnel(ev, _FUNNEL_STEPS).localCheckpoint(eager=False)
-    u = per_user.select(
-        F.lit("user").alias("component"),
+    # per user: 'u12' = the first two step times and the depth reached,
+    # 'u3' = the last step time of users who reached it; 's' = per step
+    u12 = per_user.select(
         F.col("user_id").cast("long").alias("id_a"),
-        _nul("string").alias("s1"),
         F.col("step_1_ts").alias("t1"),
         F.col("step_2_ts").alias("t2"),
-        F.col("step_3_ts").alias("t3"),
         F.col("depth").cast("long").alias("n1"),
     )
+    u3 = per_user.filter(F.col("step_3_ts").isNotNull()).select(
+        F.col("user_id").cast("long").alias("id_a"),
+        F.col("step_3_ts").alias("t3"),
+    )
     s = funnel_summary(ev, _FUNNEL_STEPS, per_user=per_user).select(
-        F.lit("summary").alias("component"),
         F.col("step_idx").cast("long").alias("id_a"),
         F.col("step_name").cast("string").alias("s1"),
-        _nul("timestamp").alias("t1"),
-        _nul("timestamp").alias("t2"),
-        _nul("timestamp").alias("t3"),
         F.col("n_users").cast("long").alias("n1"),
     )
-    return _union_all([u, s])
+    return _suite_frame("funnel_events", [("u12", u12), ("u3", u3), ("s", s)])
 
 
 SQL_FUNNEL = """
@@ -3296,16 +3250,19 @@ u AS (
          1 + CASE WHEN ts2 IS NULL THEN 0 ELSE 1 END
            + CASE WHEN ts3 IS NULL THEN 0 ELSE 1 END AS depth
   FROM t1 LEFT JOIN t2 USING (user_id) LEFT JOIN t3 USING (user_id))
-SELECT 'user' AS component, CAST(user_id AS BIGINT) AS id_a,
-       CAST(NULL AS VARCHAR) AS s1, ts1 AS t1, ts2 AS t2, ts3 AS t3,
-       CAST(depth AS BIGINT) AS n1
+SELECT 'u12' AS component, CAST(user_id AS BIGINT) AS id_a,
+       CAST(NULL AS VARCHAR) AS s1, ts1 AS t1, ts2 AS t2,
+       CAST(NULL AS TIMESTAMP) AS t3, CAST(depth AS BIGINT) AS n1
 FROM u
 UNION ALL
-SELECT 'summary', 1, 'view', NULL, NULL, NULL, (SELECT COUNT(*) FROM t1)
+SELECT 'u3', CAST(user_id AS BIGINT), NULL, NULL, NULL, ts3, NULL
+FROM u WHERE ts3 IS NOT NULL
 UNION ALL
-SELECT 'summary', 2, 'click', NULL, NULL, NULL, (SELECT COUNT(*) FROM t2)
+SELECT 's', 1, 'view', NULL, NULL, NULL, (SELECT COUNT(*) FROM t1)
 UNION ALL
-SELECT 'summary', 3, 'purchase', NULL, NULL, NULL, (SELECT COUNT(*) FROM t3)
+SELECT 's', 2, 'click', NULL, NULL, NULL, (SELECT COUNT(*) FROM t2)
+UNION ALL
+SELECT 's', 3, 'purchase', NULL, NULL, NULL, (SELECT COUNT(*) FROM t3)
 """
 
 
@@ -3369,7 +3326,6 @@ def q_winnow_docs(spark, sf_dir):
         F.sum(F.col("fp_hash") % 1000003).alias("h_sum"),
     )
     d = per_doc.select(
-        F.lit("doc").alias("component"),
         F.col("doc_id").cast("long").alias("id_a"),
         F.col("n_fps").cast("long").alias("id_b"),
         F.col("h_min").alias("n1"),
@@ -3377,14 +3333,11 @@ def q_winnow_docs(spark, sf_dir):
         F.col("h_sum").cast("long").alias("n3"),
     )
     p = winnow_candidates(docs, k=4, w=4, min_shared=2, fingerprints=fp).select(
-        F.lit("pair").alias("component"),
         F.col("doc_a").cast("long").alias("id_a"),
         F.col("doc_b").cast("long").alias("id_b"),
         F.col("n_shared").cast("long").alias("n1"),
-        _nul("long").alias("n2"),
-        _nul("long").alias("n3"),
     )
-    return _union_all([d, p])
+    return _suite_frame("winnow_docs", [("doc", d), ("pair", p)])
 
 
 SQL_WINNOW_FPS = r"""
@@ -3440,18 +3393,6 @@ FROM pairs
 """
 
 
-SQL_NGRAM_JACCARD_SUITE = f"""
-SELECT 'jaccard' AS component, CAST(doc_a AS BIGINT) AS id_a,
-       CAST(doc_b AS BIGINT) AS id_b, CAST(jaccard AS DOUBLE) AS v1,
-       CAST(NULL AS BIGINT) AS n1, CAST(NULL AS BIGINT) AS n2,
-       CAST(NULL AS BIGINT) AS n3
-FROM ({SQL_NGRAM_JACCARD}) _j
-UNION ALL
-SELECT 'winnow_' || component, id_a, id_b, CAST(NULL AS DOUBLE), n1, n2, n3
-FROM ({SQL_WINNOW}) _w
-"""
-
-
 # ---------------------------------------------------------------------------
 # BPE encoding (tokenizer APPLICATION, the counterpart of bpe_merges'
 # training): vocabulary-level encode + per-doc token counts under a fixed
@@ -3469,20 +3410,16 @@ def q_bpe_encode_docs(spark, sf_dir):
 
     docs = _t(spark, sf_dir)["documents"]
     w = bpe_encode_vocab(docs, _BPE_ENC_MERGES).select(
-        F.lit("word").alias("component"),
         F.col("word").alias("k"),
         F.col("n_toks").cast("long").alias("n1"),
-        _nul("long").alias("n2"),
         F.array_join("bpe_tokens", " ").alias("enc"),
     )
     d = bpe_token_counts(docs, _BPE_ENC_MERGES).select(
-        F.lit("doc").alias("component"),
         F.col("doc_id").cast("string").alias("k"),
         F.col("n_bpe_tokens").cast("long").alias("n1"),
         F.col("n_words").cast("long").alias("n2"),
-        _nul("string").alias("enc"),
     )
-    return _union_all([w, d])
+    return _suite_frame("bpe_encode_docs", [("word", w), ("doc", d)])
 
 
 def _bpe_enc_expr() -> str:
@@ -3532,12 +3469,8 @@ def q_hll_users_events(spark, sf_dir):
     from .operators import hll_merge, hll_registers
 
     ev = _t(spark, sf_dir)["events"]
-    users = hll_registers(ev, "user_id", b=10).select(
-        F.lit("hll_users").alias("component"), "bucket", "rho_max"
-    )
-    ids = hll_registers(ev, "event_id", b=10).select(
-        F.lit("hll_events").alias("component"), "bucket", "rho_max"
-    )
+    users = hll_registers(ev, "user_id", b=10).select("bucket", "rho_max")
+    ids = hll_registers(ev, "event_id", b=10).select("bucket", "rho_max")
     shards = [
         hll_registers(ev.filter(F.col("event_type") == t), "user_id", b=10)
         for t in ("click", "view", "purchase", "scroll", "hover")
@@ -3548,9 +3481,11 @@ def q_hll_users_events(spark, sf_dir):
         "user_id", b=10,
     )
     merged = hll_merge(_union_all(shards + [other])).select(
-        F.lit("hll_merged").alias("component"), "bucket", "rho_max"
+        "bucket", "rho_max"
     )
-    return _union_all([users, ids, merged])
+    return _suite_frame("hll_users_events", [
+        ("hll_users", users), ("hll_events", ids), ("hll_merged", merged),
+    ])
 
 
 def _hll_reg_sql(expr: str) -> str:
@@ -3673,7 +3608,6 @@ def q_label_prototypes(spark, sf_dir):
     # and the driver-side protos collect — without this it computed twice
     cent = label_centroids(emb).localCheckpoint(eager=False)
     c = cent.select(
-        F.lit("centroid").alias("component"),
         F.col("label").cast("long").alias("id_a"),
         F.col("dim").cast("int").alias("dim"),
         F.col("mean_r").alias("v1"),
@@ -3686,13 +3620,11 @@ def q_label_prototypes(spark, sf_dir):
     # Arrow kernel twin (bit-identical to prototype_assign, pytest-pinned):
     # the expression path evaluated len(protos) interpreted-HOF cosines/row
     a = prototype_assign_arrow(emb, protos).select(
-        F.lit("assign").alias("component"),
         F.col("vec_id").cast("long").alias("id_a"),
         F.col("pred_label").cast("int").alias("dim"),
         F.round("cosine", 6).alias("v1"),
-        _nul("long").alias("n1"),
     )
-    return _union_all([c, a])
+    return _suite_frame("label_prototypes", [("centroid", c), ("assign", a)])
 
 
 SQL_LABEL_PROTOTYPES = """
@@ -4102,45 +4034,6 @@ SELECT zv >> 24 AS z_bucket, COUNT(*) AS n_rows,
        MIN(x) AS x_min, MAX(x) AS x_max,
        MIN(y) AS y_min, MAX(y) AS y_max
 FROM z GROUP BY zv >> 24
-"""
-
-
-# --- events_payload_layout: typed JSON payload extraction + Z-order layout
-# rectangles (the events enrichment + physical-layout family) ----------------
-
-def q_events_payload_layout(spark, sf_dir):
-    jp = q_json_props_events(spark, sf_dir).select(
-        F.lit("json").alias("component"),
-        F.col("event_type").cast("string").alias("key"),
-        F.col("n_events").cast("long").alias("n1"),
-        F.col("sum_k").cast("long").alias("n2"),
-        F.col("min_k").cast("long").alias("n3"),
-        F.col("max_k").cast("long").alias("n4"),
-        F.col("n_even_k").cast("long").alias("n5"),
-    )
-    zo = q_zorder_events(spark, sf_dir).select(
-        F.lit("zorder").alias("component"),
-        F.col("z_bucket").cast("string").alias("key"),
-        F.col("n_rows").alias("n1"),
-        F.col("x_min").alias("n2"),
-        F.col("x_max").alias("n3"),
-        F.col("y_min").alias("n4"),
-        F.col("y_max").alias("n5"),
-    )
-    return _union_all([jp, zo])
-
-
-SQL_EVENTS_PAYLOAD_LAYOUT = f"""
-SELECT 'json' AS component, CAST(event_type AS VARCHAR) AS key,
-       CAST(n_events AS BIGINT) AS n1, CAST(sum_k AS BIGINT) AS n2,
-       CAST(min_k AS BIGINT) AS n3, CAST(max_k AS BIGINT) AS n4,
-       CAST(n_even_k AS BIGINT) AS n5
-FROM ({SQL_JSON_PROPS}) _j
-UNION ALL
-SELECT 'zorder', CAST(z_bucket AS VARCHAR), CAST(n_rows AS BIGINT),
-       CAST(x_min AS BIGINT), CAST(x_max AS BIGINT),
-       CAST(y_min AS BIGINT), CAST(y_max AS BIGINT)
-FROM ({SQL_ZORDER_EVENTS}) _z
 """
 
 
@@ -4577,19 +4470,72 @@ FROM assign a LEFT JOIN dup ON dup.idb = a.vec_id
 
 
 # ---------------------------------------------------------------------------
-# Merged driver-window suites.
+# Driver-window suites.
 #
-# The driver records verdicts for at most 50 ``queries()`` entries
-# (CORRECTNESS_r04 held exactly the first 50 of 77, leaving 27 queries with
-# no driver verdict).  To give EVERY operator a driver-hashed verdict, same-
-# family queries are packaged as one entry each: the component queries run
-# unchanged and their outputs are projected into a shared tagged slot schema
-# (every original column lands in some explicitly-cast slot, so the merged
-# value hash is exactly as sensitive as the per-query hashes were), then
-# UNION ALL'd.  The oracle applies the identical projection to each
-# component's existing oracle SQL.  Individual queries stay registered in
-# ALL_QUERIES for pytest / bench / plan assertions.
+# The driver records verdicts for at most 50 ``queries()`` entries, so
+# same-family queries are packaged as one tagged suite each.  A suite is one
+# row of ``_SUITES`` (with the registry below): a list of ``(tag, entry)``
+# arms over registered entries.  Both sides are generated from that row —
+# the Spark side unions the arms' frames by column name, the oracle side
+# unions the arms' oracle SQL with DuckDB's ``UNION ALL BY NAME`` — so a
+# suite's columns are the union of its arms' own columns (NULL where an arm
+# lacks one) and its value hash sees every value the arms emit.  An arm's
+# output ``component`` is its tag, or ``tag || component`` when the entry
+# emits its own ``component`` column.  Entries made of tagged parts that
+# share an intermediate (``funnel_events``, ``crawl_ingest_docs``, ...) build
+# their Spark side with the same :func:`_suite_frame`.
 # ---------------------------------------------------------------------------
+
+
+def _suite_frame(suite: str, arms: list[tuple[str, DataFrame]]) -> DataFrame:
+    """Tag each arm frame and union them by column name.
+
+    Integer columns of different widths under one name are widened (both
+    engines do this); any other type clash raises instead of being cast."""
+    seen = {}
+    out = None
+    for tag, df in arms:
+        for f in df.schema.fields:
+            if f.name == "component":
+                continue
+            first_tag, t0 = seen.setdefault(f.name, (tag, f.dataType))
+            t1 = f.dataType
+            integral = isinstance(t0, T.IntegralType) and isinstance(
+                t1, T.IntegralType
+            )
+            if t0.simpleString() != t1.simpleString() and not integral:
+                raise TypeError(
+                    f"suite {suite}: column {f.name!r} is "
+                    f"{t0.simpleString()} in arm {first_tag!r} but "
+                    f"{t1.simpleString()} in arm {tag!r}"
+                )
+        comp = F.lit(tag)
+        if "component" in df.columns:
+            comp = F.concat(comp, F.coalesce(F.col("component"), F.lit("")))
+        df = df.select(
+            comp.alias("component"),
+            *[c for c in df.columns if c != "component"],
+        )
+        out = df if out is None else out.unionByName(
+            df, allowMissingColumns=True
+        )
+    return out
+
+
+def _suite_sql(arms: list[tuple[str, str]]) -> str:
+    """The DuckDB twin of :func:`_suite_frame` over the arms' oracle SQL.
+
+    Each arm is unioned by name onto an empty ``component`` relation first,
+    so one expression applies the tag rule whether or not the arm emits its
+    own ``component``."""
+    return "UNION ALL BY NAME".join(
+        f"""
+SELECT * REPLACE ('{tag}' || COALESCE(component, '') AS component)
+FROM (SELECT CAST(NULL AS VARCHAR) AS component WHERE false
+      UNION ALL BY NAME SELECT * FROM ({sql}) _a)
+"""
+        for tag, sql in arms
+    )
 
 
 def _union_all(frames: list[DataFrame]) -> DataFrame:
@@ -4779,81 +4725,6 @@ FROM ({SQL_MAD_OUTLIERS}) _m
 """
 
 
-# --- join_strategies: bucketed co-located join + bloom-prefiltered semi-join
-# (the two scale-path join rewrites, equivalence-checked) --------------------
-
-def q_join_strategies(spark, sf_dir):
-    bk = q_bucketed_join_orders(spark, sf_dir).select(
-        F.lit("bucketed").alias("component"),
-        F.col("o_orderpriority").cast("string").alias("s1"),
-        F.col("n_lines").cast("long").alias("n1"),
-        _nul("long").alias("n2"),
-        _nul("long").alias("n3"),
-        F.col("total_price").cast("double").alias("v1"),
-        _nul("string").alias("s2"),
-    )
-    bl = q_bloom_orders(spark, sf_dir).select(
-        F.lit("bloom").alias("component"),
-        F.lit("BUILDING").cast("string").alias("s1"),
-        F.col("n_pass").cast("long").alias("n1"),
-        F.col("n_true").cast("long").alias("n2"),
-        F.col("n_false_pos").cast("long").alias("n3"),
-        _nul("double").alias("v1"),
-        _nul("string").alias("s2"),
-    )
-    # CI-collation joins (r12 fold, r11 VERDICT #1): the SQL Server
-    # default-collation lookup/anti/semi family under 'ci_' components
-    ci = q_ci_collation_customers(spark, sf_dir).select(
-        # strip any existing ci_ before prefixing — the standalone's
-        # 'ci_semi' must fold to 'ci_semi', not 'ci_ci_semi'
-        F.concat(
-            F.lit("ci_"), F.regexp_replace("component", "^ci_", "")
-        ).alias("component"),
-        F.col("s1"),
-        F.col("k").cast("long").alias("n1"),
-        _nul("long").alias("n2"),
-        _nul("long").alias("n3"),
-        _nul("double").alias("v1"),
-        F.col("s2"),
-    )
-    # CI collation beyond joins (r12, r11 VERDICT #4): GROUP BY /
-    # DISTINCT / dup detection / ORDER BY under 'cig_' components
-    cg = q_ci_group_customers(spark, sf_dir).select(
-        F.concat(F.lit("cig_"), F.col("component")).alias("component"),
-        F.col("s1"),
-        F.col("n1"),
-        _nul("long").alias("n2"),
-        _nul("long").alias("n3"),
-        F.col("v1"),
-        _nul("string").alias("s2"),
-    )
-    # CI collation on string-equality PREDICATES (r13, r12 VERDICT #1)
-    # under 'cif_' components — WHERE folds + expression-compiler folds
-    cf = q_ci_filter_customers(spark, sf_dir).select(
-        F.concat(F.lit("cif_"), F.col("component")).alias("component"),
-        F.col("s1"),
-        F.col("k").cast("long").alias("n1"),
-        _nul("long").alias("n2"),
-        _nul("long").alias("n3"),
-        _nul("double").alias("v1"),
-        _nul("string").alias("s2"),
-    )
-    return _union_all([bk, bl, ci, cg, cf])
-
-
-SQL_JOIN_STRATEGIES = f"""
-SELECT 'bucketed' AS component, CAST(o_orderpriority AS VARCHAR) AS s1,
-       CAST(n_lines AS BIGINT) AS n1, {_NULL_BIGINT} AS n2,
-       {_NULL_BIGINT} AS n3, CAST(total_price AS DOUBLE) AS v1,
-       {_NULL_STR} AS s2
-FROM ({SQL_BUCKETED_JOIN}) _b
-UNION ALL
-SELECT 'bloom', 'BUILDING', CAST(n_pass AS BIGINT), CAST(n_true AS BIGINT),
-       CAST(n_false_pos AS BIGINT), {_NULL_DOUBLE}, {_NULL_STR}
-FROM ({SQL_BLOOM_ORDERS}) _f
-"""
-
-
 # --- ci_collation_customers: SQL Server default-collation (CI) joins -------
 
 def q_ci_collation_customers(spark, sf_dir):
@@ -4865,7 +4736,7 @@ def q_ci_collation_customers(spark, sf_dir):
     Titlecase by c_custkey % 3) and joins it back to the original-case
     dimension: 'lookup' = the CI lookup's match output (case of the fact
     key preserved), 'cs_miss' = the migration delta a case-sensitive join
-    silently drops, 'ci_semi' = CI semi-join survivors (everyone)."""
+    silently drops, 'semi' = CI semi-join survivors (everyone)."""
     from .operators.joins import anti_join, semi_join
     from .operators.lookup import lookup
 
@@ -4889,26 +4760,23 @@ def q_ci_collation_customers(spark, sf_dir):
     lk = lookup(
         fact, dim, on=["segment"], select={"seg_code": "seg_code"}, ci=True
     ).select(
-        F.lit("lookup").alias("component"),
         F.col("c_custkey").cast("long").alias("k"),
         F.col("segment").cast("string").alias("s1"),
         F.col("seg_code").cast("string").alias("s2"),
     )
     cs_miss = anti_join(fact, dim.select("segment"), on=["segment"]).select(
-        F.lit("cs_miss").alias("component"),
         F.col("c_custkey").cast("long").alias("k"),
         F.col("segment").cast("string").alias("s1"),
-        _nul("string").alias("s2"),
     )
     ci_semi = semi_join(
         fact, dim.select("segment"), on=["segment"], ci=True
     ).select(
-        F.lit("ci_semi").alias("component"),
         F.col("c_custkey").cast("long").alias("k"),
         F.col("segment").cast("string").alias("s1"),
-        _nul("string").alias("s2"),
     )
-    return _union_all([lk, cs_miss, ci_semi])
+    return _suite_frame("ci_collation_customers", [
+        ("lookup", lk), ("cs_miss", cs_miss), ("semi", ci_semi),
+    ])
 
 
 SQL_CI_COLLATION = """
@@ -4931,18 +4799,9 @@ SELECT 'cs_miss', CAST(c_custkey AS BIGINT), CAST(segment AS VARCHAR),
        CAST(NULL AS VARCHAR)
 FROM f WHERE NOT EXISTS (SELECT 1 FROM d WHERE d.dseg = f.segment)
 UNION ALL
-SELECT 'ci_semi', CAST(c_custkey AS BIGINT), CAST(segment AS VARCHAR),
+SELECT 'semi', CAST(c_custkey AS BIGINT), CAST(segment AS VARCHAR),
        CAST(NULL AS VARCHAR)
 FROM f WHERE EXISTS (SELECT 1 FROM d WHERE lower(d.dseg) = lower(f.segment))
-"""
-
-# r12 fold: CI-collation joins under 'ci_' components in the
-# join-strategies driver suite (SQL_CI_COLLATION is defined just above,
-# so the suite SQL extends here rather than in the end-of-module block)
-SQL_JOIN_STRATEGIES += f"""UNION ALL
-SELECT 'ci_' || regexp_replace(component, '^ci_', ''), s1,
-       CAST(k AS BIGINT), {_NULL_BIGINT}, {_NULL_BIGINT}, {_NULL_DOUBLE}, s2
-FROM ({SQL_CI_COLLATION}) _ci
 """
 
 
@@ -4991,34 +4850,28 @@ def q_ci_group_customers(spark, sf_dir):
         },
         ci=True,
     ).select(
-        F.lit("group").alias("component"),
         F.col("segment").cast("string").alias("s1"),
         F.col("n1").cast("long").alias("n1"),
         F.col("v1"),
     )
     d = distinct_values(f, ["segment"], ci=True).select(
-        F.lit("distinct").alias("component"),
         F.col("segment").cast("string").alias("s1"),
-        _nul("long").alias("n1"),
-        _nul("double").alias("v1"),
     )
     dup = duplicate_keys(f.select("segment"), ["segment"], ci=True).select(
-        F.lit("dup").alias("component"),
         F.col("segment").cast("string").alias("s1"),
         F.col("dup_count").cast("long").alias("n1"),
-        _nul("double").alias("v1"),
     )
     st = (
         sort(f, ["segment", "c_custkey"], ci=True)
         .limit(10)
         .select(
-            F.lit("sort_top").alias("component"),
             F.col("segment").cast("string").alias("s1"),
             F.col("c_custkey").cast("long").alias("n1"),
-            _nul("double").alias("v1"),
         )
     )
-    return _union_all([g, d, dup, st])
+    return _suite_frame("ci_group_customers", [
+        ("group", g), ("distinct", d), ("dup", dup), ("sort_top", st),
+    ])
 
 
 _SQL_CI_MIXED = """
@@ -5052,13 +4905,6 @@ SELECT 'sort_top', CAST(segment AS VARCHAR), CAST(c_custkey AS BIGINT),
        {_NULL_DOUBLE}
 FROM (SELECT segment, c_custkey FROM f
       ORDER BY lower(segment), segment, c_custkey LIMIT 10) _st
-"""
-
-# fold into the join-strategies driver suite under 'cig_' components
-SQL_JOIN_STRATEGIES += f"""UNION ALL
-SELECT 'cig_' || component, s1, n1, {_NULL_BIGINT}, {_NULL_BIGINT}, v1,
-       {_NULL_STR}
-FROM ({SQL_CI_GROUP}) _cg
 """
 
 
@@ -5106,8 +4952,7 @@ def q_ci_filter_customers(spark, sf_dir):
     f.createOrReplaceTempView("ci_filter_customers_src")
 
     def shaped(df, tag):
-        return df.select(
-            F.lit(tag).alias("component"),
+        return tag, df.select(
             F.col("c_custkey").cast("long").alias("k"),
             F.col("segment").cast("string").alias("s1"),
         )
@@ -5149,7 +4994,7 @@ def q_ci_filter_customers(spark, sf_dir):
         )),
         "expr_ne",
     )
-    return _union_all([we, wi, wl, ee, en])
+    return _suite_frame("ci_filter_customers", [we, wi, wl, ee, en])
 
 
 SQL_CI_FILTER = """
@@ -5177,13 +5022,6 @@ FROM f WHERE lower(segment) = 'building'
 UNION ALL
 SELECT 'expr_ne', CAST(c_custkey AS BIGINT), CAST(segment AS VARCHAR)
 FROM f WHERE lower(segment) <> 'building'
-"""
-
-# fold into the join-strategies driver suite under 'cif_' components
-SQL_JOIN_STRATEGIES += f"""UNION ALL
-SELECT 'cif_' || component, s1, CAST(k AS BIGINT), {_NULL_BIGINT},
-       {_NULL_BIGINT}, {_NULL_DOUBLE}, {_NULL_STR}
-FROM ({SQL_CI_FILTER}) _cf
 """
 
 
@@ -6230,25 +6068,10 @@ GROUP BY t.doc_id
 """
 
 
-# --- containment_kmv_docs: shingle containment pairs + KMV distinct sketch
-# + benchmark decontamination (the shingle-overlap family) -------------------
-
-def q_containment_kmv_docs(spark, sf_dir):
-    c = q_containment_docs(spark, sf_dir).select(
-        F.lit("containment").alias("component"),
-        F.col("contained_id").cast("long").alias("id_a"),
-        F.col("container_id").cast("long").alias("id_b"),
-        F.col("containment").cast("double").alias("v1"),
-    )
-    k = q_kmv_shingles(spark, sf_dir).select(
-        F.lit("kmv").alias("component"),
-        F.col("kmv_k").cast("long").alias("id_a"),
-        F.col("n_exact").cast("long").alias("id_b"),
-        F.col("kmv_estimate").cast("double").alias("v1"),
-    )
-    # mergeability proof: per-language sketches merged must reproduce the
-    # direct whole-corpus estimate BIT-EXACTLY (KMV union-merge is lossless),
-    # so this component's oracle is the same SQL as the direct sketch
+def q_kmv_merged_shingles(spark, sf_dir):
+    """KMV mergeability proof: per-language sketches merged must reproduce
+    the direct whole-corpus estimate of ``kmv_shingles`` BIT-EXACTLY (KMV
+    union-merge is lossless), so its oracle is the direct sketch's SQL."""
     from .operators import kmv_merge_estimate, kmv_sketch_grouped
     from .text.dedup import shingle
 
@@ -6258,337 +6081,27 @@ def q_containment_kmv_docs(spark, sf_dir):
     )
     sketches = kmv_sketch_grouped(sh, ["lang"], "sh", k=64)
     merged = kmv_merge_estimate(sketches, k=64)
-    m = merged.select(
-        F.lit("kmv_merged").alias("component"),
-        F.col("kmv_k").cast("long").alias("id_a"),
-        _nul("long").alias("id_b"),
-        F.col("kmv_estimate").cast("double").alias("v1"),
-    )
-    dc = q_decontam_docs(spark, sf_dir).select(
-        F.lit("decontam").alias("component"),
-        F.col("doc_id").cast("long").alias("id_a"),
-        F.col("n_shared").cast("long").alias("id_b"),
-        _nul("double").alias("v1"),
-    )
-    # count-min frequency sketch: direct + merged-shard estimates per probe
-    # token next to the exact count (merge is a lossless bucket-wise sum, so
-    # the merged component's oracle is the direct-sketch SQL)
-    cm = q_cms_tokens_docs(spark, sf_dir)
-    cms_direct = cm.select(
-        F.lit("cms").alias("component"),
-        F.col("probe_idx").cast("long").alias("id_a"),
-        F.col("cms_est").cast("long").alias("id_b"),
-        F.col("n_exact").cast("double").alias("v1"),
-    )
-    cms_merged = cm.select(
-        F.lit("cms_merged").alias("component"),
-        F.col("probe_idx").cast("long").alias("id_a"),
-        F.col("cms_est_merged").cast("long").alias("id_b"),
-        _nul("double").alias("v1"),
-    )
-    # HLL registers (events): direct low/high-cardinality builds + the
-    # merged-shard build that must be register-identical to direct
-    hll = q_hll_users_events(spark, sf_dir).select(
-        F.col("component"),
-        F.col("bucket").cast("long").alias("id_a"),
-        F.col("rho_max").cast("long").alias("id_b"),
-        _nul("double").alias("v1"),
-    )
-    return _union_all([c, k, m, dc, cms_direct, cms_merged, hll])
-
-
-SQL_CONTAINMENT_KMV = f"""
-SELECT 'containment' AS component, CAST(contained_id AS BIGINT) AS id_a,
-       CAST(container_id AS BIGINT) AS id_b, CAST(containment AS DOUBLE) AS v1
-FROM ({SQL_CONTAINMENT}) _c
-UNION ALL
-SELECT 'kmv', CAST(kmv_k AS BIGINT), CAST(n_exact AS BIGINT),
-       CAST(kmv_estimate AS DOUBLE)
-FROM ({SQL_KMV_SHINGLES}) _k
-UNION ALL
-SELECT 'kmv_merged', CAST(kmv_k AS BIGINT), {_NULL_BIGINT},
-       CAST(kmv_estimate AS DOUBLE)
-FROM ({SQL_KMV_SHINGLES}) _m
-UNION ALL
-SELECT 'decontam', CAST(doc_id AS BIGINT), CAST(n_shared AS BIGINT),
-       {_NULL_DOUBLE}
-FROM ({SQL_DECONTAM}) _d
-UNION ALL
-SELECT 'cms', CAST(probe_idx AS BIGINT), CAST(cms_est AS BIGINT),
-       CAST(n_exact AS DOUBLE)
-FROM ({SQL_CMS_TOKENS}) _cm
-UNION ALL
-SELECT 'cms_merged', CAST(probe_idx AS BIGINT), CAST(cms_est_merged AS BIGINT),
-       {_NULL_DOUBLE}
-FROM ({SQL_CMS_TOKENS}) _cmm
-UNION ALL
-SELECT component, CAST(bucket AS BIGINT), CAST(rho_max AS BIGINT),
-       {_NULL_DOUBLE}
-FROM ({SQL_HLL_USERS_EVENTS}) _h
-"""
-
-
-# --- ann_topk_suite: exact cosine top-k + md5-LSH top-k + IVF top-k + int8
-# quantization, all over the embeddings table ------------------------------
-
-def q_ann_topk_suite(spark, sf_dir):
-    def topk_slots(df, tag):
-        return df.select(
-            F.lit(tag).alias("component"),
-            F.col("vec_id").cast("long").alias("vec_id"),
-            _nul("int").alias("dim"),
-            _nul("int").alias("q"),
-            _nul("long").alias("id_b"),
-            F.col("cosine_r").cast("double").alias("score"),
-        )
-
-    parts = [
-        topk_slots(q_topk_embeddings(spark, sf_dir), "brute_force"),
-        topk_slots(q_lsh_topk_md5(spark, sf_dir), "lsh_md5"),
-        topk_slots(q_ivf_topk(spark, sf_dir), "ivf"),
-        q_quantize_embeddings(spark, sf_dir).select(
-            F.lit("quantize").alias("component"),
-            F.col("vec_id").cast("long").alias("vec_id"),
-            F.col("dim").cast("int").alias("dim"),
-            F.col("q").cast("int").alias("q"),
-            _nul("long").alias("id_b"),
-            F.col("scale").cast("double").alias("score"),
-        ),
-        q_semdedup_embeddings(spark, sf_dir).select(
-            F.lit("semdedup").alias("component"),
-            F.col("vec_id").cast("long").alias("vec_id"),
-            F.col("cell").cast("int").alias("dim"),
-            _nul("int").alias("q"),
-            F.col("dup_of").cast("long").alias("id_b"),
-            F.col("max_cos_r").cast("double").alias("score"),
-        ),
-        # hard negatives (round 6): per-query contrastive negatives
-        q_hard_negatives(spark, sf_dir).select(
-            F.lit("hard_neg").alias("component"),
-            F.col("vec_id").cast("long").alias("vec_id"),
-            F.col("rank").cast("int").alias("dim"),
-            _nul("int").alias("q"),
-            F.col("q_id").cast("long").alias("id_b"),
-            F.col("cosine_r").cast("double").alias("score"),
-        ),
-        # class prototypes (round 6): centroids + assignment argmax
-        q_label_prototypes(spark, sf_dir).select(
-            F.concat(F.lit("proto_"), F.col("component")).alias("component"),
-            F.col("id_a").alias("vec_id"),
-            F.col("dim"),
-            _nul("int").alias("q"),
-            F.col("n1").alias("id_b"),
-            F.col("v1").alias("score"),
-        ),
-        # JL sign projection (round 6): every projected double exact
-        q_project_embeddings(spark, sf_dir).select(
-            F.lit("project").alias("component"),
-            F.col("vec_id").cast("long").alias("vec_id"),
-            F.col("dim").cast("int").alias("dim"),
-            _nul("int").alias("q"),
-            _nul("long").alias("id_b"),
-            F.col("value").cast("double").alias("score"),
-        ),
-        # k-means (round 6): trained centroids + final assignment
-        q_kmeans_embeddings(spark, sf_dir).select(
-            F.concat(F.lit("km_"), F.col("component")).alias("component"),
-            F.col("id_a").alias("vec_id"),
-            F.col("dim"),
-            _nul("int").alias("q"),
-            _nul("long").alias("id_b"),
-            F.col("v1").alias("score"),
-        ),
-        # farthest-point seeding (round 7): the k-means++-style
-        # deterministic init, seed sequence reproduced by the oracle
-        q_fps_seeds(spark, sf_dir).select(
-            F.lit("fps").alias("component"),
-            F.col("vec_id").cast("long").alias("vec_id"),
-            F.col("dim").cast("int").alias("dim"),
-            F.col("seed_idx").cast("int").alias("q"),
-            _nul("long").alias("id_b"),
-            F.col("val").cast("double").alias("score"),
-        ),
-        # k-NN join (r9: folded in from its standalone window slot to
-        # free the slot for crawl_ingest_docs — the driver verifies at
-        # most 50 entries; the standalone entry stays in ALL_QUERIES)
-        q_knn_join_embeddings(spark, sf_dir).select(
-            F.lit("knn").alias("component"),
-            F.col("vec_id").cast("long").alias("vec_id"),
-            _nul("int").alias("dim"),
-            _nul("int").alias("q"),
-            F.col("query_id").cast("long").alias("id_b"),
-            F.col("cosine_r").cast("double").alias("score"),
-        ),
-        # persisted IVF index (r11): disk write/append + partition-pruned
-        # batch probe — driver visibility for the on-disk ANN path
-        q_ivf_index_probe(spark, sf_dir).select(
-            F.lit("ivf_idx").alias("component"),
-            F.col("vec_id").cast("long").alias("vec_id"),
-            F.col("rn").cast("int").alias("dim"),
-            _nul("int").alias("q"),
-            F.col("query_id").cast("long").alias("id_b"),
-            F.col("cosine_r").cast("double").alias("score"),
-        ),
-        # semantic decontamination (r12 fold, r11 VERDICT #1): cross-set
-        # 1-NN train-vs-eval with the contamination flag in the q slot
-        q_semantic_decontam_embeddings(spark, sf_dir).select(
-            F.lit("decontam").alias("component"),
-            F.col("vec_id").cast("long").alias("vec_id"),
-            _nul("int").alias("dim"),
-            F.col("contaminated").cast("int").alias("q"),
-            F.col("ref_id").cast("long").alias("id_b"),
-            F.col("cosine_r").cast("double").alias("score"),
-        ),
-        # streaming IVF probe (r12 fold, r11 VERDICT #1): the real
-        # checkpointed availableNow stream against the persisted index
-        q_streaming_ivf_probe(spark, sf_dir).select(
-            F.lit("sivf").alias("component"),
-            F.col("vec_id").cast("long").alias("vec_id"),
-            F.col("rn").cast("int").alias("dim"),
-            _nul("int").alias("q"),
-            F.col("query_id").cast("long").alias("id_b"),
-            F.col("cosine_r").cast("double").alias("score"),
-        ),
-        # corpus-scale decontam through the IVF index (r12): the
-        # no-broadcast cell-join path, nprobe = n_cells -> exact
-        q_semantic_decontam_ivf(spark, sf_dir).select(
-            F.lit("decontam_ivf").alias("component"),
-            F.col("vec_id").cast("long").alias("vec_id"),
-            _nul("int").alias("dim"),
-            F.col("contaminated").cast("int").alias("q"),
-            F.col("ref_id").cast("long").alias("id_b"),
-            F.col("cosine_r").cast("double").alias("score"),
-        ),
-        # recall@k audit (r13, r12 VERDICT #7): the quality dial of the
-        # cell-audit -> recall -> recluster loop
-        q_ivf_recall_audit(spark, sf_dir).select(
-            F.lit("recall").alias("component"),
-            F.col("n_hits").cast("long").alias("vec_id"),
-            F.col("nprobe").cast("int").alias("dim"),
-            F.col("k").cast("int").alias("q"),
-            F.col("query_id").cast("long").alias("id_b"),
-            _nul("double").alias("score"),
-        ),
-    ]
-    return _union_all(parts)
-
-
-SQL_ANN_TOPK_SUITE = f"""
-SELECT 'brute_force' AS component, CAST(vec_id AS BIGINT) AS vec_id,
-       {_NULL_INT} AS dim, {_NULL_INT} AS q, {_NULL_BIGINT} AS id_b,
-       CAST(cosine_r AS DOUBLE) AS score
-FROM ({SQL_TOPK_EMB}) _b
-UNION ALL
-SELECT 'lsh_md5', CAST(vec_id AS BIGINT), {_NULL_INT}, {_NULL_INT},
-       {_NULL_BIGINT}, CAST(cosine_r AS DOUBLE)
-FROM ({SQL_LSH_TOPK_MD5}) _l
-UNION ALL
-SELECT 'ivf', CAST(vec_id AS BIGINT), {_NULL_INT}, {_NULL_INT},
-       {_NULL_BIGINT}, CAST(cosine_r AS DOUBLE)
-FROM ({SQL_IVF_TOPK}) _i
-UNION ALL
-SELECT 'quantize', CAST(vec_id AS BIGINT), CAST(dim AS INTEGER),
-       CAST(q AS INTEGER), {_NULL_BIGINT}, CAST(scale AS DOUBLE)
-FROM ({SQL_QUANTIZE}) _q
-UNION ALL
-SELECT 'semdedup', CAST(vec_id AS BIGINT), CAST(cell AS INTEGER),
-       {_NULL_INT}, CAST(dup_of AS BIGINT), CAST(max_cos_r AS DOUBLE)
-FROM ({SQL_SEMDEDUP}) _s
-UNION ALL
-SELECT 'hard_neg', CAST(vec_id AS BIGINT), CAST(rank AS INTEGER),
-       {_NULL_INT}, CAST(q_id AS BIGINT), CAST(cosine_r AS DOUBLE)
-FROM ({SQL_HARD_NEGATIVES}) _hn
-UNION ALL
-SELECT 'proto_' || component, id_a, dim, {_NULL_INT}, n1, v1
-FROM ({SQL_LABEL_PROTOTYPES}) _lp
-UNION ALL
-SELECT 'project', CAST(vec_id AS BIGINT), CAST(dim AS INTEGER),
-       {_NULL_INT}, {_NULL_BIGINT}, CAST(value AS DOUBLE)
-FROM ({SQL_PROJECT_EMBEDDINGS}) _p
-"""
-
-
-# --- agg_daily_rollup: full daily rollup + incremental merge-maintenance
-# equivalence (both components must hash identically except for the tag) ---
-
-def q_agg_daily_rollup(spark, sf_dir):
-    def tag(df, t):
-        return df.select(
-            F.lit(t).alias("component"),
-            F.col("ship_date").cast("date").alias("ship_date"),
-            F.col("return_flag").cast("string").alias("return_flag"),
-            F.col("total_quantity").cast("double").alias("total_quantity"),
-            F.col("total_gross").cast("double").alias("total_gross"),
-            F.col("total_net").cast("double").alias("total_net"),
-            F.col("line_count").cast("long").alias("line_count"),
-            F.col("avg_net").cast("double").alias("avg_net"),
-        )
-
-    return _union_all(
-        [
-            tag(q_agg_daily_sales(spark, sf_dir), "full"),
-            tag(q_incremental_rollup_sales(spark, sf_dir), "incr"),
-        ]
+    return merged.select(
+        F.col("kmv_k").cast("long").alias("kmv_k"),
+        F.col("kmv_estimate").cast("double").alias("kmv_estimate"),
     )
 
 
-def _sql_agg_daily_tagged(t: str) -> str:
-    inner = _oracle_double(
-        SQL_AGG_DAILY, ["total_quantity", "total_gross", "total_net"]
+SQL_KMV_MERGED = f"SELECT kmv_k, kmv_estimate FROM ({SQL_KMV_SHINGLES}) _k"
+
+
+def q_cms_merged_tokens_docs(spark, sf_dir):
+    """The merged-shard count-min estimates of ``cms_tokens_docs`` alone
+    (the merge is a lossless bucket-wise sum, so they equal the direct
+    sketch's estimates)."""
+    return q_cms_tokens_docs(spark, sf_dir).select(
+        "probe_idx", "cms_est_merged"
     )
-    return f"""
-SELECT '{t}' AS component, CAST(ship_date AS DATE) AS ship_date,
-       CAST(return_flag AS VARCHAR) AS return_flag,
-       CAST(total_quantity AS DOUBLE) AS total_quantity,
-       CAST(total_gross AS DOUBLE) AS total_gross,
-       CAST(total_net AS DOUBLE) AS total_net,
-       CAST(line_count AS BIGINT) AS line_count,
-       CAST(avg_net AS DOUBLE) AS avg_net
-FROM ({inner}) _{t}
-"""
 
 
-SQL_AGG_DAILY_ROLLUP = (
-    _sql_agg_daily_tagged("full") + "UNION ALL" + _sql_agg_daily_tagged("incr")
+SQL_CMS_MERGED = (
+    f"SELECT probe_idx, cms_est_merged FROM ({SQL_CMS_TOKENS}) _cm"
 )
-
-
-# --- cdc_orders: snapshot diff (I/U/D classification) + changelog apply ----
-
-def q_cdc_orders(spark, sf_dir):
-    d = q_cdc_orders_diff(spark, sf_dir).select(
-        F.lit("diff").alias("component"),
-        F.col("o_orderkey").cast("long").alias("okey"),
-        F.col("change_type").cast("string").alias("k1"),
-        F.col("old_o_orderstatus").cast("string").alias("s_old"),
-        F.col("new_o_orderstatus").cast("string").alias("s_new"),
-        F.col("old_total").cast("double").alias("v1"),
-        F.col("new_total").cast("double").alias("v2"),
-    )
-    a = q_cdc_apply_orders(spark, sf_dir).select(
-        F.lit("apply").alias("component"),
-        F.col("o_orderkey").cast("long").alias("okey"),
-        F.col("o_orderstatus").cast("string").alias("k1"),
-        _nul("string").alias("s_old"),
-        _nul("string").alias("s_new"),
-        F.col("total").cast("double").alias("v1"),
-        _nul("double").alias("v2"),
-    )
-    return _union_all([d, a])
-
-
-SQL_CDC_ORDERS = f"""
-SELECT 'diff' AS component, CAST(o_orderkey AS BIGINT) AS okey,
-       CAST(change_type AS VARCHAR) AS k1,
-       CAST(old_o_orderstatus AS VARCHAR) AS s_old,
-       CAST(new_o_orderstatus AS VARCHAR) AS s_new,
-       CAST(old_total AS DOUBLE) AS v1, CAST(new_total AS DOUBLE) AS v2
-FROM ({_oracle_double(SQL_CDC_DIFF, ["old_total", "new_total"])}) _d
-UNION ALL
-SELECT 'apply', CAST(o_orderkey AS BIGINT), CAST(o_orderstatus AS VARCHAR),
-       {_NULL_STR}, {_NULL_STR}, CAST(total AS DOUBLE), {_NULL_DOUBLE}
-FROM ({_oracle_double(SQL_CDC_APPLY, ["total"])}) _a
-"""
 
 
 def q_gap_fill_events(spark, sf_dir):
@@ -6646,186 +6159,9 @@ FROM j
 """
 
 
-# --- events_windows: tumbling + sliding + hypertable rollup (ST4 family) ----
-
-def q_events_windows(spark, sf_dir):
-    tum = q_events_tumbling_10min(spark, sf_dir).select(
-        F.lit("tumbling").alias("component"),
-        F.col("window_start").cast("timestamp").alias("ws"),
-        F.col("window_end").cast("timestamp").alias("we"),
-        F.col("event_type").cast("string").alias("k1"),
-        _nul("int").alias("grp"),
-        F.col("n_events").cast("long").alias("n_events"),
-        F.col("sum_value").cast("double").alias("sum_value"),
-    )
-    sli = q_events_sliding_30min(spark, sf_dir).select(
-        F.lit("sliding").alias("component"),
-        F.col("window_start").cast("timestamp").alias("ws"),
-        F.col("window_end").cast("timestamp").alias("we"),
-        F.col("event_type").cast("string").alias("k1"),
-        _nul("int").alias("grp"),
-        F.col("n_events").cast("long").alias("n_events"),
-        _nul("double").alias("sum_value"),
-    )
-    rol = q_events_rollup(spark, sf_dir).select(
-        F.lit("rollup").alias("component"),
-        F.col("day").cast("timestamp").alias("ws"),
-        _nul("timestamp").alias("we"),
-        F.col("hr").cast("string").alias("k1"),
-        F.col("grouping_level").cast("int").alias("grp"),
-        F.col("n_events").cast("long").alias("n_events"),
-        F.col("sum_value").cast("double").alias("sum_value"),
-    )
-    gf = q_gap_fill_events(spark, sf_dir).select(
-        F.lit("gap_fill").alias("component"),
-        F.col("hour").cast("timestamp").alias("ws"),
-        _nul("timestamp").alias("we"),
-        F.col("event_type").cast("string").alias("k1"),
-        F.col("is_gap").cast("int").alias("grp"),
-        F.col("n_obs").cast("long").alias("n_events"),
-        F.col("sum_value_ff").cast("double").alias("sum_value"),
-    )
-    # funnel (round 6): user rows split over two timestamp-slot arms (the
-    # suite has two ts slots, the funnel has three) + the summary counts
-    fu = q_funnel_events(spark, sf_dir)
-    f12 = fu.filter(F.col("component") == "user").select(
-        F.lit("funnel_u12").alias("component"),
-        F.col("t1").alias("ws"),
-        F.col("t2").alias("we"),
-        _nul("string").alias("k1"),
-        F.col("n1").cast("int").alias("grp"),
-        F.col("id_a").alias("n_events"),
-        _nul("double").alias("sum_value"),
-    )
-    f3 = fu.filter(
-        (F.col("component") == "user") & F.col("t3").isNotNull()
-    ).select(
-        F.lit("funnel_u3").alias("component"),
-        F.col("t3").alias("ws"),
-        _nul("timestamp").alias("we"),
-        _nul("string").alias("k1"),
-        _nul("int").alias("grp"),
-        F.col("id_a").alias("n_events"),
-        _nul("double").alias("sum_value"),
-    )
-    fs = fu.filter(F.col("component") == "summary").select(
-        F.lit("funnel_s").alias("component"),
-        _nul("timestamp").alias("ws"),
-        _nul("timestamp").alias("we"),
-        F.col("s1").alias("k1"),
-        F.col("id_a").cast("int").alias("grp"),
-        F.col("n1").alias("n_events"),
-        _nul("double").alias("sum_value"),
-    )
-    co = q_cohort_retention_events(spark, sf_dir).select(
-        F.lit("cohort").alias("component"),
-        F.col("cohort").alias("ws"),
-        F.col("period").alias("we"),
-        _nul("string").alias("k1"),
-        F.col("period_idx").cast("int").alias("grp"),
-        F.col("n_users").cast("long").alias("n_events"),
-        _nul("double").alias("sum_value"),
-    )
-    mi = q_merged_intervals_events(spark, sf_dir).select(
-        F.lit("intervals").alias("component"),
-        F.col("island_start").alias("ws"),
-        F.col("island_end").alias("we"),
-        F.col("user_id").cast("string").alias("k1"),
-        _nul("int").alias("grp"),
-        F.col("n_intervals").alias("n_events"),
-        _nul("double").alias("sum_value"),
-    )
-    dc = q_decay_events(spark, sf_dir).select(
-        F.lit("decay").alias("component"),
-        F.col("last_ts").alias("ws"),
-        _nul("timestamp").alias("we"),
-        F.col("user_id").cast("string").alias("k1"),
-        F.col("n_events").cast("int").alias("grp"),
-        F.col("score_units").alias("n_events"),
-        _nul("double").alias("sum_value"),
-    )
-    # DT_DBTIME contract (r12 fold, r11 VERDICT #1): the three rendered
-    # time strings ride the k1 slot pipe-joined with the event id; the
-    # µs-since-midnight and the signed vs-noon diff take the numeric slots
-    tc = q_time_contract_events(spark, sf_dir).select(
-        F.lit("time_contract").alias("component"),
-        _nul("timestamp").alias("ws"),
-        _nul("timestamp").alias("we"),
-        F.concat_ws(
-            "|", F.col("event_id").cast("string"), "tod", "plus90", "tod_ms"
-        ).alias("k1"),
-        _nul("int").alias("grp"),
-        F.col("us").cast("long").alias("n_events"),
-        F.col("vs_noon_s").cast("double").alias("sum_value"),
-    )
-    return _union_all([tum, sli, rol, gf, f12, f3, fs, co, mi, dc, tc])
-
-
-SQL_EVENTS_WINDOWS = f"""
-SELECT 'tumbling' AS component, CAST(window_start AS TIMESTAMP) AS ws,
-       CAST(window_end AS TIMESTAMP) AS we, CAST(event_type AS VARCHAR) AS k1,
-       {_NULL_INT} AS grp, CAST(n_events AS BIGINT) AS n_events,
-       CAST(sum_value AS DOUBLE) AS sum_value
-FROM ({_oracle_double(SQL_TUMBLING, ["sum_value"])}) _t
-UNION ALL
-SELECT 'sliding', CAST(window_start AS TIMESTAMP), CAST(window_end AS TIMESTAMP),
-       CAST(event_type AS VARCHAR), {_NULL_INT}, CAST(n_events AS BIGINT),
-       {_NULL_DOUBLE}
-FROM ({SQL_SLIDING}) _s
-UNION ALL
-SELECT 'rollup', CAST(day AS TIMESTAMP), {_NULL_TS}, CAST(hr AS VARCHAR),
-       CAST(grouping_level AS INTEGER), CAST(n_events AS BIGINT),
-       CAST(sum_value AS DOUBLE)
-FROM ({SQL_EVENTS_ROLLUP}) _r
-UNION ALL
-SELECT 'gap_fill', CAST(hour AS TIMESTAMP), {_NULL_TS},
-       CAST(event_type AS VARCHAR), CAST(is_gap AS INTEGER),
-       CAST(n_obs AS BIGINT), CAST(sum_value_ff AS DOUBLE)
-FROM ({SQL_GAP_FILL}) _gf
-UNION ALL
-SELECT 'funnel_u12', t1, t2, {_NULL_STR}, CAST(n1 AS INTEGER), id_a,
-       {_NULL_DOUBLE}
-FROM ({SQL_FUNNEL}) _fu WHERE component = 'user'
-UNION ALL
-SELECT 'funnel_u3', t3, {_NULL_TS}, {_NULL_STR}, {_NULL_INT}, id_a,
-       {_NULL_DOUBLE}
-FROM ({SQL_FUNNEL}) _f3 WHERE component = 'user' AND t3 IS NOT NULL
-UNION ALL
-SELECT 'funnel_s', {_NULL_TS}, {_NULL_TS}, s1, CAST(id_a AS INTEGER), n1,
-       {_NULL_DOUBLE}
-FROM ({SQL_FUNNEL}) _fs WHERE component = 'summary'
-UNION ALL
-SELECT 'cohort', CAST(cohort AS TIMESTAMP), CAST(period AS TIMESTAMP),
-       {_NULL_STR}, CAST(period_idx AS INTEGER), CAST(n_users AS BIGINT),
-       {_NULL_DOUBLE}
-FROM ({SQL_COHORT_RETENTION}) _co
-UNION ALL
-SELECT 'intervals', island_start, island_end, CAST(user_id AS VARCHAR),
-       {_NULL_INT}, n_intervals, {_NULL_DOUBLE}
-FROM ({SQL_MERGED_INTERVALS}) _mi
-"""
-
-
-# --- events_totals_suite: salted two-phase aggregation + stateful streaming
-# per-type lifetime totals (both must equal a plain GROUP BY on events) ------
-
-def q_events_totals_suite(spark, sf_dir):
-    sal = q_salted_agg_events(spark, sf_dir).select(
-        F.lit("salted").alias("component"),
-        F.col("event_type").cast("string").alias("event_type"),
-        F.col("n_events").cast("long").alias("n_events"),
-        _nul("long").alias("total_units"),
-        F.col("sum_value").cast("double").alias("sum_value"),
-    )
-    sta = q_stateful_totals(spark, sf_dir).select(
-        F.lit("stateful").alias("component"),
-        F.col("event_type").cast("string").alias("event_type"),
-        F.col("n_events").cast("long").alias("n_events"),
-        F.col("total_units").cast("long").alias("total_units"),
-        _nul("double").alias("sum_value"),
-    )
-    # salted JOIN equivalence: the skew-safe fact-salt + dim-explode join
-    # (hot-key split path included) must equal a plain join + GROUP BY
+def q_salted_join_events(spark, sf_dir):
+    """Salted JOIN equivalence: the skew-safe fact-salt + dim-explode join
+    (hot-key split path included) must equal a plain join + GROUP BY."""
     from .operators import salted_join, top_keys
 
     e = _t(spark, sf_dir)["events"].select("event_type", "value")
@@ -6839,7 +6175,7 @@ def q_events_totals_suite(spark, sf_dir):
         e, dim, on=["event_type"], salt_col="value", salt_buckets=8,
         how="inner", hot_keys=hot,
     )
-    sj = (
+    return (
         joined.groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
@@ -6848,67 +6184,29 @@ def q_events_totals_suite(spark, sf_dir):
             ).cast(_D184).alias("wsum"),
         )
         .select(
-            F.lit("salted_join").alias("component"),
             F.col("event_type").cast("string").alias("event_type"),
             F.col("n_events").cast("long").alias("n_events"),
-            _nul("long").alias("total_units"),
             F.round(F.col("wsum"), 6).cast("double").alias("sum_value"),
         )
     )
-    return _union_all([sal, sta, sj])
 
 
-SQL_EVENTS_TOTALS_SUITE = f"""
-SELECT 'salted' AS component, CAST(event_type AS VARCHAR) AS event_type,
-       CAST(n_events AS BIGINT) AS n_events, {_NULL_BIGINT} AS total_units,
-       CAST(sum_value AS DOUBLE) AS sum_value
-FROM ({SQL_SALTED_AGG}) _a
-UNION ALL
-SELECT 'stateful', CAST(event_type AS VARCHAR), CAST(n_events AS BIGINT),
-       CAST(total_units AS BIGINT), {_NULL_DOUBLE}
-FROM ({SQL_STATEFUL_TOTALS}) _b
-UNION ALL
-SELECT 'salted_join', CAST(event_type AS VARCHAR), CAST(n_events AS BIGINT),
-       {_NULL_BIGINT}, CAST(sum_value AS DOUBLE)
-FROM (
-  SELECT e.event_type, COUNT(*) AS n_events,
-         CAST(round(CAST(SUM(CAST(CAST(e.value AS DECIMAL(18,4))
-                                  * d.w AS DECIMAL(18,4)))
-                         AS DECIMAL(18,4)), 6) AS DOUBLE) AS sum_value
-  FROM events e
-  JOIN (SELECT event_type, CAST(length(event_type) AS INTEGER) AS w
-        FROM (SELECT DISTINCT event_type FROM events)) d
-    ON d.event_type = e.event_type
-  GROUP BY e.event_type
-) _c
+SQL_SALTED_JOIN = """
+SELECT e.event_type, COUNT(*) AS n_events,
+       CAST(round(CAST(SUM(CAST(CAST(e.value AS DECIMAL(18,4))
+                                * d.w AS DECIMAL(18,4)))
+                       AS DECIMAL(18,4)), 6) AS DOUBLE) AS sum_value
+FROM events e
+JOIN (SELECT event_type, CAST(length(event_type) AS INTEGER) AS w
+      FROM (SELECT DISTINCT event_type FROM events)) d
+  ON d.event_type = e.event_type
+GROUP BY e.event_type
 """
 
 
-# --- asof_range_joins: as-of attribution + interval-containment range join --
-
-def q_asof_range_joins(spark, sf_dir):
-    asof = q_asof_attribution(spark, sf_dir).select(
-        F.lit("asof").alias("component"),
-        F.col("event_id").cast("long").alias("event_id"),
-        F.col("user_id").cast("long").alias("user_id"),
-        F.col("ts").cast("timestamp").alias("ts"),
-        F.col("ts_asof").cast("timestamp").alias("t1"),
-        _nul("timestamp").alias("t2"),
-        F.col("purchase_id").cast("long").alias("k"),
-        F.col("purchase_value").cast("double").alias("v"),
-    )
-    rng = q_range_join_sessions(spark, sf_dir).select(
-        F.lit("range").alias("component"),
-        F.col("event_id").cast("long").alias("event_id"),
-        F.col("user_id").cast("long").alias("user_id"),
-        F.col("ts").cast("timestamp").alias("ts"),
-        F.col("session_start").cast("timestamp").alias("t1"),
-        F.col("session_end").cast("timestamp").alias("t2"),
-        F.col("n_clicks").cast("long").alias("k"),
-        _nul("double").alias("v"),
-    )
-    # SCD2 point-in-time lookup: each order picks the customer-dim VERSION
-    # valid on its order date — the star schema's temporal join
+def q_scd2_pit_orders(spark, sf_dir):
+    """SCD2 point-in-time lookup: each order picks the customer-dim VERSION
+    valid on its order date — the star schema's temporal join."""
     from .operators import scd2_point_in_time_join
 
     t = _t(spark, sf_dir)
@@ -6917,19 +6215,35 @@ def q_asof_range_joins(spark, sf_dir):
     )
     orders = t["orders"].select("o_orderkey", "o_custkey", "o_orderdate")
     pit = scd2_point_in_time_join(orders, dim, on="o_custkey", ts_col="o_orderdate")
-    pit = pit.select(
-        F.lit("scd2_pit").alias("component"),
-        F.col("o_orderkey").cast("long").alias("event_id"),
-        F.col("o_custkey").cast("long").alias("user_id"),
-        F.col("o_orderdate").cast("timestamp").alias("ts"),
-        F.col("valid_from").cast("timestamp").alias("t1"),
-        F.col("valid_to").cast("timestamp").alias("t2"),
-        F.col("version_number").cast("long").alias("k"),
-        _nul("double").alias("v"),
+    return pit.select(
+        F.col("o_orderkey").cast("long").alias("o_orderkey"),
+        F.col("o_custkey").cast("long").alias("o_custkey"),
+        F.col("o_orderdate").cast("timestamp").alias("o_orderdate"),
+        F.col("valid_from").cast("timestamp").alias("valid_from"),
+        F.col("valid_to").cast("timestamp").alias("valid_to"),
+        F.col("version_number").cast("long").alias("version_number"),
     )
-    # funnel detection: per user the earliest view -> first later click ->
-    # first later purchase chain, one conditional-min aggregation per stage,
-    # every shuffle on the same user_id key
+
+
+SQL_SCD2_PIT = f"""
+SELECT CAST(o.o_orderkey AS BIGINT) AS o_orderkey,
+       CAST(o.o_custkey AS BIGINT) AS o_custkey,
+       CAST(o.o_orderdate AS TIMESTAMP) AS o_orderdate,
+       CAST(d.valid_from AS TIMESTAMP) AS valid_from,
+       CAST(d.valid_to AS TIMESTAMP) AS valid_to,
+       CAST(d.version_number AS BIGINT) AS version_number
+FROM orders o
+JOIN ({SQL_DIM_SCD2}) d
+  ON d.o_custkey = o.o_custkey
+ AND CAST(o.o_orderdate AS DATE) >= d.valid_from
+ AND (d.valid_to IS NULL OR CAST(o.o_orderdate AS DATE) < d.valid_to)
+"""
+
+
+def q_funnel_chain_events(spark, sf_dir):
+    """Funnel detection by joins: per user the earliest view -> first later
+    click -> first later purchase chain, one conditional-min aggregation
+    per stage, every shuffle on the same user_id key."""
     ev = _t(spark, sf_dir)["events"]
     v = ev.filter(F.col("event_type") == "view").groupBy("user_id").agg(
         F.min("ts").alias("view_ts")
@@ -6948,57 +6262,30 @@ def q_asof_range_joins(spark, sf_dir):
         .groupBy("user_id", "view_ts", "click_ts")
         .agg(F.min("ts").alias("purchase_ts"), F.count(F.lit(1)).alias("n_purch"))
     )
-    fun = p.select(
-        F.lit("funnel").alias("component"),
-        _nul("long").alias("event_id"),
+    return p.select(
         F.col("user_id").cast("long").alias("user_id"),
-        F.col("view_ts").cast("timestamp").alias("ts"),
-        F.col("click_ts").cast("timestamp").alias("t1"),
-        F.col("purchase_ts").cast("timestamp").alias("t2"),
-        F.col("n_purch").cast("long").alias("k"),
-        _nul("double").alias("v"),
+        F.col("view_ts").cast("timestamp").alias("view_ts"),
+        F.col("click_ts").cast("timestamp").alias("click_ts"),
+        F.col("purchase_ts").cast("timestamp").alias("purchase_ts"),
+        F.col("n_purch").cast("long").alias("n_purch"),
     )
-    return _union_all([asof, rng, pit, fun])
 
 
-SQL_ASOF_RANGE_JOINS = f"""
-SELECT 'asof' AS component, CAST(event_id AS BIGINT) AS event_id,
-       CAST(user_id AS BIGINT) AS user_id, CAST(ts AS TIMESTAMP) AS ts,
-       CAST(ts_asof AS TIMESTAMP) AS t1, {_NULL_TS} AS t2,
-       CAST(purchase_id AS BIGINT) AS k, CAST(purchase_value AS DOUBLE) AS v
-FROM ({SQL_ASOF_ATTRIBUTION}) _a
-UNION ALL
-SELECT 'range', CAST(event_id AS BIGINT), CAST(user_id AS BIGINT),
-       CAST(ts AS TIMESTAMP), CAST(session_start AS TIMESTAMP),
-       CAST(session_end AS TIMESTAMP), CAST(n_clicks AS BIGINT), {_NULL_DOUBLE}
-FROM ({SQL_RANGE_JOIN}) _r
-UNION ALL
-SELECT 'scd2_pit', CAST(o.o_orderkey AS BIGINT), CAST(o.o_custkey AS BIGINT),
-       CAST(o.o_orderdate AS TIMESTAMP), CAST(d.valid_from AS TIMESTAMP),
-       CAST(d.valid_to AS TIMESTAMP), CAST(d.version_number AS BIGINT),
-       {_NULL_DOUBLE}
-FROM orders o
-JOIN ({SQL_DIM_SCD2}) d
-  ON d.o_custkey = o.o_custkey
- AND CAST(o.o_orderdate AS DATE) >= d.valid_from
- AND (d.valid_to IS NULL OR CAST(o.o_orderdate AS DATE) < d.valid_to)
-UNION ALL
-SELECT 'funnel', {_NULL_BIGINT}, CAST(user_id AS BIGINT),
-       CAST(view_ts AS TIMESTAMP), CAST(click_ts AS TIMESTAMP),
-       CAST(purchase_ts AS TIMESTAMP), CAST(n_purch AS BIGINT), {_NULL_DOUBLE}
-FROM (
-  WITH v AS (SELECT user_id, MIN(ts) AS view_ts FROM events
-             WHERE event_type = 'view' GROUP BY user_id),
-  c AS (SELECT e.user_id, v.view_ts, MIN(e.ts) AS click_ts
-        FROM events e JOIN v ON v.user_id = e.user_id
-        WHERE e.event_type = 'click' AND e.ts > v.view_ts
-        GROUP BY e.user_id, v.view_ts)
-  SELECT e.user_id, c.view_ts, c.click_ts,
-         MIN(e.ts) AS purchase_ts, COUNT(*) AS n_purch
-  FROM events e JOIN c ON c.user_id = e.user_id
-  WHERE e.event_type = 'purchase' AND e.ts > c.click_ts
-  GROUP BY e.user_id, c.view_ts, c.click_ts
-) _f
+SQL_FUNNEL_CHAIN = """
+WITH v AS (SELECT user_id, MIN(ts) AS view_ts FROM events
+           WHERE event_type = 'view' GROUP BY user_id),
+c AS (SELECT e.user_id, v.view_ts, MIN(e.ts) AS click_ts
+      FROM events e JOIN v ON v.user_id = e.user_id
+      WHERE e.event_type = 'click' AND e.ts > v.view_ts
+      GROUP BY e.user_id, v.view_ts)
+SELECT CAST(e.user_id AS BIGINT) AS user_id,
+       CAST(c.view_ts AS TIMESTAMP) AS view_ts,
+       CAST(c.click_ts AS TIMESTAMP) AS click_ts,
+       CAST(MIN(e.ts) AS TIMESTAMP) AS purchase_ts,
+       CAST(COUNT(*) AS BIGINT) AS n_purch
+FROM events e JOIN c ON c.user_id = e.user_id
+WHERE e.event_type = 'purchase' AND e.ts > c.click_ts
+GROUP BY e.user_id, c.view_ts, c.click_ts
 """
 
 
@@ -7073,54 +6360,7 @@ FROM (VALUES ('always_bad:failed:3'), ('bad_child:skipped:0'),
 """
 
 
-# --- orchestration_dag: ForEach container + parallel table materialization
-# + C5 retry/diagnose loop ----------------------------------------------------
-
-def q_orchestration_dag(spark, sf_dir):
-    fe = q_foreach_segments(spark, sf_dir).select(
-        F.lit("foreach").alias("component"),
-        _nul("long").alias("c_custkey"),
-        F.col("c_mktsegment").cast("string").alias("segment"),
-        F.col("n_orders").cast("long").alias("n_orders"),
-        F.col("total").cast("double").alias("v1"),
-        _nul("double").alias("v2"),
-    )
-    pd_ = q_parallel_table_dag(spark, sf_dir).select(
-        F.lit("parallel").alias("component"),
-        F.col("c_custkey").cast("long").alias("c_custkey"),
-        F.col("c_mktsegment").cast("string").alias("segment"),
-        F.col("n_orders").cast("long").alias("n_orders"),
-        F.col("acctbal").cast("double").alias("v1"),
-        F.col("spend").cast("double").alias("v2"),
-    )
-    rt = q_retry_dag(spark, sf_dir).select(
-        F.col("component"),
-        _nul("long").alias("c_custkey"),
-        F.col("segment").cast("string").alias("segment"),
-        F.col("n1").cast("long").alias("n_orders"),
-        _nul("double").alias("v1"),
-        _nul("double").alias("v2"),
-    )
-    return _union_all([fe, pd_, rt])
-
-
-SQL_ORCHESTRATION_DAG = f"""
-SELECT 'foreach' AS component, {_NULL_BIGINT} AS c_custkey,
-       CAST(c_mktsegment AS VARCHAR) AS segment, CAST(n_orders AS BIGINT) AS n_orders,
-       CAST(total AS DOUBLE) AS v1, {_NULL_DOUBLE} AS v2
-FROM ({SQL_FOREACH}) _f
-UNION ALL
-SELECT 'parallel', CAST(c_custkey AS BIGINT), CAST(c_mktsegment AS VARCHAR),
-       CAST(n_orders AS BIGINT), CAST(acctbal AS DOUBLE), CAST(spend AS DOUBLE)
-FROM ({SQL_PARALLEL_DAG}) _p
-UNION ALL
-SELECT component, {_NULL_BIGINT}, segment, CAST(n1 AS BIGINT), {_NULL_DOUBLE},
-       {_NULL_DOUBLE}
-FROM ({SQL_RETRY_DAG}) _r
-"""
-
-
-# --- multimodal_decode: metadata plumbing + real BMP decode + real WAV decode
+# --- media decode family: resize, PNG/JPEG/WAV decode, perceptual hashes --
 
 def q_resize_bmp_stats(spark, sf_dir):
     """Real image resize over Arrow batches: the bmp component's variable-
@@ -7232,8 +6472,9 @@ def q_image_phash_neardup(spark, sf_dir):
     ``base = id % 16`` (16 image classes -> same-base ids are clones or
     x=0-tweaked near-dups) — CLOSED-FORM pixels, so the oracle derives
     the 48-bit dHash, the 4x12-bit banding, and the pair set from the
-    formula alone.  Components: 'hash' = per-image dHash value; 'pair' =
-    banded candidates with exact Hamming distance.
+    formula alone.  Components: 'phash' = per-image dHash value;
+    'phash_pair' = banded candidates with exact Hamming distance;
+    'phash_cluster' = Hamming <= 2 near-dup clusters.
 
     100 TB: hashing is map-only over the media scan; blocking touches
     only the hash relation with per-band caps — never all-pairs."""
@@ -7243,23 +6484,13 @@ def q_image_phash_neardup(spark, sf_dir):
     media = _phash_fixture_media(spark, sf_dir)
     fp = image_phash(media, method="dhash")
     hashes = fp.select(
-        F.lit("hash").alias("component"),
+        F.lit("phash").alias("component"),
         F.col("media_id").cast("long").alias("id_a"),
-        _nul("long").alias("id_b"),
-        F.col("phash").cast("long").alias("n"),
-    )
-    # aHash under its own component: the 8x6 NN grid of a 9x6 source is
-    # columns 0-7 identically (floor(9x/8) = x for x < 8), so the
-    # mean-threshold hash is the same closed form the oracle replays
-    ah = image_phash(media, method="ahash").select(
-        F.lit("ahash").alias("component"),
-        F.col("media_id").cast("long").alias("id_a"),
-        _nul("long").alias("id_b"),
         F.col("phash").cast("long").alias("n"),
     )
     cand = phash_candidates(fp)
     pairs = cand.select(
-        F.lit("pair").alias("component"),
+        F.lit("phash_pair").alias("component"),
         F.col("media_a").cast("long").alias("id_a"),
         F.col("media_b").cast("long").alias("id_b"),
         F.col("hamming_distance").cast("long").alias("n"),
@@ -7274,12 +6505,27 @@ def q_image_phash_neardup(spark, sf_dir):
     )
     csize = comp.groupBy("label").agg(F.count(F.lit(1)).alias("n"))
     clusters = comp.join(csize, "label").select(
-        F.lit("cluster").alias("component"),
+        F.lit("phash_cluster").alias("component"),
         F.col("node").cast("long").alias("id_a"),
         F.col("label").cast("long").alias("id_b"),
         F.col("n").cast("long").alias("n"),
     )
-    return _union_all([hashes, ah, pairs, clusters])
+    return hashes.unionByName(pairs, allowMissingColumns=True).unionByName(
+        clusters
+    )
+
+
+def q_image_ahash_media(spark, sf_dir):
+    """aHash over the ``image_phash_neardup`` fixture: the 8x6 NN grid of a
+    9x6 source is columns 0-7 identically (floor(9x/8) = x for x < 8), so
+    the mean-threshold hash is the same closed form the oracle replays."""
+    from .text.multimodal import image_phash
+
+    media = _phash_fixture_media(spark, sf_dir)
+    return image_phash(media, method="ahash").select(
+        F.col("media_id").cast("long").alias("media_id"),
+        F.col("phash").cast("long").alias("ahash"),
+    )
 
 
 SQL_IMAGE_PHASH = """
@@ -7326,7 +6572,7 @@ reach AS (
   FROM reach r JOIN edges e ON e.src = r.node
 ),
 comp AS (SELECT node, MIN(label) AS canonical FROM reach GROUP BY node)
-SELECT 'hash' AS component, CAST(media_id AS BIGINT) AS id_a,
+SELECT 'phash' AS component, CAST(media_id AS BIGINT) AS id_a,
        CAST(NULL AS BIGINT) AS id_b, phash AS n
 FROM hashes
 UNION ALL
@@ -7341,11 +6587,11 @@ JOIN (SELECT media_id, SUM(gv) // 48 AS mean_g
   ON m.media_id = h.media_id
 GROUP BY h.media_id
 UNION ALL
-SELECT 'pair', CAST(a AS BIGINT), CAST(b AS BIGINT),
+SELECT 'phash_pair', CAST(a AS BIGINT), CAST(b AS BIGINT),
        CAST(bit_count(xor(pa, pb)) AS BIGINT)
 FROM pairs
 UNION ALL
-SELECT 'cluster', CAST(node AS BIGINT), CAST(canonical AS BIGINT),
+SELECT 'phash_cluster', CAST(node AS BIGINT), CAST(canonical AS BIGINT),
        CAST(cs.n AS BIGINT)
 FROM comp
 JOIN (SELECT canonical AS c2, COUNT(*) AS n
@@ -7387,33 +6633,26 @@ def q_image_phash_index(spark, sf_dir):
     try:
         write_phash_index(b1, prefix, f"{path}/t")
         res = ingest_media_batch(spark, b2, prefix, batch_id=1)
-        out = _union_all([
-            res.kept.select(
-                F.lit("kept").alias("component"),
+        out = _suite_frame("image_phash_index", [
+            ("kept", res.kept.select(
                 F.col("media_id").cast("long").alias("id_a"),
-                _nul("long").alias("id_b"),
                 F.col("phash").cast("long").alias("n"),
-            ),
-            res.probe_pairs.select(
-                F.lit("probe").alias("component"),
+            )),
+            ("probe", res.probe_pairs.select(
                 F.col("media_id").cast("long").alias("id_a"),
                 F.col("index_id").cast("long").alias("id_b"),
                 F.col("hamming_distance").cast("long").alias("n"),
-            ),
-            res.accepted.select(
-                F.lit("acc").alias("component"),
+            )),
+            ("acc", res.accepted.select(
                 F.col("media_id").cast("long").alias("id_a"),
-                _nul("long").alias("id_b"),
                 F.col("phash").cast("long").alias("n"),
-            ),
-            read_phash_index(spark, prefix)
-            .select("media_id", "_fp").distinct()
-            .select(
-                F.lit("post").alias("component"),
+            )),
+            ("post", read_phash_index(spark, prefix)
+             .select("media_id", "_fp").distinct()
+             .select(
                 F.col("media_id").cast("long").alias("id_a"),
-                _nul("long").alias("id_b"),
                 F.col("_fp").cast("long").alias("n"),
-            ),
+            )),
         ])
         # materialize under the run's tmpdir so the catalog table can be
         # dropped (metastore-leak contract, as the bm25/ivf entries)
@@ -7504,165 +6743,7 @@ FROM (SELECT media_id, phash FROM b1
 """
 
 
-def q_multimodal_decode(spark, sf_dir):
-    feats = q_multimodal_features(spark, sf_dir).select(
-        F.lit("features").alias("component"),
-        F.col("media_id").cast("long").alias("media_id"),
-        F.col("n_features").cast("int").alias("i1"),
-        _nul("int").alias("i2"),
-        _nul("int").alias("i3"),
-        F.col("n_bytes").cast("long").alias("n1"),
-        _nul("double").alias("v1"),
-        _nul("double").alias("v2"),
-        _nul("double").alias("v3"),
-    )
-    bmp = q_bmp_decode_stats(spark, sf_dir).select(
-        F.lit("bmp").alias("component"),
-        F.col("media_id").cast("long").alias("media_id"),
-        F.col("width").cast("int").alias("i1"),
-        F.col("height").cast("int").alias("i2"),
-        F.col("channels").cast("int").alias("i3"),
-        _nul("long").alias("n1"),
-        F.col("mean_r").cast("double").alias("v1"),
-        F.col("mean_g").cast("double").alias("v2"),
-        F.col("mean_b").cast("double").alias("v3"),
-    )
-    wav = q_wav_decode_stats(spark, sf_dir).select(
-        F.lit("wav").alias("component"),
-        F.col("media_id").cast("long").alias("media_id"),
-        F.col("sample_rate").cast("int").alias("i1"),
-        F.col("channels").cast("int").alias("i2"),
-        F.col("n_samples").cast("int").alias("i3"),
-        _nul("long").alias("n1"),
-        F.col("mean_abs").cast("double").alias("v1"),
-        F.col("duration_ms").cast("double").alias("v2"),
-        _nul("double").alias("v3"),
-    )
-    rs = q_resize_bmp_stats(spark, sf_dir).select(
-        F.lit("resize").alias("component"),
-        F.col("media_id").cast("long").alias("media_id"),
-        F.col("width").cast("int").alias("i1"),
-        F.col("height").cast("int").alias("i2"),
-        F.col("channels").cast("int").alias("i3"),
-        F.col("n_out_bytes").cast("long").alias("n1"),
-        F.col("mean_r").cast("double").alias("v1"),
-        F.col("mean_g").cast("double").alias("v2"),
-        F.col("mean_b").cast("double").alias("v3"),
-    )
-    png = q_png_decode_stats(spark, sf_dir).select(
-        F.lit("png").alias("component"),
-        F.col("media_id").cast("long").alias("media_id"),
-        F.col("width").cast("int").alias("i1"),
-        F.col("height").cast("int").alias("i2"),
-        F.col("channels").cast("int").alias("i3"),
-        _nul("long").alias("n1"),
-        F.col("mean_r").cast("double").alias("v1"),
-        F.col("mean_g").cast("double").alias("v2"),
-        F.col("mean_b").cast("double").alias("v3"),
-    )
-    # r11: jpeg folded into the suite (r10 VERDICT #1) — structural
-    # fields only; channel means go through the float DCT chain and are
-    # pinned by error-bound pytest instead (see q_jpeg_decode_stats)
-    jpg = q_jpeg_decode_stats(spark, sf_dir).select(
-        F.lit("jpeg").alias("component"),
-        F.col("media_id").cast("long").alias("media_id"),
-        F.col("width").cast("int").alias("i1"),
-        F.col("height").cast("int").alias("i2"),
-        F.col("channels").cast("int").alias("i3"),
-        _nul("long").alias("n1"),
-        _nul("double").alias("v1"),
-        _nul("double").alias("v2"),
-        _nul("double").alias("v3"),
-    )
-    # r13 (r12 VERDICT #5): perceptual-hash near-dup — per-image dHash
-    # under 'phash', banded candidate pairs under 'phash_pair'
-    ph = q_image_phash_neardup(spark, sf_dir)
-    phh = ph.filter(F.col("component") == "hash").select(
-        F.lit("phash").alias("component"),
-        F.col("id_a").cast("long").alias("media_id"),
-        _nul("int").alias("i1"),
-        _nul("int").alias("i2"),
-        _nul("int").alias("i3"),
-        F.col("n").cast("long").alias("n1"),
-        _nul("double").alias("v1"),
-        _nul("double").alias("v2"),
-        _nul("double").alias("v3"),
-    )
-    php = ph.filter(F.col("component") == "pair").select(
-        F.lit("phash_pair").alias("component"),
-        F.col("id_a").cast("long").alias("media_id"),
-        F.col("n").cast("int").alias("i1"),
-        _nul("int").alias("i2"),
-        _nul("int").alias("i3"),
-        F.col("id_b").cast("long").alias("n1"),
-        _nul("double").alias("v1"),
-        _nul("double").alias("v2"),
-        _nul("double").alias("v3"),
-    )
-    phc = ph.filter(F.col("component") == "cluster").select(
-        F.lit("phash_cluster").alias("component"),
-        F.col("id_a").cast("long").alias("media_id"),
-        F.col("n").cast("int").alias("i1"),
-        _nul("int").alias("i2"),
-        _nul("int").alias("i3"),
-        F.col("id_b").cast("long").alias("n1"),
-        _nul("double").alias("v1"),
-        _nul("double").alias("v2"),
-        _nul("double").alias("v3"),
-    )
-    return _union_all([feats, bmp, wav, rs, png, jpg, phh, php, phc])
-
-
-SQL_MULTIMODAL_DECODE = f"""
-SELECT 'features' AS component, CAST(media_id AS BIGINT) AS media_id,
-       CAST(n_features AS INTEGER) AS i1, {_NULL_INT} AS i2, {_NULL_INT} AS i3,
-       CAST(n_bytes AS BIGINT) AS n1, {_NULL_DOUBLE} AS v1, {_NULL_DOUBLE} AS v2,
-       {_NULL_DOUBLE} AS v3
-FROM ({SQL_MULTIMODAL}) _f
-UNION ALL
-SELECT 'bmp', CAST(media_id AS BIGINT), CAST(width AS INTEGER),
-       CAST(height AS INTEGER), CAST(channels AS INTEGER), {_NULL_BIGINT},
-       CAST(mean_r AS DOUBLE), CAST(mean_g AS DOUBLE), CAST(mean_b AS DOUBLE)
-FROM ({SQL_BMP_STATS}) _b
-UNION ALL
-SELECT 'wav', CAST(media_id AS BIGINT), CAST(sample_rate AS INTEGER),
-       CAST(channels AS INTEGER), CAST(n_samples AS INTEGER), {_NULL_BIGINT},
-       CAST(mean_abs AS DOUBLE), CAST(duration_ms AS DOUBLE), {_NULL_DOUBLE}
-FROM ({SQL_WAV_STATS}) _w
-UNION ALL
-SELECT 'resize', CAST(media_id AS BIGINT), CAST(width AS INTEGER),
-       CAST(height AS INTEGER), CAST(channels AS INTEGER),
-       CAST(n_out_bytes AS BIGINT),
-       CAST(mean_r AS DOUBLE), CAST(mean_g AS DOUBLE), CAST(mean_b AS DOUBLE)
-FROM ({SQL_RESIZE_BMP}) _r
-UNION ALL
-SELECT 'png', CAST(media_id AS BIGINT), CAST(width AS INTEGER),
-       CAST(height AS INTEGER), CAST(channels AS INTEGER), {_NULL_BIGINT},
-       CAST(mean_r AS DOUBLE), CAST(mean_g AS DOUBLE), CAST(mean_b AS DOUBLE)
-FROM ({SQL_PNG_STATS}) _p
-UNION ALL
-SELECT 'jpeg', CAST(media_id AS BIGINT), CAST(width AS INTEGER),
-       CAST(height AS INTEGER), CAST(channels AS INTEGER), {_NULL_BIGINT},
-       {_NULL_DOUBLE}, {_NULL_DOUBLE}, {_NULL_DOUBLE}
-FROM ({SQL_JPEG_STATS}) _j
-UNION ALL
-SELECT 'phash', CAST(id_a AS BIGINT), {_NULL_INT}, {_NULL_INT}, {_NULL_INT},
-       CAST(n AS BIGINT), {_NULL_DOUBLE}, {_NULL_DOUBLE}, {_NULL_DOUBLE}
-FROM ({SQL_IMAGE_PHASH}) _ph WHERE component = 'hash'
-UNION ALL
-SELECT 'phash_pair', CAST(id_a AS BIGINT), CAST(n AS INTEGER), {_NULL_INT},
-       {_NULL_INT}, CAST(id_b AS BIGINT), {_NULL_DOUBLE}, {_NULL_DOUBLE},
-       {_NULL_DOUBLE}
-FROM ({SQL_IMAGE_PHASH}) _pp WHERE component = 'pair'
-UNION ALL
-SELECT 'phash_cluster', CAST(id_a AS BIGINT), CAST(n AS INTEGER),
-       {_NULL_INT}, {_NULL_INT}, CAST(id_b AS BIGINT), {_NULL_DOUBLE},
-       {_NULL_DOUBLE}, {_NULL_DOUBLE}
-FROM ({SQL_IMAGE_PHASH}) _pc WHERE component = 'cluster'
-"""
-
-
-# --- sampling_splits: content-hash train/test split + stratified sampling ---
+# --- sampling family: weighted sampling + per-source caps -----------------
 
 def q_weighted_sample_docs(spark, sf_dir):
     """Deterministic weighted sampling without replacement (exact-arithmetic
@@ -7723,109 +6804,6 @@ WHERE rn <= 15
 """
 
 
-def q_sampling_splits(spark, sf_dir):
-    hs = q_hash_split_docs(spark, sf_dir).select(
-        F.lit("hash_split").alias("component"),
-        F.col("doc_id").cast("long").alias("doc_id"),
-        F.col("split").cast("string").alias("s1"),
-        _nul("string").alias("s2"),
-    )
-    st = q_stratified_docs(spark, sf_dir).select(
-        F.lit("stratified").alias("component"),
-        F.col("doc_id").cast("long").alias("doc_id"),
-        F.col("lang").cast("string").alias("s1"),
-        F.col("source").cast("string").alias("s2"),
-    )
-    mx = q_mixture_docs(spark, sf_dir).select(
-        F.lit("mixture").alias("component"),
-        F.col("doc_id").cast("long").alias("doc_id"),
-        F.col("lang").cast("string").alias("s1"),
-        _nul("string").alias("s2"),
-    )
-    ws = q_weighted_sample_docs(spark, sf_dir).select(
-        F.lit("weighted").alias("component"),
-        F.col("doc_id").cast("long").alias("doc_id"),
-        F.col("lang").cast("string").alias("s1"),
-        F.col("priority").cast("string").alias("s2"),
-    )
-    sc = q_source_cap_docs(spark, sf_dir).select(
-        F.lit("source_cap").alias("component"),
-        F.col("doc_id").cast("long").alias("doc_id"),
-        F.col("source").cast("string").alias("s1"),
-        _nul("string").alias("s2"),
-    )
-    kf = q_kfold_docs(spark, sf_dir).select(
-        F.lit("kfold").alias("component"),
-        F.col("doc_id").cast("long").alias("doc_id"),
-        F.col("fold").cast("string").alias("s1"),
-        _nul("string").alias("s2"),
-    )
-    tm = q_temperature_mixture_docs(spark, sf_dir).select(
-        F.lit("temperature").alias("component"),
-        F.col("doc_id").cast("long").alias("doc_id"),
-        F.col("lang").cast("string").alias("s1"),
-        _nul("string").alias("s2"),
-    )
-    ds = q_dsir_docs(spark, sf_dir).select(
-        F.lit("dsir").alias("component"),
-        F.col("doc_id").cast("long").alias("doc_id"),
-        F.concat_ws(
-            ":", "weight_units", "gumbel_units", "n_feats"
-        ).alias("s1"),
-        F.when(F.col("picked"), "picked").otherwise("pool").alias("s2"),
-    )
-    da = q_dsir_apply_docs(spark, sf_dir).select(
-        F.lit("dsir_apply").alias("component"),
-        F.col("doc_id").cast("long").alias("doc_id"),
-        F.concat_ws(
-            ":", "weight_units", "gumbel_units", "n_feats"
-        ).alias("s1"),
-        _nul("string").alias("s2"),
-    )
-    dm = q_dsir_merge_docs(spark, sf_dir).select(
-        F.lit("dsir_merge").alias("component"),
-        F.col("doc_id").cast("long").alias("doc_id"),
-        F.concat_ws(
-            ":", "weight_units", "gumbel_units", "n_feats"
-        ).alias("s1"),
-        _nul("string").alias("s2"),
-    )
-    # deterministic shard shuffle (r12 fold, r11 VERDICT #1): the
-    # pre-training (shard, pos) assignment, seed-reproducible
-    sh = q_shuffle_shards_docs(spark, sf_dir).select(
-        F.lit("shards").alias("component"),
-        F.col("doc_id").cast("long").alias("doc_id"),
-        F.col("shard").cast("string").alias("s1"),
-        F.col("pos").cast("string").alias("s2"),
-    )
-    return _union_all([hs, st, mx, ws, sc, kf, tm, ds, da, dm, sh])
-
-
-SQL_SAMPLING_SPLITS = f"""
-SELECT 'hash_split' AS component, CAST(doc_id AS BIGINT) AS doc_id,
-       CAST(split AS VARCHAR) AS s1, {_NULL_STR} AS s2
-FROM ({SQL_HASH_SPLIT}) _h
-UNION ALL
-SELECT 'stratified', CAST(doc_id AS BIGINT), CAST(lang AS VARCHAR),
-       CAST(source AS VARCHAR)
-FROM ({SQL_STRATIFIED}) _s
-UNION ALL
-SELECT 'mixture', CAST(doc_id AS BIGINT), CAST(lang AS VARCHAR), {_NULL_STR}
-FROM ({SQL_MIXTURE}) _m
-UNION ALL
-SELECT 'weighted', CAST(doc_id AS BIGINT), CAST(lang AS VARCHAR),
-       CAST(priority AS VARCHAR)
-FROM ({SQL_WEIGHTED_SAMPLE}) _w
-UNION ALL
-SELECT 'source_cap', CAST(doc_id AS BIGINT), CAST(source AS VARCHAR),
-       {_NULL_STR}
-FROM ({SQL_SOURCE_CAP}) _c
-UNION ALL
-SELECT 'kfold', CAST(doc_id AS BIGINT), CAST(fold AS VARCHAR), {_NULL_STR}
-FROM ({SQL_KFOLD}) _k
-"""
-
-
 # --- bigram surprisal (perplexity-style corpus-LM quality score) ------------
 
 def q_surprisal_docs(spark, sf_dir):
@@ -7877,9 +6855,8 @@ FROM s CROSS JOIN q
 """
 
 
-
-# --- token_ops_docs: deterministic token-budget sampling + context-window
-# chunking + sequence packing (the token-count-driven pipeline steps) --------
+# --- token ops: context-window sequence packing (the token-count-driven
+# pipeline steps) ------------------------------------------------------------
 
 def q_pack_docs(spark, sf_dir):
     """Concat-and-chop sequence packing: every document lands at a stable
@@ -7890,8 +6867,6 @@ def q_pack_docs(spark, sf_dir):
     docs = _t(spark, sf_dir)["documents"]
     dd = docs.select("doc_id", token_count(F.col("text")).alias("n_tok"))
     return pack_sequences(dd, "n_tok", seq_tokens=512, key_col="doc_id")
-
-
 
 
 def q_pack_nosplit_docs(spark, sf_dir):
@@ -7910,8 +6885,6 @@ def q_pack_nosplit_docs(spark, sf_dir):
         dd, "n_tok", seq_tokens=512, key_col="doc_id",
         target_bucket_tokens=_PACK_NOSPLIT_TARGET,
     )
-
-
 
 
 def q_dedup_lines_docs(spark, sf_dir):
@@ -8066,434 +7039,64 @@ UNION ALL SELECT 3, pr, CAST(c AS BIGINT) FROM b3
 )
 
 
-def q_token_ops_docs(spark, sf_dir):
-    tb = q_token_budget_docs(spark, sf_dir).select(
-        F.lit("budget").alias("component"),
-        F.col("doc_id").cast("long").alias("doc_id"),
-        _nul("int").alias("chunk_idx"),
-        _nul("string").alias("chunk_text"),
-        F.col("n_tokens").cast("int").alias("n_tok"),
-        _nul("long").alias("seq_id"),
-        _nul("long").alias("start_tok"),
-        _nul("long").alias("end_tok"),
-    )
-    ch = q_chunk_docs(spark, sf_dir).select(
-        F.lit("chunk").alias("component"),
-        F.col("doc_id").cast("long").alias("doc_id"),
-        F.col("chunk_idx").cast("int").alias("chunk_idx"),
-        F.col("chunk_text").cast("string").alias("chunk_text"),
-        F.col("chunk_len").cast("int").alias("n_tok"),
-        _nul("long").alias("seq_id"),
-        _nul("long").alias("start_tok"),
-        _nul("long").alias("end_tok"),
-    )
-    pk = q_pack_docs(spark, sf_dir).select(
-        F.lit("pack").alias("component"),
-        F.col("doc_id").cast("long").alias("doc_id"),
-        _nul("int").alias("chunk_idx"),
-        _nul("string").alias("chunk_text"),
-        _nul("int").alias("n_tok"),
-        F.col("seq_id").cast("long").alias("seq_id"),
-        F.col("start_tok").cast("long").alias("start_tok"),
-        F.col("end_tok").cast("long").alias("end_tok"),
-    )
-    pns = q_pack_nosplit_docs(spark, sf_dir).select(
-        F.lit("pack_nosplit").alias("component"),
-        F.col("doc_id").cast("long").alias("doc_id"),
-        _nul("int").alias("chunk_idx"),
-        _nul("string").alias("chunk_text"),
-        _nul("int").alias("n_tok"),
-        F.col("seq_id").cast("long").alias("seq_id"),
-        F.col("start_tok").cast("long").alias("start_tok"),
-        F.col("end_tok").cast("long").alias("end_tok"),
-    )
-    dl = q_dedup_lines_docs(spark, sf_dir).select(
-        F.lit("dedup_lines").alias("component"),
-        F.col("doc_id").cast("long").alias("doc_id"),
-        F.col("n_kept").cast("int").alias("chunk_idx"),
-        F.col("dedup_md5").cast("string").alias("chunk_text"),
-        F.col("n_lines").cast("int").alias("n_tok"),
-        _nul("long").alias("seq_id"),
-        _nul("long").alias("start_tok"),
-        _nul("long").alias("end_tok"),
-    )
-    bp = q_bpe_merges_docs(spark, sf_dir).select(
-        F.lit("bpe").alias("component"),
-        F.col("round").cast("long").alias("doc_id"),
-        _nul("int").alias("chunk_idx"),
-        F.col("pair").cast("string").alias("chunk_text"),
-        _nul("int").alias("n_tok"),
-        F.col("weight").cast("long").alias("seq_id"),
-        _nul("long").alias("start_tok"),
-        _nul("long").alias("end_tok"),
-    )
-    ds = q_dup_spans_docs(spark, sf_dir).select(
-        F.lit("dup_spans").alias("component"),
-        F.col("doc_id").cast("long").alias("doc_id"),
-        F.col("first_dup_pos").cast("int").alias("chunk_idx"),
-        _nul("string").alias("chunk_text"),
-        F.col("n_spans").cast("int").alias("n_tok"),
-        F.col("n_dup_spans").cast("long").alias("seq_id"),
-        _nul("long").alias("start_tok"),
-        _nul("long").alias("end_tok"),
-    )
-    be = q_bpe_encode_docs(spark, sf_dir)
-    bew = be.filter(F.col("component") == "word").select(
-        F.lit("bpe_word").alias("component"),
-        _nul("long").alias("doc_id"),
-        _nul("int").alias("chunk_idx"),
-        F.concat(F.col("k"), F.lit("="), F.col("enc")).alias("chunk_text"),
-        F.col("n1").cast("int").alias("n_tok"),
-        _nul("long").alias("seq_id"),
-        _nul("long").alias("start_tok"),
-        _nul("long").alias("end_tok"),
-    )
-    bed = be.filter(F.col("component") == "doc").select(
-        F.lit("bpe_doc").alias("component"),
-        F.col("k").cast("long").alias("doc_id"),
-        _nul("int").alias("chunk_idx"),
-        _nul("string").alias("chunk_text"),
-        _nul("int").alias("n_tok"),
-        F.col("n1").alias("seq_id"),
-        F.col("n2").alias("start_tok"),
-        _nul("long").alias("end_tok"),
-    )
-    cdl = q_corpus_dedup_lines(spark, sf_dir).select(
-        F.lit("corpus_dedup").alias("component"),
-        F.col("doc_id").cast("long").alias("doc_id"),
-        F.col("n_kept").cast("int").alias("chunk_idx"),
-        F.col("clean_md5").alias("chunk_text"),
-        F.col("n_dropped").cast("int").alias("n_tok"),
-        _nul("long").alias("seq_id"),
-        _nul("long").alias("start_tok"),
-        _nul("long").alias("end_tok"),
-    )
-    return _union_all([tb, ch, pk, pns, dl, bp, ds, bew, bed, cdl])
-
-
-SQL_TOKEN_OPS = f"""
-SELECT 'budget' AS component, CAST(doc_id AS BIGINT) AS doc_id,
-       {_NULL_INT} AS chunk_idx, {_NULL_STR} AS chunk_text,
-       CAST(n_tokens AS INTEGER) AS n_tok,
-       {_NULL_BIGINT} AS seq_id, {_NULL_BIGINT} AS start_tok,
-       {_NULL_BIGINT} AS end_tok
-FROM ({SQL_TOKEN_BUDGET}) _b
-UNION ALL
-SELECT 'chunk', CAST(doc_id AS BIGINT), CAST(chunk_idx AS INTEGER),
-       CAST(chunk_text AS VARCHAR), CAST(chunk_len AS INTEGER),
-       {_NULL_BIGINT}, {_NULL_BIGINT}, {_NULL_BIGINT}
-FROM ({SQL_CHUNK_DOCS}) _c
-UNION ALL
-SELECT 'pack', CAST(doc_id AS BIGINT), {_NULL_INT}, {_NULL_STR}, {_NULL_INT},
-       CAST(seq_id AS BIGINT), CAST(start_tok AS BIGINT),
-       CAST(end_tok AS BIGINT)
-FROM ({SQL_PACK_DOCS}) _p
-UNION ALL
-SELECT 'pack_nosplit', CAST(doc_id AS BIGINT), {_NULL_INT}, {_NULL_STR},
-       {_NULL_INT},
-       CAST(seq_id AS BIGINT), CAST(start_tok AS BIGINT),
-       CAST(end_tok AS BIGINT)
-FROM ({SQL_PACK_NOSPLIT}) _pn
-UNION ALL
-SELECT 'dedup_lines', CAST(doc_id AS BIGINT), CAST(n_kept AS INTEGER),
-       CAST(dedup_md5 AS VARCHAR), CAST(n_lines AS INTEGER),
-       {_NULL_BIGINT}, {_NULL_BIGINT}, {_NULL_BIGINT}
-FROM ({SQL_DEDUP_LINES}) _dl
-UNION ALL
-SELECT 'bpe', CAST(round AS BIGINT), {_NULL_INT},
-       CAST(pair AS VARCHAR), {_NULL_INT},
-       CAST(weight AS BIGINT), {_NULL_BIGINT}, {_NULL_BIGINT}
-FROM ({SQL_BPE_MERGES}) _bp
-UNION ALL
-SELECT 'dup_spans', CAST(doc_id AS BIGINT), CAST(first_dup_pos AS INTEGER),
-       {_NULL_STR}, CAST(n_spans AS INTEGER),
-       CAST(n_dup_spans AS BIGINT), {_NULL_BIGINT}, {_NULL_BIGINT}
-FROM ({SQL_DUP_SPANS}) _ds
-UNION ALL
-SELECT 'bpe_word', {_NULL_BIGINT}, {_NULL_INT},
-       k || '=' || enc, CAST(n1 AS INTEGER),
-       {_NULL_BIGINT}, {_NULL_BIGINT}, {_NULL_BIGINT}
-FROM ({SQL_BPE_ENCODE}) _bew WHERE component = 'word'
-UNION ALL
-SELECT 'bpe_doc', CAST(k AS BIGINT), {_NULL_INT}, {_NULL_STR}, {_NULL_INT},
-       n1, n2, {_NULL_BIGINT}
-FROM ({SQL_BPE_ENCODE}) _bed WHERE component = 'doc'
-UNION ALL
-SELECT 'corpus_dedup', CAST(doc_id AS BIGINT), CAST(n_kept AS INTEGER),
-       clean_md5, CAST(n_dropped AS INTEGER), {_NULL_BIGINT}, {_NULL_BIGINT},
-       {_NULL_BIGINT}
-FROM ({SQL_CORPUS_DEDUP_LINES}) _cdl
-"""
-
-
-# --- pii_tfidf_docs: planted-PII redaction + TF-IDF top terms ---------------
-
-def q_pii_tfidf_docs(spark, sf_dir):
-    pii = q_pii_redaction(spark, sf_dir).select(
-        F.lit("pii").alias("component"),
-        F.col("doc_id").cast("long").alias("doc_id"),
-        F.col("clean_text").cast("string").alias("s1"),
-        _nul("long").alias("n1"),
-        _nul("long").alias("n2"),
-        _nul("double").alias("v"),
-        _nul("int").alias("rn"),
-    )
-    tfidf = q_tfidf_top_terms(spark, sf_dir).select(
-        F.lit("tfidf").alias("component"),
-        F.col("doc_id").cast("long").alias("doc_id"),
-        F.col("term").cast("string").alias("s1"),
-        F.col("tf").cast("long").alias("n1"),
-        F.col("df_t").cast("long").alias("n2"),
-        F.col("tfidf_r").cast("double").alias("v"),
-        F.col("rn").cast("int").alias("rn"),
-    )
-    sur = q_surprisal_docs(spark, sf_dir).select(
-        F.lit("surprisal").alias("component"),
-        F.col("doc_id").cast("long").alias("doc_id"),
-        _nul("string").alias("s1"),
-        F.col("n_bigrams").cast("long").alias("n1"),
-        F.col("surprisal_units").cast("long").alias("n2"),
-        _nul("double").alias("v"),
-        _nul("int").alias("rn"),
-    )
-    cc = q_ccnet_buckets_docs(spark, sf_dir).select(
-        F.lit("ccnet").alias("component"),
-        F.col("doc_id").cast("long").alias("doc_id"),
-        _nul("string").alias("s1"),
-        F.col("n_bigrams").cast("long").alias("n1"),
-        F.col("ppl_bucket").cast("long").alias("n2"),
-        F.col("ratio_r").cast("double").alias("v"),
-        _nul("int").alias("rn"),
-    )
-    ml = q_mixed_lang_docs(spark, sf_dir).select(
-        F.lit("mixed_lang").alias("component"),
-        F.col("doc_id"),
-        F.col("major_lang").cast("string").alias("s1"),
-        F.col("n_lines").cast("long").alias("n1"),
-        F.col("major_n").cast("long").alias("n2"),
-        _nul("double").alias("v"),
-        F.col("n_langs").cast("int").alias("rn"),
-    )
-    # r11: BM25 retrieval + NB classifier components (driver visibility)
-    bm = q_bm25_search_docs(spark, sf_dir).select(
-        F.lit("bm25").alias("component"),
-        F.col("doc_id").cast("long").alias("doc_id"),
-        F.col("query_id").cast("string").alias("s1"),
-        F.col("n_terms").cast("long").alias("n1"),
-        F.col("score_units").cast("long").alias("n2"),
-        _nul("double").alias("v"),
-        F.col("rn").cast("int").alias("rn"),
-    )
-    nb = q_nb_classifier_docs(spark, sf_dir).select(
-        F.lit("nb").alias("component"),
-        F.col("doc_id").cast("long").alias("doc_id"),
-        F.col("pred_label").cast("string").alias("s1"),
-        F.col("best_units").cast("long").alias("n1"),
-        F.col("n_vocab_toks").cast("long").alias("n2"),
-        _nul("double").alias("v"),
-        F.col("correct").cast("int").alias("rn"),
-    )
-    # r11: the persisted postings-index probe — value-equal to the
-    # in-memory bm25 over the same corpus (write base + append delta)
-    bmi = q_bm25_index_probe(spark, sf_dir).select(
-        F.lit("bm25_idx").alias("component"),
-        F.col("doc_id").cast("long").alias("doc_id"),
-        F.col("query_id").cast("string").alias("s1"),
-        F.col("n_terms").cast("long").alias("n1"),
-        F.col("score_units").cast("long").alias("n2"),
-        _nul("double").alias("v"),
-        F.col("rn").cast("int").alias("rn"),
-    )
-    # r12: the streaming probe — a real checkpointed availableNow stream
-    # against the persisted postings, per-query micro-batches
-    bms = q_streaming_bm25_probe(spark, sf_dir).select(
-        F.lit("bm25_stream").alias("component"),
-        F.col("doc_id").cast("long").alias("doc_id"),
-        F.col("query_id").cast("string").alias("s1"),
-        F.col("n_terms").cast("long").alias("n1"),
-        F.col("score_units").cast("long").alias("n2"),
-        _nul("double").alias("v"),
-        F.col("rn").cast("int").alias("rn"),
-    )
-    # r12: hybrid RRF fusion of the lexical + vector rankings
-    rrf = q_hybrid_rrf_docs(spark, sf_dir).select(
-        F.lit("rrf").alias("component"),
-        F.col("doc_id").cast("long").alias("doc_id"),
-        F.col("query_id").cast("string").alias("s1"),
-        F.col("n_lists").cast("long").alias("n1"),
-        F.col("rrf_units").cast("long").alias("n2"),
-        _nul("double").alias("v"),
-        F.col("rn").cast("int").alias("rn"),
-    )
-    # r13 (r12 VERDICT #4): the DEPLOYMENT shape — disk postings + IVF
-    # probes fused, oracle = the in-memory rrf SQL verbatim
-    rrfi = q_hybrid_rrf_indexed(spark, sf_dir).filter(
-        F.col("arm") == "full"
-    ).select(
-        F.lit("rrf_idx").alias("component"),
-        F.col("doc_id").cast("long").alias("doc_id"),
-        F.col("query_id").cast("string").alias("s1"),
-        F.col("n_lists").cast("long").alias("n1"),
-        F.col("rrf_units").cast("long").alias("n2"),
-        _nul("double").alias("v"),
-        F.col("rn").cast("int").alias("rn"),
-    )
-    return _union_all(
-        [pii, tfidf, sur, cc, ml, bm, nb, bmi, bms, rrf, rrfi]
-    )
-
-
-SQL_PII_TFIDF = f"""
-SELECT 'pii' AS component, CAST(doc_id AS BIGINT) AS doc_id,
-       CAST(clean_text AS VARCHAR) AS s1, {_NULL_BIGINT} AS n1,
-       {_NULL_BIGINT} AS n2, {_NULL_DOUBLE} AS v, {_NULL_INT} AS rn
-FROM ({SQL_PII_REDACTION}) _p
-UNION ALL
-SELECT 'tfidf', CAST(doc_id AS BIGINT), CAST(term AS VARCHAR),
-       CAST(tf AS BIGINT), CAST(df_t AS BIGINT), CAST(tfidf_r AS DOUBLE),
-       CAST(rn AS INTEGER)
-FROM ({SQL_TFIDF}) _t
-UNION ALL
-SELECT 'surprisal', CAST(doc_id AS BIGINT), {_NULL_STR},
-       CAST(n_bigrams AS BIGINT), CAST(surprisal_units AS BIGINT),
-       {_NULL_DOUBLE}, {_NULL_INT}
-FROM ({SQL_SURPRISAL}) _s
-UNION ALL
-SELECT 'ccnet', CAST(doc_id AS BIGINT), {_NULL_STR}, CAST(n_bigrams AS BIGINT),
-       CAST(ppl_bucket AS BIGINT), CAST(ratio_r AS DOUBLE), {_NULL_INT}
-FROM ({SQL_CCNET_BUCKETS}) _cc
-"""
-
-
-# --- pivot_unpivot_orders: Pivot matrix + Unpivot melt of the same matrix ---
-
-def q_pivot_unpivot_orders(spark, sf_dir):
-    piv = q_pivot_order_matrix(spark, sf_dir).select(
-        F.lit("pivot").alias("component"),
-        F.col("priority").cast("string").alias("priority"),
-        _nul("string").alias("status"),
-        F.col("total_f").cast("double").alias("v1"),
-        F.col("total_o").cast("double").alias("v2"),
-        F.col("total_p").cast("double").alias("v3"),
-    )
-    unp = q_unpivot_order_matrix(spark, sf_dir).select(
-        F.lit("unpivot").alias("component"),
-        F.col("priority").cast("string").alias("priority"),
-        F.col("status").cast("string").alias("status"),
-        F.col("total").cast("double").alias("v1"),
-        _nul("double").alias("v2"),
-        _nul("double").alias("v3"),
-    )
-    return _union_all([piv, unp])
-
-
-SQL_PIVOT_UNPIVOT = f"""
-SELECT 'pivot' AS component, CAST(priority AS VARCHAR) AS priority,
-       {_NULL_STR} AS status, CAST(total_f AS DOUBLE) AS v1,
-       CAST(total_o AS DOUBLE) AS v2, CAST(total_p AS DOUBLE) AS v3
-FROM ({SQL_PIVOT_MATRIX}) _p
-UNION ALL
-SELECT 'unpivot', CAST(priority AS VARCHAR), CAST(status AS VARCHAR),
-       CAST(total AS DOUBLE), {_NULL_DOUBLE}, {_NULL_DOUBLE}
-FROM ({SQL_UNPIVOT_MATRIX}) _u
-"""
-
-
-# --- median_rolling_orders: exact windowed median + RANGE-frame rolling -----
-
-def q_median_rolling_orders(spark, sf_dir):
-    med = q_median_order_totals(spark, sf_dir).select(
-        F.lit("median").alias("component"),
-        _nul("long").alias("o_custkey"),
-        _nul("long").alias("o_orderkey"),
-        F.col("priority").cast("string").alias("priority"),
-        _nul("int").alias("day_idx"),
-        _nul("long").alias("n"),
-        F.col("median_total").cast("double").alias("v"),
-    )
-    rol = q_rolling_revenue_7d(spark, sf_dir).select(
-        F.lit("rolling").alias("component"),
-        F.col("o_custkey").cast("long").alias("o_custkey"),
-        F.col("o_orderkey").cast("long").alias("o_orderkey"),
-        _nul("string").alias("priority"),
-        F.col("day_idx").cast("int").alias("day_idx"),
-        F.col("n_7d").cast("long").alias("n"),
-        F.col("spend_7d").cast("double").alias("v"),
-    )
-    # mergeable histogram quantile: per-priority sketches merged, then the
-    # p50 estimate — the scale path where per-group exact medians are too
-    # heavy; merge is lossless so the oracle histograms the union directly
-    from .operators import (
-        histogram_merge,
-        histogram_quantile,
-        histogram_sketch_grouped,
-    )
+def _merged_priority_histogram(spark, sf_dir):
+    """Per-priority histogram sketches of order totals, merged — the scale
+    path where per-group exact medians are too heavy; the merge is
+    lossless, so the oracles histogram the union directly."""
+    from .operators import histogram_merge, histogram_sketch_grouped
 
     o = _t(spark, sf_dir)["orders"].select(
         F.col("o_orderpriority").alias("priority"),
         F.col("o_totalprice").cast("double").alias("total"),
     )
     sketches = histogram_sketch_grouped(o, ["priority"], "total", 10000.0)
-    merged = histogram_merge(sketches)
-    hist = merged.select(
-        F.lit("histogram").alias("component"),
-        _nul("long").alias("o_custkey"),
-        _nul("long").alias("o_orderkey"),
-        _nul("string").alias("priority"),
-        F.col("bin").cast("int").alias("day_idx"),
+    return histogram_merge(sketches)
+
+
+def q_histogram_orders(spark, sf_dir):
+    return _merged_priority_histogram(spark, sf_dir).select(
+        F.col("bin").cast("int").alias("bin"),
         F.col("n").cast("long").alias("n"),
-        _nul("double").alias("v"),
     )
-    p50 = histogram_quantile(merged, 0.5, 10000.0).select(
-        F.lit("hist_p50").alias("component"),
-        _nul("long").alias("o_custkey"),
-        _nul("long").alias("o_orderkey"),
-        _nul("string").alias("priority"),
-        _nul("int").alias("day_idx"),
-        F.col("total_n").cast("long").alias("n"),
-        F.col("quantile_estimate").cast("double").alias("v"),
-    )
-    return _union_all([med, rol, hist, p50])
 
 
-SQL_MEDIAN_ROLLING = f"""
-SELECT 'median' AS component, {_NULL_BIGINT} AS o_custkey,
-       {_NULL_BIGINT} AS o_orderkey, CAST(priority AS VARCHAR) AS priority,
-       {_NULL_INT} AS day_idx, {_NULL_BIGINT} AS n,
-       CAST(median_total AS DOUBLE) AS v
-FROM ({SQL_MEDIAN_TOTALS}) _m
-UNION ALL
-SELECT 'rolling', CAST(o_custkey AS BIGINT), CAST(o_orderkey AS BIGINT),
-       {_NULL_STR}, CAST(day_idx AS INTEGER), CAST(n_7d AS BIGINT),
-       CAST(spend_7d AS DOUBLE)
-FROM ({_oracle_double(SQL_ROLLING_7D, ["spend_7d"])}) _r
-UNION ALL
-SELECT 'histogram', {_NULL_BIGINT}, {_NULL_BIGINT}, {_NULL_STR},
-       CAST(bin AS INTEGER), CAST(n AS BIGINT), {_NULL_DOUBLE}
-FROM (SELECT CAST(floor(CAST(o_totalprice AS DOUBLE) / 10000.0) AS BIGINT)
-         AS bin, COUNT(*) AS n
-      FROM orders GROUP BY 1) _h
-UNION ALL
-SELECT 'hist_p50', {_NULL_BIGINT}, {_NULL_BIGINT}, {_NULL_STR}, {_NULL_INT},
-       CAST(total_n AS BIGINT), CAST(quantile_estimate AS DOUBLE)
-FROM (
-  WITH hb AS (SELECT CAST(floor(CAST(o_totalprice AS DOUBLE) / 10000.0)
-                  AS BIGINT) AS bin, COUNT(*) AS n
-              FROM orders GROUP BY 1),
-  c AS (SELECT bin, SUM(n) OVER (ORDER BY bin
-                                 ROWS UNBOUNDED PRECEDING) AS cum
-        FROM hb),
-  t AS (SELECT SUM(n) AS total_n FROM hb)
-  SELECT t.total_n,
-         CAST(MIN(c.bin) * 10000.0 AS DOUBLE) AS quantile_estimate
-  FROM c, t
-  WHERE c.cum >= CAST(ceil(0.5 * t.total_n) AS BIGINT)
-  GROUP BY t.total_n
-) _q
+def q_hist_p50_orders(spark, sf_dir):
+    """The p50 estimate of the merged histogram."""
+    from .operators import histogram_quantile
+
+    merged = _merged_priority_histogram(spark, sf_dir)
+    return histogram_quantile(merged, 0.5, 10000.0).select(
+        F.col("total_n").cast("long").alias("total_n"),
+        F.col("quantile_estimate").cast("double").alias("quantile_estimate"),
+    )
+
+
+_SQL_ORDER_BINS = """
+SELECT CAST(floor(CAST(o_totalprice AS DOUBLE) / 10000.0) AS BIGINT) AS bin,
+       COUNT(*) AS n
+FROM orders GROUP BY 1
+"""
+
+SQL_HISTOGRAM_ORDERS = f"""
+SELECT CAST(bin AS INTEGER) AS bin, CAST(n AS BIGINT) AS n
+FROM ({_SQL_ORDER_BINS}) _h
+"""
+
+SQL_HIST_P50_ORDERS = f"""
+WITH hb AS ({_SQL_ORDER_BINS}),
+c AS (SELECT bin, SUM(n) OVER (ORDER BY bin
+                               ROWS UNBOUNDED PRECEDING) AS cum
+      FROM hb),
+t AS (SELECT SUM(n) AS total_n FROM hb)
+SELECT CAST(t.total_n AS BIGINT) AS total_n,
+       CAST(MIN(c.bin) * 10000.0 AS DOUBLE) AS quantile_estimate
+FROM c, t
+WHERE c.cum >= CAST(ceil(0.5 * t.total_n) AS BIGINT)
+GROUP BY t.total_n
 """
 
 
-# --- parts_fuzzy_pagerank: fuzzy-grouping pairs + PageRank over that graph --
+# --- part-name fuzzy matching: sorted-neighborhood candidate pairs --------
 
 def q_sorted_neighborhood_parts(spark, sf_dir):
     """Sorted-neighborhood candidate pairs over part names (window 3,
@@ -8517,124 +7120,6 @@ SELECT a.id AS id_a, b.id AS id_b,
 FROM r a JOIN r b ON b.rn BETWEEN a.rn + 1 AND a.rn + 3
 WHERE levenshtein(a.t, b.t) <= 12
 """
-
-
-def q_parts_fuzzy_pagerank(spark, sf_dir):
-    fz = q_fuzzy_part_names(spark, sf_dir).select(
-        F.lit("fuzzy").alias("component"),
-        F.col("id_a").cast("long").alias("id_a"),
-        F.col("id_b").cast("long").alias("id_b"),
-        F.col("distance").cast("int").alias("distance"),
-        _nul("double").alias("score"),
-    )
-    pr = q_pagerank_parts(spark, sf_dir).select(
-        F.lit("pagerank").alias("component"),
-        F.col("part_key").cast("long").alias("id_a"),
-        _nul("long").alias("id_b"),
-        _nul("int").alias("distance"),
-        F.col("pagerank").cast("double").alias("score"),
-    )
-    sn = q_sorted_neighborhood_parts(spark, sf_dir).select(
-        F.lit("sorted_nbr").alias("component"),
-        F.col("id_a").cast("long").alias("id_a"),
-        F.col("id_b").cast("long").alias("id_b"),
-        F.col("distance").cast("int").alias("distance"),
-        _nul("double").alias("score"),
-    )
-    return _union_all([fz, pr, sn])
-
-
-SQL_PARTS_FUZZY_PAGERANK = f"""
-SELECT 'fuzzy' AS component, CAST(id_a AS BIGINT) AS id_a,
-       CAST(id_b AS BIGINT) AS id_b, CAST(distance AS INTEGER) AS distance,
-       {_NULL_DOUBLE} AS score
-FROM ({SQL_FUZZY_PARTS}) _f
-UNION ALL
-SELECT 'pagerank', CAST(part_key AS BIGINT), {_NULL_BIGINT}, {_NULL_INT},
-       CAST(pagerank AS DOUBLE)
-FROM ({SQL_PAGERANK_PARTS}) _p
-UNION ALL
-SELECT 'sorted_nbr', CAST(id_a AS BIGINT), CAST(id_b AS BIGINT),
-       CAST(distance AS INTEGER), {_NULL_DOUBLE}
-FROM ({SQL_SORTED_NEIGHBORHOOD}) _sn
-"""
-
-
-# --- roundtrip_sinks: every batch sink/source round-trip in one entry
-# (S3 S4 S5 S9 S10 D1 D2 D5 D6) ---------------------------------------------
-
-def q_roundtrip_sinks(spark, sf_dir):
-    def slots(df, tag, k1, s1, v1=None, k2=None):
-        return df.select(
-            F.lit(tag).alias("component"),
-            F.col(k1).cast("long").alias("k1"),
-            (F.col(k2).cast("long") if k2 else _nul("long")).alias("k2"),
-            F.col(s1).cast("string").alias("s1"),
-            (F.col(v1).cast("double") if v1 else _nul("double")).alias("v1"),
-        )
-
-    parts = [
-        slots(q_roundtrip_append(spark, sf_dir), "append",
-              "order_key", "status", "total"),
-        slots(q_roundtrip_overwrite(spark, sf_dir), "overwrite",
-              "customer_key", "segment", "acct_bal"),
-        slots(q_roundtrip_partition_overwrite(spark, sf_dir), "dpo",
-              "order_key", "priority", "total"),
-        slots(q_roundtrip_audit_update(spark, sf_dir), "audit",
-              "supplier_key", "processed", "acct_bal", k2="nation_key"),
-        slots(q_roundtrip_csv(spark, sf_dir), "csv",
-              "supplier_key", "supplier_name", "acct_bal", k2="nation_key"),
-        slots(q_roundtrip_json(spark, sf_dir), "json",
-              "part_key", "brand", "retail_price"),
-        slots(q_roundtrip_orc(spark, sf_dir), "orc",
-              "supplier_key", "supplier_name", "acct_bal", k2="nation_key"),
-        slots(q_roundtrip_compact(spark, sf_dir), "compact",
-              "order_key", "status", "total"),
-        slots(q_roundtrip_evolve(spark, sf_dir), "evolve",
-              "nation_key", "nation_name", k2="region_key"),
-        slots(q_roundtrip_excel(spark, sf_dir), "excel",
-              "nation_key", "nation_name", k2="region_key"),
-        slots(q_roundtrip_xls(spark, sf_dir), "excel_xls",
-              "nation_key", "nation_name", k2="region_key"),
-        slots(q_rest_landing(spark, sf_dir), "rest",
-              "region_key", "region_name"),
-    ]
-    return _union_all(parts)
-
-
-def _rt_branch(tag, sql, k1, s1, v1=None, k2=None):
-    k2e = f"CAST({k2} AS BIGINT)" if k2 else _NULL_BIGINT
-    v1e = f"CAST({v1} AS DOUBLE)" if v1 else _NULL_DOUBLE
-    return (
-        f"SELECT '{tag}' AS component, CAST({k1} AS BIGINT) AS k1, "
-        f"{k2e} AS k2, CAST({s1} AS VARCHAR) AS s1, {v1e} AS v1 "
-        f"FROM ({sql}) _{tag}"
-    )
-
-
-SQL_ROUNDTRIP_SINKS = "\nUNION ALL\n".join(
-    [
-        _rt_branch("append", SQL_RT_APPEND, "order_key", "status", "total"),
-        _rt_branch("overwrite", SQL_RT_OVERWRITE, "customer_key", "segment",
-                   "acct_bal"),
-        _rt_branch("dpo", SQL_RT_DPO, "order_key", "priority", "total"),
-        _rt_branch("audit", SQL_RT_AUDIT, "supplier_key", "processed",
-                   "acct_bal", k2="nation_key"),
-        _rt_branch("csv", SQL_RT_CSV, "supplier_key", "supplier_name",
-                   "acct_bal", k2="nation_key"),
-        _rt_branch("json", SQL_RT_JSON, "part_key", "brand", "retail_price"),
-        _rt_branch("orc", SQL_RT_ORC, "supplier_key", "supplier_name",
-                   "acct_bal", k2="nation_key"),
-        _rt_branch("compact", SQL_RT_COMPACT, "order_key", "status", "total"),
-        _rt_branch("evolve", SQL_RT_EVOLVE, "nation_key", "nation_name",
-                   k2="region_key"),
-        _rt_branch("excel", SQL_RT_EXCEL, "nation_key", "nation_name",
-                   k2="region_key"),
-        _rt_branch("excel_xls", SQL_RT_EXCEL, "nation_key", "nation_name",
-                   k2="region_key"),
-        _rt_branch("rest", SQL_REST_LANDING, "region_key", "region_name"),
-    ]
-)
 
 
 # ---------------------------------------------------------------------------
@@ -9390,53 +7875,6 @@ GROUP BY date_key, customer_key, product_key
 """
 
 
-# --- pivot_median_orders: pivot/unpivot + median/rolling/histogram merged
-# into one window entry (frees a driver slot for dtsx_packages) -------------
-
-def q_pivot_median_orders(spark, sf_dir):
-    a = q_pivot_unpivot_orders(spark, sf_dir).select(
-        F.col("component"), F.col("priority"), F.col("status"),
-        _nul("long").alias("o_custkey"), _nul("long").alias("o_orderkey"),
-        _nul("int").alias("day_idx"), _nul("long").alias("n"),
-        F.col("v1"), F.col("v2"), F.col("v3"),
-    )
-    b = q_median_rolling_orders(spark, sf_dir).select(
-        F.col("component"), F.col("priority"), _nul("string").alias("status"),
-        F.col("o_custkey"), F.col("o_orderkey"), F.col("day_idx"), F.col("n"),
-        F.col("v").alias("v1"), _nul("double").alias("v2"),
-        _nul("double").alias("v3"),
-    )
-    cu = q_cube_orders(spark, sf_dir).select(
-        F.lit("cube").alias("component"),
-        F.col("o_orderpriority").alias("priority"),
-        F.col("o_orderstatus").alias("status"),
-        _nul("long").alias("o_custkey"),
-        _nul("long").alias("o_orderkey"),
-        F.col("grouping_level").alias("day_idx"),
-        F.col("n_orders").alias("n"),
-        F.col("total").alias("v1"),
-        _nul("double").alias("v2"),
-        _nul("double").alias("v3"),
-    )
-    return _union_all([a, b, cu])
-
-
-SQL_PIVOT_MEDIAN = f"""
-SELECT component, priority, status, {_NULL_BIGINT} AS o_custkey,
-       {_NULL_BIGINT} AS o_orderkey, {_NULL_INT} AS day_idx,
-       {_NULL_BIGINT} AS n, v1, v2, v3
-FROM ({SQL_PIVOT_UNPIVOT}) _a
-UNION ALL
-SELECT component, priority, {_NULL_STR}, o_custkey, o_orderkey, day_idx, n,
-       v AS v1, {_NULL_DOUBLE} AS v2, {_NULL_DOUBLE} AS v3
-FROM ({SQL_MEDIAN_ROLLING}) _b
-UNION ALL
-SELECT 'cube', o_orderpriority, o_orderstatus, {_NULL_BIGINT}, {_NULL_BIGINT},
-       grouping_level, n_orders, total, {_NULL_DOUBLE}, {_NULL_DOUBLE}
-FROM ({SQL_CUBE_ORDERS}) _cu
-"""
-
-
 # ---------------------------------------------------------------------------
 # Round 6 (cont.): k-means training, near-dup pruning, char entropy,
 # temperature mixture.
@@ -9877,8 +8315,6 @@ def q_temperature_mixture_docs(spark, sf_dir):
     )
 
 
-
-
 def q_dsir_docs(spark, sf_dir):
     """DSIR importance resampling (Xie et al. 2023): hashed unigram+bigram
     bucket model, target = the English slice, add-one smoothing, exact
@@ -9896,8 +8332,6 @@ def q_dsir_docs(spark, sf_dir):
         F.col("gumbel_units").cast("long").alias("gumbel_units"),
         (F.coalesce(F.col("_pick"), F.lit(0)) == 1).alias("picked"),
     )
-
-
 
 
 def q_dsir_apply_docs(spark, sf_dir):
@@ -9967,7 +8401,6 @@ def q_dsir_merge_docs(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-
 def q_curation_pipeline_docs(spark, sf_dir, checkpoint=True):
     """The full training-data curation chain as ONE composed plan.
 
@@ -10021,16 +8454,14 @@ def q_curation_pipeline_docs(spark, sf_dir, checkpoint=True):
     c5 = stage_mixture(c4)
     packed = stage_pack(c5)
 
-    def row(component, df_, v1=None, v2=None, s1=None):
-        return df_.select(
-            F.lit(component).alias("component"),
+    def row(component, df_, **cols):
+        return component, df_.select(
             F.col("doc_id").cast("long").alias("doc_id"),
-            (v1 if v1 is not None else _nul("long")).alias("v1"),
-            (v2 if v2 is not None else _nul("long")).alias("v2"),
-            (s1 if s1 is not None else _nul("string")).alias("s1"),
+            *[c.alias(name) for name, c in cols.items()],
         )
 
-    return _union_all(
+    return _suite_frame(
+        "curation_pipeline_docs",
         [
             row("gate", c1, v1=F.col("n_chars").cast("long"),
                 s1=F.col("lang")),
@@ -10047,58 +8478,6 @@ def q_curation_pipeline_docs(spark, sf_dir, checkpoint=True):
                 s1=F.col("end_tok").cast("string")),
         ]
     )
-
-
-
-
-def q_corpus_curation_suite(spark, sf_dir):
-    """Driver-window suite: the per-doc enrichment battery (exact dedup +
-    language/quality/fingerprint + Gopher signals) PLUS the end-to-end
-    composed curation pipeline — both hash-verified under one entry."""
-    en = q_corpus_curation(spark, sf_dir).select(
-        F.lit("enrich").alias("component"),
-        F.col("doc_id").cast("long").alias("doc_id"),
-        F.col("n_tokens").cast("long").alias("v1"),
-        _nul("long").alias("v2"),
-        F.col("q_score").cast("double").alias("d1"),
-        F.col("dup_2gram_frac").cast("double").alias("d2"),
-        F.col("top_2gram_char_frac").cast("double").alias("d3"),
-        F.col("dup_5gram_char_frac").cast("double").alias("d4"),
-        F.col("lang_pred").cast("string").alias("s1"),
-        F.col("fingerprint").cast("string").alias("s2"),
-        F.col("gopher_pass").alias("b1"),
-    )
-    pl = q_curation_pipeline_docs(spark, sf_dir).select(
-        "component",
-        "doc_id",
-        "v1",
-        "v2",
-        _nul("double").alias("d1"),
-        _nul("double").alias("d2"),
-        _nul("double").alias("d3"),
-        _nul("double").alias("d4"),
-        "s1",
-        _nul("string").alias("s2"),
-        _nul("boolean").alias("b1"),
-    )
-    return _union_all([en, pl])
-
-
-SQL_CORPUS_CURATION_SUITE = f"""
-SELECT 'enrich' AS component, CAST(doc_id AS BIGINT) AS doc_id,
-       CAST(n_tokens AS BIGINT) AS v1, CAST(NULL AS BIGINT) AS v2,
-       CAST(q_score AS DOUBLE) AS d1, CAST(dup_2gram_frac AS DOUBLE) AS d2,
-       CAST(top_2gram_char_frac AS DOUBLE) AS d3,
-       CAST(dup_5gram_char_frac AS DOUBLE) AS d4,
-       CAST(lang_pred AS VARCHAR) AS s1, CAST(fingerprint AS VARCHAR) AS s2,
-       gopher_pass AS b1
-FROM ({SQL_CORPUS_CURATION}) _e
-UNION ALL
-SELECT component, doc_id, v1, v2, CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE),
-       CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE), s1, CAST(NULL AS VARCHAR),
-       CAST(NULL AS BOOLEAN)
-FROM ({SQL_CURATION_PIPELINE}) _p
-"""
 
 
 # ---------------------------------------------------------------------------
@@ -10139,41 +8518,34 @@ def q_crawl_ingest_docs(spark, sf_dir):
 
     def rows(tag, r):
         gate = r.gated.select(
-            F.lit(f"gate{tag}").alias("component"),
             F.col("doc_id").cast("long").alias("doc_id"),
             F.col("n_chars").cast("long").alias("v1"),
-            _nul("long").alias("v2"),
             F.col("lang").alias("s1"),
         )
         rej = r.rejected.select(
-            F.lit(f"reject{tag}").alias("component"),
             F.col("doc_id").cast("long").alias("doc_id"),
             F.col("n_dups").cast("long").alias("v1"),
             F.col("max_matches").cast("long").alias("v2"),
-            _nul("string").alias("s1"),
         )
         acc = r.accepted.select(
-            F.lit(f"accept{tag}").alias("component"),
             F.col("doc_id").cast("long").alias("doc_id"),
-            _nul("long").alias("v1"),
-            _nul("long").alias("v2"),
             F.col("lang").alias("s1"),
         )
         dsir = r.scored.select(
-            F.lit(f"dsir{tag}").alias("component"),
             F.col("doc_id").cast("long").alias("doc_id"),
             F.col("weight_units").cast("long").alias("v1"),
             F.col("gumbel_units").cast("long").alias("v2"),
             F.col("n_feats").cast("string").alias("s1"),
         )
         pack = r.packed.select(
-            F.lit(f"pack{tag}").alias("component"),
             F.col("doc_id").cast("long").alias("doc_id"),
             F.col("seq_id").cast("long").alias("v1"),
             F.col("start_tok").cast("long").alias("v2"),
             F.col("end_tok").cast("string").alias("s1"),
         )
-        return [gate, rej, acc, dsir, pack]
+        return [(f"gate{tag}", gate), (f"reject{tag}", rej),
+                (f"accept{tag}", acc), (f"dsir{tag}", dsir),
+                (f"pack{tag}", pack)]
 
     # r11: within-batch dedup folded into the suite (r10 VERDICT #1) — a
     # third, independent iteration over batch 1 with dedup_within_batch
@@ -10190,29 +8562,25 @@ def q_crawl_ingest_docs(spark, sf_dir):
                         pre_gated=g1, pre_index=i1, with_scoring=False,
                         pre_probe=r1.rejected)
     wb = [
-        r_wb.batch_pruned.select(
-            F.lit("wb_pruned").alias("component"),
+        ("wb_pruned", r_wb.batch_pruned.select(
             F.col("doc_id").cast("long").alias("doc_id"),
             F.col("cluster_id").cast("long").alias("v1"),
             F.col("cluster_size").cast("long").alias("v2"),
             F.col("kept").cast("string").alias("s1"),
-        ),
-        r_wb.rejected.select(
-            F.lit("wb_reject").alias("component"),
+        )),
+        ("wb_reject", r_wb.rejected.select(
             F.col("doc_id").cast("long").alias("doc_id"),
             F.col("n_dups").cast("long").alias("v1"),
             F.col("max_matches").cast("long").alias("v2"),
-            _nul("string").alias("s1"),
-        ),
-        r_wb.accepted.select(
-            F.lit("wb_accept").alias("component"),
+        )),
+        ("wb_accept", r_wb.accepted.select(
             F.col("doc_id").cast("long").alias("doc_id"),
-            _nul("long").alias("v1"),
-            _nul("long").alias("v2"),
             F.col("lang").alias("s1"),
-        ),
+        )),
     ]
-    return _union_all(rows("1", r1) + rows("2", r2) + wb)
+    return _suite_frame(
+        "crawl_ingest_docs", rows("1", r1) + rows("2", r2) + wb
+    )
 
 
 def q_crawl_wb_dedup_docs(spark, sf_dir):
@@ -10233,175 +8601,53 @@ def q_crawl_wb_dedup_docs(spark, sf_dir):
     r = ingest_batch(batch, seed_ingest_state(seed),
                      dedup_within_batch=True, with_scoring=False)
     pruned = r.batch_pruned.select(
-        F.lit("pruned").alias("component"),
         F.col("doc_id").cast("long").alias("doc_id"),
         F.col("cluster_id").cast("long").alias("v1"),
         F.col("cluster_size").cast("long").alias("v2"),
         F.col("kept").cast("string").alias("s1"),
     )
     rej = r.rejected.select(
-        F.lit("reject").alias("component"),
         F.col("doc_id").cast("long").alias("doc_id"),
         F.col("n_dups").cast("long").alias("v1"),
         F.col("max_matches").cast("long").alias("v2"),
-        _nul("string").alias("s1"),
     )
     acc = r.accepted.select(
-        F.lit("accept").alias("component"),
         F.col("doc_id").cast("long").alias("doc_id"),
-        _nul("long").alias("v1"),
-        _nul("long").alias("v2"),
         F.col("lang").alias("s1"),
     )
-    return _union_all([pruned, rej, acc])
+    return _suite_frame("crawl_wb_dedup_docs", [
+        ("pruned", pruned), ("reject", rej), ("accept", acc),
+    ])
 
 
-# r11: the crawl suite = the two-batch loop + the within-batch dedup
-# iteration under 'wb_'-prefixed components (r10 VERDICT #1 — driver
-# visibility for both).  Each side keeps its own WITH chain inside a
-# derived table; their stage CTEs are already MATERIALIZED.
-SQL_CRAWL_INGEST_SUITE = f"""
-SELECT * FROM ({SQL_CRAWL_INGEST}) _ci
-UNION ALL
-SELECT 'wb_' || component AS component, doc_id, v1, v2, s1
-FROM ({SQL_CRAWL_WB_DEDUP}) _wb
-"""
+# The two hand-built suites' oracles, generated from their arms' SQL like
+# the _SUITES rows (their Spark sides share intermediates across arms).
+SQL_CRAWL_INGEST_SUITE = _suite_sql(
+    [("", SQL_CRAWL_INGEST), ("wb_", SQL_CRAWL_WB_DEDUP)]
+)
 
-
-# Fold the four new operators into their driver-window suites (the SQL
-# constants above are complete at this point, so extend them in place).
-SQL_ANN_TOPK_SUITE += f"""UNION ALL
-SELECT 'ivf_idx', CAST(vec_id AS BIGINT), CAST(rn AS INTEGER), {_NULL_INT},
-       CAST(query_id AS BIGINT), CAST(cosine_r AS DOUBLE)
-FROM ({SQL_IVF_INDEX_PROBE}) _ii
-UNION ALL
-SELECT 'km_' || component, id_a AS vec_id, dim, {_NULL_INT}, {_NULL_BIGINT}, v1
-FROM ({SQL_KMEANS}) _km
-UNION ALL
-SELECT 'fps', vec_id, dim, seed_idx, {_NULL_BIGINT}, val
-FROM ({SQL_FPS_SEEDS}) _fp
-UNION ALL
-SELECT 'knn', CAST(vec_id AS BIGINT), {_NULL_INT}, {_NULL_INT},
-       CAST(query_id AS BIGINT), CAST(cosine_r AS DOUBLE)
-FROM ({SQL_KNN_JOIN}) _kj
-UNION ALL
-SELECT 'decontam', CAST(vec_id AS BIGINT), {_NULL_INT},
-       CAST(contaminated AS INTEGER), CAST(ref_id AS BIGINT),
-       CAST(cosine_r AS DOUBLE)
-FROM ({SQL_SEMANTIC_DECONTAM}) _sd
-UNION ALL
-SELECT 'sivf', CAST(vec_id AS BIGINT), CAST(rn AS INTEGER), {_NULL_INT},
-       CAST(query_id AS BIGINT), CAST(cosine_r AS DOUBLE)
-FROM ({SQL_STREAMING_IVF}) _sv
-UNION ALL
-SELECT 'decontam_ivf', CAST(vec_id AS BIGINT), {_NULL_INT},
-       CAST(contaminated AS INTEGER), CAST(ref_id AS BIGINT),
-       CAST(cosine_r AS DOUBLE)
-FROM ({SQL_SEMANTIC_DECONTAM}) _sdi
-UNION ALL
-SELECT 'recall', CAST(n_hits AS BIGINT), CAST(nprobe AS INTEGER),
-       CAST(k AS INTEGER), CAST(query_id AS BIGINT), {_NULL_DOUBLE}
-FROM ({SQL_IVF_RECALL}) _rc
-"""
-
-SQL_SAMPLING_SPLITS += f"""UNION ALL
-SELECT 'temperature', CAST(doc_id AS BIGINT), CAST(lang AS VARCHAR),
-       {_NULL_STR}
-FROM ({SQL_TEMPERATURE_MIXTURE}) _tm
-UNION ALL
-SELECT 'dsir', CAST(doc_id AS BIGINT),
-       CAST(weight_units AS VARCHAR) || ':' || CAST(gumbel_units AS VARCHAR)
-           || ':' || CAST(n_feats AS VARCHAR),
-       CASE WHEN picked THEN 'picked' ELSE 'pool' END
-FROM ({SQL_DSIR}) _ds
-UNION ALL
-SELECT 'dsir_apply', CAST(doc_id AS BIGINT),
-       CAST(weight_units AS VARCHAR) || ':' || CAST(gumbel_units AS VARCHAR)
-           || ':' || CAST(n_feats AS VARCHAR),
-       {_NULL_STR}
-FROM ({SQL_DSIR_APPLY}) _da
-UNION ALL
-SELECT 'dsir_merge', CAST(doc_id AS BIGINT),
-       CAST(weight_units AS VARCHAR) || ':' || CAST(gumbel_units AS VARCHAR)
-           || ':' || CAST(n_feats AS VARCHAR),
-       {_NULL_STR}
-FROM ({SQL_DSIR_APPLY}) _dm
-UNION ALL
-SELECT 'shards', CAST(doc_id AS BIGINT), CAST(shard AS VARCHAR),
-       CAST(pos AS VARCHAR)
-FROM ({SQL_SHUFFLE_SHARDS}) _sh
-"""
-
-SQL_MINHASH_MD5_SUITE += f"""UNION ALL
-SELECT 'prune', doc_id, cluster_id, CAST(cluster_size AS DOUBLE),
-       CAST(kept AS VARCHAR), CAST(NULL AS VARCHAR)
-FROM ({SQL_NEARDUP_PRUNE}) _pr
-UNION ALL
-SELECT 'safe_split', doc_id, cluster_id, CAST(NULL AS DOUBLE),
-       split, CAST(NULL AS VARCHAR)
-FROM ({SQL_CLUSTER_SPLIT}) _ss
-UNION ALL
-SELECT 'cross', new_id, corpus_id, est_jaccard,
-       CAST(NULL AS VARCHAR), CAST(NULL AS VARCHAR)
-FROM ({SQL_CROSS_DEDUP}) _xd
-"""
+SQL_MINHASH_MD5_SUITE = _suite_sql([
+    ("cand", f"""SELECT doc_a, doc_b, est_jaccard AS v1
+                 FROM ({SQL_MINHASH_MD5}) _c"""),
+    ("leak_", f"""SELECT component, doc_a, doc_b, split_a AS s1,
+                         split_b AS s2
+                  FROM ({SQL_SPLIT_LEAKAGE}) _l"""),
+    ("prune", f"""SELECT doc_id AS doc_a, cluster_id AS doc_b,
+                         CAST(cluster_size AS DOUBLE) AS v1,
+                         CAST(kept AS VARCHAR) AS s1
+                  FROM ({SQL_NEARDUP_PRUNE}) _p"""),
+    ("safe_split", f"""SELECT doc_id AS doc_a, cluster_id AS doc_b,
+                              split AS s1
+                       FROM ({SQL_CLUSTER_SPLIT}) _s"""),
+    ("cross", f"""SELECT new_id AS doc_a, corpus_id AS doc_b,
+                         est_jaccard AS v1
+                  FROM ({SQL_CROSS_DEDUP}) _x"""),
+])
 
 SQL_TEXT_ANALYSIS = f"""
 SELECT ta.*, ce.ent_distinct, ce.entropy_units
 FROM ({SQL_TEXT_ANALYSIS}) ta
 JOIN ({SQL_CHAR_ENTROPY}) ce USING (doc_id)
-"""
-
-SQL_PII_TFIDF += f"""UNION ALL
-SELECT 'mixed_lang', doc_id, major_lang, CAST(n_lines AS BIGINT),
-       CAST(major_n AS BIGINT), {_NULL_DOUBLE}, CAST(n_langs AS INTEGER)
-FROM ({SQL_MIXED_LANG}) _ml
-"""
-
-# r11: BM25 retrieval + NB classifier folded into the text-scoring suite
-# (driver visibility for both new operators)
-SQL_PII_TFIDF += f"""UNION ALL
-SELECT 'bm25', CAST(doc_id AS BIGINT), CAST(query_id AS VARCHAR),
-       CAST(n_terms AS BIGINT), CAST(score_units AS BIGINT),
-       {_NULL_DOUBLE}, CAST(rn AS INTEGER)
-FROM ({SQL_BM25_SEARCH}) _bm
-UNION ALL
-SELECT 'nb', CAST(doc_id AS BIGINT), CAST(pred_label AS VARCHAR),
-       CAST(best_units AS BIGINT), CAST(n_vocab_toks AS BIGINT),
-       {_NULL_DOUBLE}, CAST(correct AS INTEGER)
-FROM ({SQL_NB_CLASSIFIER}) _nb
-UNION ALL
-SELECT 'bm25_idx', CAST(doc_id AS BIGINT), CAST(query_id AS VARCHAR),
-       CAST(n_terms AS BIGINT), CAST(score_units AS BIGINT),
-       {_NULL_DOUBLE}, CAST(rn AS INTEGER)
-FROM ({SQL_BM25_SEARCH}) _bmi
-UNION ALL
-SELECT 'bm25_stream', CAST(doc_id AS BIGINT), CAST(query_id AS VARCHAR),
-       CAST(n_terms AS BIGINT), CAST(score_units AS BIGINT),
-       {_NULL_DOUBLE}, CAST(rn AS INTEGER)
-FROM ({SQL_BM25_SEARCH}) _bms
-UNION ALL
-SELECT 'rrf', CAST(doc_id AS BIGINT), CAST(query_id AS VARCHAR),
-       CAST(n_lists AS BIGINT), CAST(rrf_units AS BIGINT),
-       {_NULL_DOUBLE}, CAST(rn AS INTEGER)
-FROM ({SQL_HYBRID_RRF}) _rrf
-UNION ALL
-SELECT 'rrf_idx', CAST(doc_id AS BIGINT), CAST(query_id AS VARCHAR),
-       CAST(n_lists AS BIGINT), CAST(rrf_units AS BIGINT),
-       {_NULL_DOUBLE}, CAST(rn AS INTEGER)
-FROM ({SQL_HYBRID_RRF}) _rrfi
-"""
-
-SQL_EVENTS_WINDOWS += f"""UNION ALL
-SELECT 'decay', last_ts, {_NULL_TS}, CAST(user_id AS VARCHAR),
-       CAST(n_events AS INTEGER), score_units, {_NULL_DOUBLE}
-FROM ({SQL_DECAY_EVENTS}) _dc
-UNION ALL
-SELECT 'time_contract', {_NULL_TS}, {_NULL_TS},
-       CAST(event_id AS VARCHAR) || '|' || tod || '|' || plus90
-           || '|' || tod_ms,
-       {_NULL_INT}, CAST(us AS BIGINT), CAST(vs_noon_s AS DOUBLE)
-FROM ({SQL_TIME_CONTRACT}) _tc
 """
 
 
@@ -10433,7 +8679,6 @@ ALL_QUERIES = {
     "quality_report": q_quality_report,
     "exact_dedup_docs": q_exact_dedup_docs,
     "text_analysis_docs": q_text_analysis_docs,
-    "ngram_jaccard_docs": q_ngram_jaccard_docs,
     "minhash_pairs_docs": q_minhash_pairs_docs,
     "simhash_pairs_docs": q_simhash_pairs_docs,
     "minhash_pairs_md5": q_minhash_pairs_md5,
@@ -10453,7 +8698,6 @@ ALL_QUERIES = {
     "png_decode_stats": q_png_decode_stats,
     "jpeg_decode_stats": q_jpeg_decode_stats,
     "dataset_profile": q_dataset_profile,
-    "corpus_curation": q_corpus_curation_suite,
     "corpus_curation_enrich": q_corpus_curation,
     "curation_pipeline_docs": q_curation_pipeline_docs,
     "crawl_ingest_docs": q_crawl_ingest_docs,
@@ -10474,7 +8718,6 @@ ALL_QUERIES = {
     "token_budget_docs": q_token_budget_docs,
     "chunk_docs": q_chunk_docs,
     "surprisal_docs": q_surprisal_docs,
-    "token_ops_docs": q_token_ops_docs,
     "sql_task_pricing": q_sql_task_pricing,
     "embedding_neardup": q_embedding_neardup,
     "window_customer_orders": q_window_customer_orders,
@@ -10513,11 +8756,9 @@ ALL_QUERIES = {
     "pagerank_parts": q_pagerank_parts,
     "json_props_events": q_json_props_events,
     "zorder_events": q_zorder_events,
-    "events_payload_layout": q_events_payload_layout,
     "rolling_revenue_7d": q_rolling_revenue_7d,
     "cdc_orders_diff": q_cdc_orders_diff,
     "cdc_apply_orders": q_cdc_apply_orders,
-    "cdc_orders": q_cdc_orders,
     "containment_docs": q_containment_docs,
     "wav_decode_stats": q_wav_decode_stats,
     "resize_bmp_stats": q_resize_bmp_stats,
@@ -10543,7 +8784,6 @@ ALL_QUERIES = {
     "source_cap_docs": q_source_cap_docs,
     "bpe_merges_docs": q_bpe_merges_docs,
     "gap_fill_events": q_gap_fill_events,
-    "agg_daily_rollup": q_agg_daily_rollup,
     "kmeans_embeddings": q_kmeans_embeddings,
     "neardup_prune_docs": q_neardup_prune_docs,
     "cluster_split_docs": q_cluster_split_docs,
@@ -10555,22 +8795,10 @@ ALL_QUERIES = {
     "dsir_docs": q_dsir_docs,
     "dsir_apply_docs": q_dsir_apply_docs,
     "dsir_merge_docs": q_dsir_merge_docs,
-    # merged driver-window suites
     "quality_validation_report": q_quality_validation_report,
-    "containment_kmv_docs": q_containment_kmv_docs,
-    "ann_topk_suite": q_ann_topk_suite,
-    "events_windows": q_events_windows,
-    "events_totals_suite": q_events_totals_suite,
-    "asof_range_joins": q_asof_range_joins,
-    "orchestration_dag": q_orchestration_dag,
-    "multimodal_decode": q_multimodal_decode,
     "image_phash_neardup": q_image_phash_neardup,
+    "image_ahash_media": q_image_ahash_media,
     "image_phash_index": q_image_phash_index,
-    "sampling_splits": q_sampling_splits,
-    "pii_tfidf_docs": q_pii_tfidf_docs,
-    "pivot_unpivot_orders": q_pivot_unpivot_orders,
-    "median_rolling_orders": q_median_rolling_orders,
-    "pivot_median_orders": q_pivot_median_orders,
     "dtsx_sales_fact_etl": q_dtsx_sales_fact_etl,
     "dtsx_customer_load": q_dtsx_customer_load,
     "dtsx_inventory_sync": q_dtsx_inventory_sync,
@@ -10578,9 +8806,6 @@ ALL_QUERIES = {
     "dtsx_order_routing": q_dtsx_order_routing,
     "fps_seeds": q_fps_seeds,
     "text_analysis_docs_expr": q_text_analysis_docs_expr,
-    "parts_fuzzy_pagerank": q_parts_fuzzy_pagerank,
-    "roundtrip_sinks": q_roundtrip_sinks,
-    "join_strategies": q_join_strategies,
     "ci_collation_customers": q_ci_collation_customers,
     "ci_group_customers": q_ci_group_customers,
     "ci_filter_customers": q_ci_filter_customers,
@@ -10597,7 +8822,187 @@ ALL_QUERIES = {
     "semantic_decontam_embeddings": q_semantic_decontam_embeddings,
     "semantic_decontam_ivf": q_semantic_decontam_ivf,
     "shuffle_shards_docs": q_shuffle_shards_docs,
+    "ngram_jaccard_pairs_docs": q_ngram_jaccard_pairs_docs,
+    "kmv_merged_shingles": q_kmv_merged_shingles,
+    "cms_merged_tokens_docs": q_cms_merged_tokens_docs,
+    "salted_join_events": q_salted_join_events,
+    "scd2_pit_orders": q_scd2_pit_orders,
+    "funnel_chain_events": q_funnel_chain_events,
+    "histogram_orders": q_histogram_orders,
+    "hist_p50_orders": q_hist_p50_orders,
 }
+
+# The driver-window suites (see _suite_frame): suite -> (tag, entry) arms.
+# A suite may be an arm of a later one (its own tags pass through).
+_SUITES = {
+    "agg_daily_rollup": [
+        ("full", "agg_daily_sales"), ("incr", "incremental_rollup_sales"),
+    ],
+    "ngram_jaccard_docs": [
+        ("jaccard", "ngram_jaccard_pairs_docs"), ("winnow_", "winnow_docs"),
+    ],
+    "containment_kmv_docs": [
+        ("containment", "containment_docs"),
+        ("kmv", "kmv_shingles"),
+        ("kmv_merged", "kmv_merged_shingles"),
+        ("decontam", "decontam_docs"),
+        ("cms", "cms_tokens_docs"),
+        ("cms_merged", "cms_merged_tokens_docs"),
+        ("", "hll_users_events"),
+    ],
+    "ann_topk_suite": [
+        ("brute_force", "topk_embeddings"),
+        ("lsh_md5", "lsh_topk_md5"),
+        ("ivf", "ivf_topk_embeddings"),
+        ("quantize", "quantize_embeddings"),
+        ("semdedup", "semdedup_embeddings"),
+        ("hard_neg", "hard_negatives"),
+        ("proto_", "label_prototypes"),
+        ("project", "project_embeddings"),
+        ("km_", "kmeans_embeddings"),
+        ("fps", "fps_seeds"),
+        ("knn", "knn_join_embeddings"),
+        ("ivf_idx", "ivf_index_probe"),
+        ("decontam", "semantic_decontam_embeddings"),
+        ("sivf", "streaming_ivf_probe"),
+        ("decontam_ivf", "semantic_decontam_ivf"),
+        ("recall", "ivf_recall_audit"),
+    ],
+    "events_windows": [
+        ("tumbling", "events_tumbling_10min"),
+        ("sliding", "events_sliding_30min"),
+        ("rollup", "events_rollup"),
+        ("gap_fill", "gap_fill_events"),
+        ("funnel_", "funnel_events"),
+        ("cohort", "cohort_retention_events"),
+        ("intervals", "merged_intervals_events"),
+        ("decay", "decay_events"),
+        ("time_contract", "time_contract_events"),
+    ],
+    "events_totals_suite": [
+        ("salted", "salted_agg_events"),
+        ("stateful", "stateful_totals"),
+        ("salted_join", "salted_join_events"),
+    ],
+    "asof_range_joins": [
+        ("asof", "asof_attribution"),
+        ("range", "range_join_sessions"),
+        ("scd2_pit", "scd2_pit_orders"),
+        ("funnel", "funnel_chain_events"),
+    ],
+    "orchestration_dag": [
+        ("foreach", "foreach_segments"),
+        ("parallel", "parallel_table_dag"),
+        ("", "retry_dag"),
+    ],
+    "join_strategies": [
+        ("bucketed", "bucketed_join_orders"),
+        ("bloom", "bloom_orders"),
+        ("ci_", "ci_collation_customers"),
+        ("cig_", "ci_group_customers"),
+        ("cif_", "ci_filter_customers"),
+    ],
+    "multimodal_decode": [
+        ("features", "multimodal_features"),
+        ("bmp", "bmp_decode_stats"),
+        ("wav", "wav_decode_stats"),
+        ("resize", "resize_bmp_stats"),
+        ("png", "png_decode_stats"),
+        ("jpeg", "jpeg_decode_stats"),
+        ("", "image_phash_neardup"),
+    ],
+    "sampling_splits": [
+        ("hash_split", "hash_split_docs"),
+        ("stratified", "stratified_docs"),
+        ("mixture", "mixture_docs"),
+        ("weighted", "weighted_sample_docs"),
+        ("source_cap", "source_cap_docs"),
+        ("kfold", "kfold_docs"),
+        ("temperature", "temperature_mixture_docs"),
+        ("dsir", "dsir_docs"),
+        ("dsir_apply", "dsir_apply_docs"),
+        ("dsir_merge", "dsir_merge_docs"),
+        ("shards", "shuffle_shards_docs"),
+    ],
+    "token_ops_docs": [
+        ("budget", "token_budget_docs"),
+        ("chunk", "chunk_docs"),
+        ("pack", "pack_docs"),
+        ("pack_nosplit", "pack_nosplit_docs"),
+        ("dedup_lines", "dedup_lines_docs"),
+        ("bpe", "bpe_merges_docs"),
+        ("dup_spans", "dup_spans_docs"),
+        ("bpe_", "bpe_encode_docs"),
+        ("corpus_dedup", "corpus_dedup_lines"),
+    ],
+    "pii_tfidf_docs": [
+        ("pii", "pii_redaction"),
+        ("tfidf", "tfidf_top_terms"),
+        ("surprisal", "surprisal_docs"),
+        ("ccnet", "ccnet_buckets_docs"),
+        ("mixed_lang", "mixed_lang_docs"),
+        ("bm25", "bm25_search_docs"),
+        ("nb", "nb_classifier_docs"),
+        ("bm25_idx", "bm25_index_probe"),
+        ("bm25_stream", "streaming_bm25_probe"),
+        ("rrf", "hybrid_rrf_docs"),
+        ("rrf_idx", "hybrid_rrf_indexed"),
+    ],
+    "pivot_unpivot_orders": [
+        ("pivot", "pivot_order_matrix"), ("unpivot", "unpivot_order_matrix"),
+    ],
+    "median_rolling_orders": [
+        ("median", "median_order_totals"),
+        ("rolling", "rolling_revenue_7d"),
+        ("histogram", "histogram_orders"),
+        ("hist_p50", "hist_p50_orders"),
+    ],
+    "pivot_median_orders": [
+        ("", "pivot_unpivot_orders"),
+        ("", "median_rolling_orders"),
+        ("cube", "cube_orders"),
+    ],
+    "corpus_curation": [
+        ("enrich", "corpus_curation_enrich"), ("", "curation_pipeline_docs"),
+    ],
+    "cdc_orders": [("diff", "cdc_orders_diff"), ("apply", "cdc_apply_orders")],
+    "parts_fuzzy_pagerank": [
+        ("fuzzy", "fuzzy_part_names"),
+        ("pagerank", "pagerank_parts"),
+        ("sorted_nbr", "sorted_neighborhood_parts"),
+    ],
+    "events_payload_layout": [
+        ("json", "json_props_events"), ("zorder", "zorder_events"),
+    ],
+    "roundtrip_sinks": [
+        ("append", "roundtrip_append"),
+        ("overwrite", "roundtrip_overwrite"),
+        ("dpo", "roundtrip_partition_overwrite"),
+        ("audit", "roundtrip_audit_update"),
+        ("csv", "roundtrip_csv"),
+        ("json", "roundtrip_json"),
+        ("orc", "roundtrip_orc"),
+        ("compact", "roundtrip_compact"),
+        ("evolve", "roundtrip_evolve"),
+        ("excel", "roundtrip_excel"),
+        ("excel_xls", "roundtrip_xls"),
+        ("rest", "rest_landing"),
+    ],
+}
+
+
+def _suite_query(name, arms):
+    def q(spark, sf_dir):
+        return _suite_frame(
+            name, [(tag, ALL_QUERIES[e](spark, sf_dir)) for tag, e in arms]
+        )
+
+    return q
+
+
+ALL_QUERIES.update(
+    {name: _suite_query(name, arms) for name, arms in _SUITES.items()}
+)
 
 # Every entry runs in its own query scope (``query_scope()`` is a context
 # decorator): its checkpoint blocks and scratch dirs are released when the
@@ -10629,7 +9034,6 @@ ALL_ORACLES = {
     "quality_report": SQL_QUALITY,
     "exact_dedup_docs": SQL_EXACT_DEDUP,
     "text_analysis_docs": SQL_TEXT_ANALYSIS,
-    "ngram_jaccard_docs": SQL_NGRAM_JACCARD_SUITE,
     "topk_embeddings": SQL_TOPK_EMB,
     "knn_join_embeddings": SQL_KNN_JOIN,
     "events_tumbling_10min": _oracle_double(SQL_TUMBLING, ["sum_value"]),
@@ -10643,7 +9047,6 @@ ALL_ORACLES = {
     "png_decode_stats": SQL_PNG_STATS,
     "jpeg_decode_stats": SQL_JPEG_STATS,
     "dataset_profile": SQL_DATASET_PROFILE,
-    "corpus_curation": SQL_CORPUS_CURATION_SUITE,
     "corpus_curation_enrich": SQL_CORPUS_CURATION,
     "curation_pipeline_docs": SQL_CURATION_PIPELINE,
     "crawl_ingest_docs": SQL_CRAWL_INGEST_SUITE,
@@ -10664,7 +9067,6 @@ ALL_ORACLES = {
     "token_budget_docs": SQL_TOKEN_BUDGET,
     "chunk_docs": SQL_CHUNK_DOCS,
     "surprisal_docs": SQL_SURPRISAL,
-    "token_ops_docs": SQL_TOKEN_OPS,
     "sql_task_pricing": SQL_PRICING_SUMMARY,
     "minhash_pairs_md5": SQL_MINHASH_MD5_SUITE,
     "simhash_pairs_md5": SQL_SIMHASH_MD5,
@@ -10702,13 +9104,11 @@ ALL_ORACLES = {
     "pagerank_parts": SQL_PAGERANK_PARTS,
     "json_props_events": SQL_JSON_PROPS,
     "zorder_events": SQL_ZORDER_EVENTS,
-    "events_payload_layout": SQL_EVENTS_PAYLOAD_LAYOUT,
     "rolling_revenue_7d": _oracle_double(SQL_ROLLING_7D, ["spend_7d"]),
     "cdc_orders_diff": _oracle_double(
         SQL_CDC_DIFF, ["old_total", "new_total"]
     ),
     "cdc_apply_orders": _oracle_double(SQL_CDC_APPLY, ["total"]),
-    "cdc_orders": SQL_CDC_ORDERS,
     "containment_docs": SQL_CONTAINMENT,
     "wav_decode_stats": SQL_WAV_STATS,
     "resize_bmp_stats": SQL_RESIZE_BMP,
@@ -10737,7 +9137,6 @@ ALL_ORACLES = {
     "source_cap_docs": SQL_SOURCE_CAP,
     "bpe_merges_docs": SQL_BPE_MERGES,
     "gap_fill_events": SQL_GAP_FILL,
-    "agg_daily_rollup": SQL_AGG_DAILY_ROLLUP,
     "kmeans_embeddings": SQL_KMEANS,
     "neardup_prune_docs": SQL_NEARDUP_PRUNE,
     "cluster_split_docs": SQL_CLUSTER_SPLIT,
@@ -10758,24 +9157,12 @@ ALL_ORACLES = {
     # xxhash64-based production paths — no DuckDB counterpart; driver records
     # rows-only checks.  Their md5 twins above carry the full value-hash
     # oracle for the same algorithms (same plan shape, portable hash).
-    # merged driver-window suites
     "quality_validation_report": SQL_QUALITY_VALIDATION,
-    "containment_kmv_docs": SQL_CONTAINMENT_KMV,
-    "ann_topk_suite": SQL_ANN_TOPK_SUITE,
-    "events_windows": SQL_EVENTS_WINDOWS,
-    "events_totals_suite": SQL_EVENTS_TOTALS_SUITE,
-    "asof_range_joins": SQL_ASOF_RANGE_JOINS,
-    "orchestration_dag": SQL_ORCHESTRATION_DAG,
-    "multimodal_decode": SQL_MULTIMODAL_DECODE,
-    "image_phash_neardup": SQL_IMAGE_PHASH,
+    "image_phash_neardup": f"SELECT * FROM ({SQL_IMAGE_PHASH}) _p "
+    "WHERE component <> 'ahash'",
+    "image_ahash_media": f"SELECT id_a AS media_id, n AS ahash "
+    f"FROM ({SQL_IMAGE_PHASH}) _p WHERE component = 'ahash'",
     "image_phash_index": SQL_IMAGE_PHASH_INDEX,
-    "sampling_splits": SQL_SAMPLING_SPLITS,
-    "pii_tfidf_docs": SQL_PII_TFIDF,
-    "pivot_unpivot_orders": SQL_PIVOT_UNPIVOT,
-    "median_rolling_orders": SQL_MEDIAN_ROLLING,
-    "parts_fuzzy_pagerank": SQL_PARTS_FUZZY_PAGERANK,
-    "roundtrip_sinks": SQL_ROUNDTRIP_SINKS,
-    "join_strategies": SQL_JOIN_STRATEGIES,
     "ci_collation_customers": SQL_CI_COLLATION,
     "ci_group_customers": SQL_CI_GROUP,
     "ci_filter_customers": SQL_CI_FILTER,
@@ -10792,7 +9179,6 @@ ALL_ORACLES = {
     "semantic_decontam_embeddings": SQL_SEMANTIC_DECONTAM,
     "semantic_decontam_ivf": SQL_SEMANTIC_DECONTAM,
     "shuffle_shards_docs": SQL_SHUFFLE_SHARDS,
-    "pivot_median_orders": SQL_PIVOT_MEDIAN,
     "dtsx_sales_fact_etl": SQL_DTSX_SALES,
     "dtsx_customer_load": SQL_DTSX_CUSTOMER,
     "dtsx_inventory_sync": SQL_DTSX_INVENTORY,
@@ -10800,7 +9186,19 @@ ALL_ORACLES = {
     "dtsx_order_routing": SQL_DTSX_ROUTING,
     "fps_seeds": SQL_FPS_SEEDS,
     "text_analysis_docs_expr": SQL_TEXT_ANALYSIS,
+    "ngram_jaccard_pairs_docs": SQL_NGRAM_JACCARD,
+    "kmv_merged_shingles": SQL_KMV_MERGED,
+    "cms_merged_tokens_docs": SQL_CMS_MERGED,
+    "salted_join_events": SQL_SALTED_JOIN,
+    "scd2_pit_orders": SQL_SCD2_PIT,
+    "funnel_chain_events": SQL_FUNNEL_CHAIN,
+    "histogram_orders": SQL_HISTOGRAM_ORDERS,
+    "hist_p50_orders": SQL_HIST_P50_ORDERS,
 }
+for _name, _arms in _SUITES.items():
+    ALL_ORACLES[_name] = _suite_sql(
+        [(tag, ALL_ORACLES[e]) for tag, e in _arms]
+    )
 
 # The 50 entries the driver verifies — every SURVEY §2 family and every
 # LLM-pipeline operator has a value-hashed row inside the window.  The three

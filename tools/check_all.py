@@ -17,13 +17,11 @@ import os
 import sys
 import time
 
-import duckdb
-
 sys.path.insert(0, ".")
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from check_correctness import TABLES, canon  # noqa: E402
+from check_correctness import compare, connect  # noqa: E402
 
 
 def main():
@@ -49,17 +47,18 @@ def main():
     from ssis_to_dbt_spark import catalog
     from ssis_to_dbt_spark.session import build_session
 
+    unknown = sorted((only or set()) - set(catalog.ALL_QUERIES))
+    if unknown:
+        print(f"ERROR unknown query names: {unknown}")
+        sys.exit(2)
+
     spark = build_session(
         shuffle_partitions=int(os.environ.get("CHECK_SHUFFLE", "16")),
         extra_conf={"spark.ui.showConsoleProgress": "false"},
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
+    con = connect(sf_dir)
 
     passed = failed = rows_only = 0
     records = {}
@@ -91,16 +90,7 @@ def main():
             records[name] = {"status": "fail", "err": f"oracle: {exc}"}
             failed += 1
             continue
-        problems = []
-        if len(srows) != len(orows):
-            problems.append(f"rowcount {len(srows)} vs {len(orows)}")
-        if sorted(scols) != sorted(ocols):
-            problems.append(f"cols {sorted(scols)} vs {sorted(ocols)}")
-        if not problems:
-            sc, oc = canon(srows, scols), canon(orows, ocols)
-            if sc != oc:
-                mism = sum(1 for a, b in zip(sc, oc) if a != b)
-                problems.append(f"values differ ({mism} rows)")
+        problems = compare(srows, scols, orows, ocols)
         if problems:
             print(f"FAIL  {name}: {'; '.join(problems)}")
             records[name] = {"status": "fail", "err": "; ".join(problems)}

@@ -51,6 +51,36 @@ def canon(rows, cols):
     return sorted(tuple(normalize(r[i]) for i in order) for r in rows)
 
 
+def connect(sf_dir):
+    """A DuckDB connection with one view per testdata table of ``sf_dir``."""
+    con = duckdb.connect()
+    for t in TABLES:
+        con.sql(
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
+        )
+    return con
+
+
+def compare(srows, scols, orows, ocols):
+    """What differs between Spark rows and oracle rows: row count, the
+    column-name set, then the order-insensitive canonical values (the
+    first differing sorted row).  An empty list means they are equal."""
+    problems = []
+    if len(srows) != len(orows):
+        problems.append(f"rowcount {len(srows)} vs {len(orows)}")
+    if sorted(scols) != sorted(ocols):
+        problems.append(f"cols {sorted(scols)} vs {sorted(ocols)}")
+    if not problems:
+        for i, (a, b) in enumerate(zip(canon(srows, scols),
+                                       canon(orows, ocols))):
+            if a != b:
+                problems.append(
+                    f"first diff at sorted row {i}:\n  spark  {a}\n  oracle {b}"
+                )
+                break
+    return problems
+
+
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
@@ -66,11 +96,7 @@ def main():
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
+    con = connect(sf_dir)
 
     qs, oracles = mod.queries(), mod.oracle_sql()
     if only:
@@ -111,22 +137,7 @@ def main():
             print(f"FAIL  {name}: oracle error: {exc}")
             failed += 1
             continue
-        problems = []
-        if len(srows) != len(orows):
-            problems.append(f"rowcount {len(srows)} vs {len(orows)}")
-        if sorted(scols) != sorted(ocols):
-            problems.append(f"cols {sorted(scols)} vs {sorted(ocols)}")
-        if not problems:
-            sc, oc = canon(srows, scols), canon(orows, ocols)
-            if sc != oc:
-                for i, (a, b) in enumerate(zip(sc, oc)):
-                    if a != b:
-                        problems.append(
-                            f"first diff at sorted row {i}:\n  spark  {a}\n  oracle {b}"
-                        )
-                        break
-                else:
-                    problems.append("value mismatch (length?)")
+        problems = compare(srows, scols, orows, ocols)
         if problems:
             print(f"FAIL  {name}: " + "; ".join(problems))
             failed += 1
