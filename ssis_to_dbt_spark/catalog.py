@@ -935,8 +935,7 @@ def q_split_leakage_docs(spark, sf_dir, pairs=None):
     docs = _t(spark, sf_dir)["documents"]
     split = hash_split(docs, "doc_id", test_pct=10).select("doc_id", "split")
     if pairs is None:
-        pairs = minhash_candidates_md5(docs, num_hashes=8, bands=4,
-                                        engine="arrow")
+        pairs = minhash_candidates_md5(docs, num_hashes=8, bands=4)
     sa = split.select(
         F.col("doc_id").alias("doc_a"), F.col("split").alias("split_a")
     )
@@ -975,10 +974,9 @@ def q_minhash_pairs_md5(spark, sf_dir):
     # (cand arm, leakage audit, prune/safe-split) — lazily checkpointed so
     # each arm reads the materialized pair table instead of re-running the
     # corpus-scan -> shingle -> signature -> band-join upstream.
-    pairs0 = minhash_candidates_md5(docs, num_hashes=8, bands=4,
-                                        engine="arrow").localCheckpoint(
-        eager=False
-    )
+    pairs0 = minhash_candidates_md5(
+        docs, num_hashes=8, bands=4
+    ).localCheckpoint(eager=False)
     cand = pairs0.select(
         F.col("doc_a").cast("long").alias("doc_a"),
         F.col("doc_b").cast("long").alias("doc_b"),
@@ -2859,8 +2857,7 @@ def q_neardup_clusters(spark, sf_dir):
     from .text.dedup import connected_components
 
     docs = _t(spark, sf_dir)["documents"]
-    pairs = minhash_candidates_md5(docs, num_hashes=8, bands=4,
-                                        engine="arrow")
+    pairs = minhash_candidates_md5(docs, num_hashes=8, bands=4)
     comp = connected_components(pairs, "doc_a", "doc_b")
     sizes = comp.groupBy("label").agg(F.count(F.lit(1)).alias("cluster_size"))
     return comp.join(sizes, "label").select(
@@ -8041,8 +8038,7 @@ def q_neardup_prune_docs(spark, sf_dir, pairs=None):
 
     docs = _t(spark, sf_dir)["documents"]
     if pairs is None:
-        pairs = minhash_candidates_md5(docs, num_hashes=8, bands=4,
-                                        engine="arrow")
+        pairs = minhash_candidates_md5(docs, num_hashes=8, bands=4)
     return prune_clusters(docs, pairs).select(
         F.col("doc_id").cast("long").alias("doc_id"),
         F.col("cluster_id").cast("long").alias("cluster_id"),
@@ -8233,8 +8229,7 @@ def q_cluster_split_docs(spark, sf_dir):
     from .text.dedup import prune_clusters
 
     docs = _t(spark, sf_dir)["documents"]
-    pairs = minhash_candidates_md5(docs, num_hashes=8, bands=4,
-                                        engine="arrow")
+    pairs = minhash_candidates_md5(docs, num_hashes=8, bands=4)
     pruned = prune_clusters(docs, pairs)
     return _cluster_split(pruned).select(
         F.col("doc_id").cast("long").alias("doc_id"),
@@ -8343,14 +8338,8 @@ def q_dsir_apply_docs(spark, sf_dir):
     from .text.analysis import dsir_fit, dsir_score
 
     docs = _t(spark, sf_dir)["documents"]
-    # arrow engines end-to-end: the fit kernel folds per-batch partial
-    # bucket counts (the exploded gram stream never exists — ~3x faster
-    # at sf0.1) and the scorer is the map-only literal fold; both
-    # bit-identical to their expression twins (pytest-pinned incl.
-    # adversarial Unicode whitespace).
-    model = dsir_fit(docs, F.col("lang") == "en", buckets=256,
-                     engine="arrow")
-    return dsir_score(docs, model, engine="arrow").select(
+    model = dsir_fit(docs, F.col("lang") == "en", buckets=256)
+    return dsir_score(docs, model).select(
         F.col("doc_id").cast("long").alias("doc_id"),
         F.col("n_feats").cast("long").alias("n_feats"),
         F.col("weight_units").cast("long").alias("weight_units"),
@@ -8376,14 +8365,10 @@ def q_dsir_merge_docs(spark, sf_dir):
 
     docs = _t(spark, sf_dir)["documents"]
     tgt = F.col("lang") == "en"
-    base = dsir_fit_state(
-        docs.filter(F.col("doc_id") % 2 == 0), tgt, 256, engine="arrow"
-    )
-    delta = dsir_fit_state(
-        docs.filter(F.col("doc_id") % 2 != 0), tgt, 256, engine="arrow"
-    )
+    base = dsir_fit_state(docs.filter(F.col("doc_id") % 2 == 0), tgt, 256)
+    delta = dsir_fit_state(docs.filter(F.col("doc_id") % 2 != 0), tgt, 256)
     model = dsir_model_from_state(dsir_merge_state(base, delta), 256)
-    return dsir_score(docs, model, engine="arrow").select(
+    return dsir_score(docs, model).select(
         F.col("doc_id").cast("long").alias("doc_id"),
         F.col("n_feats").cast("long").alias("n_feats"),
         F.col("weight_units").cast("long").alias("weight_units"),
@@ -8511,7 +8496,7 @@ def q_crawl_ingest_docs(spark, sf_dir):
     from .text.dedup import corpus_dedup_index
 
     g1 = stage_gate(b1).localCheckpoint(eager=False)
-    i1s, i1b = corpus_dedup_index(g1, checkpoint_sigs=True, engine="arrow")
+    i1s, i1b = corpus_dedup_index(g1, checkpoint_sigs=True)
     i1 = (i1s, i1b)  # bands ride on the checkpointed sigs (r14)
     r1 = ingest_batch(b1, st, pre_gated=g1, pre_index=i1)
     r2 = ingest_batch(b2, r1.state)

@@ -108,12 +108,7 @@ def stage_prune(gated: DataFrame) -> DataFrame:
     one row per gated doc ``(doc_id, cluster_id, cluster_size, kept)``."""
     from .text.dedup import minhash_candidates_md5, prune_clusters
 
-    # r15 perf (guide §7.3/§2.4): the Arrow signature kernel is
-    # bit-identical to the expression path (pytest-pinned) but its plan is
-    # a single ArrowEvalPython node — no shingle-explode exchange and no
-    # ~0.4 s-per-declaration planning of the giant md5 expression tree.
-    pairs = minhash_candidates_md5(gated, num_hashes=8, bands=4,
-                                   engine="arrow")
+    pairs = minhash_candidates_md5(gated, num_hashes=8, bands=4)
     return prune_clusters(gated, pairs)
 
 
@@ -165,10 +160,8 @@ def stage_dsir_select(clean: DataFrame, k: int = DSIR_K) -> DataFrame:
     formulation), Gumbel-top-k winner set joined back broadcast."""
     from .text.analysis import dsir_fit, dsir_score, dsir_select
 
-    model = dsir_fit(
-        clean, F.col("lang") == "en", buckets=DSIR_BUCKETS, engine="arrow"
-    )
-    scored = dsir_score(clean, model, engine="arrow")
+    model = dsir_fit(clean, F.col("lang") == "en", buckets=DSIR_BUCKETS)
+    scored = dsir_score(clean, model)
     sel = dsir_select(scored, k).select(
         "doc_id", "weight_units", "gumbel_units"
     )

@@ -120,15 +120,9 @@ def seed_ingest_state(
 
     # checkpoint_sigs: banding reuses the materialized signature pass
     # instead of re-running the minhash per frame (dedup.py r11 note)
-    # r15 perf (guide §7.3/§2.4): Arrow signature kernel — bit-identical
-    # values, map-only plan (no shingle-explode exchange), and the lazy
-    # checkpoint declaration below stops paying the expression tree's
-    # per-plan Catalyst/codegen cost.
-    sigs, bands = corpus_dedup_index(
-        corpus_df, checkpoint_sigs=checkpoint, engine="arrow"
-    )
+    sigs, bands = corpus_dedup_index(corpus_df, checkpoint_sigs=checkpoint)
     state = dsir_fit_state(
-        corpus_df, F.col("lang") == "en", buckets=buckets, engine="arrow"
+        corpus_df, F.col("lang") == "en", buckets=buckets
     )
     if checkpoint:
         # r14 perf (r13 VERDICT #6): the BAND table is NOT separately
@@ -270,7 +264,7 @@ def ingest_batch(
         bsigs, bbands = pre_index
     else:
         bsigs, bbands = corpus_dedup_index(
-            gated, checkpoint_sigs=checkpoint, engine="arrow", **cap_kw
+            gated, checkpoint_sigs=checkpoint, **cap_kw
         )
         # bands ride on the checkpointed sigs — no own checkpoint
         # (see seed_ingest_state's r14 note)
@@ -379,11 +373,11 @@ def ingest_batch(
         # declaration cost (r14 perf)
         accepted = ck(accepted)
         delta = dsir_fit_state(
-            accepted, F.col("lang") == "en", buckets=buckets, engine="arrow"
+            accepted, F.col("lang") == "en", buckets=buckets
         )
         merged = ck(dsir_merge_state(state.dsir_state, delta))
         model = dsir_model_from_state(merged, buckets)
-        scored = dsir_score(accepted, model, engine="arrow")
+        scored = dsir_score(accepted, model)
         dd = accepted.select(
             "doc_id", token_count(F.col("text")).alias("n_tok")
         )

@@ -185,6 +185,15 @@ def write_bucketed(
     writer.saveAsTable(table)
 
 
+def _table_location(spark: SparkSession, table: str) -> str | None:
+    """A catalog table's storage location from DESCRIBE FORMATTED (a
+    bounded catalog-metadata collect); None when none is recorded."""
+    for r in spark.sql(f"DESCRIBE FORMATTED {table}").collect():
+        if (r["col_name"] or "").strip() == "Location":
+            return (r["data_type"] or "").strip() or None
+    return None
+
+
 def write_json(df: DataFrame, path: str) -> None:
     """S10: JSON export sink (ssis_parser.py:620-639)."""
     df.write.mode("overwrite").json(path)

@@ -1621,7 +1621,6 @@ def dsir_fit(
     buckets: int = 256,
     text_col: str = "text",
     hash_fn: str = "md5",
-    engine: str = "expr",
 ) -> list[int]:
     """Fit the DSIR bucket model once and hand back the dense ratio table:
     ``model[b]`` = micro-unit log ratio ``L(p_b+1) - L(P+B) - L(q_b+1) +
@@ -1631,17 +1630,16 @@ def dsir_fit(
     model is fit on a reference corpus once and then applied to every new
     crawl batch without refitting (the cross-corpus shape).
 
-    Cost: one explode -> groupBy(bucket) over the fit corpus (map-side
-    partial agg collapses to <= ``buckets`` rows before the shuffle) and a
-    model-sized collect — the same driver-traffic contract as
+    Cost: the :func:`dsir_fit_state` kernel (per-Arrow-batch partial
+    bucket counts, one <= ``buckets``-key groupBy) and a model-sized
+    collect — the same driver-traffic contract as
     :func:`~ssis_to_dbt_spark.text.similarity.kmeans_fit`.  The units are
     computed IN SPARK with the same :func:`_log_units` expression the fused
     :func:`dsir_importance` uses, so fit+:func:`dsir_score` reproduces its
     weights bit-for-bit.
     """
     return dsir_model_from_state(
-        dsir_fit_state(df, target, buckets, text_col, hash_fn, engine),
-        buckets,
+        dsir_fit_state(df, target, buckets, text_col, hash_fn), buckets
     )
 
 
@@ -1651,7 +1649,6 @@ def dsir_fit_state(
     buckets: int = 256,
     text_col: str = "text",
     hash_fn: str = "md5",
-    engine: str = "expr",
 ) -> DataFrame:
     """The mergeable sufficient statistic behind :func:`dsir_fit`: the
     ≤``buckets``-row count table ``(_b, _q_cnt, _p_cnt)`` (total and
@@ -1660,90 +1657,27 @@ def dsir_fit_state(
     appending new target docs a DELTA aggregation
     (:func:`dsir_merge_state`), not a re-read of the full fit corpus.
 
-    ``engine="expr"``: one explode -> groupBy(bucket) over ``df`` (map-side
-    partial agg collapses to ≤ buckets rows before the shuffle — but the
-    explode materializes ~2 rows per token and md5 runs per gram row).
-    ``engine="arrow"``: a ``mapInPandas`` kernel emits per-Arrow-batch
-    PARTIAL bucket counts (≤ ``buckets`` rows per batch), so the shuffle
-    carries batch-count × buckets rows instead of the exploded gram
-    stream — bit-identical counts (same hash buckets, same tokenizer twin
-    discipline as :func:`dsir_score`'s arrow engine; pytest-pinned).
-    r9: both hash functions work — xxhash64 buckets come from the
-    pure-Python spec twin (:mod:`~ssis_to_dbt_spark.text.xxh64`); note
-    the Python xxh64 is interpreter-speed (~10× hashlib's C md5 per
-    gram), so for xxhash64 at scale the JVM ``engine="expr"`` remains
-    the throughput path — the arrow+xxhash64 combination exists for
-    parity/verification and moderate batches."""
+    Kernel: a ``mapInPandas`` pass emits per-Arrow-batch PARTIAL bucket
+    counts (≤ ``buckets`` rows per batch) folded in compiled C, then one
+    tiny groupBy — the shuffle carries batch-count × buckets rows and the
+    exploded gram stream never exists.  Tokenizer/bucket twin discipline
+    identical to :func:`dsir_score` (space-only trim, ASCII ``\\s`` split
+    with kept empty tokens; md5 hex[:15] % B, or the pure-Python
+    :mod:`~ssis_to_dbt_spark.text.xxh64` twin for ``hash_fn='xxhash64'``,
+    which runs at interpreter speed, ~10× hashlib's C md5 per gram).  The
+    target predicate is evaluated JVM-SIDE in the pre-projection, so
+    arbitrary Columns work and NULL target counts into ``_q_cnt`` only.
+    Test reference: the explode -> groupBy(bucket) expression form
+    :func:`_dsir_fit_state_expr` (bit-identical counts for both hash
+    functions, pytest-pinned)."""
     if buckets < 2:
         raise ValueError("buckets must be >= 2")
     if hash_fn not in ("md5", "xxhash64"):
         raise ValueError(f"unknown hash_fn {hash_fn!r}; use md5 or xxhash64")
-    if engine not in ("expr", "arrow"):
-        raise ValueError(f"unknown engine {engine!r}; use expr or arrow")
-    if engine == "arrow":
-        return _dsir_fit_state_arrow(df, target, buckets, text_col, hash_fn)
-    from .dedup import _md5_long
-
-    gram_hash = _md5_long if hash_fn == "md5" else F.xxhash64
-    toks = F.when(
-        F.trim(F.col(text_col)) == "", F.array().cast("array<string>")
-    ).otherwise(_ws_tokens(F.col(text_col)))
-    grams = df.select(
-        target.alias("_tgt"),
-        F.explode(F.concat(toks, _ngrams(toks, 2))).alias("_g"),
-    )
-    return grams.groupBy(
-        F.pmod(gram_hash(F.col("_g")), F.lit(buckets)).alias("_b")
-    ).agg(
-        F.count(F.lit(1)).alias("_q_cnt"),
-        F.sum(F.when(F.col("_tgt"), F.lit(1).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )).alias("_p_cnt"),
-    )
-
-
-def _gram_bucket_fn(hash_fn: str, buckets: int):
-    """Python twin of the expression path's
-    ``F.pmod(gram_hash(gram), buckets)``: md5 hex[:15] (always
-    non-negative) or signed xxhash64 under Python's ``%`` (which already
-    implements pmod for a positive modulus)."""
-    if hash_fn == "md5":
-        import hashlib
-
-        def bucket(g: str) -> int:
-            return int(hashlib.md5(g.encode()).hexdigest()[:15], 16) % buckets
-
-        return bucket
-    if hash_fn == "xxhash64":
-        from .xxh64 import xxh64_string
-
-        def bucket(g: str) -> int:
-            return xxh64_string(g) % buckets
-
-        return bucket
-    raise ValueError(f"unknown hash_fn {hash_fn!r}; use md5 or xxhash64")
-
-
-def _dsir_fit_state_arrow(
-    df: DataFrame, target: Column, buckets: int, text_col: str,
-    hash_fn: str = "md5",
-) -> DataFrame:
-    """Arrow twin of the :func:`dsir_fit_state` explode: per-batch partial
-    bucket counts folded in compiled C + one tiny groupBy — the exploded
-    gram stream never exists.  Tokenizer/bucket twin discipline identical
-    to :func:`_dsir_score_arrow` (space-only trim, ASCII ``\\s`` split
-    with kept empty tokens; md5 hex[:15] % B, or the pure-Python
-    :mod:`~ssis_to_dbt_spark.text.xxh64` twin for ``hash_fn='xxhash64'``
-    — both pytest-pinned bit-identical to the expression path); the
-    target predicate is evaluated JVM-SIDE in the pre-projection, so
-    arbitrary Columns work and NULL target counts into ``_q_cnt`` only —
-    exactly the expression path's ``F.when(_tgt, 1).otherwise(0)``
-    semantics."""
     import re as _re
 
     from pyspark.sql import types as T
 
-    B = int(buckets)
     ws = _re.compile(r"\s+", _re.ASCII)
     schema = T.StructType(
         [
@@ -1753,7 +1687,7 @@ def _dsir_fit_state_arrow(
         ]
     )
     pre = df.select(target.alias("_tgt"), F.col(text_col).alias("_txt"))
-    bucket = _gram_bucket_fn(hash_fn, B)
+    bucket = _gram_bucket_fn(hash_fn, int(buckets))
 
     def gen(batches):
         import pandas as pd
@@ -1796,6 +1730,59 @@ def _dsir_fit_state_arrow(
         F.sum("_q_cnt").cast("long").alias("_q_cnt"),
         F.sum("_p_cnt").cast("long").alias("_p_cnt"),
     )
+
+
+def _dsir_fit_state_expr(
+    df: DataFrame,
+    target: Column,
+    buckets: int,
+    text_col: str = "text",
+    hash_fn: str = "md5",
+) -> DataFrame:
+    """Expression test reference for :func:`dsir_fit_state`: one explode
+    -> groupBy(bucket) over ``df`` (map-side partial agg collapses to ≤
+    buckets rows before the shuffle; NULL target counts into ``_q_cnt``
+    only via ``F.when(_tgt, 1).otherwise(0)``)."""
+    from .dedup import _md5_long
+
+    gram_hash = _md5_long if hash_fn == "md5" else F.xxhash64
+    toks = F.when(
+        F.trim(F.col(text_col)) == "", F.array().cast("array<string>")
+    ).otherwise(_ws_tokens(F.col(text_col)))
+    grams = df.select(
+        target.alias("_tgt"),
+        F.explode(F.concat(toks, _ngrams(toks, 2))).alias("_g"),
+    )
+    return grams.groupBy(
+        F.pmod(gram_hash(F.col("_g")), F.lit(buckets)).alias("_b")
+    ).agg(
+        F.count(F.lit(1)).alias("_q_cnt"),
+        F.sum(F.when(F.col("_tgt"), F.lit(1).cast("long")).otherwise(
+            F.lit(0).cast("long")
+        )).alias("_p_cnt"),
+    )
+
+
+def _gram_bucket_fn(hash_fn: str, buckets: int):
+    """Python twin of the expression path's
+    ``F.pmod(gram_hash(gram), buckets)``: md5 hex[:15] (always
+    non-negative) or signed xxhash64 under Python's ``%`` (which already
+    implements pmod for a positive modulus)."""
+    if hash_fn == "md5":
+        import hashlib
+
+        def bucket(g: str) -> int:
+            return int(hashlib.md5(g.encode()).hexdigest()[:15], 16) % buckets
+
+        return bucket
+    if hash_fn == "xxhash64":
+        from .xxh64 import xxh64_string
+
+        def bucket(g: str) -> int:
+            return xxh64_string(g) % buckets
+
+        return bucket
+    raise ValueError(f"unknown hash_fn {hash_fn!r}; use md5 or xxhash64")
 
 
 def dsir_merge_state(state: DataFrame, delta: DataFrame) -> DataFrame:
@@ -1849,102 +1836,42 @@ def dsir_score(
     id_col: str = "doc_id",
     text_col: str = "text",
     hash_fn: str = "md5",
-    engine: str = "expr",
 ) -> DataFrame:
     """Score documents against a :func:`dsir_fit` model — ENTIRELY map-only:
-    the model is a compile-time literal array (like the k-means centroid
-    and JL sign-matrix literals), the per-document weight is an in-order
-    integer fold over the gram array, and no shuffle, join, or aggregation
-    touches the corpus.  At 100 TB this is the shape that matters: fitting
-    reads the reference corpus once, and scoring every new crawl batch is
-    embarrassingly parallel (zero exchanges — plan-pinned).
+    the model is a literal table shipped with the kernel (like the k-means
+    centroid and JL sign-matrix literals), the per-document weight is an
+    in-order integer sum over the grams, and no shuffle, join, or
+    aggregation touches the corpus.  At 100 TB this is the shape that
+    matters: fitting reads the reference corpus once, and scoring every
+    new crawl batch is embarrassingly parallel (zero exchanges —
+    plan-pinned).
 
     Same output contract as :func:`dsir_importance` (``id, n_feats,
     weight_units, gumbel_units``) and — with the same ``hash_fn`` and a
     model fit on the SAME corpus — bit-identical weights, since both sum
     the same exact integers.
 
-    ``engine``: ``"expr"`` (default) is the pure-Column in-order integer
-    fold; ``"arrow"`` is the ``mapInPandas`` twin (bit-identical,
-    pytest-pinned) for when the interpreted-HOF floor of the per-gram
-    lambda dominates — same trade as the SemDeDup / winnowing / Gopher
-    Arrow kernels.  Both hash functions work under both engines (the
-    arrow engine's xxhash64 is the pure-Python spec twin in
-    :mod:`~ssis_to_dbt_spark.text.xxh64`, pytest-pinned bit-identical to
-    Spark's).
+    Kernel: one ``mapInPandas`` pass (xxhash64 buckets come from the
+    pure-Python spec twin in :mod:`~ssis_to_dbt_spark.text.xxh64`); the
+    Gumbel term uses Decimal-HALF_UP quantization (Spark's ``F.round``
+    mode).  Tokenization replicates the expression form exactly:
+    ``F.trim`` strips SPACES only (not tabs/newlines), and Java's regex
+    split keeps leading empty tokens — both preserved here
+    (``s.strip(' ')`` + ``re.split``).  Test reference: the Column fold
+    :func:`_dsir_score_expr` (bit-identical, pytest-pinned on the fixture,
+    adversarial whitespace and Unicode).
     """
     buckets = len(model)
     if buckets < 2:
         raise ValueError("model must have >= 2 buckets")
     if hash_fn not in ("md5", "xxhash64"):
         raise ValueError(f"unknown hash_fn {hash_fn!r}; use md5 or xxhash64")
-    if engine not in ("expr", "arrow"):
-        raise ValueError(f"unknown engine {engine!r}; use expr or arrow")
-    if engine == "arrow":
-        return _dsir_score_arrow(df, model, id_col, text_col, hash_fn)
-    from .dedup import _md5_long
-
-    gram_hash = _md5_long if hash_fn == "md5" else F.xxhash64
-    arr = F.array(*[F.lit(int(u)).cast("long") for u in model])
-    toks = F.when(
-        F.trim(F.col(text_col)) == "", F.array().cast("array<string>")
-    ).otherwise(_ws_tokens(F.col(text_col)))
-    # Stage the gram array as a real column: it feeds both the weight fold
-    # and n_feats, and HOF lambda bodies get no subexpression elimination.
-    staged = df.select(
-        F.col(id_col),
-        F.coalesce(
-            F.concat(toks, _ngrams(toks, 2)), F.array().cast("array<string>")
-        ).alias("_ga"),
-    )
-    weight = F.aggregate(
-        F.col("_ga"),
-        F.lit(0).cast("long"),
-        lambda acc, g: acc
-        + F.element_at(
-            arr, (F.pmod(gram_hash(g), F.lit(buckets)) + 1).cast("int")
-        ),
-    )
-    u = (_md5_long(F.col(id_col).cast("string")) + 1).cast("double") / F.lit(
-        2305843009213693952.0
-    )
-    g_units = (
-        F.round(-F.log(-F.log(u)), 6).cast("decimal(18,6)") * 1_000_000
-    ).cast("long")
-    return staged.select(
-        id_col,
-        F.size("_ga").cast("long").alias("n_feats"),
-        weight.alias("weight_units"),
-        g_units.alias("gumbel_units"),
-    )
-
-
-def _dsir_score_arrow(
-    df: DataFrame,
-    model: list[int],
-    id_col: str,
-    text_col: str,
-    hash_fn: str = "md5",
-) -> DataFrame:
-    """Arrow (``mapInPandas``) twin of the :func:`dsir_score` expression
-    fold — BIT-IDENTICAL (pytest-pinned on the fixture and the adversarial
-    whitespace cases): weights are the same exact-integer sums over the
-    same md5 buckets; the Gumbel term uses the proven
-    Decimal-HALF_UP quantization (Spark's ``F.round`` mode).
-
-    Tokenization replicates the expression path exactly: ``F.trim`` strips
-    SPACES only (not tabs/newlines), and Java's regex split keeps leading
-    empty tokens — both preserved here (``s.strip(' ')`` + ``re.split``).
-    Map-only: one ArrowEvalPython stage, zero exchanges — the 100 TB plan
-    shape is identical to the expression twin's.
-    """
     import hashlib
     import re as _re
     from decimal import ROUND_HALF_UP, Decimal
 
     from pyspark.sql import types as T
 
-    B = len(model)
     mod = [int(u) for u in model]
     ws = _re.compile(r"\s+", _re.ASCII)
     two_pow_61 = 2305843009213693952.0
@@ -1959,7 +1886,7 @@ def _dsir_score_arrow(
         ]
     )
     pre = df.select(F.col(id_col), F.col(text_col).alias("_txt"))
-    bucket = _gram_bucket_fn(hash_fn, B)
+    bucket = _gram_bucket_fn(hash_fn, buckets)
 
     def gumbel(did) -> int:
         h = int(hashlib.md5(str(did).encode()).hexdigest()[:15], 16)
@@ -2003,6 +1930,55 @@ def _dsir_score_arrow(
             )
 
     return pre.mapInPandas(gen, schema)
+
+
+def _dsir_score_expr(
+    df: DataFrame,
+    model: list[int],
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    hash_fn: str = "md5",
+) -> DataFrame:
+    """Expression test reference for :func:`dsir_score`: the model as a
+    literal array and the weight as an in-order ``F.aggregate`` integer
+    fold over the staged gram array."""
+    buckets = len(model)
+    from .dedup import _md5_long
+
+    gram_hash = _md5_long if hash_fn == "md5" else F.xxhash64
+    arr = F.array(*[F.lit(int(u)).cast("long") for u in model])
+    toks = F.when(
+        F.trim(F.col(text_col)) == "", F.array().cast("array<string>")
+    ).otherwise(_ws_tokens(F.col(text_col)))
+    # Stage the gram array as a real column: it feeds both the weight fold
+    # and n_feats, and HOF lambda bodies get no subexpression elimination.
+    staged = df.select(
+        F.col(id_col),
+        F.coalesce(
+            F.concat(toks, _ngrams(toks, 2)), F.array().cast("array<string>")
+        ).alias("_ga"),
+    )
+    weight = F.aggregate(
+        F.col("_ga"),
+        F.lit(0).cast("long"),
+        lambda acc, g: acc
+        + F.element_at(
+            arr, (F.pmod(gram_hash(g), F.lit(buckets)) + 1).cast("int")
+        ),
+    )
+    u = (_md5_long(F.col(id_col).cast("string")) + 1).cast("double") / F.lit(
+        2305843009213693952.0
+    )
+    g_units = (
+        F.round(-F.log(-F.log(u)), 6).cast("decimal(18,6)") * 1_000_000
+    ).cast("long")
+    return staged.select(
+        id_col,
+        F.size("_ga").cast("long").alias("n_feats"),
+        weight.alias("weight_units"),
+        g_units.alias("gumbel_units"),
+    )
+
 
 
 def dsir_select(scored: DataFrame, k: int, id_col: str = "doc_id") -> DataFrame:

@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
+from ..sources.writers import _table_location
+
 
 def _cap_band_members(
     banded: DataFrame,
@@ -255,9 +257,11 @@ def minhash_signatures_md5(
     the 128-bit value, so the string min is a valid minhash.
 
     This exists for cross-engine reproducibility (md5 is everywhere; the
-    DuckDB oracle runs the identical computation).  The xxhash64-based
-    :func:`minhash_signatures` is the production hot path — same plan shape,
-    ~4x cheaper hash.
+    DuckDB oracle runs the identical computation).  The md5 candidate and
+    index operators run its Arrow twin
+    :func:`minhash_signatures_md5_arrow`; this expression form is the
+    twin's test reference.  The xxhash64-based :func:`minhash_signatures`
+    is the production hot path — same plan shape, ~4x cheaper hash.
     """
     sh = df.select(
         F.col(id_col), F.explode(shingle(F.col(text_col), shingle_n)).alias("_sh")
@@ -298,8 +302,10 @@ def minhash_signatures_md5_arrow(
     fixture scale the downstream banded self-join dominates (measured: no
     wall-clock change), so this kernel is the LONG-document path: per-doc
     signature cost scales with shingle count, the join with doc count.
-    md5 only, like every Arrow kernel (xxhash64 has no guaranteed Python
-    twin)."""
+    It is the one signature kernel of :func:`minhash_candidates_md5` and
+    :func:`corpus_dedup_index` (and so of every dedup-index write, append
+    and cross-corpus probe).  md5 only, like every Arrow kernel (xxhash64
+    has no guaranteed Python twin)."""
     import hashlib
     import re as _re
 
@@ -355,28 +361,19 @@ def minhash_candidates_md5(
     bands: int = 4,
     shingle_n: int = 3,
     max_bucket_size: int | None = 10_000,
-    engine: str = "expr",
 ) -> DataFrame:
     """MinHash+LSH candidate pairs on the portable md5 signatures — same
     banded equi-join shape as :func:`minhash_candidates` (no all-pairs,
     band buckets capped via :func:`_cap_band_members`), fully reproducible
-    on any engine with md5.  ``engine="arrow"`` computes the signatures
-    with the bit-identical :func:`minhash_signatures_md5_arrow` kernel —
-    a wash at fixture scale (the banded self-join dominates there), a win
-    on signature-dominated corpora (long documents, many shingles per
-    doc); same downstream plan either way."""
-    if engine not in ("expr", "arrow"):
-        raise ValueError(f"unknown engine {engine!r}; use expr or arrow")
-    sig_fn = (
-        minhash_signatures_md5_arrow
-        if engine == "arrow"
-        else minhash_signatures_md5
-    )
+    on any engine with md5.  The signatures come from the Arrow kernel
+    :func:`minhash_signatures_md5_arrow`; the expression form
+    :func:`minhash_signatures_md5` is its test reference (bit-identical,
+    pytest-pinned)."""
     rows = num_hashes // bands
     # Three consumers (banding + both signature re-attachments): materialize
-    # the signature table once instead of re-running the shingle -> min-agg
-    # pipeline from the corpus scan for each (same as the xxhash64 path).
-    sigs = sig_fn(
+    # the signature table once instead of re-running the signature kernel
+    # from the corpus scan for each (same as the xxhash64 path).
+    sigs = minhash_signatures_md5_arrow(
         df, text_col, num_hashes, shingle_n, id_col
     ).localCheckpoint(eager=False)
     banded = sigs.select(
@@ -1806,15 +1803,15 @@ def corpus_dedup_index(
     bands: int = 4,
     shingle_n: int = 3,
     max_bucket_size: int | None = 10_000,
-    engine: str = "expr",
     checkpoint_sigs: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """The corpus side of incremental ingestion dedup as a REUSABLE index:
     ``(signatures, capped band table)``.  Derive it once per corpus, persist
     with :func:`write_corpus_dedup_index`, and every subsequent batch joins
     against the stored tables — the corpus text is never re-scanned and
-    never re-minhashed per batch.  ``engine="arrow"`` uses the
-    bit-identical signature kernel.
+    never re-minhashed per batch.  Signatures come from the Arrow kernel
+    :func:`minhash_signatures_md5_arrow` (test reference:
+    :func:`minhash_signatures_md5`).
 
     ``checkpoint_sigs=True`` (r11) lazily localCheckpoints the signature
     frame BEFORE banding, so a caller that materializes both returned
@@ -1823,14 +1820,9 @@ def corpus_dedup_index(
     lineage re-runs the minhash on materialization (profiled: the crawl
     suite paid the pass twice per index build).  Values are unchanged;
     in-process sessions only (localCheckpoint)."""
-    if engine not in ("expr", "arrow"):
-        raise ValueError(f"unknown engine {engine!r}; use expr or arrow")
-    sig_fn = (
-        minhash_signatures_md5_arrow
-        if engine == "arrow"
-        else minhash_signatures_md5
+    sigs = minhash_signatures_md5_arrow(
+        df, text_col, num_hashes, shingle_n, id_col
     )
-    sigs = sig_fn(df, text_col, num_hashes, shingle_n, id_col)
     if checkpoint_sigs:
         sigs = sigs.localCheckpoint(eager=False)
     return sigs, _band_signature_table(
@@ -1980,7 +1972,8 @@ def _heal_compaction_swap(spark, table_prefix: str) -> None:
     :func:`compact_corpus_dedup_index`'s sequence is fixed: write
     stage_bands, write stage_sigs, then swap bands (drop + rename), then
     swap sigs.  A stage table's CATALOG entry appears only after its data
-    write completes (CTAS registers last), so the stage-table existence
+    write completes (CTAS registers last; pinned by
+    ``TestWriteBucketedRegistersLast``), so the stage-table existence
     pattern identifies the crash point:
 
     - ``stage_sigs`` exists (with or without ``stage_bands``): BOTH
@@ -2253,15 +2246,6 @@ def compact_corpus_dedup_index(
                 _fs.delete(spark, p)
 
 
-def _table_location(spark, table: str) -> str | None:
-    """A table's storage location from DESCRIBE FORMATTED (None for
-    unknown/managed-without-location tables)."""
-    for r in spark.sql(f"DESCRIBE FORMATTED {table}").collect():
-        if (r["col_name"] or "").strip() == "Location":
-            return (r["data_type"] or "").strip() or None
-    return None
-
-
 def cross_corpus_candidates(
     new_df: DataFrame,
     corpus_df: DataFrame | None = None,
@@ -2297,6 +2281,9 @@ def cross_corpus_candidates(
     """
     if (corpus_df is None) == (corpus_index is None):
         raise ValueError("exactly one of corpus_df/corpus_index must be set")
+    # A derived side's signatures feed both its banding and the signature
+    # re-attachment; the Arrow kernel has no exchange Spark could reuse,
+    # so checkpoint_sigs runs it once per side instead of twice.
     if new_index is not None:
         # caller already derived the batch's (sigs, bands) — e.g. the
         # ingest loop, which also appends them to the stored index:
@@ -2305,14 +2292,14 @@ def cross_corpus_candidates(
     else:
         sig_new, band_new = corpus_dedup_index(
             new_df, id_col, text_col, num_hashes, bands, shingle_n,
-            max_bucket_size,
+            max_bucket_size, checkpoint_sigs=True,
         )
     if corpus_index is not None:
         sig_corpus, band_corpus = corpus_index
     else:
         sig_corpus, band_corpus = corpus_dedup_index(
             corpus_df, id_col, text_col, num_hashes, bands, shingle_n,
-            max_bucket_size,
+            max_bucket_size, checkpoint_sigs=True,
         )
     # Pin the batch side as the broadcast build side: a batch is tiny
     # relative to the corpus BY CONSTRUCTION, so the plan must not depend

@@ -54,6 +54,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..local_rel import _sql_str, local_rows_df
+from ..sources.writers import _table_location
 from .dedup import _tokens
 from .similarity import _sql_dlit, _sql_ident
 
@@ -557,30 +558,20 @@ def write_bm25_index(
     return read_bm25_index(spark, table_prefix)
 
 
-def _table_location(spark, table: str) -> str | None:
-    """Physical Location of a catalog table (DESCRIBE FORMATTED — a
-    bounded catalog-metadata collect), None if not recorded."""
-    loc = None
-    for r in spark.sql(f"DESCRIBE FORMATTED {table}").collect():
-        if (r["col_name"] or "").strip() == "Location":
-            loc = (r["data_type"] or "").strip() or None
-    return loc
-
-
 def _heal_bm25_compaction(spark, table_prefix: str) -> None:
     """Finish a :func:`compact_bm25_index` swap a crash left half-done.
     The compaction stages ONE table (postings; doclen/stats/stopterms
-    are never rewritten).  r12 ADVICE: existence of the stage table is
-    NOT commitment — ``saveAsTable`` registers the name before the data
-    is fully written, so a crash mid-CTAS could leave a registered but
-    PARTIAL stage, and rolling that forward would silently replace a
-    good live postings generation.  Commitment is the ``_COMMIT`` marker
-    :func:`compact_bm25_index` touches AFTER the bucketed write returns:
+    are never rewritten).  The session catalog registers a bucketed
+    ``saveAsTable``'s name only after its data write returns (pinned by
+    ``TestWriteBucketedRegistersLast``; the dedup and phash heals rely on
+    that alone).  This heal still keys commitment on the ``_COMMIT``
+    marker :func:`compact_bm25_index` touches AFTER the bucketed write
+    returns, so it stays safe under a catalog that registers earlier:
     marker present -> roll forward (drop the live name if present,
-    rename the stage in); marker absent -> roll BACK (drop the partial
-    stage and delete its directory; the live table was never touched).
-    A crash before the stage registered leaves only the live table:
-    nothing to do."""
+    rename the stage in); marker absent -> roll BACK (drop the stage and
+    delete its directory; the live table was never touched).  A crash
+    before the stage registered leaves only the live table: nothing to
+    do."""
     from .. import fs as _fs
 
     stage = f"{table_prefix}_compact_stage_postings"
@@ -671,9 +662,9 @@ def compact_bm25_index(
         sort_cols=["term"],
     )
     # commit marker AFTER the bucketed write fully returns (r12 ADVICE):
-    # the heal rolls the stage forward only when this file exists, so a
-    # crash mid-CTAS (name registered, data partial) rolls BACK instead
-    # of replacing a good live generation with a partial one
+    # the heal rolls the stage forward only when this file exists, so
+    # a stage without it rolls BACK even under a catalog that registers
+    # the name before the data is written (this one registers it last)
     _fs.touch(spark, f"{path_prefix}_postings_compact_v{k}/_COMMIT")
     spark.sql(f"DROP TABLE IF EXISTS {table_prefix}_postings")
     spark.sql(f"ALTER TABLE {stage} RENAME TO {table_prefix}_postings")

@@ -135,10 +135,6 @@ def cosine_similarity(a: Column, b: Column) -> Column:
     return F.when(denom > 0, dot_product(a, b) / denom).otherwise(F.lit(0.0))
 
 
-def _query_literal(query_vec: list[float]) -> Column:
-    return F.array(*[F.lit(float(x)).cast("double") for x in query_vec])
-
-
 def _as_double(vec: Column) -> Column:
     return F.transform(vec, lambda x: x.cast("double"))
 
@@ -778,7 +774,6 @@ def kmeans_fit(
     vec_col: str = "embedding",
     round_digits: int = 6,
     seeding: str = "lowest_id",
-    assign_engine: str = "expr",
 ) -> list[tuple[int, list[float]]]:
     """Lloyd k-means over the embedding column, composed from the engine's
     own pieces: init = the ``k`` lowest-id embeddings (:func:`ivf_centroids`
@@ -805,14 +800,7 @@ def kmeans_fit(
     init) or ``"farthest"`` (:func:`farthest_point_seeds` — well-spread
     md5-anchored k-center seeds; use when the lowest-id vectors may be
     near-identical, which leaves duplicate/empty cells).
-
-    ``assign_engine``: ``"expr"`` (default — pure-JVM plan) or ``"arrow"``
-    (:func:`assign_cells_arrow`, bit-identical by the pinned pytest —
-    faster when k x dims makes the interpreted-HOF cosine the round's
-    floor; the trained centroids are identical either way).
     """
-    if assign_engine not in ("expr", "arrow"):
-        raise ValueError(f"unknown assign_engine {assign_engine!r}")
     if seeding == "farthest":
         cents = [(i, vec) for i, _sid, vec in farthest_point_seeds(
             df, k, id_col, vec_col, round_digits
@@ -822,10 +810,7 @@ def kmeans_fit(
     else:
         raise ValueError(f"unknown seeding {seeding!r}")
     for _ in range(rounds):
-        if assign_engine == "arrow":
-            assigned = assign_cells_arrow(df, cents, id_col, vec_col)
-        else:
-            assigned = ivf_assign(df, cents, id_col, vec_col)
+        assigned = ivf_assign(df, cents, id_col, vec_col)
         x = assigned.select(
             F.col("cell"),
             F.posexplode(_as_double(F.col(vec_col))).alias("dim", "_x"),
@@ -1320,7 +1305,6 @@ def semdedup(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     centroids: list[tuple[int, list[float]]] | None = None,
-    engine: str = "arrow",
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
     arXiv:2303.09540): cluster the corpus into centroid cells, compare
@@ -1341,28 +1325,33 @@ def semdedup(
     driver-side data collect (``ivf_centroids`` fetches n_cells rows, a
     bounded model-sized fetch).
 
-    Two engines with bit-identical output (pytest-asserted):
-
-    - ``engine="arrow"`` (default) — map-only Arrow cell assignment
-      (:func:`assign_cells_arrow`), then ONE hash shuffle on ``cell`` into a
-      grouped ``applyInPandas`` kernel that generates the within-cell pairs
-      and reduces them to per-member (dup_of, max_cos) in numpy.  This is
-      literally the production SemDeDup shape — per-cluster pairwise on a
-      vectorized backend — and all float math is the sequential fold of
-      :func:`_np_fold_dot`, so the SQL oracle still hash-matches.  Pairs
-      never materialize as Spark rows.
-    - ``engine="expr"`` — pure-JVM formulation: ``ivf_assign`` + a self
-      equi-join on ``cell`` with HOF cosine scoring.  Same plan family, no
-      Python boundary, ~20x slower at equal output (interpreted lambdas);
-      kept as the differential-testing twin and for Arrow-less deployments.
-
-    The dup summary in the expr path re-joins on ``id_col``; AQE turns it
-    into a broadcast join when few duplicates qualify.
+    Kernel (:func:`_semdedup_arrow`): map-only Arrow cell assignment
+    (:func:`assign_cells_arrow`), then ONE hash shuffle on ``cell`` into a
+    grouped ``applyInPandas`` kernel that generates the within-cell pairs
+    and reduces them to per-member (dup_of, max_cos) in numpy.  This is
+    literally the production SemDeDup shape — per-cluster pairwise on a
+    vectorized backend — and all float math is the sequential fold of
+    :func:`_np_fold_dot`, so the SQL oracle still hash-matches.  Pairs
+    never materialize as Spark rows.  Its test reference is the pure-JVM
+    :func:`_semdedup_expr` (bit-identical output, pytest-asserted).
     """
     if centroids is None:
         centroids = ivf_centroids(df, n_cells, id_col, vec_col)
-    if engine == "arrow":
-        return _semdedup_arrow(df, tau, id_col, vec_col, centroids)
+    return _semdedup_arrow(df, tau, id_col, vec_col, centroids)
+
+
+def _semdedup_expr(
+    df: DataFrame,
+    tau: float,
+    id_col: str,
+    vec_col: str,
+    centroids: list[tuple[int, list[float]]],
+) -> DataFrame:
+    """Pure-JVM test reference for :func:`semdedup`: ``ivf_assign`` + a
+    self equi-join on ``cell`` with HOF cosine scoring.  Same output as
+    :func:`_semdedup_arrow` bit for bit, ~20x slower (interpreted
+    lambdas).  The dup summary re-joins on ``id_col``; AQE turns it into a
+    broadcast join when few duplicates qualify."""
     assigned = ivf_assign(
         df.select(id_col, vec_col), centroids, id_col, vec_col
     )
@@ -1412,7 +1401,7 @@ def _semdedup_arrow(
     max_pairs_chunk: int = 2_000_000,
     gram_max_n: int = 4096,
 ) -> DataFrame:
-    """Arrow engine for :func:`semdedup`: grouped per-cell pair reduction.
+    """The :func:`semdedup` kernel: grouped per-cell pair reduction.
 
     Each cell's members arrive as one pandas group (cells are bounded by
     scaling n_cells with the corpus, so a group always fits a task).

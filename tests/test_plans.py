@@ -187,7 +187,7 @@ class TestPlanShapes:
         assert "Exchange SinglePartition" not in plan
 
     def test_semdedup_pairs_confined_to_cell_group(self, spark):
-        # arrow engine: map-only Arrow assignment, then exactly ONE hash
+        # Arrow kernel: map-only Arrow assignment, then exactly ONE hash
         # exchange keyed on the cell id into the grouped per-cell pair
         # kernel — never an all-pairs cartesian/BNLJ, and pairs never
         # materialize as Spark rows at all
@@ -198,14 +198,19 @@ class TestPlanShapes:
         assert "Exchange hashpartitioning(cell" in plan, plan
 
     def test_semdedup_expr_engine_pairs_confined_to_cell_equijoin(self, spark):
-        # expr engine (the differential twin): the within-cell self-join must
-        # be an equi-join keyed on the cell id — never an unkeyed pair join
+        # expression reference (the differential twin): the within-cell
+        # self-join must be an equi-join keyed on the cell id — never an
+        # unkeyed pair join
         from ssis_to_dbt_spark.sources.readers import testdata
-        from ssis_to_dbt_spark.text.similarity import semdedup
+        from ssis_to_dbt_spark.text.similarity import (
+            _semdedup_expr,
+            ivf_centroids,
+        )
 
         emb = testdata(spark, SF)["embeddings"]
-        plan = semdedup(emb, n_cells=4, engine="expr")._jdf.queryExecution(
-        ).explainString(
+        plan = _semdedup_expr(
+            emb, 0.3, "vec_id", "embedding", ivf_centroids(emb, 4)
+        )._jdf.queryExecution().explainString(
             spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
                 "simple"
             )
@@ -503,9 +508,7 @@ class TestDsirPlanShapes:
         from ssis_to_dbt_spark.text.analysis import dsir_fit_state
 
         docs = spark.read.parquet(f"{SF}/documents.parquet")
-        state = dsir_fit_state(
-            docs, F.col("lang") == "en", 64, engine="arrow"
-        )
+        state = dsir_fit_state(docs, F.col("lang") == "en", 64)
         plan = state._jdf.queryExecution().explainString(
             spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
                 "simple"

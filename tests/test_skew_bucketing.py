@@ -1,5 +1,7 @@
 """Skew salting and bucketed co-located join tests (100 TB scale machinery)."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -646,6 +648,60 @@ class TestBackfillHotBucketSkew:
         finally:
             spark.sql("DROP TABLE IF EXISTS hot_idx_bands")
             spark.sql("DROP TABLE IF EXISTS hot_idx_sigs")
+
+
+class TestWriteBucketedRegistersLast:
+    """The dedup and phash compaction heals read "the stage table exists"
+    as "the stage data is fully written", and the BM25 heal's docstring
+    states the same ordering: a bucketed ``saveAsTable`` registers the
+    table name only after its data write completes."""
+
+    def test_name_absent_while_data_is_written(self, spark, tmp_path):
+        import threading
+        import time
+
+        started = str(tmp_path / "task_started")
+        finished = str(tmp_path / "task_finished")
+        table = "ctas_order_probe"
+
+        def slow(batches):
+            import pathlib
+            import time as _time
+
+            pathlib.Path(started).touch()
+            _time.sleep(3)
+            yield from batches
+            pathlib.Path(finished).touch()
+
+        df = spark.range(0, 100, numPartitions=1).mapInPandas(slow, "id long")
+        polls = []  # tableExists readings taken entirely mid-write
+        stop = threading.Event()
+
+        def poll():
+            while not stop.is_set():
+                began = os.path.exists(started)
+                exists = spark.catalog.tableExists(table)
+                if began and not os.path.exists(finished):
+                    polls.append(exists)
+                time.sleep(0.1)
+
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
+        poller = threading.Thread(target=poll)
+        poller.start()
+        try:
+            write_bucketed(
+                df, table, str(tmp_path / "t"), ["id"], num_buckets=2
+            )
+        finally:
+            stop.set()
+            poller.join()
+        try:
+            assert len(polls) >= 5, polls
+            assert not any(polls), polls
+            assert spark.catalog.tableExists(table)
+            assert spark.table(table).count() == 100
+        finally:
+            spark.sql(f"DROP TABLE IF EXISTS {table}")
 
 
 class TestCompactionSwapSelfHeal:

@@ -74,7 +74,6 @@ class TestMinhash:
         edge the expression path has: NULL text, empty, blank, whitespace
         variants, short-doc whole-text fallback, fixture docs."""
         from ssis_to_dbt_spark.text.dedup import (
-            minhash_candidates_md5,
             minhash_signatures_md5,
             minhash_signatures_md5_arrow,
         )
@@ -104,19 +103,6 @@ class TestMinhash:
                 for r in minhash_signatures_md5_arrow(df).collect()
             }
             assert e == a
-        # candidate pairs identical through the banding too
-        pe = sorted(
-            map(tuple, minhash_candidates_md5(docs).collect())
-        )
-        pa = sorted(
-            map(
-                tuple,
-                minhash_candidates_md5(docs, engine="arrow").collect(),
-            )
-        )
-        assert pe == pa and pe
-        with pytest.raises(ValueError, match="engine"):
-            minhash_candidates_md5(docs, engine="pandas")
 
 
 class TestSimhash:
@@ -412,20 +398,26 @@ class TestSemDeDup:
 
     def test_arrow_and_expr_engines_bit_identical(self, spark):
         # the Arrow kernels fold dimensions in the same sequential order as
-        # the F.aggregate expression path, so the two engines must agree
+        # the F.aggregate expression reference, so the two must agree
         # BIT-exactly (same cells, same dup_of, same max_cos doubles) — on
         # the synthetic corpus and on the real fixture
         from ssis_to_dbt_spark.sources.readers import testdata
+        from ssis_to_dbt_spark.text.similarity import (
+            _semdedup_expr,
+            ivf_centroids,
+        )
 
         fixture = testdata(spark, "/root/testdata/sf0.001")["embeddings"]
         for df in (self._corpus(spark), fixture):
             a = {
                 (r["vec_id"], r["cell"], r["dup_of"], r["max_cos_r"])
-                for r in tx.semdedup(df, n_cells=4, tau=0.3, engine="arrow").collect()
+                for r in tx.semdedup(df, n_cells=4, tau=0.3).collect()
             }
             e = {
                 (r["vec_id"], r["cell"], r["dup_of"], r["max_cos_r"])
-                for r in tx.semdedup(df, n_cells=4, tau=0.3, engine="expr").collect()
+                for r in _semdedup_expr(
+                    df, 0.3, "vec_id", "embedding", ivf_centroids(df, 4)
+                ).collect()
             }
             assert a == e
 
@@ -458,17 +450,24 @@ class TestSemDeDup:
             assert g == c
 
     def test_empty_corpus_both_engines(self, spark):
-        # empty input -> empty centroid list; the expr path's ivf_assign
-        # must short-circuit (argmax over an empty struct array is
-        # VOID-typed and fails analysis) and both engines return 0 rows
+        # empty input -> empty centroid list; the expression reference's
+        # ivf_assign must short-circuit (argmax over an empty struct array
+        # is VOID-typed and fails analysis) and both return 0 rows
         from pyspark.sql import types as T
+
+        from ssis_to_dbt_spark.text.similarity import (
+            _semdedup_expr,
+            ivf_centroids,
+        )
 
         empty = spark.createDataFrame([], T.StructType([
             T.StructField("vec_id", T.LongType()),
             T.StructField("embedding", T.ArrayType(T.FloatType())),
         ]))
-        assert tx.semdedup(empty, n_cells=2, engine="arrow").count() == 0
-        assert tx.semdedup(empty, n_cells=2, engine="expr").count() == 0
+        assert tx.semdedup(empty, n_cells=2).count() == 0
+        assert _semdedup_expr(
+            empty, 0.3, "vec_id", "embedding", ivf_centroids(empty, 2)
+        ).count() == 0
 
     def test_empty_centroids_sentinel_both_engines(self, spark):
         # non-empty batch + empty centroid list: both assignment paths emit
@@ -2150,18 +2149,6 @@ class TestPrototypeAssignArrow:
         with _pt.raises(ValueError, match="non-empty"):
             prototype_assign_arrow(df, {})
 
-    def test_kmeans_assign_engines_identical(self, spark):
-        from ssis_to_dbt_spark.text.similarity import kmeans_fit
-
-        emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-        a = kmeans_fit(emb, k=3, rounds=2, assign_engine="expr")
-        b = kmeans_fit(emb, k=3, rounds=2, assign_engine="arrow")
-        assert a == b
-        import pytest as _pt
-
-        with _pt.raises(ValueError):
-            kmeans_fit(emb, k=2, assign_engine="numpy")
-
 
 class TestArrowTwinsUnicode:
     """The Arrow twins' riskiest divergence surface is JVM-vs-Python
@@ -2265,20 +2252,23 @@ class TestArrowTwinsUnicode:
         the Arrow twin compiles with re.ASCII — pin the parity here."""
         from pyspark.sql import functions as F
 
-        from ssis_to_dbt_spark.text.analysis import dsir_fit, dsir_score
+        from ssis_to_dbt_spark.text.analysis import (
+            _dsir_fit_state_expr,
+            _dsir_score_expr,
+            dsir_fit,
+            dsir_model_from_state,
+            dsir_score,
+        )
 
         df = spark.createDataFrame(self.ROWS, "doc_id long, text string")
-        model = dsir_fit(df, F.col("doc_id") % 2 == 0, buckets=64)
-        expr = {tuple(r) for r in dsir_score(df, model, engine="expr").collect()}
-        arrow = {
-            tuple(r) for r in dsir_score(df, model, engine="arrow").collect()
-        }
+        tgt = F.col("doc_id") % 2 == 0
+        model = dsir_fit(df, tgt, buckets=64)
+        expr = {tuple(r) for r in _dsir_score_expr(df, model).collect()}
+        arrow = {tuple(r) for r in dsir_score(df, model).collect()}
         assert expr == arrow
         # the fit kernel shares the tokenizer — pin it on the same rows
-        model_arrow = dsir_fit(
-            df, F.col("doc_id") % 2 == 0, buckets=64, engine="arrow"
-        )
-        assert model == model_arrow
+        ref = dsir_model_from_state(_dsir_fit_state_expr(df, tgt, 64), 64)
+        assert model == ref
 
 
 class TestDsir:
@@ -2506,24 +2496,32 @@ class TestDsir:
         assert out[101]["n_feats"] == 0 and out[101]["weight_units"] == 0
 
     def test_fit_arrow_engine_bit_identical(self, spark):
-        """dsir_fit(engine='arrow') — per-batch partial bucket counts —
-        must reproduce the expression explode's model exactly, including
-        on empty/null text and under repartitioning."""
-        from ssis_to_dbt_spark.text.analysis import dsir_fit
+        """dsir_fit — per-batch partial bucket counts — must reproduce
+        the expression explode's model exactly, including on empty/null
+        text and under repartitioning."""
+        from ssis_to_dbt_spark.text.analysis import (
+            _dsir_fit_state_expr,
+            dsir_fit,
+            dsir_model_from_state,
+        )
 
         df = self._df(spark)
         tgt = F.col("lang") == "en"
-        expr = dsir_fit(df, tgt, buckets=64)
-        arrow = dsir_fit(df, tgt, buckets=64, engine="arrow")
+        expr = dsir_model_from_state(_dsir_fit_state_expr(df, tgt, 64), 64)
+        arrow = dsir_fit(df, tgt, buckets=64)
         assert expr == arrow
-        arrow7 = dsir_fit(df.repartition(7), tgt, buckets=64, engine="arrow")
+        arrow7 = dsir_fit(df.repartition(7), tgt, buckets=64)
         assert expr == arrow7
 
     def test_fit_arrow_null_target_counts_into_q_only(self, spark):
         """NULL target predicate rows: the expression path's
         when(_tgt,1).otherwise(0) counts them into _q_cnt only — the
         arrow kernel must match."""
-        from ssis_to_dbt_spark.text.analysis import dsir_fit
+        from ssis_to_dbt_spark.text.analysis import (
+            _dsir_fit_state_expr,
+            dsir_fit,
+            dsir_model_from_state,
+        )
 
         rows = [
             (1, "alpha beta alpha", "en"),
@@ -2534,23 +2532,25 @@ class TestDsir:
             rows, "doc_id int, text string, lang string"
         )
         tgt = F.col("lang") == "en"
-        assert dsir_fit(df, tgt, buckets=32) == dsir_fit(
-            df, tgt, buckets=32, engine="arrow"
+        assert dsir_fit(df, tgt, buckets=32) == dsir_model_from_state(
+            _dsir_fit_state_expr(df, tgt, 32), 32
         )
 
     def test_fit_arrow_engine_validation(self, spark):
-        from ssis_to_dbt_spark.text.analysis import dsir_fit, dsir_fit_state
+        from ssis_to_dbt_spark.text.analysis import (
+            _dsir_fit_state_expr,
+            dsir_fit,
+            dsir_model_from_state,
+        )
 
         df = self._df(spark)
-        with pytest.raises(ValueError, match="engine"):
-            dsir_fit_state(df, F.lit(True), engine="pandas")
-        # r9: the arrow engine gained xxhash64 via the pure-Python spec
-        # twin — fit must be bit-equal to the JVM expression path.
+        # r9: the arrow kernel gained xxhash64 via the pure-Python spec
+        # twin — fit must be bit-equal to the JVM expression reference.
         tgt = F.col("lang") == "en"
         assert dsir_fit(
             df, tgt, buckets=32, hash_fn="xxhash64"
-        ) == dsir_fit(
-            df, tgt, buckets=32, hash_fn="xxhash64", engine="arrow"
+        ) == dsir_model_from_state(
+            _dsir_fit_state_expr(df, tgt, 32, hash_fn="xxhash64"), 32
         )
 
     def test_merge_state_refit_bit_equals_full_refit(self, spark):
@@ -2625,10 +2625,14 @@ class TestDsir:
         assert model == [0] * 16
 
     def test_arrow_score_engine_bit_identical(self, spark):
-        """dsir_score(engine='arrow') == the expression fold, including
-        adversarial whitespace (F.trim strips spaces only; Java split keeps
-        leading empty tokens) and unicode text."""
-        from ssis_to_dbt_spark.text.analysis import dsir_fit, dsir_score
+        """dsir_score == the expression fold, including adversarial
+        whitespace (F.trim strips spaces only; Java split keeps leading
+        empty tokens) and unicode text."""
+        from ssis_to_dbt_spark.text.analysis import (
+            _dsir_score_expr,
+            dsir_fit,
+            dsir_score,
+        )
 
         adversarial = spark.createDataFrame(
             [
@@ -2646,33 +2650,32 @@ class TestDsir:
         )
         model = dsir_fit(adversarial, F.col("lang") == "en", buckets=32)
         a = sorted(
-            tuple(r) for r in dsir_score(adversarial, model).collect()
+            tuple(r) for r in _dsir_score_expr(adversarial, model).collect()
         )
         b = sorted(
-            tuple(r)
-            for r in dsir_score(adversarial, model, engine="arrow").collect()
+            tuple(r) for r in dsir_score(adversarial, model).collect()
         )
         assert a == b
 
     def test_score_engine_validation(self, spark):
-        from ssis_to_dbt_spark.text.analysis import dsir_fit, dsir_score
+        from ssis_to_dbt_spark.text.analysis import (
+            _dsir_score_expr,
+            dsir_fit,
+            dsir_score,
+        )
 
         df = self._df(spark)
-        with pytest.raises(ValueError, match="engine"):
-            dsir_score(df, [0] * 16, engine="pandas")
         # r9: arrow + xxhash64 now supported (pure-Python spec twin) —
-        # scores must be bit-equal to the JVM expression path.
+        # scores must be bit-equal to the JVM expression reference.
         model = dsir_fit(df, F.col("lang") == "en", buckets=32,
                          hash_fn="xxhash64")
         a = sorted(
             tuple(r)
-            for r in dsir_score(df, model, hash_fn="xxhash64").collect()
+            for r in _dsir_score_expr(df, model, hash_fn="xxhash64").collect()
         )
         b = sorted(
             tuple(r)
-            for r in dsir_score(
-                df, model, hash_fn="xxhash64", engine="arrow"
-            ).collect()
+            for r in dsir_score(df, model, hash_fn="xxhash64").collect()
         )
         assert a == b
 

@@ -511,22 +511,24 @@ class TestDsirProperties:
     @given(docs=st.lists(documents, min_size=1, max_size=10))
     @settings(**SETTINGS)
     def test_arrow_score_engine_bit_identical_random_docs(self, spark, docs):
-        from ssis_to_dbt_spark.text.analysis import dsir_fit, dsir_score
+        from ssis_to_dbt_spark.text.analysis import (
+            _dsir_fit_state_expr,
+            _dsir_score_expr,
+            dsir_fit,
+            dsir_model_from_state,
+            dsir_score,
+        )
 
         rows = [(i, d) for i, d in enumerate(docs)]
         df = spark.createDataFrame(rows, "doc_id int, text string")
-        model = dsir_fit(df, F.col("doc_id") % 2 == 0, buckets=16)
-        a = sorted(tuple(r) for r in dsir_score(df, model).collect())
-        b = sorted(
-            tuple(r)
-            for r in dsir_score(df, model, engine="arrow").collect()
-        )
+        tgt = F.col("doc_id") % 2 == 0
+        model = dsir_fit(df, tgt, buckets=16)
+        a = sorted(tuple(r) for r in _dsir_score_expr(df, model).collect())
+        b = sorted(tuple(r) for r in dsir_score(df, model).collect())
         assert a == b
-        # the fit kernel twin on the same random docs
-        model_arrow = dsir_fit(
-            df, F.col("doc_id") % 2 == 0, buckets=16, engine="arrow"
-        )
-        assert model == model_arrow
+        # the fit kernel vs its expression reference on the same docs
+        ref = dsir_model_from_state(_dsir_fit_state_expr(df, tgt, 16), 16)
+        assert model == ref
 
 
 # --- connected components vs a Python union-find oracle ---------------------
@@ -976,8 +978,7 @@ class TestIngestLoopProperty:
                 r.accepted
             ).localCheckpoint()
             full = dsir_fit_state(
-                accepted_so_far, F.col("lang") == "en", buckets=256,
-                engine="arrow",
+                accepted_so_far, F.col("lang") == "en", buckets=256
             )
             assert dsir_model_from_state(
                 r.state.dsir_state, 256

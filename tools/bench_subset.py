@@ -1,16 +1,22 @@
 """Isolate and time a subset of bench queries (optimization-round helper).
 
-Usage: python tools/bench_subset.py q1 q2 ... [--reps N] [--sf DIR] [--plans DIR]
+Usage: python tools/bench_subset.py [q1 q2 ...] [--reps N] [--sf DIR] [--plans DIR]
 
 Same methodology as bench.py (warmup, noop sink, $SPARK_GRAFT_* contract);
-prints per-query times for each rep plus the median, and with --plans also
-writes each query's .explain("formatted") output to DIR/<name>.txt.
+defaults to every bench HEADLINE entry.  Each rep is split into build
+seconds (building the DataFrame: py4j plan construction plus any bounded
+collects the builder runs) and action seconds (the noop write).  Prints
+every rep plus the median total; with ``--reps N > 1`` the median is over
+the warm reps only, because the first rep of a query runs cold (2-3x
+slower).  With --plans also writes each query's .explain("formatted")
+output to DIR/<name>.txt.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
 import time
 
@@ -37,7 +43,12 @@ def main() -> None:
         i = args.index("--plans")
         plans_dir = args[i + 1]
         del args[i : i + 2]
-    names = args
+    if args:
+        names = args
+    else:
+        import bench
+
+        names = list(bench.HEADLINE)
     unknown = [n for n in names if n not in catalog.ALL_QUERIES]
     if unknown:
         print(f"unknown queries: {unknown}", file=sys.stderr)
@@ -75,14 +86,25 @@ def main() -> None:
             plan = df._jdf.queryExecution().explainString(mode)
             with open(os.path.join(plans_dir, f"{name}.txt"), "w") as fh:
                 fh.write(plan)
-        ts = []
+        build, action = [], []
         for _ in range(reps):
             spark.sparkContext.setJobDescription(f"bench_subset:{name}")
             t0 = time.time()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            ts.append(round(time.time() - t0, 3))
+            df = fn(spark, sf_dir)
+            t1 = time.time()
+            df.write.format("noop").mode("overwrite").save()
+            t2 = time.time()
             spark.sparkContext.setJobDescription(None)
-        rec = {"reps": ts, "median": sorted(ts)[len(ts) // 2]}
+            build.append(round(t1 - t0, 3))
+            action.append(round(t2 - t1, 3))
+        totals = [round(b + a, 3) for b, a in zip(build, action)]
+        warm = totals[1:] or totals
+        rec = {
+            "build": build,
+            "action": action,
+            "reps": totals,
+            "median": round(statistics.median(warm), 3),
+        }
         results[name] = rec
         print(json.dumps({name: rec}), flush=True)
     print(json.dumps({"all": results, "sf_dir": sf_dir}))

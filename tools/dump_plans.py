@@ -31,7 +31,7 @@ SHOWCASE = {
     "surprisal_docs": "token-keyed count aggs + joins; decimal-exact per-doc sums",
     "bloom_orders": "1-row broadcast bit-set prefilter; fact side never hash-shuffles",
     "pack_docs": "packing cumsum windows keyed by 16-way bucket; no single-partition sort",
-    "semdedup_embeddings": "Arrow engine: map-only assignment, one cell-keyed exchange into the grouped pair kernel",
+    "semdedup_embeddings": "Arrow kernel: map-only assignment, one cell-keyed exchange into the grouped pair kernel",
     "cdc_apply_orders": "changelog window (WindowGroupLimit-capped) + key anti-join; snapshot never shuffles",
     "weighted_sample_docs": "map-only ticket transform; TakeOrderedAndProject selection",
     "dup_spans_docs": "window fingerprints exploded once; inverted-index count join, doc-keyed fold",
