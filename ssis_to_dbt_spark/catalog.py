@@ -3304,16 +3304,12 @@ FROM tot LEFT JOIN kept USING (doc_id)
 # ---------------------------------------------------------------------------
 
 def q_winnow_docs(spark, sf_dir):
-    from .text import winnow_candidates
-    from .text.dedup import winnow_fingerprints_arrow
+    from .text import winnow_candidates, winnow_fingerprints
 
     docs = _t(spark, sf_dir)["documents"]
     # one selection pass feeds both arms: lazily checkpointed so the
     # checksum agg and the pair join don't each re-run the selection scan.
-    # Arrow kernel twin (bit-identical to winnow_fingerprints, pytest-
-    # pinned): the expression path's interpreted zip_with fold was the 4x
-    # cost floor of this query.
-    fp = winnow_fingerprints_arrow(docs, k=4, w=4).localCheckpoint(
+    fp = winnow_fingerprints(docs, k=4, w=4).localCheckpoint(
         eager=False
     )
     per_doc = fp.groupBy("doc_id").agg(
@@ -8472,6 +8468,32 @@ def q_curation_pipeline_docs(spark, sf_dir, checkpoint=True):
 # state that has absorbed every prior acceptance.
 # ---------------------------------------------------------------------------
 
+def _crawl_verdict_arms(r, tag: str) -> list:
+    """The verdict arms of one ingest iteration in the crawl suites'
+    tagged-union columns: the within-batch cluster verdicts (when the
+    iteration ran with ``dedup_within_batch``), the rejections and the
+    acceptances.  ``tag`` names each arm from its stage (``"{}1"`` ->
+    ``reject1``)."""
+    arms = []
+    if r.batch_pruned is not None:
+        arms.append((tag.format("pruned"), r.batch_pruned.select(
+            F.col("doc_id").cast("long").alias("doc_id"),
+            F.col("cluster_id").cast("long").alias("v1"),
+            F.col("cluster_size").cast("long").alias("v2"),
+            F.col("kept").cast("string").alias("s1"),
+        )))
+    arms.append((tag.format("reject"), r.rejected.select(
+        F.col("doc_id").cast("long").alias("doc_id"),
+        F.col("n_dups").cast("long").alias("v1"),
+        F.col("max_matches").cast("long").alias("v2"),
+    )))
+    arms.append((tag.format("accept"), r.accepted.select(
+        F.col("doc_id").cast("long").alias("doc_id"),
+        F.col("lang").alias("s1"),
+    )))
+    return arms
+
+
 def q_crawl_ingest_docs(spark, sf_dir):
     """Two iterations of the continuous-crawl loop (gate -> dedup vs the
     persisted index -> index append -> merged DSIR refit -> pack) over a
@@ -8507,15 +8529,6 @@ def q_crawl_ingest_docs(spark, sf_dir):
             F.col("n_chars").cast("long").alias("v1"),
             F.col("lang").alias("s1"),
         )
-        rej = r.rejected.select(
-            F.col("doc_id").cast("long").alias("doc_id"),
-            F.col("n_dups").cast("long").alias("v1"),
-            F.col("max_matches").cast("long").alias("v2"),
-        )
-        acc = r.accepted.select(
-            F.col("doc_id").cast("long").alias("doc_id"),
-            F.col("lang").alias("s1"),
-        )
         dsir = r.scored.select(
             F.col("doc_id").cast("long").alias("doc_id"),
             F.col("weight_units").cast("long").alias("v1"),
@@ -8528,9 +8541,12 @@ def q_crawl_ingest_docs(spark, sf_dir):
             F.col("start_tok").cast("long").alias("v2"),
             F.col("end_tok").cast("string").alias("s1"),
         )
-        return [(f"gate{tag}", gate), (f"reject{tag}", rej),
-                (f"accept{tag}", acc), (f"dsir{tag}", dsir),
-                (f"pack{tag}", pack)]
+        return [
+            (f"gate{tag}", gate),
+            *_crawl_verdict_arms(r, "{}" + tag),
+            (f"dsir{tag}", dsir),
+            (f"pack{tag}", pack),
+        ]
 
     # r11: within-batch dedup folded into the suite (r10 VERDICT #1) — a
     # third, independent iteration over batch 1 with dedup_within_batch
@@ -8546,25 +8562,9 @@ def q_crawl_ingest_docs(spark, sf_dir):
     r_wb = ingest_batch(b1, st, dedup_within_batch=True,
                         pre_gated=g1, pre_index=i1, with_scoring=False,
                         pre_probe=r1.rejected)
-    wb = [
-        ("wb_pruned", r_wb.batch_pruned.select(
-            F.col("doc_id").cast("long").alias("doc_id"),
-            F.col("cluster_id").cast("long").alias("v1"),
-            F.col("cluster_size").cast("long").alias("v2"),
-            F.col("kept").cast("string").alias("s1"),
-        )),
-        ("wb_reject", r_wb.rejected.select(
-            F.col("doc_id").cast("long").alias("doc_id"),
-            F.col("n_dups").cast("long").alias("v1"),
-            F.col("max_matches").cast("long").alias("v2"),
-        )),
-        ("wb_accept", r_wb.accepted.select(
-            F.col("doc_id").cast("long").alias("doc_id"),
-            F.col("lang").alias("s1"),
-        )),
-    ]
     return _suite_frame(
-        "crawl_ingest_docs", rows("1", r1) + rows("2", r2) + wb
+        "crawl_ingest_docs",
+        rows("1", r1) + rows("2", r2) + _crawl_verdict_arms(r_wb, "wb_{}"),
     )
 
 
@@ -8585,24 +8585,7 @@ def q_crawl_wb_dedup_docs(spark, sf_dir):
     batch = docs.filter(F.col("doc_id") % 5 == 0)
     r = ingest_batch(batch, seed_ingest_state(seed),
                      dedup_within_batch=True, with_scoring=False)
-    pruned = r.batch_pruned.select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        F.col("cluster_id").cast("long").alias("v1"),
-        F.col("cluster_size").cast("long").alias("v2"),
-        F.col("kept").cast("string").alias("s1"),
-    )
-    rej = r.rejected.select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        F.col("n_dups").cast("long").alias("v1"),
-        F.col("max_matches").cast("long").alias("v2"),
-    )
-    acc = r.accepted.select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        F.col("lang").alias("s1"),
-    )
-    return _suite_frame("crawl_wb_dedup_docs", [
-        ("pruned", pruned), ("reject", rej), ("accept", acc),
-    ])
+    return _suite_frame("crawl_wb_dedup_docs", _crawl_verdict_arms(r, "{}"))
 
 
 # The two hand-built suites' oracles, generated from their arms' SQL like

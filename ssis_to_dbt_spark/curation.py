@@ -52,14 +52,13 @@ def drop_seam_anti_join(
     corpus: DataFrame,
     drop_ids: DataFrame,
     key: str = "doc_id",
-    broadcast_max_ids: int | None = None,
     known_count: int | None = None,
 ) -> DataFrame:
     """Size-aware anti-join seam: COUNT the drop-id set (one cheap action
     on a pair-derived, id-only table — never corpus-scale to compute) and
     pick the join strategy from the measured size, not an assumption:
 
-    - ``count <= broadcast_max_ids``: ``F.broadcast`` anti-join — the
+    - ``count <= SEAM_BROADCAST_MAX_IDS``: ``F.broadcast`` anti-join — the
       corpus is decided map-side, zero corpus exchange (the steady-state
       regime: drop sets are usually tiny);
     - above: shuffled hash anti-join (``shuffle_hash`` hint so neither
@@ -73,13 +72,8 @@ def drop_seam_anti_join(
     the SAME drop-id set (the ingest loop drops one rejected-id set from
     gated docs, sigs, and bands) counts once and passes the measurement
     in — one sizing action per batch instead of one per seam."""
-    limit = (
-        SEAM_BROADCAST_MAX_IDS
-        if broadcast_max_ids is None
-        else int(broadcast_max_ids)
-    )
     n = drop_ids.count() if known_count is None else int(known_count)
-    if n <= limit:
+    if n <= SEAM_BROADCAST_MAX_IDS:
         return corpus.join(F.broadcast(drop_ids), key, "left_anti")
     return corpus.join(drop_ids.hint("shuffle_hash"), key, "left_anti")
 
@@ -112,11 +106,7 @@ def stage_prune(gated: DataFrame) -> DataFrame:
     return prune_clusters(gated, pairs)
 
 
-def stage_dedup(
-    gated: DataFrame,
-    pruned: DataFrame,
-    broadcast_max_ids: int | None = None,
-) -> DataFrame:
+def stage_dedup(gated: DataFrame, pruned: DataFrame) -> DataFrame:
     """Drop non-representatives via the SIZE-AWARE anti-join seam: the
     not-kept id set is counted first — broadcast when small (the usual
     case: pair-derived ≪ corpus), shuffled anti-join when a
@@ -124,7 +114,7 @@ def stage_dedup(
     are normal for web crawls, where a pinned broadcast would exceed the
     broadcast ceiling)."""
     dropped = pruned.filter(~F.col("kept")).select("doc_id")
-    return drop_seam_anti_join(gated, dropped, "doc_id", broadcast_max_ids)
+    return drop_seam_anti_join(gated, dropped, "doc_id")
 
 
 def stage_contaminated(deduped: DataFrame, docs: DataFrame) -> DataFrame:
@@ -141,17 +131,11 @@ def stage_contaminated(deduped: DataFrame, docs: DataFrame) -> DataFrame:
     return decontaminate(deduped, ev, shingle_n=5)
 
 
-def stage_clean(
-    deduped: DataFrame,
-    contaminated: DataFrame,
-    broadcast_max_ids: int | None = None,
-) -> DataFrame:
+def stage_clean(deduped: DataFrame, contaminated: DataFrame) -> DataFrame:
     """Drop contaminated docs — the same size-aware anti-join seam as
     :func:`stage_dedup` (contaminated sets are usually genuinely small,
     but a benchmark-heavy crawl slice can blow that assumption too)."""
-    return drop_seam_anti_join(
-        deduped, contaminated.select("doc_id"), "doc_id", broadcast_max_ids
-    )
+    return drop_seam_anti_join(deduped, contaminated.select("doc_id"), "doc_id")
 
 
 def stage_dsir_select(clean: DataFrame, k: int = DSIR_K) -> DataFrame:

@@ -427,13 +427,17 @@ def _parse_component(c: ET.Element) -> DtsxComponent:
 # ---------------------------------------------------------------------------
 
 def _sql_literal(v) -> str:
+    """Render a bound value as Spark SQL literal text.  Strings double
+    backslashes (Spark reads ``\\`` as an escape inside string literals,
+    so a Windows path would lose its separators) and double single quotes
+    (the literal splitters of :func:`rewrite_tsql` rely on ``''``)."""
     if v is None:
         return "NULL"
     if isinstance(v, datetime):
         return f"TIMESTAMP '{v.strftime('%Y-%m-%d %H:%M:%S')}'"
     if isinstance(v, (int, float)):
         return str(v)
-    return "'" + str(v).replace("'", "''") + "'"
+    return "'" + str(v).replace("\\", "\\\\").replace("'", "''") + "'"
 
 
 _CI_EQ_TAIL = re.compile(
@@ -560,10 +564,17 @@ def rewrite_tsql(
     strips, but brackets INSIDE string literals survive — they carry
     T-SQL LIKE character classes, which
     :func:`_rewrite_like_brackets` translates to ``regexp_like`` with
-    SQL Server semantics after parameter substitution."""
+    SQL Server semantics after parameter substitution.
+
+    Every string literal of the output is in Spark's escaped form: a
+    T-SQL backslash is a plain character, so literal backslashes double,
+    as they do in bound values (:func:`_sql_literal`)."""
     lparts = re.split(r"('(?:[^']|'')*')", sql)
-    for _k in range(0, len(lparts), 2):
-        lparts[_k] = lparts[_k].replace("[", "").replace("]", "")
+    for _k in range(len(lparts)):
+        if _k % 2:
+            lparts[_k] = lparts[_k].replace("\\", "\\\\")
+        else:
+            lparts[_k] = lparts[_k].replace("[", "").replace("]", "")
     s = "".join(lparts).rstrip().rstrip(";")
     for t in sorted(table_views, key=len, reverse=True):
         s = re.sub(
@@ -574,9 +585,8 @@ def rewrite_tsql(
         )
     for qual, val in (variables or {}).items():
         bare = qual.split("::")[-1]
-        s = re.sub(
-            rf"@{re.escape(bare)}\b", _sql_literal(val).replace("\\", "\\\\"), s
-        )
+        lit = _sql_literal(val)
+        s = re.sub(rf"@{re.escape(bare)}\b", lambda _m: lit, s)
     # ? placeholders substitute OUTSIDE string literals only, so a literal
     # (pre-existing or just injected) containing '?' is never touched and
     # never counted as unbound
@@ -656,13 +666,6 @@ def _tsql_like_to_regex(pat: str) -> str:
     return "".join(out)
 
 
-def _sql_regex_literal(rx: str) -> str:
-    """Embed a regex in a Spark SQL string literal: double backslashes
-    (Spark treats ``\\`` as an escape in string literals) and double
-    single quotes."""
-    return "'" + rx.replace("\\", "\\\\").replace("'", "''") + "'"
-
-
 def _rewrite_like_brackets(s: str, ci: bool = False) -> str:
     """Rewrite ``ident [NOT] LIKE '<pattern containing [>'`` to
     ``[NOT ]regexp_like(ident, '^...$')`` with T-SQL class semantics,
@@ -674,7 +677,7 @@ def _rewrite_like_brackets(s: str, ci: bool = False) -> str:
     parts = re.split(r"('(?:[^']|'')*')", s)
     for i in range(1, len(parts), 2):
         lit = parts[i]
-        pat = lit[1:-1].replace("''", "'")
+        pat = lit[1:-1].replace("''", "'").replace("\\\\", "\\")
         if "[" not in pat:
             continue
         m = _LIKE_LHS_TAIL.search(parts[i - 1])
@@ -685,7 +688,7 @@ def _rewrite_like_brackets(s: str, ci: bool = False) -> str:
         if ci:
             ident = f"LOWER({ident})"
             pat = pat.lower()
-        rx = _sql_regex_literal(_tsql_like_to_regex(pat))
+        rx = _sql_literal(_tsql_like_to_regex(pat))
         parts[i - 1] = parts[i - 1][: m.start()] + neg
         parts[i] = f"regexp_like({ident}, {rx})"
     return "".join(parts)

@@ -143,7 +143,6 @@ def ingest_batch(
     seq_tokens: int = SEQ_TOKENS,
     pack_buckets: int | None = PACK_BUCKETS,
     checkpoint: bool = True,
-    batch_broadcast_max_docs: int = BATCH_BROADCAST_MAX_DOCS,
     dedup_within_batch: bool = False,
     band_bucket_cap: int | None = None,
     pre_gated: DataFrame | None = None,
@@ -167,7 +166,7 @@ def ingest_batch(
     the within-batch self-join and the index probe — the knob that
     bounds a viral bucket's self-join fan-out at bands * cap^2 pairs.
     The self-join regime is size-aware like the probe: a batch the
-    measured count says is over ``batch_broadcast_max_docs`` runs the
+    measured count says is over ``BATCH_BROADCAST_MAX_DOCS`` runs the
     band self-join as a shuffle-hash join (the hint keeps AQE from
     re-pinning a broadcast the count just refuted).  Default OFF — the loop's documented base
     semantics accept within-batch near-dups (they were never in the
@@ -277,7 +276,7 @@ def ingest_batch(
         # agreement as est_jaccard, the loop's own dup threshold
         b = bbands.select("band_idx", "band_hash", "doc_id")
         probe = b.alias("b")
-        if gated.count() > int(batch_broadcast_max_docs):
+        if gated.count() > BATCH_BROADCAST_MAX_DOCS:
             # measured over the broadcast cap: force the shuffle regime
             # so neither the static planner nor AQE pins a broadcast of
             # a corpus-scale backfill batch against itself
@@ -345,7 +344,7 @@ def ingest_batch(
         pairs = cross_corpus_candidates(
             gated, corpus_index=(state.sigs, state.bands),
             new_index=(bsigs, bbands),
-            broadcast_batch=(n_gated <= int(batch_broadcast_max_docs)),
+            broadcast_batch=(n_gated <= BATCH_BROADCAST_MAX_DOCS),
             **cap_kw,
         )
         # est_jaccard is matches/num_hashes with num_hashes=8 — exactly

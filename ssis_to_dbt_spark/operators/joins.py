@@ -361,6 +361,12 @@ def fuzzy_pairs(
     )
 
 
+# Row count at or below which sorted_neighborhood_pairs ranks with the
+# single-partition row_number window (oracle-pinned, fine to ~10^8 rows);
+# above it the distributed rank takes over.
+SNB_WINDOW_RANK_MAX_ROWS = 10_000_000
+
+
 def sorted_neighborhood_pairs(
     df: DataFrame,
     id_col: str,
@@ -368,8 +374,6 @@ def sorted_neighborhood_pairs(
     sort_key,
     window: int = 3,
     max_distance: int | None = None,
-    rank_engine: str = "auto",
-    auto_rank_threshold: int = 10_000_000,
 ) -> DataFrame:
     """Sorted-neighborhood blocking (Hernández & Stolfo 1995): order records
     by a caller-chosen key expression and pair each record with its next
@@ -385,17 +389,15 @@ def sorted_neighborhood_pairs(
     equi-block: budget is exact and data-independent.  Optional Levenshtein
     refine keeps only pairs within ``max_distance``.
 
-    ``rank_engine``: ``"auto"`` (r10 default — MEASURE the row count and
-    pick the engine, the same measured-not-assumed seam discipline as
-    ``drop_seam_anti_join``: at or below ``auto_rank_threshold`` rows
-    the single-partition ``row_number`` window, above it the
-    distributed rank), ``"window"`` (the oracle-pinned single-partition
-    ``row_number``, fine to ~10^8 rows), or ``"distributed"`` (r9 —
-    :func:`~ssis_to_dbt_spark.operators.window.distributed_global_rank`:
-    range-partitioned bucket-local ranking with model-sized offset
-    collection; EXACT same ranks, pytest-pinned value-identical — the
-    100 TB setting).  Both engines produce identical ranks, so auto's
-    regime switch never changes the answer — only the plan.
+    The measured row count picks the rank engine (the same
+    measured-not-assumed seam discipline as ``drop_seam_anti_join``): at
+    or below ``SNB_WINDOW_RANK_MAX_ROWS`` the oracle-pinned
+    single-partition ``row_number`` window, above it
+    :func:`~ssis_to_dbt_spark.operators.window.distributed_global_rank`
+    (range-partitioned bucket-local ranking with model-sized offset
+    collection — the 100 TB setting).  Both produce identical ranks
+    (pytest-pinned), so the regime switch never changes the answer —
+    only the plan.
     """
     from pyspark.sql import Window
     from pyspark.sql import functions as F
@@ -403,27 +405,17 @@ def sorted_neighborhood_pairs(
     staged = df.select(
         F.col(id_col), F.col(text_col), sort_key.alias("_snk")
     )
-    if rank_engine == "auto":
-        # one cheap count (column-pruned scan) decides the regime —
-        # like every other r9/r10 seam, measured rather than assumed
-        rank_engine = (
-            "window"
-            if staged.count() <= int(auto_rank_threshold)
-            else "distributed"
-        )
-    if rank_engine == "distributed":
-        from .window import distributed_global_rank
-
-        ranked = distributed_global_rank(staged, ["_snk", id_col], "_rn")
-    elif rank_engine == "window":
+    # one cheap count (column-pruned scan) decides the regime — like
+    # every other r9/r10 seam, measured rather than assumed
+    if staged.count() <= SNB_WINDOW_RANK_MAX_ROWS:
         ranked = staged.withColumn(
             "_rn",
             F.row_number().over(Window.orderBy("_snk", id_col)),
         )
     else:
-        raise ValueError(
-            f"unknown rank_engine {rank_engine!r}; window or distributed"
-        )
+        from .window import distributed_global_rank
+
+        ranked = distributed_global_rank(staged, ["_snk", id_col], "_rn")
     left = ranked.select(
         F.col("_rn"),
         F.col(id_col).alias("id_a"),

@@ -1485,7 +1485,6 @@ def dsir_importance(
     buckets: int = 256,
     id_col: str = "doc_id",
     text_col: str = "text",
-    hash_fn: str = "md5",
 ) -> DataFrame:
     """DSIR document scoring (Xie et al. 2023, "Data Selection for Language
     Models via Importance Resampling", arXiv:2302.03169): score every
@@ -1521,22 +1520,13 @@ def dsir_importance(
     "model" (bucket ratio table) never exceeds B rows.  Ids are assumed
     unique (one output row per id).
 
-    ``hash_fn``: ``"md5"`` (default) buckets grams by the portable 60-bit
-    md5 prefix so a SQL oracle reproduces every weight bit-for-bit;
-    ``"xxhash64"`` is the production twin (native 64-bit hash, no hex
-    round-trip — the usual md5/xxhash64 twin split, cf.
-    :func:`~ssis_to_dbt_spark.text.dedup.minhash_candidates`).  Bucket
-    assignment differs between the two, so weights differ; n_feats and the
-    output contract are identical.  The Gumbel draw stays md5 either way
-    (once per document — not a hot path — and keeps selection replayable).
+    Grams are bucketed by the portable 60-bit md5 prefix, so a SQL oracle
+    reproduces every weight bit-for-bit; the Gumbel draw uses the same md5
+    prefix of the id (once per document — keeps selection replayable).
     """
     if buckets < 2:
         raise ValueError("buckets must be >= 2")
-    if hash_fn not in ("md5", "xxhash64"):
-        raise ValueError(f"unknown hash_fn {hash_fn!r}; use md5 or xxhash64")
     from .dedup import _md5_long
-
-    gram_hash = _md5_long if hash_fn == "md5" else F.xxhash64
 
     toks = F.when(
         F.trim(F.col(text_col)) == "", F.array().cast("array<string>")
@@ -1552,13 +1542,9 @@ def dsir_importance(
             F.concat(F.col("_tk"), _ngrams(F.col("_tk"), 2))
         ).alias("_g"),
     )
-    # Explicit null guard: xxhash64(NULL) returns the seed hash (NOT null),
-    # which would turn the featureless-doc marker row into a phantom
-    # feature; md5 nulls naturally, but the guard keeps both paths honest.
-    bucket = F.when(
-        F.col("_g").isNotNull(),
-        F.pmod(gram_hash(F.col("_g")), F.lit(buckets)),
-    )
+    # md5(NULL) is NULL, so the featureless-doc marker row lands in the
+    # null bucket rather than becoming a phantom feature.
+    bucket = F.pmod(_md5_long(F.col("_g")), F.lit(buckets))
     cnt = grams.groupBy(id_col, "_tgt", bucket.alias("_b")).agg(
         F.count(F.lit(1)).alias("_c")
     )
@@ -1620,7 +1606,6 @@ def dsir_fit(
     target: Column,
     buckets: int = 256,
     text_col: str = "text",
-    hash_fn: str = "md5",
 ) -> list[int]:
     """Fit the DSIR bucket model once and hand back the dense ratio table:
     ``model[b]`` = micro-unit log ratio ``L(p_b+1) - L(P+B) - L(q_b+1) +
@@ -1639,7 +1624,7 @@ def dsir_fit(
     weights bit-for-bit.
     """
     return dsir_model_from_state(
-        dsir_fit_state(df, target, buckets, text_col, hash_fn), buckets
+        dsir_fit_state(df, target, buckets, text_col), buckets
     )
 
 
@@ -1648,7 +1633,6 @@ def dsir_fit_state(
     target: Column,
     buckets: int = 256,
     text_col: str = "text",
-    hash_fn: str = "md5",
 ) -> DataFrame:
     """The mergeable sufficient statistic behind :func:`dsir_fit`: the
     ≤``buckets``-row count table ``(_b, _q_cnt, _p_cnt)`` (total and
@@ -1662,18 +1646,13 @@ def dsir_fit_state(
     tiny groupBy — the shuffle carries batch-count × buckets rows and the
     exploded gram stream never exists.  Tokenizer/bucket twin discipline
     identical to :func:`dsir_score` (space-only trim, ASCII ``\\s`` split
-    with kept empty tokens; md5 hex[:15] % B, or the pure-Python
-    :mod:`~ssis_to_dbt_spark.text.xxh64` twin for ``hash_fn='xxhash64'``,
-    which runs at interpreter speed, ~10× hashlib's C md5 per gram).  The
+    with kept empty tokens; md5 hex[:15] % B).  The
     target predicate is evaluated JVM-SIDE in the pre-projection, so
     arbitrary Columns work and NULL target counts into ``_q_cnt`` only.
     Test reference: the explode -> groupBy(bucket) expression form
-    :func:`_dsir_fit_state_expr` (bit-identical counts for both hash
-    functions, pytest-pinned)."""
+    :func:`_dsir_fit_state_expr` (bit-identical counts, pytest-pinned)."""
     if buckets < 2:
         raise ValueError("buckets must be >= 2")
-    if hash_fn not in ("md5", "xxhash64"):
-        raise ValueError(f"unknown hash_fn {hash_fn!r}; use md5 or xxhash64")
     import re as _re
 
     from pyspark.sql import types as T
@@ -1687,7 +1666,7 @@ def dsir_fit_state(
         ]
     )
     pre = df.select(target.alias("_tgt"), F.col(text_col).alias("_txt"))
-    bucket = _gram_bucket_fn(hash_fn, int(buckets))
+    bucket = _gram_bucket_fn(int(buckets))
 
     def gen(batches):
         import pandas as pd
@@ -1737,7 +1716,6 @@ def _dsir_fit_state_expr(
     target: Column,
     buckets: int,
     text_col: str = "text",
-    hash_fn: str = "md5",
 ) -> DataFrame:
     """Expression test reference for :func:`dsir_fit_state`: one explode
     -> groupBy(bucket) over ``df`` (map-side partial agg collapses to ≤
@@ -1745,7 +1723,6 @@ def _dsir_fit_state_expr(
     only via ``F.when(_tgt, 1).otherwise(0)``)."""
     from .dedup import _md5_long
 
-    gram_hash = _md5_long if hash_fn == "md5" else F.xxhash64
     toks = F.when(
         F.trim(F.col(text_col)) == "", F.array().cast("array<string>")
     ).otherwise(_ws_tokens(F.col(text_col)))
@@ -1754,7 +1731,7 @@ def _dsir_fit_state_expr(
         F.explode(F.concat(toks, _ngrams(toks, 2))).alias("_g"),
     )
     return grams.groupBy(
-        F.pmod(gram_hash(F.col("_g")), F.lit(buckets)).alias("_b")
+        F.pmod(_md5_long(F.col("_g")), F.lit(buckets)).alias("_b")
     ).agg(
         F.count(F.lit(1)).alias("_q_cnt"),
         F.sum(F.when(F.col("_tgt"), F.lit(1).cast("long")).otherwise(
@@ -1763,26 +1740,16 @@ def _dsir_fit_state_expr(
     )
 
 
-def _gram_bucket_fn(hash_fn: str, buckets: int):
+def _gram_bucket_fn(buckets: int):
     """Python twin of the expression path's
-    ``F.pmod(gram_hash(gram), buckets)``: md5 hex[:15] (always
-    non-negative) or signed xxhash64 under Python's ``%`` (which already
-    implements pmod for a positive modulus)."""
-    if hash_fn == "md5":
-        import hashlib
+    ``F.pmod(_md5_long(gram), buckets)``: md5 hex[:15] (always
+    non-negative) modulo ``buckets``."""
+    import hashlib
 
-        def bucket(g: str) -> int:
-            return int(hashlib.md5(g.encode()).hexdigest()[:15], 16) % buckets
+    def bucket(g: str) -> int:
+        return int(hashlib.md5(g.encode()).hexdigest()[:15], 16) % buckets
 
-        return bucket
-    if hash_fn == "xxhash64":
-        from .xxh64 import xxh64_string
-
-        def bucket(g: str) -> int:
-            return xxh64_string(g) % buckets
-
-        return bucket
-    raise ValueError(f"unknown hash_fn {hash_fn!r}; use md5 or xxhash64")
+    return bucket
 
 
 def dsir_merge_state(state: DataFrame, delta: DataFrame) -> DataFrame:
@@ -1835,7 +1802,6 @@ def dsir_score(
     model: list[int],
     id_col: str = "doc_id",
     text_col: str = "text",
-    hash_fn: str = "md5",
 ) -> DataFrame:
     """Score documents against a :func:`dsir_fit` model — ENTIRELY map-only:
     the model is a literal table shipped with the kernel (like the k-means
@@ -1847,13 +1813,10 @@ def dsir_score(
     plan-pinned).
 
     Same output contract as :func:`dsir_importance` (``id, n_feats,
-    weight_units, gumbel_units``) and — with the same ``hash_fn`` and a
-    model fit on the SAME corpus — bit-identical weights, since both sum
-    the same exact integers.
+    weight_units, gumbel_units``) and — with a model fit on the SAME
+    corpus — bit-identical weights, since both sum the same exact integers.
 
-    Kernel: one ``mapInPandas`` pass (xxhash64 buckets come from the
-    pure-Python spec twin in :mod:`~ssis_to_dbt_spark.text.xxh64`); the
-    Gumbel term uses Decimal-HALF_UP quantization (Spark's ``F.round``
+    Kernel: one ``mapInPandas`` pass; the Gumbel term uses Decimal-HALF_UP quantization (Spark's ``F.round``
     mode).  Tokenization replicates the expression form exactly:
     ``F.trim`` strips SPACES only (not tabs/newlines), and Java's regex
     split keeps leading empty tokens — both preserved here
@@ -1864,8 +1827,6 @@ def dsir_score(
     buckets = len(model)
     if buckets < 2:
         raise ValueError("model must have >= 2 buckets")
-    if hash_fn not in ("md5", "xxhash64"):
-        raise ValueError(f"unknown hash_fn {hash_fn!r}; use md5 or xxhash64")
     import hashlib
     import re as _re
     from decimal import ROUND_HALF_UP, Decimal
@@ -1886,7 +1847,7 @@ def dsir_score(
         ]
     )
     pre = df.select(F.col(id_col), F.col(text_col).alias("_txt"))
-    bucket = _gram_bucket_fn(hash_fn, buckets)
+    bucket = _gram_bucket_fn(buckets)
 
     def gumbel(did) -> int:
         h = int(hashlib.md5(str(did).encode()).hexdigest()[:15], 16)
@@ -1937,7 +1898,6 @@ def _dsir_score_expr(
     model: list[int],
     id_col: str = "doc_id",
     text_col: str = "text",
-    hash_fn: str = "md5",
 ) -> DataFrame:
     """Expression test reference for :func:`dsir_score`: the model as a
     literal array and the weight as an in-order ``F.aggregate`` integer
@@ -1945,7 +1905,6 @@ def _dsir_score_expr(
     buckets = len(model)
     from .dedup import _md5_long
 
-    gram_hash = _md5_long if hash_fn == "md5" else F.xxhash64
     arr = F.array(*[F.lit(int(u)).cast("long") for u in model])
     toks = F.when(
         F.trim(F.col(text_col)) == "", F.array().cast("array<string>")
@@ -1963,7 +1922,7 @@ def _dsir_score_expr(
         F.lit(0).cast("long"),
         lambda acc, g: acc
         + F.element_at(
-            arr, (F.pmod(gram_hash(g), F.lit(buckets)) + 1).cast("int")
+            arr, (F.pmod(_md5_long(g), F.lit(buckets)) + 1).cast("int")
         ),
     )
     u = (_md5_long(F.col(id_col).cast("string")) + 1).cast("double") / F.lit(

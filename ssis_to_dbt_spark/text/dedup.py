@@ -1036,7 +1036,6 @@ def winnow_fingerprints(
     text_col: str = "text",
     k: int = 4,
     w: int = 4,
-    hash_fn: str = "md5",
 ) -> DataFrame:
     """Winnowing document fingerprints (Schleimer, Wilkerson & Aiken 2003,
     the MOSS algorithm): hash every ``k``-token gram, slide a window of
@@ -1049,88 +1048,14 @@ def winnow_fingerprints(
     of all gram hashes are kept — the density/recall tradeoff that makes
     whole-corpus fingerprint joins tractable.
 
-    Pure expression: one ``transform`` over window starts, each folding its
-    ``w``-slice with a rightmost-min ``aggregate`` seeded by the slice head —
-    O(n*w) interpreted HOF ops per doc, map-only, no shuffle.  The default
-    ``hash_fn="md5"`` derives 60-bit BIGINTs the DuckDB oracle reproduces
-    exactly; ``hash_fn="xxhash64"`` is the production path (codegen'd JVM
-    hash, signed-long fingerprints; measured ~8% faster at sf0.1 — the
-    interpreted HOF window scan, not hashing, is the floor) —
-    identical selection structure, engine-private values, the same
-    md5-twin discipline as the minhash/simhash families.
-    Returns (id, fp_hash, fp_pos) rows."""
-    if hash_fn not in ("md5", "xxhash64"):
-        raise ValueError(f"hash_fn must be md5|xxhash64, got {hash_fn}")
-    toks = _tokens(F.col(text_col))
-    grams = F.when(
-        F.size(toks) >= k,
-        F.transform(
-            F.sequence(F.lit(1), F.size(toks) - F.lit(k - 1)),
-            lambda i: F.concat_ws(" ", F.slice(toks, i, k)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    def _h(g):
-        if hash_fn == "xxhash64":
-            return F.xxhash64(g)
-        return F.conv(F.substring(F.md5(g), 1, 15), 16, 10).cast("long")
-
-    pairs = F.transform(
-        grams,
-        lambda g, i: F.struct(_h(g).alias("h"), (i + 1).alias("p")),
-    )
-    # Materialize the hashed-gram array ONCE per row before the window scan:
-    # a per-window slice over the raw expression would re-evaluate the whole
-    # md5 array for every window (O(n^2) hashing — measured 100x slower).
-    # The window minimum is instead built by folding w shifted copies of the
-    # SAME materialized column with zip_with: windows[j] = min(pairs[j..j+w-1]),
-    # rightmost on ties (<= keeps the later element), O(n*w) cheap struct ops.
-    base = df.select(F.col(id_col), pairs.alias("_prs"))
-    prs = F.col("_prs")
-    n = F.size(prs)
-
-    def keep_right(a, x):
-        keep = x.getField("h") <= a.getField("h")
-        return F.struct(
-            F.when(keep, x.getField("h")).otherwise(a.getField("h")).alias("h"),
-            F.when(keep, x.getField("p")).otherwise(a.getField("p")).alias("p"),
-        )
-
-    win = F.slice(prs, 1, n - F.lit(w - 1))
-    for o in range(1, w):
-        win = F.zip_with(win, F.slice(prs, 1 + o, n - F.lit(w - 1)), keep_right)
-    selected = F.when(n >= w, F.array_distinct(win)).otherwise(
-        F.array().cast("array<struct<h:bigint,p:int>>")
-    )
-    return base.select(F.col(id_col), F.explode(selected).alias("_fp")).select(
-        id_col,
-        F.col("_fp.h").alias("fp_hash"),
-        F.col("_fp.p").alias("fp_pos"),
-    )
-
-
-def winnow_fingerprints_arrow(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 4,
-    w: int = 4,
-) -> DataFrame:
-    """Arrow (``mapInPandas``) twin of :func:`winnow_fingerprints` for the
-    md5 hash family: identical tokenization (Spark
-    ``split(trim(lower(s)), '\\s+')`` semantics — lowercased, space-only
-    trim, ASCII ``\\s``, leading/trailing empty tokens preserved),
-    identical 60-bit md5-prefix gram hashes, identical
-    rightmost-tie window minima — the selected ``(hash, pos)`` sets are
-    BIT-IDENTICAL to the expression path (pytest asserts this; hashes are
-    exact integers, so there is no float tolerance anywhere).
-
-    Exists because the expression path's cost floor is the interpreted
-    zip_with window fold (~O(n*w) HOF ops/doc with no codegen); this kernel
-    does the same fold as w vectorized numpy passes per Arrow batch.  Still
-    map-only: one ArrowEvalPython stage, no shuffle, no driver traffic —
-    the plan shape at 100 TB is the same as the expression twin's.
-    ``hash_fn="xxhash64"`` has no Python-side implementation, so the
-    production-hash variant stays expression-only by design."""
+    Tokenization follows Spark ``split(trim(lower(s)), '\\s+')`` semantics
+    (lowercased, space-only trim, ASCII ``\\s``, leading/trailing empty
+    tokens preserved); gram hashes are 60-bit md5-prefix BIGINTs the DuckDB
+    oracle reproduces exactly.  Kernel: one ``mapInPandas`` pass doing the
+    window fold as w vectorized numpy passes per Arrow batch — map-only,
+    no shuffle, no driver traffic.  Test reference: the expression form
+    :func:`_winnow_fingerprints_expr` (bit-identical selected sets,
+    pytest-pinned).  Returns (id, fp_hash, fp_pos) rows."""
     import hashlib
     import re as _re
 
@@ -1189,6 +1114,60 @@ def winnow_fingerprints_arrow(
                 )
 
     return df.select(id_col, text_col).mapInPandas(gen, schema)
+
+
+def _winnow_fingerprints_expr(
+    df: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    k: int = 4,
+    w: int = 4,
+) -> DataFrame:
+    """Expression test reference for :func:`winnow_fingerprints`: one
+    ``transform`` over window starts, each folding its ``w``-slice with a
+    rightmost-min ``zip_with`` fold — O(n*w) interpreted HOF ops per doc,
+    map-only, no shuffle.  Same 60-bit md5-prefix gram hashes and the same
+    selected ``(hash, pos)`` sets as the Arrow kernel (pytest-pinned)."""
+    toks = _tokens(F.col(text_col))
+    grams = F.when(
+        F.size(toks) >= k,
+        F.transform(
+            F.sequence(F.lit(1), F.size(toks) - F.lit(k - 1)),
+            lambda i: F.concat_ws(" ", F.slice(toks, i, k)),
+        ),
+    ).otherwise(F.array().cast("array<string>"))
+    pairs = F.transform(
+        grams,
+        lambda g, i: F.struct(_md5_long(g).alias("h"), (i + 1).alias("p")),
+    )
+    # Materialize the hashed-gram array ONCE per row before the window scan:
+    # a per-window slice over the raw expression would re-evaluate the whole
+    # md5 array for every window (O(n^2) hashing — measured 100x slower).
+    # The window minimum is instead built by folding w shifted copies of the
+    # SAME materialized column with zip_with: windows[j] = min(pairs[j..j+w-1]),
+    # rightmost on ties (<= keeps the later element), O(n*w) cheap struct ops.
+    base = df.select(F.col(id_col), pairs.alias("_prs"))
+    prs = F.col("_prs")
+    n = F.size(prs)
+
+    def keep_right(a, x):
+        keep = x.getField("h") <= a.getField("h")
+        return F.struct(
+            F.when(keep, x.getField("h")).otherwise(a.getField("h")).alias("h"),
+            F.when(keep, x.getField("p")).otherwise(a.getField("p")).alias("p"),
+        )
+
+    win = F.slice(prs, 1, n - F.lit(w - 1))
+    for o in range(1, w):
+        win = F.zip_with(win, F.slice(prs, 1 + o, n - F.lit(w - 1)), keep_right)
+    selected = F.when(n >= w, F.array_distinct(win)).otherwise(
+        F.array().cast("array<struct<h:bigint,p:int>>")
+    )
+    return base.select(F.col(id_col), F.explode(selected).alias("_fp")).select(
+        id_col,
+        F.col("_fp.h").alias("fp_hash"),
+        F.col("_fp.p").alias("fp_pos"),
+    )
 
 
 def winnow_candidates(
@@ -1468,6 +1447,7 @@ def _star_contraction(edges: DataFrame, max_rounds: int = 60) -> DataFrame:
 
 
 CC_COLLECT_MAX_EDGES = 200_000
+CC_MIN_LABEL_ROUNDS = 8
 
 
 def _driver_union_find(spark, rows, node_type: str) -> DataFrame:
@@ -1508,125 +1488,89 @@ def connected_components(
     pairs: DataFrame,
     id_a: str = "doc_a",
     id_b: str = "doc_b",
-    max_iter: int = 25,
-    algorithm: str = "auto",
-    switch_after: int = 8,
-    collect_max_edges: int | None = None,
 ) -> DataFrame:
     """Cluster near-duplicate PAIRS into components: ``(node, label)`` where
     ``label`` is the minimum id in the node's connected component — the
     step after candidate generation that picks one canonical document per
     duplicate cluster (keep ``node == label``, drop the rest).
 
-    Algorithm: iterative min-label propagation over the symmetrized edge
-    list — each round every node takes ``min(own label, neighbors' labels)``
-    (one shuffle on node id per round) until a fixpoint, reached in
-    graph-diameter rounds.  Near-dup clusters are shallow (diameter 2-4), so
-    this is 2-5 rounds in practice.  Lineage is
-    truncated every round with ``localCheckpoint`` so the plan does not grow
-    unboundedly with iterations, and each round is exactly ONE Spark action:
-    the did-any-label-decrease convergence signal is an ``observe()`` metric
-    collected by the checkpoint job itself, not a separate old-vs-new
-    comparison pass.  The fixpoint is iteration-order
+    The measured edge count picks the engine:
+
+    - at or under ``CC_COLLECT_MAX_EDGES`` (200k edges — a few MB of
+      driver traffic) the edge list is collected once and labeled with
+      exact driver-side min-root union-find (:func:`_driver_union_find`);
+    - above it, :func:`_cc_min_label` runs ``CC_MIN_LABEL_ROUNDS`` rounds
+      of distributed min-label propagation (shallow near-dup graphs
+      converge in 2-5), and a graph still unconverged after them (deep
+      chains) is handed to :func:`_cc_star_labels` — star contraction,
+      O(log^2 n) rounds on any shape.
+
+    All three give the identical relation (pytest-pinned against a
+    union-find oracle on random graphs).  The fixpoint is iteration-order
     independent (min is idempotent/commutative), which is what makes the
     result reproducible by a SQL transitive-closure oracle.
-
-    ``algorithm``:
-
-    - ``"min_label"`` — pure propagation; raises after ``max_iter`` rounds
-      (diameter-bounded: the right choice when clusters are known shallow).
-    - ``"star"`` — :func:`_star_contraction` from the start (O(log^2 n)
-      rounds on any shape; ~2x the per-round work).
-    - ``"auto"`` (default) — min-label for ``switch_after`` rounds, then
-      fall over to star contraction if not yet converged: shallow near-dup
-      graphs pay nothing extra, pathological chains still terminate.
-
-    ``collect_max_edges`` (r14): the size gate for the small-graph
-    engine — an edge list the measured count puts at or under the cap
-    (default ``CC_COLLECT_MAX_EDGES`` = 200k) is collected once and
-    labeled with exact driver-side min-root union-find (identical
-    values, pytest-pinned); larger graphs run the distributed rounds.
-    Pass ``0`` to force the distributed path (tests / corpus-scale
-    benchmarking).
     """
     edges = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-    # Materialize the edge list ONCE: `pairs` is usually the tail of an
-    # expensive candidate-generation pipeline (minhash/simhash banding over
-    # the whole corpus), and every propagation round references it — without
-    # this checkpoint each round's job would re-run that entire upstream.
-    # The edge table is pair-derived (<< corpus), so this is cheap.
-
-    def star_labels() -> DataFrame:
-        # Label every node of the INPUT edge list: members map through the
-        # star edges, roots and nodes whose only edges are self-loops (the
-        # contraction drops those edges) fall back to their own id — found
-        # by the random-graph property test, where min-label kept a
-        # self-loop-only node the star path silently lost.
-        stars = _star_contraction(edges)
-        nodes = (
-            edges.select(F.col("src").alias("node"))
-            .union(edges.select(F.col("dst").alias("node")))
-            .distinct()
-        )
-        mapped = stars.select(
-            F.col("src").alias("node"), F.col("dst").alias("label")
-        ).distinct()
-        return nodes.join(mapped, "node", "left").select(
-            "node", F.coalesce("label", F.col("node")).alias("label")
-        )
-
-    if algorithm == "star":
-        return star_labels()
-    if algorithm not in ("auto", "min_label"):
-        raise ValueError(f"unknown algorithm {algorithm!r}")
     # r14 perf — SIZE-AWARE small-graph engine (the prune_clusters /
     # curation-seam discipline: COUNT, then pick the engine the measured
     # size justifies).  Each distributed propagation round is a
     # multi-exchange job; on a shallow graph that is 3-5 sequential
     # shuffle jobs to label a pair-derived edge set that is usually
-    # orders of magnitude smaller than the corpus.  At or below
-    # ``collect_max_edges`` (default 200k edges — a few MB of driver
-    # traffic, the bounded-collect class of the seam counts), collect
-    # the checkpointed edge list ONCE and run exact min-root union-find
-    # driver-side; the result is the identical (node, label = component
-    # min) relation as a LocalRelation (equality pytest-pinned against
-    # the forced-distributed path).  A corpus-scale pair table exceeds
-    # the cap and takes the distributed rounds unchanged.  Ids must be
-    # integral or string for the literal relation; anything else (or a
-    # NULL id) falls through to the distributed path.
-    limit = (
-        CC_COLLECT_MAX_EDGES
-        if collect_max_edges is None
-        else int(collect_max_edges)
-    )
-    ed = None
-    if limit > 0:
-        typ = dict(pairs.dtypes).get(id_a)
-        if typ in ("bigint", "int", "smallint", "tinyint", "string"):
-            ed = edges.localCheckpoint(eager=False)
-            if ed.count() <= limit:
-                rows = [(r["src"], r["dst"]) for r in ed.collect()]
-                if all(a is not None and b is not None for a, b in rows):
-                    return _driver_union_find(
-                        pairs.sparkSession, rows, typ
-                    )
-    # lazy: round 1's job materializes both (r14 perf — two fewer
-    # standalone jobs; the checkpoints still cut every later round's
-    # lineage off the upstream candidate pipeline).  `ed` (when the
-    # size gate already materialized the edge list) is reused so the
-    # candidate pipeline is not re-run for the symmetrized union.
-    base = ed if ed is not None else edges
-    sym = base.union(
-        base.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    # orders of magnitude smaller than the corpus.  Ids must be integral
+    # or string for the literal relation; anything else (or a NULL id)
+    # falls through to the distributed path.
+    base = edges
+    typ = dict(pairs.dtypes).get(id_a)
+    if typ in ("bigint", "int", "smallint", "tinyint", "string"):
+        # `base` reuses the materialized edge list below, so the
+        # candidate pipeline is not re-run for the symmetrized union.
+        base = edges.localCheckpoint(eager=False)
+        if base.count() <= CC_COLLECT_MAX_EDGES:
+            rows = [(r["src"], r["dst"]) for r in base.collect()]
+            if all(a is not None and b is not None for a, b in rows):
+                return _driver_union_find(pairs.sparkSession, rows, typ)
+    try:
+        return _cc_min_label(base, "src", "dst", CC_MIN_LABEL_ROUNDS)
+    except _MinLabelNotConverged:
+        # deep chains: min-label would need diameter rounds — hand the
+        # edges to the O(log^2 n) star contraction instead
+        return _cc_star_labels(base, "src", "dst")
+
+
+class _MinLabelNotConverged(RuntimeError):
+    """Raised by :func:`_cc_min_label` when its round budget runs out."""
+
+
+def _cc_min_label(
+    pairs: DataFrame, id_a: str, id_b: str, max_rounds: int
+) -> DataFrame:
+    """Distributed min-label propagation over the symmetrized edge list —
+    each round every node takes ``min(own label, neighbors' labels)`` (one
+    shuffle on node id per round) until a fixpoint, reached in
+    graph-diameter rounds; raises :class:`_MinLabelNotConverged` after
+    ``max_rounds`` rounds without one.  Lineage is truncated every round
+    with ``localCheckpoint`` so the plan does not grow with iterations, and
+    each round is exactly ONE Spark action: the did-any-label-decrease
+    convergence signal is an ``observe()`` metric collected by the
+    checkpoint job itself, not a separate old-vs-new comparison pass."""
+    edges = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
+    # Materialize the edge list ONCE: `pairs` is usually the tail of an
+    # expensive candidate-generation pipeline (minhash/simhash banding over
+    # the whole corpus), and every propagation round references it — without
+    # this checkpoint each round's job would re-run that entire upstream.
+    # The edge table is pair-derived (<< corpus), so this is cheap.  Lazy:
+    # round 1's job materializes both checkpoints (r14 perf — two fewer
+    # standalone jobs).
+    sym = edges.union(
+        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).localCheckpoint(eager=False)
-    rounds = max_iter if algorithm == "min_label" else min(switch_after, max_iter)
     labels = (
         sym.select(F.col("src").alias("node"))
         .distinct()
         .withColumn("label", F.col("node"))
         .localCheckpoint(eager=False)
     )
-    for i in range(rounds):
+    for i in range(max_rounds):
         prop = (
             sym.join(labels.withColumnRenamed("node", "src"), "src")
             .groupBy(F.col("dst").alias("node"))
@@ -1653,14 +1597,30 @@ def connected_components(
         )
         if (obs.get["n_changed"] or 0) == 0:
             return labels
-    if algorithm == "auto":
-        # deep chains: min-label would need diameter rounds — hand the
-        # symmetrized edges to the O(log^2 n) star contraction instead
-        return star_labels()
-    raise RuntimeError(
-        f"connected_components did not converge in {max_iter} rounds "
-        "(unexpectedly deep duplicate chains — use algorithm='auto'/'star' "
-        "for the large-star/small-star contraction)"
+    raise _MinLabelNotConverged(
+        f"min-label propagation did not converge in {max_rounds} rounds"
+    )
+
+
+def _cc_star_labels(pairs: DataFrame, id_a: str, id_b: str) -> DataFrame:
+    """Connected-component labels from :func:`_star_contraction`.  Labels
+    every node of the INPUT edge list: members map through the star edges,
+    roots and nodes whose only edges are self-loops (the contraction drops
+    those edges) fall back to their own id — found by the random-graph
+    property test, where min-label kept a self-loop-only node the star
+    path silently lost."""
+    edges = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
+    stars = _star_contraction(edges)
+    nodes = (
+        edges.select(F.col("src").alias("node"))
+        .union(edges.select(F.col("dst").alias("node")))
+        .distinct()
+    )
+    mapped = stars.select(
+        F.col("src").alias("node"), F.col("dst").alias("label")
+    ).distinct()
+    return nodes.join(mapped, "node", "left").select(
+        "node", F.coalesce("label", F.col("node")).alias("label")
     )
 
 
@@ -1727,8 +1687,6 @@ def prune_clusters(
     length_col: str = "n_chars",
     id_a: str = "doc_a",
     id_b: str = "doc_b",
-    max_iter: int = 25,
-    broadcast_max_ids: int | None = None,
 ) -> DataFrame:
     """Near-dup PRUNING — the step after clustering: keep ONE representative
     per near-dup cluster (longest ``length_col`` wins, ties to the lowest
@@ -1742,7 +1700,7 @@ def prune_clusters(
     Scale shape (r9: SIZE-AWARE, the curation-seam discipline): the
     component table is pair-derived (candidate docs only — usually
     << corpus), and its size is COUNTED, not assumed: at or below
-    ``broadcast_max_ids`` (default 20M) it and everything built from it
+    ``PRUNE_BROADCAST_MAX_IDS`` (20M) it and everything built from it
     broadcast, the representative window runs over the small clustered
     subset only, and the corpus is decided map-side.  On a 30-50%-dup
     crawl — where the clustered set is corpus-scale and a pinned
@@ -1752,17 +1710,12 @@ def prune_clusters(
     `dbt_project/models/staging/*.sql` dedup CTEs would need at corpus
     scale.
     """
-    limit = (
-        PRUNE_BROADCAST_MAX_IDS
-        if broadcast_max_ids is None
-        else int(broadcast_max_ids)
-    )
-    comp = connected_components(pairs, id_a, id_b, max_iter=max_iter)
+    comp = connected_components(pairs, id_a, id_b)
     # shuffle_hash hint in the large regime so neither the static planner
     # nor AQE re-pins a broadcast the measured count just refuted
     bc = (
         F.broadcast
-        if comp.count() <= limit
+        if comp.count() <= PRUNE_BROADCAST_MAX_IDS
         else (lambda d: d.hint("shuffle_hash"))
     )
     sizes = comp.groupBy("label").agg(F.count(F.lit(1)).alias("cluster_size"))

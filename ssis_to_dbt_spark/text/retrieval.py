@@ -504,16 +504,10 @@ def write_bm25_index(
     postings = _postings(df, id_col, text_col)
     # stopword seed as a JVM LocalRelation (r14 perf): a createDataFrame
     # of a local list spreads over default-parallelism Python slices and
-    # its write pays a repartition shuffle; the literal explode is one
+    # its write pays a repartition shuffle; the literal relation is one
     # single-task write with no Python workers
     base = sorted(set(stopwords or []))
-    if base:
-        quoted = ", ".join("'" + w.replace("'", "\\'") + "'" for w in base)
-        stop = spark.range(1).selectExpr(
-            f"explode(array({quoted})) AS term"
-        )
-    else:
-        stop = spark.range(0).selectExpr("CAST(NULL AS STRING) AS term")
+    stop = local_rows_df(spark, [(w,) for w in base], "term string")
     stop_w = stop
     if max_df is not None:
         n_docs = df.count()
@@ -900,11 +894,12 @@ def stop_bm25_terms(
     table.  Existing postings rows for them stay on disk (no parquet
     rewrite) but become unreachable — probes drop stopped terms before
     the scan and appends write no further postings for them; a later
-    full rebuild (write_bm25_index) physically reclaims the space."""
+    full rebuild (write_bm25_index) physically reclaims the space.  The
+    terms are one literal relation, so each call appends one file."""
     if not terms:
         return
-    spark.createDataFrame(
-        [(t,) for t in sorted(set(terms))], "term string"
+    local_rows_df(
+        spark, [(t,) for t in sorted(set(terms))], "term string"
     ).write.mode("append").format("parquet").saveAsTable(
         f"{table_prefix}_stopterms"
     )

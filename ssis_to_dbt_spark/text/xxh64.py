@@ -3,12 +3,12 @@
 XXH64 is a fully-specified public algorithm (Yann Collet's xxHash,
 github.com/Cyan4973/xxHash; Spark carries a verbatim implementation in
 ``sql/catalyst/.../expressions/XXH64.java``).  This module reimplements it
-from the public spec so Python-side kernels (Arrow DSIR scoring) and
-pytest oracles can reproduce Spark's 64-bit hashes exactly — DuckDB has
-no xxhash64, so the production xxhash64 twins (``minhash_pairs_docs``,
-``simhash_pairs_docs``, ``lsh_topk_embeddings``) were previously
-rows-only; with this module they are value-pinned against a Python
-oracle in pytest.
+from the public spec so pytest oracles can reproduce Spark's 64-bit
+hashes exactly.  No engine module imports it: its only importers are the
+tests (``tests/test_xxh64.py``).  DuckDB has no xxhash64, so the xxhash64
+operator family (``minhash_pairs_docs``, ``simhash_pairs_docs``,
+``lsh_topk_embeddings``) would otherwise be rows-only; with this module
+those entries are value-pinned against a Python oracle.
 
 Semantics mirrored from Spark (seed 42, per-column chaining):
 

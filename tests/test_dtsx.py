@@ -88,6 +88,28 @@ class TestRewrite:
         with pytest.raises(ValueError, match="unbound"):
             rewrite_tsql("SELECT * FROM t WHERE a = ?", {})
 
+    @pytest.mark.parametrize(
+        "val",
+        ["C:\\data\\in.csv", "C:\\out\\", "tab\\t", "O'Brien", "why?"],
+    )
+    def test_string_values_reach_spark_verbatim(self, spark, val):
+        # T-SQL has no backslash escapes; Spark string literals do, so
+        # Windows paths and a trailing backslash must survive the rewrite
+        lit = "'" + val.replace("'", "''") + "'"
+        for sql in (
+            rewrite_tsql("SELECT ? AS v", {}, params=[val]),
+            rewrite_tsql("SELECT @V AS v", {}, variables={"User::V": val}),
+            rewrite_tsql(f"SELECT {lit} AS v", {}),
+        ):
+            assert spark.sql(sql).collect()[0]["v"] == val, sql
+
+    def test_bound_bracket_like_keeps_backslash(self, spark):
+        sql = rewrite_tsql(
+            "SELECT x FROM VALUES ('a\\b1'), ('ab1') AS t(x) WHERE x LIKE ?",
+            {}, params=["a\\b[0-9]"],
+        )
+        assert [r["x"] for r in spark.sql(sql).collect()] == ["a\\b1"]
+
     def test_parenthesized_top(self):
         out = rewrite_tsql("SELECT TOP (5) x FROM t", {"t": "v"})
         assert out == "SELECT x FROM v LIMIT 5"

@@ -121,7 +121,7 @@ class TestStarContractionProperty:
     )
     @settings(**SPARK_SETTINGS)
     def test_star_labels_match_python_union_find(self, spark, edges):
-        import ssis_to_dbt_spark.text as tx
+        from ssis_to_dbt_spark.text.dedup import _cc_star_labels
 
         edges = [(a, b) for a, b in edges if a != b]
         if not edges:
@@ -129,7 +129,7 @@ class TestStarContractionProperty:
         df = spark.createDataFrame(edges, "doc_a long, doc_b long")
         got = {
             r["node"]: r["label"]
-            for r in tx.connected_components(df, algorithm="star").collect()
+            for r in _cc_star_labels(df, "doc_a", "doc_b").collect()
         }
         # model: union-find with min-label canonicalization
         parent: dict[int, int] = {}

@@ -2248,7 +2248,8 @@ class TestDistributedGlobalRank:
         }
         assert got == want
 
-    def test_sorted_neighborhood_engines_identical(self, spark):
+    def test_sorted_neighborhood_engines_identical(self, spark, monkeypatch):
+        from ssis_to_dbt_spark.operators import joins
         from ssis_to_dbt_spark.operators.joins import (
             sorted_neighborhood_pairs,
         )
@@ -2261,16 +2262,12 @@ class TestDistributedGlobalRank:
         a = sorted(map(tuple, sorted_neighborhood_pairs(
             df, "id", "name", key, window=3
         ).collect()))
+        # a zero threshold puts any measured count in the distributed regime
+        monkeypatch.setattr(joins, "SNB_WINDOW_RANK_MAX_ROWS", 0)
         b = sorted(map(tuple, sorted_neighborhood_pairs(
-            df, "id", "name", key, window=3, rank_engine="distributed"
+            df, "id", "name", key, window=3
         ).collect()))
         assert a == b and len(a) > 0
-        import pytest as _pt
-
-        with _pt.raises(ValueError, match="rank_engine"):
-            sorted_neighborhood_pairs(
-                df, "id", "name", key, rank_engine="rdd"
-            )
 
     def test_distributed_plan_has_no_global_window(self, spark):
         from ssis_to_dbt_spark.operators.window import (
@@ -2284,12 +2281,13 @@ class TestDistributedGlobalRank:
         assert "partitionBy" not in plan or "_pid" in plan
         assert "SinglePartition" not in plan.split("Window")[-1][:400]
 
-    def test_auto_rank_engine_measures_and_switches(self, spark):
-        """r10 (r9 VERDICT #3): the default rank_engine='auto' measures
-        the row count — below the threshold it plans the single-partition
-        window; above it (threshold forced to 0) the distributed rank,
-        with no empty-frame global Window in the plan.  Both regimes
+    def test_auto_rank_engine_measures_and_switches(self, spark, monkeypatch):
+        """r10 (r9 VERDICT #3): sorted_neighborhood_pairs measures the row
+        count — below the threshold it plans the single-partition window;
+        above it (threshold forced to 0) the distributed rank, with no
+        empty-frame global Window in the plan.  Both regimes
         value-identical."""
+        from ssis_to_dbt_spark.operators import joins
         from ssis_to_dbt_spark.operators.joins import (
             sorted_neighborhood_pairs,
         )
@@ -2302,9 +2300,8 @@ class TestDistributedGlobalRank:
         small = sorted_neighborhood_pairs(df, "id", "name", key, window=3)
         plan_small = small._jdf.queryExecution().executedPlan().toString()
         assert "SinglePartition" in plan_small  # window regime chosen
-        big = sorted_neighborhood_pairs(
-            df, "id", "name", key, window=3, auto_rank_threshold=0
-        )
+        monkeypatch.setattr(joins, "SNB_WINDOW_RANK_MAX_ROWS", 0)
+        big = sorted_neighborhood_pairs(df, "id", "name", key, window=3)
         plan_big = big._jdf.queryExecution().executedPlan().toString()
         # distributed regime: any Window node keys on the bucket id
         for seg in plan_big.split("Window")[1:]:

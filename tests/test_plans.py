@@ -299,10 +299,12 @@ class TestRound6PlanShapes:
         assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
     def test_winnow_fingerprints_map_only_and_jvm_side(self, spark):
-        from ssis_to_dbt_spark.text import winnow_fingerprints
+        # the expression reference of winnow_fingerprints (the public
+        # Arrow kernel's plan is pinned by test_winnow_arrow_map_only)
+        from ssis_to_dbt_spark.text.dedup import _winnow_fingerprints_expr
 
         docs = spark.read.parquet(f"{SF}/documents.parquet")
-        plan = winnow_fingerprints(docs)._jdf.queryExecution().explainString(
+        plan = _winnow_fingerprints_expr(docs)._jdf.queryExecution().explainString(
             spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
                 "simple"
             )
@@ -438,10 +440,10 @@ class TestArrowKernelPlanShapes:
         )
 
     def test_winnow_arrow_map_only(self, spark):
-        from ssis_to_dbt_spark.text.dedup import winnow_fingerprints_arrow
+        from ssis_to_dbt_spark.text.dedup import winnow_fingerprints
 
         docs = spark.read.parquet(f"{SF}/documents.parquet")
-        plan = self._plan(spark, winnow_fingerprints_arrow(docs))
+        plan = self._plan(spark, winnow_fingerprints(docs))
         assert "Exchange" not in plan
         assert plan.count("MapInPandas") == 1
 
@@ -584,31 +586,35 @@ class TestSizeAwareSeams:
         assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
         assert "ShuffledHashJoin" not in plan and "SortMergeJoin" not in plan
 
-    def test_large_drop_set_shuffles(self, spark):
+    def test_large_drop_set_shuffles(self, spark, monkeypatch):
+        from ssis_to_dbt_spark import curation
         from ssis_to_dbt_spark.curation import drop_seam_anti_join
 
         docs, drop = self._frames(spark)
         # force the large regime: any measured count exceeds a 0 threshold
-        out = drop_seam_anti_join(docs, drop, broadcast_max_ids=0)
+        monkeypatch.setattr(curation, "SEAM_BROADCAST_MAX_IDS", 0)
+        out = drop_seam_anti_join(docs, drop)
         plan = self._plan(out, spark)
         assert "ShuffledHashJoin" in plan and "LeftAnti" in plan
         assert "BroadcastHashJoin" not in plan
 
-    def test_regimes_value_identical(self, spark):
+    def test_regimes_value_identical(self, spark, monkeypatch):
+        from ssis_to_dbt_spark import curation
         from ssis_to_dbt_spark.curation import drop_seam_anti_join
 
         docs, drop = self._frames(spark)
         a = sorted(r["doc_id"] for r in
                    drop_seam_anti_join(docs, drop).collect())
+        monkeypatch.setattr(curation, "SEAM_BROADCAST_MAX_IDS", 0)
         b = sorted(r["doc_id"] for r in
-                   drop_seam_anti_join(docs, drop,
-                                       broadcast_max_ids=0).collect())
+                   drop_seam_anti_join(docs, drop).collect())
         assert a == b and len(a) > 0
 
-    def test_stage_seams_use_size_aware_join(self, spark):
+    def test_stage_seams_use_size_aware_join(self, spark, monkeypatch):
         """stage_dedup / stage_clean route through the seam helper: the
         forced-large regime must produce a shuffled anti-join end-to-end
         while keeping identical survivors."""
+        from ssis_to_dbt_spark import curation
         from ssis_to_dbt_spark.curation import (
             stage_clean,
             stage_dedup,
@@ -620,7 +626,8 @@ class TestSizeAwareSeams:
         gated = stage_gate(docs).localCheckpoint()
         pruned = stage_prune(gated).localCheckpoint()
         small = stage_dedup(gated, pruned)
-        large = stage_dedup(gated, pruned, broadcast_max_ids=0)
+        monkeypatch.setattr(curation, "SEAM_BROADCAST_MAX_IDS", 0)
+        large = stage_dedup(gated, pruned)
         assert "ShuffledHashJoin" in self._plan(large, spark)
         assert "BroadcastHashJoin" in self._plan(small, spark)
         assert sorted(r["doc_id"] for r in small.collect()) == sorted(

@@ -461,10 +461,11 @@ class TestCrawlIngestPersistedIndex:
         assert dsir_model_from_state(st.dsir_state, 256) == \
             dsir_model_from_state(r.state.dsir_state, 256)
 
-    def test_backfill_regime_value_identical(self, spark):
+    def test_backfill_regime_value_identical(self, spark, monkeypatch):
         """Forcing the backfill regime (batch over the broadcast cap)
         must keep reject/accept/score identical — the size-aware probe
         only changes the plan, never the answer."""
+        from ssis_to_dbt_spark import ingest
         from ssis_to_dbt_spark.ingest import ingest_batch, seed_ingest_state
         from ssis_to_dbt_spark.sources.readers import testdata
 
@@ -472,7 +473,8 @@ class TestCrawlIngestPersistedIndex:
         st = seed_ingest_state(docs.filter(F.col("doc_id") % 5 >= 2))
         b1 = docs.filter(F.col("doc_id") % 5 == 0)
         small = ingest_batch(b1, st)
-        big = ingest_batch(b1, st, batch_broadcast_max_docs=0)
+        monkeypatch.setattr(ingest, "BATCH_BROADCAST_MAX_DOCS", 0)
+        big = ingest_batch(b1, st)
         assert sorted(map(tuple, small.rejected.collect())) == sorted(
             map(tuple, big.rejected.collect())
         )
@@ -1113,9 +1115,12 @@ class TestWithinBatchDedupHotSkew:
             syl[i % 13] + syl[(i // 13) % 13] + tag for i in range(53)
         ])
 
-    def test_viral_batch_bounded_fanout_and_shuffle_regime(self, spark):
+    def test_viral_batch_bounded_fanout_and_shuffle_regime(
+        self, spark, monkeypatch
+    ):
         import re
 
+        from ssis_to_dbt_spark import ingest
         from ssis_to_dbt_spark.ingest import ingest_batch, seed_ingest_state
 
         schema = "doc_id long, text string, lang string, n_chars int"
@@ -1130,9 +1135,10 @@ class TestWithinBatchDedupHotSkew:
             [(1000, seed_t, "en", len(seed_t))], schema
         )
         st = seed_ingest_state(seed)
+        monkeypatch.setattr(ingest, "BATCH_BROADCAST_MAX_DOCS", 50)
         r = ingest_batch(
             batch, st, dedup_within_batch=True, checkpoint=False,
-            band_bucket_cap=self.CAP, batch_broadcast_max_docs=50,
+            band_bucket_cap=self.CAP,
         )
 
         # plan: the band self-join runs in the shuffle regime — the

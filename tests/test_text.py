@@ -508,22 +508,27 @@ class TestConnectedComponents:
         )
         import pytest as _pytest
 
-        with _pytest.raises(RuntimeError, match="converge"):
-            # collect_max_edges=0 forces the distributed rounds — the
-            # r14 size gate would otherwise label this 10-edge chain
-            # driver-side without iterating at all
-            tx.connected_components(pairs, max_iter=2,
-                                    algorithm="min_label",
-                                    collect_max_edges=0)
+        from ssis_to_dbt_spark.text.dedup import _cc_min_label
 
-    def test_auto_switches_to_star_on_deep_chain(self, spark):
+        # the distributed min-label path itself — the size gate of
+        # connected_components would label this 10-edge chain
+        # driver-side without iterating at all
+        with _pytest.raises(RuntimeError, match="converge"):
+            _cc_min_label(pairs, "doc_a", "doc_b", max_rounds=2)
+
+    def test_auto_switches_to_star_on_deep_chain(self, spark, monkeypatch):
         # a 1000-node path graph: diameter 999 >> any sane min-label budget;
-        # auto must fall over to star contraction and still converge
+        # connected_components must fall over to star contraction and
+        # still converge (3 min-label rounds, then star)
+        from ssis_to_dbt_spark.text import dedup
+
+        monkeypatch.setattr(dedup, "CC_COLLECT_MAX_EDGES", 0)
+        monkeypatch.setattr(dedup, "CC_MIN_LABEL_ROUNDS", 3)
         pairs = spark.createDataFrame(
             [(i, i + 1) for i in range(999)], "doc_a long, doc_b long"
         )
         out = {r["node"]: r["label"]
-               for r in tx.connected_components(pairs, switch_after=3).collect()}
+               for r in tx.connected_components(pairs).collect()}
         assert len(out) == 1000 and set(out.values()) == {0}
 
     def test_star_matches_min_label(self, spark):
@@ -534,12 +539,13 @@ class TestConnectedComponents:
             + [(30, 31)]
             + [(40 + i, 41 + i) for i in range(6)]
         )
+        from ssis_to_dbt_spark.text.dedup import _cc_min_label, _cc_star_labels
+
         pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
         star = {(r["node"], r["label"])
-                for r in tx.connected_components(pairs, algorithm="star").collect()}
+                for r in _cc_star_labels(pairs, "doc_a", "doc_b").collect()}
         minl = {(r["node"], r["label"])
-                for r in tx.connected_components(
-                    pairs, algorithm="min_label").collect()}
+                for r in _cc_min_label(pairs, "doc_a", "doc_b", 25).collect()}
         assert star == minl
 
 
@@ -1290,6 +1296,24 @@ class TestWinnowing:
         pairs = tx.winnow_candidates(df, min_shared=2).collect()
         assert [(p["doc_a"], p["doc_b"]) for p in pairs] == [(1, 2)]
 
+    def test_default_path_matches_expression_reference(self, spark):
+        # winnow_candidates' own fingerprint pass (the Arrow kernel) gives
+        # the pairs the expression reference gives, on the edge-case docs
+        # plus a planted near-duplicate pair
+        from ssis_to_dbt_spark.text.dedup import _winnow_fingerprints_expr
+
+        shared = " ".join(f"c{i}" for i in range(12))
+        rows = TestArrowTwinsRound7.EDGE_DOCS + [
+            (13, shared + " tail"), (14, "head " + shared),
+        ]
+        df = spark.createDataFrame(rows, "doc_id long, text string")
+        got = sorted(map(tuple, tx.winnow_candidates(df, min_shared=1).collect()))
+        ref = sorted(map(tuple, tx.winnow_candidates(
+            df, min_shared=1, fingerprints=_winnow_fingerprints_expr(df)
+        ).collect()))
+        assert got == ref
+        assert (13, 14) in {(a, b) for a, b, _ in got}
+
     def test_hot_hash_cap(self, spark):
         # the same text in 30 docs: every hash hits 30 docs > cap 10 -> no
         # candidate survives; with the cap off, all 435 pairs appear
@@ -1826,26 +1850,26 @@ class TestArrowTwinsRound7:
 
     def test_winnow_bit_identical_on_fixture(self, spark):
         from ssis_to_dbt_spark.text.dedup import (
+            _winnow_fingerprints_expr,
             winnow_fingerprints,
-            winnow_fingerprints_arrow,
         )
 
         docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-        a = set(map(tuple, winnow_fingerprints(docs, k=4, w=4).collect()))
-        b = set(map(tuple, winnow_fingerprints_arrow(docs, k=4, w=4).collect()))
+        a = set(map(tuple, _winnow_fingerprints_expr(docs, k=4, w=4).collect()))
+        b = set(map(tuple, winnow_fingerprints(docs, k=4, w=4).collect()))
         assert a == b and len(a) > 0
 
     def test_winnow_bit_identical_on_edge_cases(self, spark):
         from ssis_to_dbt_spark.text.dedup import (
+            _winnow_fingerprints_expr,
             winnow_fingerprints,
-            winnow_fingerprints_arrow,
         )
 
         df = self._edge_df(spark)
         for k, w in ((4, 4), (2, 3), (1, 1)):
-            a = set(map(tuple, winnow_fingerprints(df, k=k, w=w).collect()))
+            a = set(map(tuple, _winnow_fingerprints_expr(df, k=k, w=w).collect()))
             b = set(
-                map(tuple, winnow_fingerprints_arrow(df, k=k, w=w).collect())
+                map(tuple, winnow_fingerprints(df, k=k, w=w).collect())
             )
             assert a == b, f"winnow mismatch at k={k} w={w}"
 
@@ -2189,8 +2213,8 @@ class TestArrowTwinsUnicode:
             text_signals_arrow,
         )
         from ssis_to_dbt_spark.text.dedup import (
+            _winnow_fingerprints_expr,
             winnow_fingerprints,
-            winnow_fingerprints_arrow,
         )
 
         df = spark.createDataFrame(self.ROWS, "doc_id long, text string")
@@ -2228,8 +2252,8 @@ class TestArrowTwinsUnicode:
             r["doc_id"]: r.asDict() for r in gopher_signals_arrow(df).collect()
         }
         assert ge == ga
-        we = set(map(tuple, winnow_fingerprints(df, k=2, w=2).collect()))
-        wa = set(map(tuple, winnow_fingerprints_arrow(df, k=2, w=2).collect()))
+        we = set(map(tuple, _winnow_fingerprints_expr(df, k=2, w=2).collect()))
+        wa = set(map(tuple, winnow_fingerprints(df, k=2, w=2).collect()))
         assert we == wa
         from ssis_to_dbt_spark.text.dedup import (
             minhash_signatures_md5,
@@ -2426,38 +2450,9 @@ class TestDsir:
         with pytest.raises(ValueError, match="buckets"):
             dsir_importance(self._df(spark), F.col("lang") == "en", buckets=1)
 
-    def test_xxhash64_production_twin_contract(self, spark):
-        """The xxhash64 twin rebuckets grams (weights differ) but keeps the
-        schema, n_feats accounting, featureless-doc handling, and the md5
-        Gumbel draw identical — the usual md5/xxhash64 twin split."""
-        from ssis_to_dbt_spark.text.analysis import dsir_importance
-
-        df = self._df(spark)
-        tgt = F.col("lang") == "en"
-        md5 = {
-            r["doc_id"]: r
-            for r in dsir_importance(df, tgt, buckets=64).collect()
-        }
-        xx = {
-            r["doc_id"]: r
-            for r in dsir_importance(
-                df, tgt, buckets=64, hash_fn="xxhash64"
-            ).collect()
-        }
-        assert set(md5) == set(xx)
-        for did in md5:
-            assert md5[did]["n_feats"] == xx[did]["n_feats"]
-            assert md5[did]["gumbel_units"] == xx[did]["gumbel_units"]
-        # featureless doc unaffected by the hash (xxhash64(NULL) guard)
-        assert xx[8]["n_feats"] == 0 and xx[8]["weight_units"] == 0
-        # the twin still separates target-like from off-target
-        assert xx[6]["weight_units"] > xx[7]["weight_units"]
-        with pytest.raises(ValueError, match="hash_fn"):
-            dsir_importance(df, tgt, hash_fn="sha1")
-
     def test_fit_then_apply_bit_identical_to_fused(self, spark):
-        """dsir_fit + dsir_score reproduces dsir_importance exactly for
-        both hash paths (same integers, same in-order sums)."""
+        """dsir_fit + dsir_score reproduces dsir_importance exactly (same
+        integers, same in-order sums)."""
         from ssis_to_dbt_spark.text.analysis import (
             dsir_fit,
             dsir_importance,
@@ -2466,18 +2461,13 @@ class TestDsir:
 
         df = self._df(spark)
         tgt = F.col("lang") == "en"
-        for hf in ("md5", "xxhash64"):
-            fused = sorted(
-                tuple(r)
-                for r in dsir_importance(
-                    df, tgt, buckets=64, hash_fn=hf
-                ).collect()
-            )
-            model = dsir_fit(df, tgt, buckets=64, hash_fn=hf)
-            applied = sorted(
-                tuple(r) for r in dsir_score(df, model, hash_fn=hf).collect()
-            )
-            assert fused == applied, hf
+        fused = sorted(
+            tuple(r)
+            for r in dsir_importance(df, tgt, buckets=64).collect()
+        )
+        model = dsir_fit(df, tgt, buckets=64)
+        applied = sorted(tuple(r) for r in dsir_score(df, model).collect())
+        assert fused == applied
 
     def test_score_heldout_corpus_uses_smoothed_default(self, spark):
         """Scoring a corpus the model never saw: unseen grams land in
@@ -2536,27 +2526,10 @@ class TestDsir:
             _dsir_fit_state_expr(df, tgt, 32), 32
         )
 
-    def test_fit_arrow_engine_validation(self, spark):
-        from ssis_to_dbt_spark.text.analysis import (
-            _dsir_fit_state_expr,
-            dsir_fit,
-            dsir_model_from_state,
-        )
-
-        df = self._df(spark)
-        # r9: the arrow kernel gained xxhash64 via the pure-Python spec
-        # twin — fit must be bit-equal to the JVM expression reference.
-        tgt = F.col("lang") == "en"
-        assert dsir_fit(
-            df, tgt, buckets=32, hash_fn="xxhash64"
-        ) == dsir_model_from_state(
-            _dsir_fit_state_expr(df, tgt, 32, hash_fn="xxhash64"), 32
-        )
-
     def test_merge_state_refit_bit_equals_full_refit(self, spark):
         """Incremental refit (growing reference corpus): fit-state on two
         disjoint slices, merge (sum-of-sums), derive — model must be
-        BIT-EQUAL to the single-pass full fit, for both hash functions."""
+        BIT-EQUAL to the single-pass full fit."""
         from ssis_to_dbt_spark.text.analysis import (
             dsir_fit,
             dsir_fit_state,
@@ -2566,16 +2539,11 @@ class TestDsir:
 
         df = self._df(spark)
         tgt = F.col("lang") == "en"
-        for hf in ("md5", "xxhash64"):
-            full = dsir_fit(df, tgt, buckets=64, hash_fn=hf)
-            s1 = dsir_fit_state(
-                df.filter(F.col("doc_id") <= 4), tgt, 64, hash_fn=hf
-            )
-            s2 = dsir_fit_state(
-                df.filter(F.col("doc_id") > 4), tgt, 64, hash_fn=hf
-            )
-            merged = dsir_model_from_state(dsir_merge_state(s1, s2), 64)
-            assert merged == full, hf
+        full = dsir_fit(df, tgt, buckets=64)
+        s1 = dsir_fit_state(df.filter(F.col("doc_id") <= 4), tgt, 64)
+        s2 = dsir_fit_state(df.filter(F.col("doc_id") > 4), tgt, 64)
+        merged = dsir_model_from_state(dsir_merge_state(s1, s2), 64)
+        assert merged == full
 
     def test_merge_state_with_empty_delta_is_identity(self, spark):
         from ssis_to_dbt_spark.text.analysis import (
@@ -2657,29 +2625,6 @@ class TestDsir:
         )
         assert a == b
 
-    def test_score_engine_validation(self, spark):
-        from ssis_to_dbt_spark.text.analysis import (
-            _dsir_score_expr,
-            dsir_fit,
-            dsir_score,
-        )
-
-        df = self._df(spark)
-        # r9: arrow + xxhash64 now supported (pure-Python spec twin) —
-        # scores must be bit-equal to the JVM expression reference.
-        model = dsir_fit(df, F.col("lang") == "en", buckets=32,
-                         hash_fn="xxhash64")
-        a = sorted(
-            tuple(r)
-            for r in _dsir_score_expr(df, model, hash_fn="xxhash64").collect()
-        )
-        b = sorted(
-            tuple(r)
-            for r in dsir_score(df, model, hash_fn="xxhash64").collect()
-        )
-        assert a == b
-
-
 class TestCurationPipeline:
     """End-to-end composed curation chain (gate -> dedup prune ->
     decontaminate -> DSIR select -> temperature mixture -> pack): the
@@ -2747,7 +2692,8 @@ class TestPruneClustersSizeAware:
     identical (cluster_id, cluster_size, kept) assignment with no
     broadcast of the component table in its plan."""
 
-    def test_regimes_value_identical_and_plans_differ(self, spark):
+    def test_regimes_value_identical_and_plans_differ(self, spark, monkeypatch):
+        from ssis_to_dbt_spark.text import dedup
         from ssis_to_dbt_spark.text.dedup import (
             minhash_candidates_md5,
             prune_clusters,
@@ -2760,7 +2706,8 @@ class TestPruneClustersSizeAware:
             docs, num_hashes=8, bands=4
         ).localCheckpoint()
         small = prune_clusters(docs, pairs)
-        large = prune_clusters(docs, pairs, broadcast_max_ids=0)
+        monkeypatch.setattr(dedup, "PRUNE_BROADCAST_MAX_IDS", 0)
+        large = prune_clusters(docs, pairs)
         assert sorted(map(tuple, small.collect())) == sorted(
             map(tuple, large.collect())
         )
@@ -3571,6 +3518,33 @@ class TestIndexSkewLifecycle:
         }
         assert "common" not in terms_left and "word" not in terms_left
         assert {"rare", "token"} <= terms_left
+
+    def test_stopwords_with_backslash_and_quote_stored_verbatim(
+        self, spark, tmp_path
+    ):
+        """Stopwords reach the stopterm table as written — a backslash
+        inside or at the end of a word, and a quote — at write time and
+        through stop_bm25_terms, and a probe drops each of them."""
+        from ssis_to_dbt_spark.text.retrieval import (
+            bm25_index_probe,
+            read_bm25_index,
+            stop_bm25_terms,
+            write_bm25_index,
+        )
+
+        odd = ["back\\slash", "tail\\", "o'neil", "x\\'y"]
+        docs = self._mkdocs(spark, range(4), " ".join(odd) + " keep")
+        prefix = "bm25esc_" + tmp_path.name
+        write_bm25_index(
+            docs, prefix, str(tmp_path / "t"), stopwords=odd[:2]
+        )
+        stop_bm25_terms(spark, prefix, odd[2:])
+        stored = {r["term"] for r in spark.table(f"{prefix}_stopterms").collect()}
+        assert stored == set(odd)
+        idx = read_bm25_index(spark, prefix)
+        for w in odd:
+            assert bm25_index_probe(idx, {"q": [w]}).count() == 0, w
+        assert bm25_index_probe(idx, {"q": ["keep"]}).count() == 4
 
     def test_term_audit_flags_creeper_and_stop_remediates(
         self, spark, tmp_path

@@ -5,6 +5,7 @@ generated documents) keeps runtime bounded, mirroring
 test_expressions_property.py.
 """
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -415,13 +416,13 @@ class TestArrowTwinProperties:
     @settings(**SETTINGS)
     def test_winnow_arrow_matches_expr(self, spark, docs):
         from ssis_to_dbt_spark.text.dedup import (
+            _winnow_fingerprints_expr,
             winnow_fingerprints,
-            winnow_fingerprints_arrow,
         )
 
         df = _rows(spark, docs)
-        a = set(map(tuple, winnow_fingerprints(df, k=2, w=3).collect()))
-        b = set(map(tuple, winnow_fingerprints_arrow(df, k=2, w=3).collect()))
+        a = set(map(tuple, _winnow_fingerprints_expr(df, k=2, w=3).collect()))
+        b = set(map(tuple, winnow_fingerprints(df, k=2, w=3).collect()))
         assert a == b
 
 
@@ -592,14 +593,13 @@ class TestConnectedComponentsProperty:
     @settings(max_examples=4, deadline=None,
               suppress_health_check=[HealthCheck.function_scoped_fixture])
     def test_min_label_matches_union_find(self, spark, graphs):
+        from ssis_to_dbt_spark.text.dedup import _cc_min_label
+
         edges = _flatten(graphs)
         df = spark.createDataFrame(edges, "doc_a int, doc_b int")
         got = {
             r["node"]: r["label"]
-            for r in tx.connected_components(
-                df, algorithm="min_label", max_iter=60,
-                collect_max_edges=0,
-            ).collect()
+            for r in _cc_min_label(df, "doc_a", "doc_b", 60).collect()
         }
         assert got == _uf_oracle(edges)
 
@@ -607,13 +607,13 @@ class TestConnectedComponentsProperty:
     @settings(max_examples=4, deadline=None,
               suppress_health_check=[HealthCheck.function_scoped_fixture])
     def test_star_contraction_matches_union_find(self, spark, graphs):
+        from ssis_to_dbt_spark.text.dedup import _cc_star_labels
+
         edges = _flatten(graphs)
         df = spark.createDataFrame(edges, "doc_a int, doc_b int")
         got = {
             r["node"]: r["label"]
-            for r in tx.connected_components(
-                df, algorithm="star"
-            ).collect()
+            for r in _cc_star_labels(df, "doc_a", "doc_b").collect()
         }
         assert got == _uf_oracle(edges)
 
@@ -621,17 +621,20 @@ class TestConnectedComponentsProperty:
     @settings(max_examples=3, deadline=None,
               suppress_health_check=[HealthCheck.function_scoped_fixture])
     def test_auto_switchover_matches_union_find(self, spark, graphs):
-        # switch_after=1 forces the min-label -> star fallover on any graph
-        # that needs more than one propagation round
+        # one min-label round forces the min-label -> star fallover on any
+        # graph that needs more than one propagation round, and a zero
+        # edge cap keeps the graph off the driver-side union-find
+        from ssis_to_dbt_spark.text import dedup
+
         edges = _flatten(graphs)
         df = spark.createDataFrame(edges, "doc_a int, doc_b int")
-        got = {
-            r["node"]: r["label"]
-            for r in tx.connected_components(
-                df, algorithm="auto", switch_after=1,
-                collect_max_edges=0,
-            ).collect()
-        }
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(dedup, "CC_COLLECT_MAX_EDGES", 0)
+            mp.setattr(dedup, "CC_MIN_LABEL_ROUNDS", 1)
+            got = {
+                r["node"]: r["label"]
+                for r in tx.connected_components(df).collect()
+            }
         assert got == _uf_oracle(edges)
 
     @given(graphs=edge_lists)
