@@ -560,8 +560,10 @@ def rewrite_tsql(
     contract, applied AFTER parameter substitution so bound values fold
     too).
 
-    Bracket stripping is literal-aware (r14): ``[dbo].[T]`` quoting
-    strips, but brackets INSIDE string literals survive — they carry
+    Every substitution is literal-aware: table names, ``@Var`` and ``?``
+    inside a string literal stay as written.  So is bracket stripping
+    (r14): ``[dbo].[T]`` quoting strips, but brackets INSIDE string
+    literals survive — they carry
     T-SQL LIKE character classes, which
     :func:`_rewrite_like_brackets` translates to ``regexp_like`` with
     SQL Server semantics after parameter substitution.
@@ -569,47 +571,49 @@ def rewrite_tsql(
     Every string literal of the output is in Spark's escaped form: a
     T-SQL backslash is a plain character, so literal backslashes double,
     as they do in bound values (:func:`_sql_literal`)."""
-    lparts = re.split(r"('(?:[^']|'')*')", sql)
-    for _k in range(len(lparts)):
-        if _k % 2:
-            lparts[_k] = lparts[_k].replace("\\", "\\\\")
-        else:
-            lparts[_k] = lparts[_k].replace("[", "").replace("]", "")
-    s = "".join(lparts).rstrip().rstrip(";")
-    for t in sorted(table_views, key=len, reverse=True):
-        s = re.sub(
-            rf"(?<![A-Za-z0-9_.]){re.escape(t)}(?![A-Za-z0-9_.])",
+    views = [
+        (
+            re.compile(
+                rf"(?<![A-Za-z0-9_.]){re.escape(t)}(?![A-Za-z0-9_.])",
+                re.IGNORECASE,
+            ),
             table_views[t],
-            s,
-            flags=re.IGNORECASE,
         )
+        for t in sorted(table_views, key=len, reverse=True)
+    ]
+    lits = {}
     for qual, val in (variables or {}).items():
-        bare = qual.split("::")[-1]
-        lit = _sql_literal(val)
-        s = re.sub(rf"@{re.escape(bare)}\b", lambda _m: lit, s)
-    # ? placeholders substitute OUTSIDE string literals only, so a literal
-    # (pre-existing or just injected) containing '?' is never touched and
-    # never counted as unbound
-    parts = re.split(r"('(?:[^']|'')*')", s)  # odd indices = quoted literals
+        lits.setdefault(qual.split("::")[-1], _sql_literal(val))
+    # @Var references and ? placeholders in ONE scan, so a substituted
+    # value is never scanned again (a '?' inside it is not a placeholder)
+    names = "|".join(
+        re.escape(v) for v in sorted(lits, key=len, reverse=True)
+    )
+    refs = re.compile(rf"\?|@({names})\b" if names else r"\?")
     it = iter(params or [])
-    rebuilt = []
+
+    def ref(m: re.Match) -> str:
+        if m.group(0) != "?":
+            return lits[m.group(1)]
+        try:
+            return _sql_literal(next(it))
+        except StopIteration:
+            raise ValueError(
+                f"unbound ? parameter in SQL: {sql[:80]}..."
+            ) from None
+
+    # every substitution runs OUTSIDE string literals only (odd indices
+    # of the split): a literal keeps its text, brackets and '?' included
+    parts = re.split(r"('(?:[^']|'')*')", sql)
     for i, part in enumerate(parts):
-        if i % 2 == 1:
-            rebuilt.append(part)
+        if i % 2:
+            parts[i] = part.replace("\\", "\\\\")
             continue
-        out = []
-        for ch in part:
-            if ch == "?":
-                try:
-                    out.append(_sql_literal(next(it)))
-                except StopIteration:
-                    raise ValueError(
-                        f"unbound ? parameter in SQL: {sql[:80]}..."
-                    ) from None
-            else:
-                out.append(ch)
-        rebuilt.append("".join(out))
-    s = "".join(rebuilt)
+        part = part.replace("[", "").replace("]", "")
+        for pat, view in views:
+            part = pat.sub(view, part)
+        parts[i] = refs.sub(ref, part)
+    s = "".join(parts).rstrip().rstrip(";")
     m = re.search(r"(?i)\bTOP\s*\(?\s*(\d+)\s*\)?", s)
     if m:
         s = s[: m.start()] + s[m.end():].lstrip()

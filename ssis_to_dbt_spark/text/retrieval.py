@@ -49,7 +49,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -358,7 +358,9 @@ class Bm25Index:
     ``term IN (...)`` literal filter becomes BUCKET PRUNING on the
     postings (SelectedBucketsCount in the plan), so query cost scales
     with the query's terms, not the corpus, and building a probe starts
-    no Spark job.
+    no Spark job.  The bucket count is sized by the corpus's token count
+    (:func:`_bm25_num_buckets`, ~128 MB of postings per bucket): an
+    index under ~96M tokens has 1 bucket, so its probe scans in 1 task.
 
     The values are read ONCE, when the handle is opened
     (:func:`read_bm25_index`; :func:`write_bm25_index`,
@@ -466,21 +468,63 @@ def _max_df_threshold(max_df: int | float, n_docs: int) -> int:
     return int(max_df)
 
 
+def _over_max_df(postings: DataFrame, thr: int) -> list[str]:
+    """The terms of ``postings`` in more than ``thr`` documents (one
+    bounded collect: the stopterm set is model-sized, and the handle
+    holds it anyway)."""
+    return sorted(
+        r["term"]
+        for r in postings.groupBy("term")
+        .agg(F.count(F.lit(1)).alias("df_t"))
+        .filter(F.col("df_t") > thr)
+        .select("term")
+        .collect()
+    )
+
+
+# Stored postings bytes per bucket the index aims for: one
+# spark.sql.files.maxPartitionBytes (128 MB), so a bucket is one scan
+# split.  Tests force a multi-bucket index by monkeypatching it.
+BM25_BUCKET_BYTES = 128 << 20
+# Stored postings bytes per corpus token (snappy parquet, one bucket),
+# measured on written indexes: 1.41 over the serving benchmark's
+# 4,285 documents (326,206 bytes, 231,688 tokens) and 1.40 over the
+# sf0.1 documents (5,000 docs, 270,704 tokens).
+_POSTINGS_BYTES_PER_TOKEN = 1.4
+
+
+def _bm25_num_buckets(spark, total_dl: int) -> int:
+    """Bucket count for ``total_dl`` corpus tokens: the smallest power of
+    two whose buckets hold at most :data:`BM25_BUCKET_BYTES` of their
+    postings, at least 1 and at most
+    ``spark.sql.sources.bucketing.maxBuckets`` (past that cap a bucket
+    holds more).  Every bucket is a scan task of each probe, however few
+    of its rows the probe needs."""
+    cap = int(spark.conf.get("spark.sql.sources.bucketing.maxBuckets"))
+    want = total_dl * _POSTINGS_BYTES_PER_TOKEN / BM25_BUCKET_BYTES
+    n = 1
+    while n < want and 2 * n <= cap:
+        n *= 2
+    return n
+
+
 def write_bm25_index(
     df: DataFrame,
     table_prefix: str,
     path_prefix: str,
-    num_buckets: int = 64,
     id_col: str = "doc_id",
     text_col: str = "text",
     stopwords: list[str] | None = None,
     max_df: int | float | None = None,
 ) -> Bm25Index:
-    """Tokenize the corpus ONCE into ``{prefix}_postings`` (bucketed +
-    sorted on ``term``; each row carries its document's length ``dl``,
-    from the same tokenizing pass), ``{prefix}_doclen`` (bucketed on
-    ``id_col``), the 1-row additive ``{prefix}_stats`` table, and the
-    ``{prefix}_stopterms`` exclusion table.
+    """Tokenize the corpus into ``{prefix}_postings`` (bucketed + sorted
+    on ``term``; each row carries its document's length ``dl``, from the
+    same tokenizing pass), ``{prefix}_doclen`` (bucketed on ``id_col``),
+    the 1-row additive ``{prefix}_stats`` table, and the
+    ``{prefix}_stopterms`` exclusion table.  The corpus scalars
+    ``(n_docs, total_dl)`` come first, from one aggregate: they are the
+    stats row, resolve ``max_df`` and size the buckets
+    (:func:`_bm25_num_buckets`; 1 bucket up to ~96M tokens).
 
     ``stopwords`` / ``max_df`` (r12, r11 VERDICT #6) bound posting-list
     growth: explicit stopwords plus any term whose document frequency
@@ -501,55 +545,48 @@ def write_bm25_index(
     spark = df.sparkSession
     from ..sources.writers import write_bucketed
 
-    postings = _postings(df, id_col, text_col)
-    # stopword seed as a JVM LocalRelation (r14 perf): a createDataFrame
-    # of a local list spreads over default-parallelism Python slices and
-    # its write pays a repartition shuffle; the literal relation is one
-    # single-task write with no Python workers
-    base = sorted(set(stopwords or []))
-    stop = local_rows_df(spark, [(w,) for w in base], "term string")
-    stop_w = stop
-    if max_df is not None:
-        n_docs = df.count()
-        thr = _max_df_threshold(max_df, n_docs)
-        over = (
-            postings.groupBy("term")
-            .agg(F.count(F.lit(1)).alias("df_t"))
-            .filter(F.col("df_t") > thr)
-            .select("term")
-        )
-        stop = stop.unionByName(over).distinct()
-        stop_w = stop.repartition(1)  # corpus-derived: fold to one file
-    postings = postings.join(F.broadcast(stop), "term", "anti")
-    (
-        stop_w.write.mode("overwrite").format("parquet")
-        .option("path", f"{path_prefix}_stopterms")
-        .saveAsTable(f"{table_prefix}_stopterms")
-    )
     dl = df.select(F.col(id_col), _doc_len(F.col(text_col)).alias("dl"))
-    write_bucketed(
-        postings, f"{table_prefix}_postings", f"{path_prefix}_postings",
-        ["term"], num_buckets=num_buckets, sort_cols=["term"],
-    )
-    write_bucketed(
-        dl, f"{table_prefix}_doclen", f"{path_prefix}_doclen",
-        [id_col], num_buckets=num_buckets, sort_cols=[id_col],
-    )
-    # stats from the JUST-WRITTEN doclen table (r14 perf): the previous
-    # df.agg re-tokenized the whole corpus a third time; summing the
-    # stored per-doc lengths is the identical value (dl is exactly
-    # _doc_len per doc) read from a 2-column bucketed table.  No
-    # repartition(1): a global aggregate is already one partition.
     # COALESCE the length sum: over an EMPTY corpus SUM() is NULL, and a
     # NULL stored total_dl would poison the first append's additive
     # advance (int(None) TypeError) — an empty index must store (0, 0)
-    spark.table(f"{table_prefix}_doclen").agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.coalesce(F.sum("dl"), F.lit(0)).cast("long").alias("total_dl"),
+    s = dl.agg(
+        F.count(F.lit(1)).alias("n"), F.coalesce(F.sum("dl"), F.lit(0))
+    ).first()
+    n_docs, total_dl = int(s[0]), int(s[1])
+    n_buckets = _bm25_num_buckets(spark, total_dl)
+    postings = _postings(df, id_col, text_col)
+    stopped = set(stopwords or [])
+    if max_df is not None:
+        stopped.update(
+            _over_max_df(postings, _max_df_threshold(max_df, n_docs))
+        )
+    # the stopterms as a JVM LocalRelation (r14 perf): a createDataFrame
+    # of a local list spreads over default-parallelism Python slices and
+    # its write pays a repartition shuffle; the literal relation is one
+    # single-task write with no Python workers
+    stop = local_rows_df(
+        spark, [(w,) for w in sorted(stopped)], "term string"
+    )
+    postings = postings.join(F.broadcast(stop), "term", "anti")
+    (
+        stop.write.mode("overwrite").format("parquet")
+        .option("path", f"{path_prefix}_stopterms")
+        .saveAsTable(f"{table_prefix}_stopterms")
+    )
+    write_bucketed(
+        postings, f"{table_prefix}_postings", f"{path_prefix}_postings",
+        ["term"], num_buckets=n_buckets, sort_cols=["term"],
+    )
+    write_bucketed(
+        dl, f"{table_prefix}_doclen", f"{path_prefix}_doclen",
+        [id_col], num_buckets=n_buckets, sort_cols=[id_col],
+    )
+    local_rows_df(
+        spark, [(n_docs, total_dl)], "n_docs long, total_dl long"
     ).write.mode("overwrite").format("parquet").option(
         "path", f"{path_prefix}_stats"
     ).saveAsTable(f"{table_prefix}_stats")
-    return read_bm25_index(spark, table_prefix)
+    return _open_bm25(spark, table_prefix, n_docs, total_dl, stopped)
 
 
 def _heal_bm25_compaction(spark, table_prefix: str) -> None:
@@ -598,7 +635,6 @@ def compact_bm25_index(
     spark,
     table_prefix: str,
     path_prefix: str,
-    num_buckets: int = 64,
     cleanup: bool = True,
 ) -> Bm25Index:
     """Postings COMPACTION — physically reclaim what
@@ -609,6 +645,9 @@ def compact_bm25_index(
     and stopterms are untouched.  Postings written before they carried
     ``dl`` get it here, from ONE join against the doclen table; this is
     the only upgrade path (probe and append reject such postings).
+    The new generation's bucket count is sized from the stats row
+    (:func:`_bm25_num_buckets`): appends keep the count the index was
+    written with, so compaction is where a grown index gets more.
 
     Crash-safe by the dedup index's recipe: the new generation writes
     to a FRESH versioned path ``{path_prefix}_postings_compact_v{k}``
@@ -622,6 +661,7 @@ def compact_bm25_index(
     from ..sources.writers import write_bucketed
 
     _heal_bm25_compaction(spark, table_prefix)
+    n_docs, total_dl, stopped = _read_bm25_state(spark, table_prefix)
     postings = spark.table(f"{table_prefix}_postings")
     if "dl" not in postings.columns:
         doclen = spark.table(f"{table_prefix}_doclen")
@@ -629,12 +669,7 @@ def compact_bm25_index(
         postings = postings.join(doclen, id_col).select(
             "term", id_col, "tf", "dl"
         )
-    if spark.catalog.tableExists(f"{table_prefix}_stopterms"):
-        postings = postings.join(
-            F.broadcast(spark.table(f"{table_prefix}_stopterms")),
-            "term",
-            "anti",
-        )
+    postings = _not_stopped(postings, stopped)
     parent = path_prefix.rsplit("/", 1)[0] if "/" in path_prefix else "."
     base = path_prefix.rsplit("/", 1)[-1]
     pat = _re.compile(_re.escape(base) + r"_postings_compact_v(\d+)$")
@@ -652,7 +687,7 @@ def compact_bm25_index(
         stage,
         f"{path_prefix}_postings_compact_v{k}",
         ["term"],
-        num_buckets=num_buckets,
+        num_buckets=_bm25_num_buckets(spark, total_dl),
         sort_cols=["term"],
     )
     # commit marker AFTER the bucketed write fully returns (r12 ADVICE):
@@ -664,28 +699,29 @@ def compact_bm25_index(
     spark.sql(f"ALTER TABLE {stage} RENAME TO {table_prefix}_postings")
     if cleanup and old_loc:
         _fs.delete(spark, old_loc)
-    return read_bm25_index(spark, table_prefix)
+    return _open_bm25(spark, table_prefix, n_docs, total_dl, stopped)
 
 
 def append_bm25_index(
     spark,
     table_prefix: str,
     new_df: DataFrame,
-    num_buckets: int = 64,
     id_col: str = "doc_id",
     text_col: str = "text",
     on_overlap: str = "allow",
     max_df: int | float | None = None,
 ) -> Bm25Index:
     """Append NEW documents: their postings/lengths extend the bucketed
-    tables, and the stats row advances ADDITIVELY (the old row plus the
-    batch's scalar agg — a bounded driver-side read, like a watermark).
-    The existing postings are untouched: term frequencies are per-doc,
-    and df_t is derived at probe time from the postings themselves, so
-    append needs no global recount.  The returned handle is built from
-    the stats and stopterm set the append just wrote — nothing is
-    re-read.  Postings without ``dl`` (written before postings carried
-    it) raise ``ValueError``: run :func:`compact_bm25_index` once.
+    tables (``insertInto``: the tables' own bucket spec), and the stats
+    row advances ADDITIVELY (the old row plus the batch's count and
+    length sum, observed on the doclen write itself, so the batch is
+    evaluated by the two writes only).  The existing postings are
+    untouched: term frequencies are per-doc, and df_t is derived at
+    probe time from the postings themselves, so append needs no global
+    recount.  The returned handle is built from the stats and stopterm
+    set the append just wrote — nothing is re-read.  Postings without
+    ``dl`` (written before postings carried it) raise ``ValueError``:
+    run :func:`compact_bm25_index` once.
 
     Stopterm cap (r12): the batch's postings exclude the STORED
     stopterm set (a literal filter — the set is model-sized), and
@@ -735,25 +771,15 @@ def append_bm25_index(
                     "hits and inflate df_t)"
                 )
         else:
-            # localCheckpoint PINS the anti-join result before any write:
-            # the filtered batch reads the doclen table this append is
-            # about to extend, and a lazy plan re-evaluated during the
-            # later stats delta would see its OWN appended rows and
-            # erase the delta.  Cost is one batch-sized materialization.
-            new_df = new_df.join(existing, id_col, "anti").localCheckpoint(
-                eager=True
-            )
+            # no pin needed: the filtered batch reads the doclen table
+            # this append extends, but nothing evaluates it after the
+            # doclen write (the stats delta is observed ON that write)
+            new_df = new_df.join(existing, id_col, "anti")
     postings = _not_stopped(_postings(new_df, id_col, text_col), stopped)
     if max_df is not None:
         # batch-level detection against the POST-append corpus size
         thr = _max_df_threshold(max_df, n_old + new_df.count())
-        newly = sorted(
-            r["term"]
-            for r in postings.groupBy("term")
-            .agg(F.count(F.lit(1)).alias("df_t"))
-            .filter(F.col("df_t") > thr)
-            .collect()
-        )
+        newly = _over_max_df(postings, thr)
         postings = _not_stopped(postings, newly)
         stopped |= set(newly)
         # append creates the table when a legacy index lacks it
@@ -764,26 +790,16 @@ def append_bm25_index(
         ).write.mode("append").format("parquet").saveAsTable(
             f"{table_prefix}_stopterms"
         )
-    dl = new_df.select(
+    postings.write.insertInto(f"{table_prefix}_postings")
+    delta = Observation()
+    new_df.select(
         F.col(id_col), _doc_len(F.col(text_col)).alias("dl")
-    )
-    (
-        postings.write.mode("append").format("parquet")
-        .bucketBy(num_buckets, "term").sortBy("term")
-        .saveAsTable(f"{table_prefix}_postings")
-    )
-    (
-        dl.write.mode("append").format("parquet")
-        .bucketBy(num_buckets, id_col).sortBy(id_col)
-        .saveAsTable(f"{table_prefix}_doclen")
-    )
-    delta = new_df.agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum(_doc_len(F.col(text_col))).cast("long").alias("total_dl"),
-    ).first()
-    n_docs = n_old + int(delta["n_docs"])
-    # the delta's SUM is NULL for an all-empty batch
-    total_dl = dl_old + int(delta["total_dl"] or 0)
+    ).observe(
+        delta, F.count(F.lit(1)).alias("n"), F.sum("dl").alias("s")
+    ).write.insertInto(f"{table_prefix}_doclen")
+    n_docs = n_old + int(delta.get["n"])
+    # the delta's SUM is NULL for a 0-row batch
+    total_dl = dl_old + int(delta.get["s"] or 0)
     # overwrite the FILES at the stats table's existing external location
     # (then refresh) rather than drop/recreate the table: saveAsTable
     # would re-register it as MANAGED at the warehouse path — colliding

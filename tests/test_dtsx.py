@@ -88,6 +88,24 @@ class TestRewrite:
         with pytest.raises(ValueError, match="unbound"):
             rewrite_tsql("SELECT * FROM t WHERE a = ?", {})
 
+    def test_variables_and_views_skip_string_literals(self):
+        out = rewrite_tsql(
+            "SELECT 'mail @Host' AS v, @Host AS h", {},
+            variables={"User::Host": "x"},
+        )
+        assert out == "SELECT 'mail @Host' AS v, 'x' AS h"
+        out = rewrite_tsql(
+            "SELECT 'from dbo.Sales' AS v FROM dbo.Sales",
+            {"dbo.Sales": "v_sales"},
+        )
+        assert out == "SELECT 'from dbo.Sales' AS v FROM v_sales"
+        # a substituted value is not scanned again
+        out = rewrite_tsql(
+            "SELECT @A AS a, ? AS b", {},
+            params=[1], variables={"User::A": "why? @A"},
+        )
+        assert out == "SELECT 'why? @A' AS a, 1 AS b"
+
     @pytest.mark.parametrize(
         "val",
         ["C:\\data\\in.csv", "C:\\out\\", "tab\\t", "O'Brien", "why?"],

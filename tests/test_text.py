@@ -10,8 +10,8 @@ def docs_df(spark, rows):
     return spark.createDataFrame(rows, "doc_id int, text string")
 
 
-def jobs_started(spark, fn):
-    """``(fn(), number of Spark jobs fn started)``, counted by a job tag
+def _tagged_jobs(spark, fn):
+    """``(fn(), ids of the Spark jobs fn started)``, found by a job tag
     (tags nest, so this never disturbs a caller's job group)."""
     import uuid
 
@@ -22,7 +22,32 @@ def jobs_started(spark, fn):
         out = fn()
     finally:
         sc.removeJobTag(tag)
-    return out, len(sc._jsc.sc().statusTracker().getJobIdsForTag(tag))
+    return out, list(sc._jsc.sc().statusTracker().getJobIdsForTag(tag))
+
+
+def jobs_started(spark, fn):
+    """``(fn(), number of Spark jobs fn started)``."""
+    out, ids = _tagged_jobs(spark, fn)
+    return out, len(ids)
+
+
+def stage_tasks(spark, fn):
+    """``(fn(), task count of each stage of the jobs fn started)``."""
+    out, ids = _tagged_jobs(spark, fn)
+    st = spark.sparkContext.statusTracker()
+    stages = [
+        st.getStageInfo(sid) for j in ids for sid in st.getJobInfo(j).stageIds
+    ]
+    return out, [s.numTasks for s in stages if s is not None]
+
+
+def num_buckets(spark, table):
+    """The bucket count a table was written with."""
+    (row,) = [
+        r for r in spark.sql(f"DESCRIBE FORMATTED {table}").collect()
+        if r["col_name"] == "Num Buckets"
+    ]
+    return int(row["data_type"])
 
 
 def executed_scans(df):
@@ -3080,12 +3105,15 @@ class TestPersistedBm25Index:
         s = idx.stats.first()
         assert s["n_docs"] == docs.count()
 
-    def test_probe_scan_bucket_prunes(self, spark, tmp_path):
+    def test_probe_scan_bucket_prunes(self, spark, tmp_path, monkeypatch):
+        from ssis_to_dbt_spark.text import retrieval
         from ssis_to_dbt_spark.text.retrieval import (
             bm25_index_probe,
             write_bm25_index,
         )
 
+        # a multi-bucket index: ~38 KB of postings in 1 KB buckets
+        monkeypatch.setattr(retrieval, "BM25_BUCKET_BYTES", 1 << 10)
         docs = self._docs(spark)
         prefix = "bm25p_" + tmp_path.name
         idx = write_bm25_index(docs, prefix, str(tmp_path / "t"))
@@ -3164,6 +3192,176 @@ class TestPersistedBm25Index:
         got = sorted(map(tuple, bm25_index_probe(idx, q).collect()))
         exp = sorted(map(tuple, bm25_topk(docs, q).collect()))
         assert got == exp and len(got) > 0
+
+
+class TestBm25BucketSizing:
+    """The BM25 index sizes its bucket count from the corpus's token
+    count (``retrieval.BM25_BUCKET_BYTES``), not from a parameter."""
+
+    def _docs(self, spark):
+        return spark.read.parquet(
+            "/root/testdata/sf0.001/documents.parquet"
+        )
+
+    def test_bucket_count_rule(self, spark, monkeypatch):
+        from ssis_to_dbt_spark.text import retrieval
+
+        n = retrieval._bm25_num_buckets
+        assert n(spark, 0) == 1
+        # ~96M tokens fill one 128 MB bucket; one token more needs two
+        per = retrieval.BM25_BUCKET_BYTES / retrieval._POSTINGS_BYTES_PER_TOKEN
+        assert n(spark, int(per)) == 1 and n(spark, int(per) + 1) == 2
+        assert n(spark, int(per) * 5) == 8
+        # a 100 TB corpus (~1.7e13 tokens) is capped at the largest power
+        # of two within spark.sql.sources.bucketing.maxBuckets (100,000)
+        assert n(spark, 17 * 10**12) == 65536
+        monkeypatch.setattr(retrieval, "BM25_BUCKET_BYTES", 1)
+        assert n(spark, 10**6) == 65536
+
+    def test_small_index_probe_scans_in_one_task(self, spark, tmp_path):
+        """One bucket: the probe's postings scan stage, like every other
+        stage of its jobs, runs one task."""
+        from ssis_to_dbt_spark.text.retrieval import (
+            bm25_index_probe,
+            bm25_topk,
+            write_bm25_index,
+        )
+
+        docs = self._docs(spark)
+        prefix = "bm25one_t_" + tmp_path.name
+        idx = write_bm25_index(docs, prefix, str(tmp_path / "t"))
+        assert num_buckets(spark, f"{prefix}_postings") == 1
+        assert num_buckets(spark, f"{prefix}_doclen") == 1
+        q = {"q1": ["hash", "join"], "q2": ["window"]}
+        rows, tasks = stage_tasks(
+            spark, lambda: bm25_index_probe(idx, q, top_k=5).collect()
+        )
+        assert tasks and max(tasks) == 1
+        exp = bm25_topk(docs, q, top_k=5).collect()
+        assert sorted(map(tuple, rows)) == sorted(map(tuple, exp))
+
+    def test_append_keeps_a_non_default_bucket_count(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """An append writes into the index's own bucket spec, whatever
+        count the index was written with."""
+        from ssis_to_dbt_spark.text import retrieval
+        from ssis_to_dbt_spark.text.retrieval import (
+            append_bm25_index,
+            bm25_index_probe,
+            bm25_topk,
+            write_bm25_index,
+        )
+
+        monkeypatch.setattr(retrieval, "BM25_BUCKET_BYTES", 1 << 12)
+        docs = self._docs(spark)
+        prefix = "bm25nb_" + tmp_path.name
+        write_bm25_index(
+            docs.filter(F.col("doc_id") % 7 != 0), prefix,
+            str(tmp_path / "t"),
+        )
+        assert num_buckets(spark, f"{prefix}_postings") == 16
+        monkeypatch.undo()
+        idx = append_bm25_index(
+            spark, prefix, docs.filter(F.col("doc_id") % 7 == 0)
+        )
+        assert num_buckets(spark, f"{prefix}_postings") == 16
+        assert num_buckets(spark, f"{prefix}_doclen") == 16
+        q = {"q1": ["hash", "join"], "q2": ["window"]}
+        got = sorted(map(tuple, bm25_index_probe(idx, q).collect()))
+        exp = sorted(map(tuple, bm25_topk(docs, q).collect()))
+        assert got == exp
+
+    def test_compaction_resizes_from_the_stats(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """An index written with 1 bucket gets more at compaction once
+        its stats outgrow the bucket size; scores do not move."""
+        from ssis_to_dbt_spark.text import retrieval
+        from ssis_to_dbt_spark.text.retrieval import (
+            bm25_index_probe,
+            compact_bm25_index,
+            write_bm25_index,
+        )
+
+        prefix = "bm25rs_" + tmp_path.name
+        idx = write_bm25_index(
+            self._docs(spark), prefix, str(tmp_path / "t")
+        )
+        assert num_buckets(spark, f"{prefix}_postings") == 1
+        q = {"q1": ["hash", "join"], "q2": ["window"]}
+        before = sorted(map(tuple, bm25_index_probe(idx, q).collect()))
+        monkeypatch.setattr(retrieval, "BM25_BUCKET_BYTES", 1 << 10)
+        idx = compact_bm25_index(spark, prefix, str(tmp_path / "t"))
+        assert num_buckets(spark, f"{prefix}_postings") == (
+            retrieval._bm25_num_buckets(spark, idx.total_dl)
+        ) > 1
+        assert sorted(
+            map(tuple, bm25_index_probe(idx, q).collect())
+        ) == before
+
+    def test_append_runs_five_jobs_and_takes_an_empty_batch(
+        self, spark, tmp_path
+    ):
+        """An append evaluates its batch in its two writes only (the
+        stats delta is observed on the doclen write): 5 jobs.  A 0-row
+        batch returns and leaves the stats as they were."""
+        from ssis_to_dbt_spark.text.retrieval import (
+            _doc_len,
+            append_bm25_index,
+            write_bm25_index,
+        )
+
+        docs = self._docs(spark)
+        prefix = "bm25j_" + tmp_path.name
+        idx0 = write_bm25_index(
+            docs.filter(F.col("doc_id") % 7 != 0), prefix,
+            str(tmp_path / "t"),
+        )
+        delta = docs.filter(F.col("doc_id") % 7 == 0)
+        idx, n_jobs = jobs_started(
+            spark, lambda: append_bm25_index(spark, prefix, delta)
+        )
+        assert n_jobs == 5
+        n, dl = delta.agg(
+            F.count(F.lit(1)), F.sum(_doc_len(F.col("text")))
+        ).first()
+        assert (idx.n_docs, idx.total_dl) == (
+            idx0.n_docs + n, idx0.total_dl + dl
+        )
+        empty = spark.createDataFrame([], "doc_id long, text string")
+        idx2 = append_bm25_index(spark, prefix, empty)
+        s = idx2.stats.first()
+        assert (idx2.n_docs, idx2.total_dl) == (idx.n_docs, idx.total_dl)
+        assert (s["n_docs"], s["total_dl"]) == (idx.n_docs, idx.total_dl)
+
+    def test_skip_append_leaves_no_persistent_rdd(self, spark, tmp_path):
+        """on_overlap='skip' no longer pins the filtered batch: the
+        append leaves no persistent RDD behind, and a replay still
+        appends nothing."""
+        from ssis_to_dbt_spark.text.retrieval import (
+            append_bm25_index,
+            write_bm25_index,
+        )
+
+        docs = self._docs(spark)
+        prefix = "bm25sk_" + tmp_path.name
+        write_bm25_index(
+            docs.filter(F.col("doc_id") % 7 != 0), prefix,
+            str(tmp_path / "t"),
+        )
+        delta = docs.filter(F.col("doc_id") % 7 == 0)
+
+        def rdd_ids():
+            return set(
+                spark.sparkContext._jsc.getPersistentRDDs().keySet()
+            )
+
+        before = rdd_ids()
+        idx = append_bm25_index(spark, prefix, delta, on_overlap="skip")
+        idx = append_bm25_index(spark, prefix, delta, on_overlap="skip")
+        assert rdd_ids() - before == set()
+        assert idx.n_docs == docs.count()
 
 
 class TestBm25IndexLifecycleEdges:
