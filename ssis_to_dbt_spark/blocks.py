@@ -41,7 +41,8 @@ from pyspark import SparkContext
 from pyspark.sql import DataFrame
 
 __all__ = [
-    "checkpoint", "release", "query_scope", "release_pending", "own_dir",
+    "checkpoint", "materialize", "release", "query_scope", "release_pending",
+    "own_dir",
 ]
 
 
@@ -94,6 +95,13 @@ def _ckpt_jrdd(df: DataFrame):
 def checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
     """``df.localCheckpoint(eager=eager)``; an open scope owns its blocks."""
     return df.localCheckpoint(eager=eager)
+
+
+def materialize(df: DataFrame) -> int:
+    """Materialize a lazily checkpointed frame and return its row count,
+    in one Spark job (``df.count()`` plans an aggregate: two jobs under
+    adaptive execution)."""
+    return int(_ckpt_jrdd(df).count())
 
 
 def release(df: DataFrame | None) -> None:

@@ -2476,7 +2476,9 @@ def q_bucketed_join_orders(spark, sf_dir):
     write_bucketed on the join key (16 buckets), read back through the table
     catalog, joined (zero-exchange on a cluster; plan shape pinned in
     test_skew_bucketing.py), and aggregated.  Oracle = the plain join+agg,
-    proving bucketed storage changes the plan, never the values."""
+    proving bucketed storage changes the plan, never the values.  The
+    result is materialized under the scratch dir so both tables can be
+    dropped (metastore-leak contract, as ``image_phash_index``)."""
     import uuid
 
     from .sources.writers import write_bucketed
@@ -2484,25 +2486,31 @@ def q_bucketed_join_orders(spark, sf_dir):
     t = _t(spark, sf_dir)
     sfx = uuid.uuid4().hex[:8]
     base = _rt_tmpdir("bucketed")
-    write_bucketed(
-        t["orders"].select("o_orderkey", "o_orderpriority"),
-        f"bt_orders_{sfx}", f"{base}/o", ["o_orderkey"], num_buckets=16,
-    )
-    write_bucketed(
-        t["lineitem"].select(
-            F.col("l_orderkey").alias("o_orderkey"),
-            F.col("l_extendedprice").cast(_D182).alias("price"),
-        ),
-        f"bt_lineitem_{sfx}", f"{base}/l", ["o_orderkey"], num_buckets=16,
-    )
-    joined = spark.table(f"bt_lineitem_{sfx}").join(
-        spark.table(f"bt_orders_{sfx}"), "o_orderkey"
-    )
-    out = joined.groupBy("o_orderpriority").agg(
-        F.count(F.lit(1)).alias("n_lines"),
-        F.sum("price").cast(_D182).alias("total_price"),
-    )
-    return _final_double(out, ["total_price"])
+    orders, lines = f"bt_orders_{sfx}", f"bt_lineitem_{sfx}"
+    try:
+        write_bucketed(
+            t["orders"].select("o_orderkey", "o_orderpriority"),
+            orders, f"{base}/o", ["o_orderkey"], num_buckets=16,
+        )
+        write_bucketed(
+            t["lineitem"].select(
+                F.col("l_orderkey").alias("o_orderkey"),
+                F.col("l_extendedprice").cast(_D182).alias("price"),
+            ),
+            lines, f"{base}/l", ["o_orderkey"], num_buckets=16,
+        )
+        joined = spark.table(lines).join(spark.table(orders), "o_orderkey")
+        out = joined.groupBy("o_orderpriority").agg(
+            F.count(F.lit(1)).alias("n_lines"),
+            F.sum("price").cast(_D182).alias("total_price"),
+        )
+        _final_double(out, ["total_price"]).write.mode("overwrite").parquet(
+            f"{base}/out"
+        )
+    finally:
+        for name in (orders, lines):
+            spark.sql(f"DROP TABLE IF EXISTS {name}")
+    return spark.read.parquet(f"{base}/out")
 
 
 SQL_BUCKETED_JOIN = """

@@ -442,7 +442,6 @@ def ingest_media_batch(
     bits: int = 48,
     band_bits: int = 12,
     max_bucket_size: int | None = 10_000,
-    num_buckets: int = 64,
     batch_id: int | None = None,
     append: bool = True,
 ) -> MediaIngestResult:
@@ -494,7 +493,7 @@ def ingest_media_batch(
     accepted = kept.join(rej_ids, id_col, "left_anti")
     if append:
         append_phash_index(
-            accepted, table_prefix, num_buckets, id_col, fp_col, bits,
+            accepted, table_prefix, id_col, fp_col, bits,
             band_bits, batch_id=batch_id,
         )
     return MediaIngestResult(

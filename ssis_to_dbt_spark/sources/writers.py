@@ -50,8 +50,11 @@ def partition_overwrite(df: DataFrame, path: str, partition_cols: list[str]) -> 
 
 
 def insert_into(df: DataFrame, table: str) -> None:
-    """S3 variant targeting a catalog table."""
-    df.write.mode("append").insertInto(table)
+    """S3 variant targeting a catalog table: append ``df``'s columns BY
+    NAME (``insertInto`` alone matches by position); a bucketed table
+    keeps its own bucket spec."""
+    cols = df.sparkSession.table(table).columns
+    df.select(*cols).write.mode("append").insertInto(table)
 
 
 def audit_append(spark: SparkSession, path: str, row: dict) -> None:
@@ -159,12 +162,33 @@ def compact(spark: SparkSession, path: str, target_partitions: int) -> int:
     )
 
 
+# Stored bytes per bucket a persisted index aims for: one
+# spark.sql.files.maxPartitionBytes (128 MiB), so a bucket is one scan
+# split.  Tests force a multi-bucket index by monkeypatching it.
+BUCKET_BYTES = 128 << 20
+
+
+def bucket_count(spark: SparkSession, est_bytes: float) -> int:
+    """Bucket count of a persisted index holding ``est_bytes`` stored
+    bytes: the smallest power of two whose buckets hold at most
+    :data:`BUCKET_BYTES`, at least 1 and at most
+    ``spark.sql.sources.bucketing.maxBuckets`` (past that cap a bucket
+    holds more).  Every bucket is a scan task of each probe; appends keep
+    the count, so a compaction is where a grown index gets more."""
+    cap = int(spark.conf.get("spark.sql.sources.bucketing.maxBuckets"))
+    want = est_bytes / BUCKET_BYTES
+    n = 1
+    while n < want and 2 * n <= cap:
+        n *= 2
+    return n
+
+
 def write_bucketed(
     df: DataFrame,
     table: str,
     path: str,
     bucket_cols: list[str],
-    num_buckets: int = 64,
+    num_buckets: int,
     sort_cols: list[str] | None = None,
 ) -> None:
     """Bucketed table write for co-located joins (SURVEY §7 scale posture).
@@ -192,6 +216,46 @@ def _table_location(spark: SparkSession, table: str) -> str | None:
         if (r["col_name"] or "").strip() == "Location":
             return (r["data_type"] or "").strip() or None
     return None
+
+
+def _swap_in(
+    spark: SparkSession, stage: str, live: str, cleanup: bool
+) -> None:
+    """Replace table ``live`` by the fully written table ``stage``: drop,
+    then rename (a crash between the two leaves the stage alone, which
+    the index's read-time heal renames in).  With ``cleanup``, delete
+    the superseded data directory."""
+    from .. import fs
+
+    old = _table_location(spark, live) if cleanup else None
+    spark.sql(f"DROP TABLE IF EXISTS {live}")
+    spark.sql(f"ALTER TABLE {stage} RENAME TO {live}")
+    if old and old != _table_location(spark, live):
+        fs.delete(spark, old)
+
+
+def _next_compact_version(
+    spark: SparkSession, path_prefix: str, suffixes: tuple[str, ...]
+) -> int:
+    """1 + the highest ``k`` of the ``{path_prefix}_{suffix}_compact_v{k}``
+    directories on disk (1 when there are none), listed through the
+    Hadoop FileSystem API: an index compaction stages a fresh
+    generation, never over the files its live tables read."""
+    import re
+
+    from .. import fs
+
+    parent, sep, base = path_prefix.rpartition("/")
+    pat = re.compile(
+        re.escape(base) + f"_(?:{'|'.join(suffixes)})_compact_v(\\d+)$"
+    )
+    found = [
+        int(m.group(1))
+        for name in fs.list_dir(spark, parent if sep else ".")
+        for m in [pat.match(name)]
+        if m
+    ]
+    return max(found, default=0) + 1
 
 
 def write_json(df: DataFrame, path: str) -> None:

@@ -501,7 +501,6 @@ def write_stream_crawl_ingest(
     checkpoint: str,
     dup_threshold: float | None = None,
     table_prefix: str | None = None,
-    num_buckets: int = 64,
     dsir_state_path: str | None = None,
     dsir_state_keep_versions: int = 3,
     audit_every: int | None = None,
@@ -625,7 +624,6 @@ def write_stream_crawl_ingest(
                 if over.take(1):
                     compact_corpus_dedup_index(
                         spark, table_prefix, compact_path_prefix,
-                        num_buckets=num_buckets,
                         max_bucket_size=audit_max_bucket_size,
                         keep_tags_at_or_above=bid,
                     )
@@ -681,7 +679,7 @@ def write_stream_crawl_ingest(
 
             append_corpus_dedup_index(
                 r.accepted.select("doc_id", "text"), table_prefix,
-                num_buckets=num_buckets, batch_id=bid,
+                batch_id=bid,
                 new_index=(r.accepted_sigs, r.accepted_bands),
             )
             box["state"] = IngestState(
@@ -902,7 +900,6 @@ def write_stream_media_ingest(
     out_dir: str,
     checkpoint: str,
     max_hamming: int = 2,
-    num_buckets: int = 64,
     id_col: str = "media_id",
     fp_col: str = "phash",
     bits: int = 48,
@@ -969,8 +966,7 @@ def write_stream_media_ingest(
             if over.take(1):
                 compact_phash_index(
                     spark, table_prefix, compact_path_prefix,
-                    num_buckets=num_buckets, id_col=id_col,
-                    bits=bits, band_bits=band_bits,
+                    id_col=id_col, bits=bits, band_bits=band_bits,
                     keep_tags_at_or_above=bid,
                 )
                 spark.catalog.refreshTable(f"{table_prefix}_phash")
@@ -978,7 +974,7 @@ def write_stream_media_ingest(
             spark, batch_fp, table_prefix, max_hamming=max_hamming,
             id_col=id_col, fp_col=fp_col, bits=bits,
             band_bits=band_bits, max_bucket_size=max_bucket_size,
-            num_buckets=num_buckets, batch_id=bid, append=False,
+            batch_id=bid, append=False,
         )
         for name, df in (("accepted", r.accepted),
                          ("rejected", r.rejected)):
@@ -986,9 +982,8 @@ def write_stream_media_ingest(
                 f"{out_dir}/{name}/batch_id={bid}"
             )
         append_phash_index(
-            r.accepted, table_prefix, num_buckets=num_buckets,
-            id_col=id_col, fp_col=fp_col, bits=bits,
-            band_bits=band_bits, batch_id=bid,
+            r.accepted, table_prefix, id_col=id_col, fp_col=fp_col,
+            bits=bits, band_bits=band_bits, batch_id=bid,
         )
 
     return (

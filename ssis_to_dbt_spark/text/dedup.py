@@ -22,7 +22,14 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
-from ..sources.writers import _table_location
+from .. import blocks
+from ..sources.writers import (
+    _next_compact_version,
+    _swap_in,
+    bucket_count,
+    insert_into,
+    write_bucketed,
+)
 
 
 def _cap_band_members(
@@ -671,12 +678,30 @@ def phash_candidates(
 # index the way a storage-side cap could.
 # ---------------------------------------------------------------------------
 
+# Stored bytes per band row (snappy parquet, one bucket), measured on
+# written indexes of random 48-bit fingerprints in 12-bit bands: 13.1 at
+# 100,000 images (400,000 rows, 5,233,048 bytes), 12.6 at 1,000,000
+# images (50,407,303 bytes).
+_PHASH_ROW_BYTES = 13
+
+
+def _write_phash_table(banded, fps, n_bands: int, table: str, path: str):
+    """Write ``banded`` as the bucketed index table, its bucket count
+    sized by the row count of ``fps`` (its lazily checkpointed
+    fingerprints, materialized here in one job and released after)."""
+    n_rows = blocks.materialize(fps) * n_bands
+    write_bucketed(
+        banded, table, path, ["band_idx", "band_val"],
+        bucket_count(fps.sparkSession, n_rows * _PHASH_ROW_BYTES),
+        sort_cols=["band_idx", "band_val"],
+    )
+    blocks.release(fps)
+
 
 def write_phash_index(
     fp_df: DataFrame,
     table_prefix: str,
     path_prefix: str,
-    num_buckets: int = 64,
     id_col: str = "media_id",
     fp_col: str = "phash",
     bits: int = 48,
@@ -690,21 +715,18 @@ def write_phash_index(
     the replay-idempotency contract of the text index, verbatim.
     Returns the table name.
 
-    100 TB: the table is ~``n_bands`` rows x ~32 bytes per image —
-    at 10^9 images and 4 bands that is ~128 GB of index for petabytes of
+    The bucket count is sized by counting the fingerprints
+    (:func:`~ssis_to_dbt_spark.sources.writers.bucket_count`).  100 TB:
+    the table is ``n_bands`` rows x ~13 bytes per image — at 10^9 images
+    and 4 bands that is ~52 GB of index in 512 buckets for petabytes of
     media, and probes touch only the batch's band buckets."""
-    from ..sources.writers import write_bucketed
-
-    banded = _hamming_banded(
-        fp_df, id_col, fp_col, bits, band_bits, max_bucket_size=None
-    )
-    write_bucketed(
-        banded.select("*", F.lit(-1).cast("long").alias("_ib")),
-        f"{table_prefix}_phash",
+    fps = fp_df.select(id_col, fp_col).localCheckpoint(eager=False)
+    _write_phash_table(
+        _hamming_banded(
+            fps, id_col, fp_col, bits, band_bits, max_bucket_size=None
+        ).select("*", F.lit(-1).cast("long").alias("_ib")),
+        fps, bits // band_bits, f"{table_prefix}_phash",
         f"{path_prefix}_phash",
-        ["band_idx", "band_val"],
-        num_buckets=num_buckets,
-        sort_cols=["band_idx", "band_val"],
     )
     return f"{table_prefix}_phash"
 
@@ -745,7 +767,6 @@ def read_phash_index(
 def append_phash_index(
     batch_fp: DataFrame,
     table_prefix: str,
-    num_buckets: int = 64,
     id_col: str = "media_id",
     fp_col: str = "phash",
     bits: int = 48,
@@ -754,7 +775,8 @@ def append_phash_index(
     new_bands: DataFrame | None = None,
 ) -> None:
     """Append a batch's fingerprints to the stored index — linear in new
-    images, never a rebuild; the bucket layout is append-stable.
+    images, never a rebuild; the rows are matched to the table's columns
+    by name and keep its bucket spec (``writers.insert_into``).
 
     r10 replay-idempotency contract (mirrors
     :func:`append_corpus_dedup_index`): with a ``batch_id`` the append
@@ -762,13 +784,11 @@ def append_phash_index(
     replayed micro-batch never double-appends.  ``new_bands`` reuses an
     already-derived banded relation (the ingest arm derives it once for
     the probe)."""
-    spark = batch_fp.sparkSession
-    _heal_phash_compaction(spark, table_prefix)
-    table = f"{table_prefix}_phash"
+    index = read_phash_index(
+        batch_fp.sparkSession, table_prefix, with_batch_tag=True
+    )
     tag_val = -1 if batch_id is None else int(batch_id)
-    if batch_id is not None and bool(
-        spark.table(table).filter(F.col("_ib") == tag_val).take(1)
-    ):
+    if batch_id is not None and index.filter(F.col("_ib") == tag_val).take(1):
         return
     banded = (
         new_bands
@@ -777,13 +797,9 @@ def append_phash_index(
             batch_fp, id_col, fp_col, bits, band_bits, max_bucket_size=None
         )
     )
-    (
-        banded.select("*", F.lit(tag_val).cast("long").alias("_ib"))
-        .write.mode("append")
-        .format("parquet")
-        .bucketBy(num_buckets, "band_idx", "band_val")
-        .sortBy("band_idx", "band_val")
-        .saveAsTable(table)
+    insert_into(
+        banded.select("*", F.lit(tag_val).cast("long").alias("_ib")),
+        f"{table_prefix}_phash",
     )
 
 
@@ -815,7 +831,6 @@ def compact_phash_index(
     spark,
     table_prefix: str,
     path_prefix: str,
-    num_buckets: int = 64,
     id_col: str = "media_id",
     bits: int = 48,
     band_bits: int = 12,
@@ -830,15 +845,11 @@ def compact_phash_index(
     (:func:`_heal_phash_compaction`).  ``keep_tags_at_or_above``: rows
     tagged ``>= N`` pass through verbatim (the streaming handler's
     replay-stability contract, as in
-    :func:`compact_corpus_dedup_index`)."""
-    import re as _re
-
-    from .. import fs as _fs
-    from ..sources.writers import write_bucketed
-
-    _heal_phash_compaction(spark, table_prefix)
+    :func:`compact_corpus_dedup_index`).  Counting the deduped
+    fingerprints re-sizes the bucket count (pass-through rows, one
+    batch's, are not counted)."""
     table = f"{table_prefix}_phash"
-    raw = spark.table(table)
+    raw = read_phash_index(spark, table_prefix, with_batch_tag=True)
     pass_rows = None
     if keep_tags_at_or_above is not None:
         lim = int(keep_tags_at_or_above)
@@ -852,38 +863,20 @@ def compact_phash_index(
         .withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .drop("_rn")
+        .localCheckpoint(eager=False)
     )
     banded = _hamming_banded(
         fps, id_col, "_fp", bits, band_bits, max_bucket_size=None
     ).join(fps.select(id_col, "_ib"), id_col)
     if pass_rows is not None:
         banded = banded.unionByName(pass_rows.select(*banded.columns))
-    parent = path_prefix.rsplit("/", 1)[0] if "/" in path_prefix else "."
-    base = path_prefix.rsplit("/", 1)[-1]
-    pat = _re.compile(_re.escape(base) + r"_phash_compact_v(\d+)$")
-    existing = [
-        int(m.group(1))
-        for name in _fs.list_dir(spark, parent)
-        for m in [pat.match(name)]
-        if m
-    ]
-    k = (max(existing) + 1) if existing else 1
-    old_path = _table_location(spark, table)
+    k = _next_compact_version(spark, path_prefix, ("phash",))
     stage = f"{table_prefix}_phash_cstage"
-    write_bucketed(
-        banded,
-        stage,
+    _write_phash_table(
+        banded, fps, bits // band_bits, stage,
         f"{path_prefix}_phash_compact_v{k}",
-        ["band_idx", "band_val"],
-        num_buckets=num_buckets,
-        sort_cols=["band_idx", "band_val"],
     )
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    spark.sql(f"ALTER TABLE {stage} RENAME TO {table}")
-    if cleanup:
-        new_path = _table_location(spark, table)
-        if old_path and old_path != new_path:
-            _fs.delete(spark, old_path)
+    _swap_in(spark, stage, table, cleanup)
 
 
 def phash_probe_index(
@@ -1822,11 +1815,47 @@ def _band_signature_table(
     )
 
 
+# Stored bytes per row of the corpus dedup index (snappy parquet, one
+# bucket), measured on written indexes: a band row (id, band_idx, 32-hex
+# band_hash, _ib) is 35.1 B over the sf0.01 documents (2,000 rows,
+# 70,271 bytes) and 34.5 B over sf0.1 (20,000 rows, 690,189 bytes); a
+# signature row per minhash value (8 string values per row) is 27.5 B
+# over sf0.01 (500 rows, 110,000 bytes) and 13.4 B over sf0.1, whose
+# near-duplicate families share values.  The larger figure is the one
+# for distinct documents.
+_BAND_ROW_BYTES = 35
+_SIG_BYTES_PER_HASH = 27.5
+
+
+def _write_dedup_tables(
+    banded: DataFrame,
+    sigs: DataFrame,
+    n_docs: int,
+    table_prefix: str,
+    path_prefix: str,
+    path_suffix: str,
+    id_col: str,
+    num_hashes: int,
+    bands: int,
+) -> None:
+    """Write ``{table_prefix}_{bands|sigs}`` at
+    ``{path_prefix}_{bands|sigs}{path_suffix}``, each bucket count sized
+    for ``n_docs`` documents (at most ``n_docs * bands`` band rows)."""
+    spark = sigs.sparkSession
+    for rows, sfx, keys, row_bytes in (
+        (banded, "bands", ["band_idx", "band_hash"], bands * _BAND_ROW_BYTES),
+        (sigs, "sigs", [id_col], num_hashes * _SIG_BYTES_PER_HASH),
+    ):
+        write_bucketed(
+            rows, f"{table_prefix}_{sfx}", f"{path_prefix}_{sfx}{path_suffix}",
+            keys, bucket_count(spark, n_docs * row_bytes), sort_cols=keys,
+        )
+
+
 def write_corpus_dedup_index(
     corpus_df: DataFrame,
     table_prefix: str,
     path_prefix: str,
-    num_buckets: int = 64,
     id_col: str = "doc_id",
     text_col: str = "text",
     num_hashes: int = 8,
@@ -1846,6 +1875,9 @@ def write_corpus_dedup_index(
     zero Sort (plan-pinned in ``test_skew_bucketing.py``).  Returns the
     two table names.
 
+    Each table's bucket count is sized by counting the checkpointed
+    signatures both writes read (:func:`_write_dedup_tables`).
+
     r10: both tables carry an ``_ib`` (ingest-batch id) column — ``-1``
     for the seed corpus, the micro-batch id for streaming appends.  The
     tag is what makes the streaming ingest loop REPLAY-IDEMPOTENT: a
@@ -1854,32 +1886,18 @@ def write_corpus_dedup_index(
     self-reject the batch) and its append is skipped per table when rows
     with its tag already exist.  :func:`read_corpus_dedup_index` drops
     the tag by default, so non-streaming consumers never see it."""
-    from ..sources.writers import write_bucketed
-
     sigs, banded = corpus_dedup_index(
         corpus_df, id_col, text_col, num_hashes, bands, shingle_n,
-        max_bucket_size,
+        max_bucket_size, checkpoint_sigs=True,
     )
-    bands_table = f"{table_prefix}_bands"
-    sigs_table = f"{table_prefix}_sigs"
     tag = F.lit(-1).cast("long").alias("_ib")
-    write_bucketed(
-        banded.select("*", tag),
-        bands_table,
-        f"{path_prefix}_bands",
-        ["band_idx", "band_hash"],
-        num_buckets=num_buckets,
-        sort_cols=["band_idx", "band_hash"],
+    _write_dedup_tables(
+        banded.select("*", tag), sigs.select("*", tag),
+        blocks.materialize(sigs), table_prefix, path_prefix, "", id_col,
+        num_hashes, bands,
     )
-    write_bucketed(
-        sigs.select("*", tag),
-        sigs_table,
-        f"{path_prefix}_sigs",
-        [id_col],
-        num_buckets=num_buckets,
-        sort_cols=[id_col],
-    )
-    return sigs_table, bands_table
+    blocks.release(sigs)
+    return f"{table_prefix}_sigs", f"{table_prefix}_bands"
 
 
 def read_corpus_dedup_index(
@@ -1951,7 +1969,6 @@ def _heal_compaction_swap(spark, table_prefix: str) -> None:
 def append_corpus_dedup_index(
     batch_df: DataFrame,
     table_prefix: str,
-    num_buckets: int = 64,
     id_col: str = "doc_id",
     text_col: str = "text",
     num_hashes: int = 8,
@@ -1964,12 +1981,10 @@ def append_corpus_dedup_index(
     """Index MAINTENANCE: after a deduped batch is accepted into the
     corpus, derive its bands + signatures and APPEND them to the stored
     bucketed tables — linear in NEW bytes, never a corpus rebuild.  The
-    bucket layout is append-stable (same hash, same bucket count), so
-    subsequent batch joins keep their zero-corpus-exchange plan.
-
-    ``num_buckets`` and the minhash parameters MUST match the original
-    :func:`write_corpus_dedup_index` call; Spark rejects an append whose
-    bucket spec differs from the table's, which is the guard rail.
+    rows are matched to each table's columns by name and keep its bucket
+    spec (``writers.insert_into``), so subsequent batch joins keep their
+    zero-corpus-exchange plan.  The minhash parameters must match the
+    original :func:`write_corpus_dedup_index` call.
 
     Note on the band cap: ``_cap_band_members`` caps per-band membership
     WITHIN the appended batch only — a band bucket can exceed the cap
@@ -2002,42 +2017,17 @@ def append_corpus_dedup_index(
     tag_val = -1 if batch_id is None else int(batch_id)
     tag = F.lit(tag_val).cast("long").alias("_ib")
     spark = sigs.sparkSession
-
-    def _tagged(table: str) -> bool:
-        # pre-r10 index tables have no _ib column; treat them as
-        # tag-less (no replay guard possible, and appends must keep the
-        # legacy schema or saveAsTable rejects the extra column)
-        return "_ib" in spark.table(table).columns
-
-    def _already(table: str) -> bool:
-        if batch_id is None or not _tagged(table):
-            return False
-        return bool(
-            spark.table(table).filter(F.col("_ib") == tag_val).take(1)
-        )
-
-    if not _already(f"{table_prefix}_bands"):
-        out = banded.select("*", tag) if _tagged(
-            f"{table_prefix}_bands"
-        ) else banded
-        (
-            out.write.mode("append")
-            .format("parquet")
-            .bucketBy(num_buckets, "band_idx", "band_hash")
-            .sortBy("band_idx", "band_hash")
-            .saveAsTable(f"{table_prefix}_bands")
-        )
-    if not _already(f"{table_prefix}_sigs"):
-        out = sigs.select("*", tag) if _tagged(
-            f"{table_prefix}_sigs"
-        ) else sigs
-        (
-            out.write.mode("append")
-            .format("parquet")
-            .bucketBy(num_buckets, id_col)
-            .sortBy(id_col)
-            .saveAsTable(f"{table_prefix}_sigs")
-        )
+    for rows, suffix in ((banded, "bands"), (sigs, "sigs")):
+        table = spark.table(f"{table_prefix}_{suffix}")
+        # pre-r10 index tables have no _ib column: no replay guard is
+        # possible, and insert_into selects the legacy columns only
+        if (
+            batch_id is not None
+            and "_ib" in table.columns
+            and table.filter(F.col("_ib") == tag_val).take(1)
+        ):
+            continue
+        insert_into(rows.select("*", tag), f"{table_prefix}_{suffix}")
 
 
 def corpus_dedup_index_band_audit(
@@ -2078,7 +2068,6 @@ def compact_corpus_dedup_index(
     spark,
     table_prefix: str,
     path_prefix: str,
-    num_buckets: int = 64,
     id_col: str = "doc_id",
     num_hashes: int = 8,
     bands: int = 4,
@@ -2099,8 +2088,10 @@ def compact_corpus_dedup_index(
     the cap GLOBALLY (restoring the per-probe fan-out bound the
     per-append cap lets erode), and rewrite both bucketed tables via a
     staging-table swap.  Cost: linear in the signature table (id +
-    ``num_hashes`` longs — a small fraction of corpus bytes); parameters
+    ``num_hashes`` values — a small fraction of corpus bytes); parameters
     must match the original :func:`write_corpus_dedup_index` call.
+    Counting the deduped signatures re-sizes both bucket counts
+    (pass-through rows, one batch's, are not counted).
 
     r10 re-runnability (r9 ADVICE, medium): each run stages under a
     FRESH versioned path ``{path_prefix}_{suffix}_compact_v{k}`` (k = 1 +
@@ -2118,18 +2109,10 @@ def compact_corpus_dedup_index(
     is then built from exactly the first attempt's input — batches
     < N — so the post-compaction index, and therefore the replayed
     probe's view, is bit-identical to the continuous run's."""
-    import re as _re
-
-    from .. import fs as _fs
-    from ..sources.writers import write_bucketed
-
-    raw = spark.table(f"{table_prefix}_sigs")
-    raw_bands = spark.table(f"{table_prefix}_bands")
-    if "_ib" not in raw.columns:  # pre-r10 index tables
-        raw = raw.select("*", F.lit(-1).cast("long").alias("_ib"))
-        raw_bands = raw_bands.select(
-            "*", F.lit(-1).cast("long").alias("_ib")
-        )
+    # heals a crashed earlier swap; pre-r10 tables get _ib = -1
+    raw, raw_bands = read_corpus_dedup_index(
+        spark, table_prefix, with_batch_tag=True
+    )
     pass_sigs = pass_bands = None
     if keep_tags_at_or_above is not None:
         lim = int(keep_tags_at_or_above)
@@ -2137,66 +2120,32 @@ def compact_corpus_dedup_index(
         pass_bands = raw_bands.filter(F.col("_ib") >= lim)
         raw = raw.filter(F.col("_ib") < lim)
     w = Window.partitionBy(id_col).orderBy(F.col("_ib").desc())
-    sigs = (
+    core = (
         raw.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .drop("_rn")
         .localCheckpoint(eager=False)
     )
+    n_docs = blocks.materialize(core)
+    sigs = core
     banded = _band_signature_table(
-        sigs, id_col, num_hashes, bands, max_bucket_size,
+        core, id_col, num_hashes, bands, max_bucket_size,
         carry_cols=["_ib"],
     )
     if pass_sigs is not None:
-        sigs = sigs.unionByName(pass_sigs)
+        sigs = core.unionByName(pass_sigs)
         banded = banded.unionByName(pass_bands.select(*banded.columns))
-    # fresh versioned staging path per run: list existing compact dirs
-    # and take max+1 (storage-agnostic listing)
-    parent = path_prefix.rsplit("/", 1)[0] if "/" in path_prefix else "."
-    base = path_prefix.rsplit("/", 1)[-1]
-    pat = _re.compile(_re.escape(base) + r"_(?:bands|sigs)_compact_v(\d+)$")
-    existing = [
-        int(m.group(1))
-        for name in _fs.list_dir(spark, parent)
-        for m in [pat.match(name)]
-        if m
-    ]
-    k = (max(existing) + 1) if existing else 1
-    old_paths = [
-        _table_location(spark, f"{table_prefix}_{sfx}")
-        for sfx in ("bands", "sigs")
-    ]
+    k = _next_compact_version(spark, path_prefix, ("bands", "sigs"))
     stage = f"{table_prefix}_compact_stage"
-    write_bucketed(
-        banded,
-        f"{stage}_bands",
-        f"{path_prefix}_bands_compact_v{k}",
-        ["band_idx", "band_hash"],
-        num_buckets=num_buckets,
-        sort_cols=["band_idx", "band_hash"],
+    _write_dedup_tables(
+        banded, sigs, n_docs, stage, path_prefix, f"_compact_v{k}", id_col,
+        num_hashes, bands,
     )
-    write_bucketed(
-        sigs,
-        f"{stage}_sigs",
-        f"{path_prefix}_sigs_compact_v{k}",
-        [id_col],
-        num_buckets=num_buckets,
-        sort_cols=[id_col],
-    )
+    blocks.release(core)
     for suffix in ("bands", "sigs"):
-        spark.sql(f"DROP TABLE IF EXISTS {table_prefix}_{suffix}")
-        spark.sql(
-            f"ALTER TABLE {stage}_{suffix} "
-            f"RENAME TO {table_prefix}_{suffix}"
+        _swap_in(
+            spark, f"{stage}_{suffix}", f"{table_prefix}_{suffix}", cleanup
         )
-    if cleanup:
-        new_paths = {
-            _table_location(spark, f"{table_prefix}_{sfx}")
-            for sfx in ("bands", "sigs")
-        }
-        for p in old_paths:
-            if p and p not in new_paths:
-                _fs.delete(spark, p)
 
 
 def cross_corpus_candidates(

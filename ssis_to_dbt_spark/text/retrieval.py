@@ -54,7 +54,14 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..local_rel import _sql_str, local_rows_df
-from ..sources.writers import _table_location
+from ..sources.writers import (
+    _next_compact_version,
+    _swap_in,
+    _table_location,
+    bucket_count,
+    insert_into,
+    write_bucketed,
+)
 from .dedup import _tokens
 from .similarity import _sql_dlit, _sql_ident
 
@@ -359,8 +366,9 @@ class Bm25Index:
     postings (SelectedBucketsCount in the plan), so query cost scales
     with the query's terms, not the corpus, and building a probe starts
     no Spark job.  The bucket count is sized by the corpus's token count
-    (:func:`_bm25_num_buckets`, ~128 MB of postings per bucket): an
-    index under ~96M tokens has 1 bucket, so its probe scans in 1 task.
+    (:func:`~ssis_to_dbt_spark.sources.writers.bucket_count`, ~128 MB of
+    postings per bucket): an index under ~96M tokens has 1 bucket, so
+    its probe scans in 1 task.
 
     The values are read ONCE, when the handle is opened
     (:func:`read_bm25_index`; :func:`write_bm25_index`,
@@ -482,30 +490,11 @@ def _over_max_df(postings: DataFrame, thr: int) -> list[str]:
     )
 
 
-# Stored postings bytes per bucket the index aims for: one
-# spark.sql.files.maxPartitionBytes (128 MB), so a bucket is one scan
-# split.  Tests force a multi-bucket index by monkeypatching it.
-BM25_BUCKET_BYTES = 128 << 20
 # Stored postings bytes per corpus token (snappy parquet, one bucket),
 # measured on written indexes: 1.41 over the serving benchmark's
 # 4,285 documents (326,206 bytes, 231,688 tokens) and 1.40 over the
 # sf0.1 documents (5,000 docs, 270,704 tokens).
 _POSTINGS_BYTES_PER_TOKEN = 1.4
-
-
-def _bm25_num_buckets(spark, total_dl: int) -> int:
-    """Bucket count for ``total_dl`` corpus tokens: the smallest power of
-    two whose buckets hold at most :data:`BM25_BUCKET_BYTES` of their
-    postings, at least 1 and at most
-    ``spark.sql.sources.bucketing.maxBuckets`` (past that cap a bucket
-    holds more).  Every bucket is a scan task of each probe, however few
-    of its rows the probe needs."""
-    cap = int(spark.conf.get("spark.sql.sources.bucketing.maxBuckets"))
-    want = total_dl * _POSTINGS_BYTES_PER_TOKEN / BM25_BUCKET_BYTES
-    n = 1
-    while n < want and 2 * n <= cap:
-        n *= 2
-    return n
 
 
 def write_bm25_index(
@@ -524,7 +513,8 @@ def write_bm25_index(
     ``{prefix}_stopterms`` exclusion table.  The corpus scalars
     ``(n_docs, total_dl)`` come first, from one aggregate: they are the
     stats row, resolve ``max_df`` and size the buckets
-    (:func:`_bm25_num_buckets`; 1 bucket up to ~96M tokens).
+    (:func:`~ssis_to_dbt_spark.sources.writers.bucket_count`; 1 bucket
+    up to ~96M tokens).
 
     ``stopwords`` / ``max_df`` (r12, r11 VERDICT #6) bound posting-list
     growth: explicit stopwords plus any term whose document frequency
@@ -543,8 +533,6 @@ def write_bm25_index(
     terms; stats are additive on append, so the index never re-reads
     corpus text."""
     spark = df.sparkSession
-    from ..sources.writers import write_bucketed
-
     dl = df.select(F.col(id_col), _doc_len(F.col(text_col)).alias("dl"))
     # COALESCE the length sum: over an EMPTY corpus SUM() is NULL, and a
     # NULL stored total_dl would poison the first append's additive
@@ -553,7 +541,7 @@ def write_bm25_index(
         F.count(F.lit(1)).alias("n"), F.coalesce(F.sum("dl"), F.lit(0))
     ).first()
     n_docs, total_dl = int(s[0]), int(s[1])
-    n_buckets = _bm25_num_buckets(spark, total_dl)
+    n_buckets = bucket_count(spark, total_dl * _POSTINGS_BYTES_PER_TOKEN)
     postings = _postings(df, id_col, text_col)
     stopped = set(stopwords or [])
     if max_df is not None:
@@ -646,8 +634,9 @@ def compact_bm25_index(
     ``dl`` get it here, from ONE join against the doclen table; this is
     the only upgrade path (probe and append reject such postings).
     The new generation's bucket count is sized from the stats row
-    (:func:`_bm25_num_buckets`): appends keep the count the index was
-    written with, so compaction is where a grown index gets more.
+    (:func:`~ssis_to_dbt_spark.sources.writers.bucket_count`): appends
+    keep the count the index was written with, so compaction is where a
+    grown index gets more.
 
     Crash-safe by the dedup index's recipe: the new generation writes
     to a FRESH versioned path ``{path_prefix}_postings_compact_v{k}``
@@ -655,10 +644,7 @@ def compact_bm25_index(
     drop + rename; :func:`read_bm25_index` heals a crash between those
     two statements.  ``cleanup=True`` deletes the superseded postings
     directory after the swap."""
-    import re as _re
-
     from .. import fs as _fs
-    from ..sources.writers import write_bucketed
 
     _heal_bm25_compaction(spark, table_prefix)
     n_docs, total_dl, stopped = _read_bm25_state(spark, table_prefix)
@@ -670,24 +656,14 @@ def compact_bm25_index(
             "term", id_col, "tf", "dl"
         )
     postings = _not_stopped(postings, stopped)
-    parent = path_prefix.rsplit("/", 1)[0] if "/" in path_prefix else "."
-    base = path_prefix.rsplit("/", 1)[-1]
-    pat = _re.compile(_re.escape(base) + r"_postings_compact_v(\d+)$")
-    existing = [
-        int(m.group(1))
-        for name in _fs.list_dir(spark, parent)
-        for m in [pat.match(name)]
-        if m
-    ]
-    k = (max(existing) + 1) if existing else 1
-    old_loc = _table_location(spark, f"{table_prefix}_postings")
+    k = _next_compact_version(spark, path_prefix, ("postings",))
     stage = f"{table_prefix}_compact_stage_postings"
     write_bucketed(
         postings,
         stage,
         f"{path_prefix}_postings_compact_v{k}",
         ["term"],
-        num_buckets=_bm25_num_buckets(spark, total_dl),
+        bucket_count(spark, total_dl * _POSTINGS_BYTES_PER_TOKEN),
         sort_cols=["term"],
     )
     # commit marker AFTER the bucketed write fully returns (r12 ADVICE):
@@ -695,10 +671,7 @@ def compact_bm25_index(
     # a stage without it rolls BACK even under a catalog that registers
     # the name before the data is written (this one registers it last)
     _fs.touch(spark, f"{path_prefix}_postings_compact_v{k}/_COMMIT")
-    spark.sql(f"DROP TABLE IF EXISTS {table_prefix}_postings")
-    spark.sql(f"ALTER TABLE {stage} RENAME TO {table_prefix}_postings")
-    if cleanup and old_loc:
-        _fs.delete(spark, old_loc)
+    _swap_in(spark, stage, f"{table_prefix}_postings", cleanup)
     return _open_bm25(spark, table_prefix, n_docs, total_dl, stopped)
 
 
@@ -712,10 +685,10 @@ def append_bm25_index(
     max_df: int | float | None = None,
 ) -> Bm25Index:
     """Append NEW documents: their postings/lengths extend the bucketed
-    tables (``insertInto``: the tables' own bucket spec), and the stats
-    row advances ADDITIVELY (the old row plus the batch's count and
-    length sum, observed on the doclen write itself, so the batch is
-    evaluated by the two writes only).  The existing postings are
+    tables (``writers.insert_into``: the tables' own bucket spec), and
+    the stats row advances ADDITIVELY (the old row plus the batch's
+    count and length sum, observed on the doclen write itself, so the
+    batch is evaluated by the two writes only).  The existing postings are
     untouched: term frequencies are per-doc, and df_t is derived at
     probe time from the postings themselves, so append needs no global
     recount.  The returned handle is built from the stats and stopterm
@@ -790,13 +763,16 @@ def append_bm25_index(
         ).write.mode("append").format("parquet").saveAsTable(
             f"{table_prefix}_stopterms"
         )
-    postings.write.insertInto(f"{table_prefix}_postings")
+    insert_into(postings, f"{table_prefix}_postings")
     delta = Observation()
-    new_df.select(
-        F.col(id_col), _doc_len(F.col(text_col)).alias("dl")
-    ).observe(
-        delta, F.count(F.lit(1)).alias("n"), F.sum("dl").alias("s")
-    ).write.insertInto(f"{table_prefix}_doclen")
+    insert_into(
+        new_df.select(
+            F.col(id_col), _doc_len(F.col(text_col)).alias("dl")
+        ).observe(
+            delta, F.count(F.lit(1)).alias("n"), F.sum("dl").alias("s")
+        ),
+        f"{table_prefix}_doclen",
+    )
     n_docs = n_old + int(delta.get["n"])
     # the delta's SUM is NULL for a 0-row batch
     total_dl = dl_old + int(delta.get["s"] or 0)

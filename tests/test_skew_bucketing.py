@@ -11,7 +11,17 @@ from ssis_to_dbt_spark.operators import (
     salted_join,
     top_keys,
 )
+from ssis_to_dbt_spark.sources import writers
 from ssis_to_dbt_spark.sources.writers import write_bucketed
+from ssis_to_dbt_spark.text import dedup
+from test_text import num_buckets, stage_tasks
+
+
+def four_buckets(monkeypatch, est_bytes):
+    """Shrink ``writers.BUCKET_BYTES`` so that an index table the
+    writers estimate at ``est_bytes`` gets 4 buckets (a dedup index's
+    signature table, ~1.6x its band table, then gets 8)."""
+    monkeypatch.setattr(writers, "BUCKET_BYTES", est_bytes // 3)
 
 
 @pytest.fixture()
@@ -106,6 +116,20 @@ class TestBucketedJoin:
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
             spark.sql("DROP TABLE bucket_a")
             spark.sql("DROP TABLE bucket_b")
+
+    def test_catalog_entry_drops_its_tables(self, spark):
+        """``bucketed_join_orders`` leaves no ``bt_*`` table registered:
+        its result is materialized before both tables are dropped."""
+        from ssis_to_dbt_spark import catalog
+
+        out = catalog.ALL_QUERIES["bucketed_join_orders"](
+            spark, "/root/testdata/sf0.001"
+        )
+        assert out.collect()
+        assert not [
+            t.name for t in spark.catalog.listTables()
+            if t.name.startswith("bt_")
+        ]
 
 
 class TestIvfPartitionedProbe:
@@ -211,7 +235,9 @@ class TestBucketedCorpusDedupIndex:
     written bucketed once; a backfill batch (too big to broadcast) joins
     with ZERO corpus-side exchange — only the batch side shuffles."""
 
-    def test_backfill_join_corpus_side_no_exchange(self, spark, tmp_path):
+    def test_backfill_join_corpus_side_no_exchange(
+        self, spark, tmp_path, monkeypatch
+    ):
         from ssis_to_dbt_spark.sources.readers import testdata
         from ssis_to_dbt_spark.text import (
             cross_corpus_candidates,
@@ -222,9 +248,8 @@ class TestBucketedCorpusDedupIndex:
         docs = testdata(spark, "/root/testdata/sf0.001")["documents"]
         corpus = docs.filter(F.col("doc_id") % 5 != 0)
         batch = docs.filter(F.col("doc_id") % 5 == 0)
-        write_corpus_dedup_index(
-            corpus, "cc_idx", str(tmp_path / "cc_idx"), num_buckets=4
-        )
+        four_buckets(monkeypatch, corpus.count() * 4 * dedup._BAND_ROW_BYTES)
+        write_corpus_dedup_index(corpus, "cc_idx", str(tmp_path / "cc_idx"))
         prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         try:
@@ -277,7 +302,7 @@ class TestAppendCorpusDedupIndex:
     bucketed tables must be equivalent to rebuilding the index over the
     grown corpus — and the append must preserve the bucketed layout."""
 
-    def test_append_equals_rebuild(self, spark, tmp_path):
+    def test_append_equals_rebuild(self, spark, tmp_path, monkeypatch):
         from ssis_to_dbt_spark.sources.readers import testdata
         from ssis_to_dbt_spark.text import (
             append_corpus_dedup_index,
@@ -290,12 +315,12 @@ class TestAppendCorpusDedupIndex:
         corpus0 = docs.filter(F.col("doc_id") % 5 > 1)       # initial 3/5
         accepted = docs.filter(F.col("doc_id") % 5 == 1)     # grown by 1/5
         probe = docs.filter(F.col("doc_id") % 5 == 0)        # today's batch
+        four_buckets(monkeypatch, corpus0.count() * 4 * dedup._BAND_ROW_BYTES)
         try:
             write_corpus_dedup_index(
-                corpus0, "grow_idx", str(tmp_path / "grow_idx"),
-                num_buckets=4,
+                corpus0, "grow_idx", str(tmp_path / "grow_idx")
             )
-            append_corpus_dedup_index(accepted, "grow_idx", num_buckets=4)
+            append_corpus_dedup_index(accepted, "grow_idx")
             idx = read_corpus_dedup_index(spark, "grow_idx")
             got = sorted(
                 map(
@@ -324,27 +349,181 @@ class TestAppendCorpusDedupIndex:
             spark.sql("DROP TABLE IF EXISTS grow_idx_bands")
             spark.sql("DROP TABLE IF EXISTS grow_idx_sigs")
 
-    def test_append_with_mismatched_buckets_rejected(self, spark, tmp_path):
+    def test_append_keeps_a_multi_bucket_count(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """Appends write into each table's own bucket spec: onto a
+        multi-bucket dedup index and pHash index an append succeeds, the
+        tables keep their counts, and a probe finds the appended rows."""
         from ssis_to_dbt_spark.sources.readers import testdata
         from ssis_to_dbt_spark.text import (
             append_corpus_dedup_index,
+            cross_corpus_candidates,
+            read_corpus_dedup_index,
             write_corpus_dedup_index,
+        )
+        from ssis_to_dbt_spark.text.dedup import (
+            append_phash_index,
+            phash_probe_index,
+            write_phash_index,
         )
 
         docs = testdata(spark, "/root/testdata/sf0.001")["documents"]
+        seed = docs.filter(F.col("doc_id") % 2 == 0)
+        extra = docs.filter(F.col("doc_id") % 2 != 0).limit(20)
+        fps = spark.createDataFrame(
+            [(i, (i * 0x9E3779B97F4A7C15) & ((1 << 48) - 1))
+             for i in range(220)],
+            "media_id long, phash long",
+        )
+        new_fps = fps.filter(F.col("media_id") >= 200)
+        tables = ("mb_idx_bands", "mb_idx_sigs", "mb_ph_phash")
+        try:
+            four_buckets(
+                monkeypatch, seed.count() * 4 * dedup._BAND_ROW_BYTES
+            )
+            write_corpus_dedup_index(seed, "mb_idx", str(tmp_path / "mb"))
+            four_buckets(monkeypatch, 200 * 4 * dedup._PHASH_ROW_BYTES)
+            write_phash_index(
+                fps.filter(F.col("media_id") < 200), "mb_ph",
+                str(tmp_path / "ph"),
+            )
+            assert [num_buckets(spark, t) for t in tables] == [4, 8, 4]
+            monkeypatch.undo()
+            append_corpus_dedup_index(extra, "mb_idx")
+            append_phash_index(new_fps, "mb_ph")
+            assert [num_buckets(spark, t) for t in tables] == [4, 8, 4]
+            # each appended doc and image pairs with its own stored copy
+            shift = 100_000
+            pairs = cross_corpus_candidates(
+                extra.select(
+                    (F.col("doc_id") + shift).alias("doc_id"), "text"
+                ),
+                corpus_index=read_corpus_dedup_index(spark, "mb_idx"),
+            ).collect()
+            assert {
+                r["corpus_id"] for r in pairs
+                if r["new_id"] == r["corpus_id"] + shift
+            } == {r["doc_id"] for r in extra.collect()}
+            hits = phash_probe_index(
+                spark,
+                new_fps.select(
+                    (F.col("media_id") + shift).alias("media_id"), "phash"
+                ),
+                "mb_ph", max_hamming=0,
+            ).collect()
+            assert {(r["media_id"] - shift, r["index_id"]) for r in hits} \
+                == {(i, i) for i in range(200, 220)}
+        finally:
+            for t in tables:
+                spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+    def test_appends_match_columns_by_name(self, spark, tmp_path):
+        """A ``new_index=`` / ``new_bands=`` relation whose columns are
+        in another order than the table's lands every value in its own
+        column."""
+        from ssis_to_dbt_spark.sources.readers import testdata
+        from ssis_to_dbt_spark.text import (
+            append_corpus_dedup_index,
+            corpus_dedup_index,
+            write_corpus_dedup_index,
+        )
+        from ssis_to_dbt_spark.text.dedup import (
+            _hamming_banded,
+            append_phash_index,
+            write_phash_index,
+        )
+
+        docs = testdata(spark, "/root/testdata/sf0.001")["documents"]
+        batch = docs.filter(F.col("doc_id") % 5 == 0)
+        fps = spark.createDataFrame(
+            [(i, (i * 0x9E3779B97F4A7C15) & ((1 << 48) - 1))
+             for i in range(40)],
+            "media_id long, phash long",
+        )
         try:
             write_corpus_dedup_index(
-                docs.filter(F.col("doc_id") % 2 == 0),
-                "mm_idx", str(tmp_path / "mm_idx"), num_buckets=4,
+                docs.filter(F.col("doc_id") % 5 != 0), "bn_idx",
+                str(tmp_path / "bn"),
             )
-            with pytest.raises(Exception):  # Spark rejects bucket-spec drift
-                append_corpus_dedup_index(
-                    docs.filter(F.col("doc_id") % 2 != 0),
-                    "mm_idx", num_buckets=8,
-                )
+            sigs, bands = corpus_dedup_index(batch)
+            append_corpus_dedup_index(
+                batch, "bn_idx", batch_id=1, new_index=(
+                    sigs.select("minhash", "doc_id"),
+                    bands.select("band_hash", "doc_id", "band_idx"),
+                ),
+            )
+            write_phash_index(
+                fps.filter(F.col("media_id") < 20), "bn_ph",
+                str(tmp_path / "ph"),
+            )
+            new_bands = _hamming_banded(
+                fps.filter(F.col("media_id") >= 20), "media_id", "phash",
+                48, 12, None,
+            )
+            append_phash_index(
+                fps, "bn_ph", batch_id=1, new_bands=new_bands.select(
+                    "band_val", "band_idx", "_fp", "media_id"
+                ),
+            )
+            for table, want in (
+                ("bn_idx_sigs", sigs),
+                ("bn_idx_bands", bands),
+                ("bn_ph_phash", new_bands),
+            ):
+                spark.catalog.refreshTable(table)
+                got = spark.table(table).filter(F.col("_ib") == 1)
+                assert sorted(
+                    map(tuple, got.select(*want.columns).collect())
+                ) == sorted(map(tuple, want.collect()))
         finally:
-            spark.sql("DROP TABLE IF EXISTS mm_idx_bands")
-            spark.sql("DROP TABLE IF EXISTS mm_idx_sigs")
+            for t in ("bn_idx_bands", "bn_idx_sigs", "bn_ph_phash"):
+                spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+    def test_small_index_probes_scan_in_one_task(self, spark, tmp_path):
+        """A small dedup index and a small pHash index have 1 bucket, so
+        every stage of a probe, its index scan included, runs 1 task."""
+        from ssis_to_dbt_spark.sources.readers import testdata
+        from ssis_to_dbt_spark.text import (
+            cross_corpus_candidates,
+            read_corpus_dedup_index,
+            write_corpus_dedup_index,
+        )
+        from ssis_to_dbt_spark.text.dedup import (
+            phash_probe_index,
+            write_phash_index,
+        )
+
+        docs = testdata(spark, "/root/testdata/sf0.001")["documents"]
+        fps = spark.createDataFrame(
+            [(i, (i * 0x9E3779B97F4A7C15) & ((1 << 48) - 1))
+             for i in range(40)],
+            "media_id long, phash long",
+        ).coalesce(1)
+        tables = ("one_idx_bands", "one_idx_sigs", "one_ph_phash")
+        try:
+            write_corpus_dedup_index(
+                docs.filter(F.col("doc_id") % 5 != 0), "one_idx",
+                str(tmp_path / "one"),
+            )
+            write_phash_index(fps, "one_ph", str(tmp_path / "ph"))
+            assert [num_buckets(spark, t) for t in tables] == [1, 1, 1]
+            idx = read_corpus_dedup_index(spark, "one_idx")
+            batch = docs.filter(F.col("doc_id") % 5 == 0)
+            for probe in (
+                lambda: cross_corpus_candidates(
+                    batch, corpus_index=idx
+                ).collect(),
+                lambda: phash_probe_index(
+                    spark, fps.filter(F.col("media_id") < 5), "one_ph",
+                    max_hamming=0,
+                ).collect(),
+            ):
+                rows, tasks = stage_tasks(spark, probe)
+                assert rows and tasks and max(tasks) == 1, tasks
+        finally:
+            for t in tables:
+                spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
 class TestCrawlIngestPersistedIndex:
@@ -379,7 +558,7 @@ class TestCrawlIngestPersistedIndex:
         try:
             # persisted twin: index lives in bucketed tables on disk
             write_corpus_dedup_index(
-                seed, "ing_idx", str(tmp_path / "ing_idx"), num_buckets=4
+                seed, "ing_idx", str(tmp_path / "ing_idx")
             )
             sigs, bands = read_corpus_dedup_index(spark, "ing_idx")
             p1 = ingest_batch(
@@ -388,8 +567,7 @@ class TestCrawlIngestPersistedIndex:
                             dsir_state=st.dsir_state),
             )
             append_corpus_dedup_index(
-                p1.accepted.select("doc_id", "text"), "ing_idx",
-                num_buckets=4,
+                p1.accepted.select("doc_id", "text"), "ing_idx"
             )
             sigs2, bands2 = read_corpus_dedup_index(spark, "ing_idx")
             p2 = ingest_batch(
@@ -428,7 +606,7 @@ class TestCrawlIngestPersistedIndex:
         docs = testdata(spark, "/root/testdata/sf0.001")["documents"]
         try:
             write_corpus_dedup_index(
-                docs, "aud_idx", str(tmp_path / "aud_idx"), num_buckets=4
+                docs, "aud_idx", str(tmp_path / "aud_idx")
             )
             over = corpus_dedup_index_band_audit(spark, "aud_idx", 1)
             rows = over.collect()
@@ -491,7 +669,7 @@ class TestCompactCorpusDedupIndex:
     pairs as a fresh rebuild from text."""
 
     def test_compact_dedupes_recaps_and_preserves_semantics(
-        self, spark, tmp_path
+        self, spark, tmp_path, monkeypatch
     ):
         from ssis_to_dbt_spark.sources.readers import testdata
         from ssis_to_dbt_spark.text import (
@@ -508,18 +686,19 @@ class TestCompactCorpusDedupIndex:
         docs = testdata(spark, "/root/testdata/sf0.001")["documents"]
         corpus = docs.filter(F.col("doc_id") % 5 != 0)
         batch = docs.filter(F.col("doc_id") % 5 == 0)
+        four_buckets(monkeypatch, corpus.count() * 4 * dedup._BAND_ROW_BYTES)
         try:
             write_corpus_dedup_index(
-                corpus, "cmp_idx", str(tmp_path / "cmp_idx"), num_buckets=4
+                corpus, "cmp_idx", str(tmp_path / "cmp_idx")
             )
             n0 = spark.table("cmp_idx_sigs").count()
             # accidental double-append of the same accepted slice
             extra = corpus.filter(F.col("doc_id") % 7 == 0)
             append_corpus_dedup_index(
-                extra.select("doc_id", "text"), "cmp_idx", num_buckets=4
+                extra.select("doc_id", "text"), "cmp_idx"
             )
             append_corpus_dedup_index(
-                extra.select("doc_id", "text"), "cmp_idx", num_buckets=4
+                extra.select("doc_id", "text"), "cmp_idx"
             )
             spark.catalog.refreshTable("cmp_idx_sigs")
             assert spark.table("cmp_idx_sigs").count() > n0
@@ -529,7 +708,7 @@ class TestCompactCorpusDedupIndex:
                 > 0
             )
             compact_corpus_dedup_index(
-                spark, "cmp_idx", str(tmp_path / "cmp_idx"), num_buckets=4
+                spark, "cmp_idx", str(tmp_path / "cmp_idx")
             )
             # dedup restored: exactly one signature row per doc
             assert spark.table("cmp_idx_sigs").count() == n0
@@ -557,6 +736,34 @@ class TestCompactCorpusDedupIndex:
                 "cmp_idx_bands", "cmp_idx_sigs",
                 "cmp_idx_compact_stage_bands", "cmp_idx_compact_stage_sigs",
             ):
+                spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
+    def test_compaction_releases_its_checkpoint(self, spark, tmp_path):
+        """The deduped-signature checkpoint is released once both stages
+        are written: a compaction leaves no persistent RDD behind."""
+        from ssis_to_dbt_spark.sources.readers import testdata
+        from ssis_to_dbt_spark.text import (
+            append_corpus_dedup_index,
+            write_corpus_dedup_index,
+        )
+        from ssis_to_dbt_spark.text.dedup import compact_corpus_dedup_index
+
+        docs = testdata(spark, "/root/testdata/sf0.001")["documents"]
+        jsc = spark.sparkContext._jsc
+        try:
+            write_corpus_dedup_index(
+                docs.filter(F.col("doc_id") % 5 != 0), "rel_idx",
+                str(tmp_path / "rel"),
+            )
+            append_corpus_dedup_index(
+                docs.filter(F.col("doc_id") % 5 == 0), "rel_idx"
+            )
+            before = jsc.getPersistentRDDs().size()
+            compact_corpus_dedup_index(spark, "rel_idx", str(tmp_path / "rel"))
+            assert jsc.getPersistentRDDs().size() == before
+        finally:
+            for t in ("rel_idx_bands", "rel_idx_sigs"):
                 spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
@@ -597,7 +804,7 @@ class TestBackfillHotBucketSkew:
         try:
             write_corpus_dedup_index(
                 corpus, "hot_idx", str(tmp_path / "hot_idx"),
-                num_buckets=4, max_bucket_size=self.CAP,
+                max_bucket_size=self.CAP,
             )
             # the stored corpus side is capped: no band bucket holds more
             # than CAP members even though 150 corpus docs share all bands
@@ -724,9 +931,7 @@ class TestCompactionSwapSelfHeal:
         docs = testdata(spark, "/root/testdata/sf0.001")["documents"]
         corpus = docs.filter(F.col("doc_id") % 5 != 0)
         batch = docs.filter(F.col("doc_id") % 5 == 0)
-        write_corpus_dedup_index(
-            corpus, prefix, str(tmp_path / prefix), num_buckets=4
-        )
+        write_corpus_dedup_index(corpus, prefix, str(tmp_path / prefix))
         return corpus, batch
 
     def _stage(self, spark, tmp_path, prefix, suffixes):
@@ -808,7 +1013,7 @@ class TestCompactionSwapSelfHeal:
             extra = corpus.filter(F.col("doc_id") % 7 == 0)
             self._stage(spark, tmp_path, "heal2_idx", ("bands", "sigs"))
             append_corpus_dedup_index(
-                extra.select("doc_id", "text"), "heal2_idx", num_buckets=4
+                extra.select("doc_id", "text"), "heal2_idx"
             )
             spark.catalog.refreshTable("heal2_idx_sigs")
             # simulate a completed bands swap: live bands = staged bands
@@ -868,8 +1073,7 @@ class TestLegacyTaglessIndex:
         corpus = docs.filter(F.col("doc_id") % 5 != 0)
         batch = docs.filter(F.col("doc_id") % 5 == 0)
         write_corpus_dedup_index(
-            corpus, "tagless_tmp", str(tmp_path / "tagless_tmp"),
-            num_buckets=4,
+            corpus, "tagless_tmp", str(tmp_path / "tagless_tmp")
         )
         sigs = spark.table("tagless_tmp_sigs").drop("_ib")
         bands = spark.table("tagless_tmp_bands").drop("_ib")
@@ -913,8 +1117,7 @@ class TestLegacyTaglessIndex:
             # guard possible) instead of AnalysisException
             n_sigs0 = n
             append_corpus_dedup_index(
-                batch.select("doc_id", "text"), "tagless",
-                num_buckets=4, batch_id=3,
+                batch.select("doc_id", "text"), "tagless", batch_id=3,
             )
             spark.catalog.refreshTable("tagless_sigs")
             spark.catalog.refreshTable("tagless_bands")
@@ -1197,7 +1400,9 @@ class TestPhashIndexLifecycle:
         for t in (f"{prefix}_phash", f"{prefix}_phash_cstage"):
             spark.sql(f"DROP TABLE IF EXISTS {t}")
 
-    def test_probe_corpus_side_no_exchange(self, spark, tmp_path):
+    def test_probe_corpus_side_no_exchange(
+        self, spark, tmp_path, monkeypatch
+    ):
         from ssis_to_dbt_spark.text.dedup import (
             phash_probe_index,
             write_phash_index,
@@ -1214,9 +1419,8 @@ class TestPhashIndexLifecycle:
         prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         try:
-            write_phash_index(
-                corpus, "ph_np", str(tmp_path / "ph_np"), num_buckets=4
-            )
+            four_buckets(monkeypatch, 200 * 4 * dedup._PHASH_ROW_BYTES)
+            write_phash_index(corpus, "ph_np", str(tmp_path / "ph_np"))
             out = phash_probe_index(
                 spark, batch, "ph_np", max_hamming=48
             )
@@ -1265,10 +1469,8 @@ class TestPhashIndexLifecycle:
             (13, 0x5A5A5A5A5A5A),   # novel -> accept
         ])
         try:
-            write_phash_index(b1, "ph_2b", str(tmp_path / "ph_2b"),
-                              num_buckets=4)
-            res = ingest_media_batch(spark, b2, "ph_2b", batch_id=1,
-                                     num_buckets=4)
+            write_phash_index(b1, "ph_2b", str(tmp_path / "ph_2b"))
+            res = ingest_media_batch(spark, b2, "ph_2b", batch_id=1)
             # 11 and 12 are ALSO near-dups of each other, so keep-one
             # prunes 12 before the probe; 11 then rejects vs indexed 1
             assert {r["media_id"] for r in res.kept.collect()} == {11, 13}
@@ -1287,7 +1489,7 @@ class TestPhashIndexLifecycle:
                 spark, b3, "ph_2b", max_hamming=2).collect()))
             write_phash_index(
                 b1.unionByName(self._fp(spark, [(13, 0x5A5A5A5A5A5A)])),
-                "ph_2c", str(tmp_path / "ph_2c"), num_buckets=4)
+                "ph_2c", str(tmp_path / "ph_2c"))
             want = sorted(map(tuple, phash_probe_index(
                 spark, b3, "ph_2c", max_hamming=2).collect()))
             assert got == want == [(21, 13, 1)]
@@ -1308,16 +1510,13 @@ class TestPhashIndexLifecycle:
         b1 = self._fp(spark, [(1, 0x111111111111)])
         b2 = self._fp(spark, [(2, 0x222222222222)])
         try:
-            write_phash_index(b1, "ph_rp", str(tmp_path / "ph_rp"),
-                              num_buckets=4)
-            r1 = ingest_media_batch(spark, b2, "ph_rp", batch_id=5,
-                                    num_buckets=4)
+            write_phash_index(b1, "ph_rp", str(tmp_path / "ph_rp"))
+            r1 = ingest_media_batch(spark, b2, "ph_rp", batch_id=5)
             assert {r["media_id"] for r in r1.accepted.collect()} == {2}
             spark.catalog.refreshTable("ph_rp_phash")
             n1 = read_phash_index(spark, "ph_rp").count()
             # replay: same verdict, same index state
-            r2 = ingest_media_batch(spark, b2, "ph_rp", batch_id=5,
-                                    num_buckets=4)
+            r2 = ingest_media_batch(spark, b2, "ph_rp", batch_id=5)
             assert {r["media_id"] for r in r2.accepted.collect()} == {2}
             assert not r2.rejected.take(1)
             spark.catalog.refreshTable("ph_rp_phash")
@@ -1326,7 +1525,7 @@ class TestPhashIndexLifecycle:
             self._drop(spark, "ph_rp")
 
     def test_compact_dedupes_keeps_newest_and_preserves_probe(
-        self, spark, tmp_path
+        self, spark, tmp_path, monkeypatch
     ):
         from ssis_to_dbt_spark.text.dedup import (
             append_phash_index,
@@ -1338,24 +1537,22 @@ class TestPhashIndexLifecycle:
         )
 
         b1 = self._fp(spark, [(1, 0x111111111111), (2, 0x222222222222)])
+        four_buckets(monkeypatch, 2 * 4 * dedup._PHASH_ROW_BYTES)
         try:
-            write_phash_index(b1, "ph_cp", str(tmp_path / "ph_cp"),
-                              num_buckets=4)
+            write_phash_index(b1, "ph_cp", str(tmp_path / "ph_cp"))
             # replayed append (exact dup rows) + a re-crawled id whose
             # image CHANGED (new fingerprint under a newer tag)
             append_phash_index(
                 self._fp(spark, [(1, 0x111111111111)]), "ph_cp",
-                num_buckets=4, batch_id=None,
+                batch_id=None,
             )
             recrawl = 0x333333333333
             append_phash_index(
-                self._fp(spark, [(2, recrawl)]), "ph_cp",
-                num_buckets=4, batch_id=7,
+                self._fp(spark, [(2, recrawl)]), "ph_cp", batch_id=7,
             )
             spark.catalog.refreshTable("ph_cp_phash")
             assert phash_index_band_audit(spark, "ph_cp", 1).count() > 0
-            compact_phash_index(spark, "ph_cp", str(tmp_path / "ph_cp"),
-                                num_buckets=4)
+            compact_phash_index(spark, "ph_cp", str(tmp_path / "ph_cp"))
             idx = read_phash_index(spark, "ph_cp")
             # one generation per id, newest fingerprint wins
             assert idx.count() == 8  # 2 ids x 4 bands
@@ -1386,8 +1583,7 @@ class TestPhashIndexLifecycle:
 
         b1 = self._fp(spark, [(1, 0x111111111111), (2, 0x222222222222)])
         try:
-            write_phash_index(b1, "ph_hl", str(tmp_path / "ph_hl"),
-                              num_buckets=4)
+            write_phash_index(b1, "ph_hl", str(tmp_path / "ph_hl"))
             # (A) stage present, live present -> rollback
             stage_rows = _hamming_banded(
                 self._fp(spark, [(3, 0x333333333333)]),

@@ -763,7 +763,7 @@ class TestStreamingCrawlIngest:
 
         try:
             write_corpus_dedup_index(
-                seed, "sing_idx", str(tmp_path / "sing_idx"), num_buckets=4
+                seed, "sing_idx", str(tmp_path / "sing_idx")
             )
             n_seed_bands = spark.table("sing_idx_bands").count()
             src = str(tmp_path / "s_src")
@@ -775,7 +775,7 @@ class TestStreamingCrawlIngest:
                 stream = spark.readStream.schema(b1.schema).parquet(src)
                 q, box = write_stream_crawl_ingest(
                     stream, st, out, ckpt,
-                    table_prefix="sing_idx", num_buckets=4,
+                    table_prefix="sing_idx",
                 )
                 q.awaitTermination(180)
                 return box["state"]
@@ -841,7 +841,7 @@ class TestStreamingCrawlIngest:
 
         try:
             write_corpus_dedup_index(
-                seed, "res_idx", str(tmp_path / "res_idx"), num_buckets=4
+                seed, "res_idx", str(tmp_path / "res_idx")
             )
             src = str(tmp_path / "r_src")
             out = str(tmp_path / "r_out")
@@ -854,7 +854,7 @@ class TestStreamingCrawlIngest:
             stream = spark.readStream.schema(b1.schema).parquet(src)
             q, box = write_stream_crawl_ingest(
                 stream, seed_ingest_state(seed), out, ckpt,
-                table_prefix="res_idx", num_buckets=4,
+                table_prefix="res_idx",
                 dsir_state_path=spath,
             )
             q.awaitTermination(180)
@@ -866,7 +866,7 @@ class TestStreamingCrawlIngest:
             stream2 = spark.readStream.schema(b1.schema).parquet(src)
             q2, _ = write_stream_crawl_ingest(
                 stream2, resumed, out, ckpt,
-                table_prefix="res_idx", num_buckets=4,
+                table_prefix="res_idx",
                 dsir_state_path=spath,
             )
             q2.awaitTermination(180)
@@ -966,7 +966,7 @@ class TestStreamingCrawlIngest:
             spath = str(tmp_path / f"{tag}_state")
             cpath = str(tmp_path / f"{tag}_compact" / prefix)
             write_corpus_dedup_index(
-                seed, prefix, str(tmp_path / prefix), num_buckets=4,
+                seed, prefix, str(tmp_path / prefix),
             )
             state = seed_ingest_state(seed)
             for i, b in enumerate(batches):
@@ -977,7 +977,7 @@ class TestStreamingCrawlIngest:
                 stream = spark.readStream.schema(docs.schema).parquet(src)
                 q, box = write_stream_crawl_ingest(
                     stream, state, out, ckpt,
-                    table_prefix=prefix, num_buckets=4,
+                    table_prefix=prefix,
                     dsir_state_path=spath, dsir_state_keep_versions=3,
                     # cap=1: any shared band (the fixture's near-dup
                     # pairs) trips the audit, so compactions genuinely
@@ -1121,7 +1121,7 @@ class TestStreamingCrawlIngest:
 
         try:
             write_corpus_dedup_index(
-                seed, "rp_idx", str(tmp_path / "rp_idx"), num_buckets=4
+                seed, "rp_idx", str(tmp_path / "rp_idx")
             )
             src = str(tmp_path / "rp_src")
             out = str(tmp_path / "rp_out")
@@ -1132,7 +1132,7 @@ class TestStreamingCrawlIngest:
                 stream = spark.readStream.schema(b1.schema).parquet(src)
                 q, box = write_stream_crawl_ingest(
                     stream, st, out, ckpt,
-                    table_prefix="rp_idx", num_buckets=4,
+                    table_prefix="rp_idx",
                     dsir_state_path=spath,
                 )
                 q.awaitTermination(180)
@@ -1356,7 +1356,7 @@ class TestLongSoakFiftyBatches:
         )
         try:
             write_corpus_dedup_index(
-                seed, prefix, str(tmp_path / prefix), num_buckets=4
+                seed, prefix, str(tmp_path / prefix)
             )
             state = seed_ingest_state(seed)
             # three sessions over [0,17), [17,34), [34,50) — the state
@@ -1376,7 +1376,7 @@ class TestLongSoakFiftyBatches:
                 )
                 q, box = write_stream_crawl_ingest(
                     stream, state, out, ckpt,
-                    table_prefix=prefix, num_buckets=4,
+                    table_prefix=prefix,
                     dsir_state_path=spath, dsir_state_keep_versions=3,
                     audit_every=10, audit_max_bucket_size=1,
                     compact_path_prefix=f"{cdir}/{prefix}",
@@ -1702,7 +1702,7 @@ class TestStreamingMediaIngest:
             "media_id long, phash long"
         ).parquet(src)
         q = write_stream_media_ingest(
-            stream, prefix, out, ckpt, num_buckets=4, **kw
+            stream, prefix, out, ckpt, **kw
         )
         q.awaitTermination(240)
         q.stop()  # release the checkpoint before the next run starts
@@ -1723,8 +1723,7 @@ class TestStreamingMediaIngest:
             [(1, 0x111111111111)], "media_id long, phash long"
         )
         try:
-            write_phash_index(seed, prefix, str(tmp_path / "idx"),
-                              num_buckets=4)
+            write_phash_index(seed, prefix, str(tmp_path / "idx"))
             # batch 0: dup-of-seed (11), novel (12)
             self._write_batch(spark, src, [(11, 0x111111111111),
                                            (12, 0x222222222222)])
@@ -1773,8 +1772,7 @@ class TestStreamingMediaIngest:
             [(1, 0x111111111111)], "media_id long, phash long"
         )
         try:
-            write_phash_index(seed, prefix, str(tmp_path / "idx"),
-                              num_buckets=4)
+            write_phash_index(seed, prefix, str(tmp_path / "idx"))
             self._write_batch(spark, src, [(11, 0x111111111111),
                                            (12, 0x222222222222)])
             self._run(spark, src, prefix, out, ckpt)
@@ -1823,10 +1821,9 @@ class TestStreamingMediaIngest:
             [(1, 0x111111111111)], "media_id long, phash long"
         )
         try:
-            write_phash_index(seed, prefix, str(tmp_path / "idx"),
-                              num_buckets=4)
+            write_phash_index(seed, prefix, str(tmp_path / "idx"))
             # duplicate seed rows -> over-cap at audit_max_bucket_size=1
-            append_phash_index(seed, prefix, num_buckets=4)
+            append_phash_index(seed, prefix)
             self._write_batch(spark, src, [(11, 0x222222222222)])
             self._run(spark, src, prefix, out, ckpt,
                       audit_every=2,

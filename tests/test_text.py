@@ -3106,14 +3106,14 @@ class TestPersistedBm25Index:
         assert s["n_docs"] == docs.count()
 
     def test_probe_scan_bucket_prunes(self, spark, tmp_path, monkeypatch):
-        from ssis_to_dbt_spark.text import retrieval
+        from ssis_to_dbt_spark.sources import writers
         from ssis_to_dbt_spark.text.retrieval import (
             bm25_index_probe,
             write_bm25_index,
         )
 
         # a multi-bucket index: ~38 KB of postings in 1 KB buckets
-        monkeypatch.setattr(retrieval, "BM25_BUCKET_BYTES", 1 << 10)
+        monkeypatch.setattr(writers, "BUCKET_BYTES", 1 << 10)
         docs = self._docs(spark)
         prefix = "bm25p_" + tmp_path.name
         idx = write_bm25_index(docs, prefix, str(tmp_path / "t"))
@@ -3196,7 +3196,7 @@ class TestPersistedBm25Index:
 
 class TestBm25BucketSizing:
     """The BM25 index sizes its bucket count from the corpus's token
-    count (``retrieval.BM25_BUCKET_BYTES``), not from a parameter."""
+    count (``writers.bucket_count``), not from a parameter."""
 
     def _docs(self, spark):
         return spark.read.parquet(
@@ -3204,18 +3204,23 @@ class TestBm25BucketSizing:
         )
 
     def test_bucket_count_rule(self, spark, monkeypatch):
+        from ssis_to_dbt_spark.sources import writers
         from ssis_to_dbt_spark.text import retrieval
 
-        n = retrieval._bm25_num_buckets
+        def n(spark, tokens):
+            return writers.bucket_count(
+                spark, tokens * retrieval._POSTINGS_BYTES_PER_TOKEN
+            )
+
         assert n(spark, 0) == 1
         # ~96M tokens fill one 128 MB bucket; one token more needs two
-        per = retrieval.BM25_BUCKET_BYTES / retrieval._POSTINGS_BYTES_PER_TOKEN
+        per = writers.BUCKET_BYTES / retrieval._POSTINGS_BYTES_PER_TOKEN
         assert n(spark, int(per)) == 1 and n(spark, int(per) + 1) == 2
         assert n(spark, int(per) * 5) == 8
         # a 100 TB corpus (~1.7e13 tokens) is capped at the largest power
         # of two within spark.sql.sources.bucketing.maxBuckets (100,000)
         assert n(spark, 17 * 10**12) == 65536
-        monkeypatch.setattr(retrieval, "BM25_BUCKET_BYTES", 1)
+        monkeypatch.setattr(writers, "BUCKET_BYTES", 1)
         assert n(spark, 10**6) == 65536
 
     def test_small_index_probe_scans_in_one_task(self, spark, tmp_path):
@@ -3245,7 +3250,7 @@ class TestBm25BucketSizing:
     ):
         """An append writes into the index's own bucket spec, whatever
         count the index was written with."""
-        from ssis_to_dbt_spark.text import retrieval
+        from ssis_to_dbt_spark.sources import writers
         from ssis_to_dbt_spark.text.retrieval import (
             append_bm25_index,
             bm25_index_probe,
@@ -3253,7 +3258,7 @@ class TestBm25BucketSizing:
             write_bm25_index,
         )
 
-        monkeypatch.setattr(retrieval, "BM25_BUCKET_BYTES", 1 << 12)
+        monkeypatch.setattr(writers, "BUCKET_BYTES", 1 << 12)
         docs = self._docs(spark)
         prefix = "bm25nb_" + tmp_path.name
         write_bm25_index(
@@ -3277,6 +3282,7 @@ class TestBm25BucketSizing:
     ):
         """An index written with 1 bucket gets more at compaction once
         its stats outgrow the bucket size; scores do not move."""
+        from ssis_to_dbt_spark.sources import writers
         from ssis_to_dbt_spark.text import retrieval
         from ssis_to_dbt_spark.text.retrieval import (
             bm25_index_probe,
@@ -3291,10 +3297,12 @@ class TestBm25BucketSizing:
         assert num_buckets(spark, f"{prefix}_postings") == 1
         q = {"q1": ["hash", "join"], "q2": ["window"]}
         before = sorted(map(tuple, bm25_index_probe(idx, q).collect()))
-        monkeypatch.setattr(retrieval, "BM25_BUCKET_BYTES", 1 << 10)
+        monkeypatch.setattr(writers, "BUCKET_BYTES", 1 << 10)
         idx = compact_bm25_index(spark, prefix, str(tmp_path / "t"))
         assert num_buckets(spark, f"{prefix}_postings") == (
-            retrieval._bm25_num_buckets(spark, idx.total_dl)
+            writers.bucket_count(
+                spark, idx.total_dl * retrieval._POSTINGS_BYTES_PER_TOKEN
+            )
         ) > 1
         assert sorted(
             map(tuple, bm25_index_probe(idx, q).collect())
