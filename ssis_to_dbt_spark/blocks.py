@@ -27,8 +27,9 @@ Contract: a DataFrame returned by a catalog query is valid until the next
 catalog query is built; consume it (collect or write) first.  With
 ``SPARK_GRAFT_KEEP_BLOCKS=1`` entering a scope releases nothing: blocks and
 scratch dirs stay until the caller runs :func:`release_pending`.
-:func:`release` unpersists one checkpoint a builder has fully consumed (a
-no-op under the same switch).
+:func:`release` unpersists one checkpoint a builder has fully consumed, and
+:func:`released_on_exit` every RDD persisted while a block of work ran, such
+as a streaming sink's micro-batch (both no-ops under the same switch).
 """
 
 from __future__ import annotations
@@ -42,7 +43,7 @@ from pyspark.sql import DataFrame
 
 __all__ = [
     "checkpoint", "materialize", "release", "query_scope", "release_pending",
-    "own_dir",
+    "own_dir", "released_on_exit",
 ]
 
 
@@ -73,6 +74,12 @@ def _ids(rdds) -> set[int]:
     # "[3, 7]" from the JVM in one py4j call, not one per key
     text = rdds.keySet().toString().strip("[]") if rdds is not None else ""
     return {int(k) for k in text.split(",") if k.strip()}
+
+
+def _since(before: set[int]) -> list:
+    """The persistent RDDs whose ids are not in ``before``."""
+    rdds = _persistent_rdds()
+    return [rdds.get(i) for i in _ids(rdds) - before]
 
 
 def _ckpt_jrdd(df: DataFrame):
@@ -162,6 +169,23 @@ def query_scope():
     finally:
         before, dirs = _open
         _open = None
-        rdds = _persistent_rdds()
-        _pending_rdds.extend(rdds.get(i) for i in _ids(rdds) - before)
+        _pending_rdds.extend(_since(before))
         _pending_dirs.extend(dirs)
+
+
+@contextmanager
+def released_on_exit():
+    """Unpersist (async), on exit, every RDD persisted while the block ran.
+
+    For a unit of work that writes all its results before it ends, such
+    as a streaming sink's micro-batch.  The ids are the session's, not
+    the thread's: an RDD another thread persists meanwhile is released
+    too.  A no-op under ``SPARK_GRAFT_KEEP_BLOCKS=1``.
+    """
+    before = _ids(_persistent_rdds())
+    try:
+        yield
+    finally:
+        if not _keep_blocks():
+            for jrdd in _since(before):
+                jrdd.unpersist(False)

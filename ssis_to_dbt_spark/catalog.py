@@ -935,7 +935,7 @@ def q_split_leakage_docs(spark, sf_dir, pairs=None):
     docs = _t(spark, sf_dir)["documents"]
     split = hash_split(docs, "doc_id", test_pct=10).select("doc_id", "split")
     if pairs is None:
-        pairs = minhash_candidates_md5(docs, num_hashes=8, bands=4)
+        pairs = minhash_candidates_md5(docs)
     sa = split.select(
         F.col("doc_id").alias("doc_a"), F.col("split").alias("split_a")
     )
@@ -974,9 +974,7 @@ def q_minhash_pairs_md5(spark, sf_dir):
     # (cand arm, leakage audit, prune/safe-split) — lazily checkpointed so
     # each arm reads the materialized pair table instead of re-running the
     # corpus-scan -> shingle -> signature -> band-join upstream.
-    pairs0 = minhash_candidates_md5(
-        docs, num_hashes=8, bands=4
-    ).localCheckpoint(eager=False)
+    pairs0 = minhash_candidates_md5(docs).localCheckpoint(eager=False)
     cand = pairs0.select(
         F.col("doc_a").cast("long").alias("doc_a"),
         F.col("doc_b").cast("long").alias("doc_b"),
@@ -2865,7 +2863,7 @@ def q_neardup_clusters(spark, sf_dir):
     from .text.dedup import connected_components
 
     docs = _t(spark, sf_dir)["documents"]
-    pairs = minhash_candidates_md5(docs, num_hashes=8, bands=4)
+    pairs = minhash_candidates_md5(docs)
     comp = connected_components(pairs, "doc_a", "doc_b")
     sizes = comp.groupBy("label").agg(F.count(F.lit(1)).alias("cluster_size"))
     return comp.join(sizes, "label").select(
@@ -8042,7 +8040,7 @@ def q_neardup_prune_docs(spark, sf_dir, pairs=None):
 
     docs = _t(spark, sf_dir)["documents"]
     if pairs is None:
-        pairs = minhash_candidates_md5(docs, num_hashes=8, bands=4)
+        pairs = minhash_candidates_md5(docs)
     return prune_clusters(docs, pairs).select(
         F.col("doc_id").cast("long").alias("doc_id"),
         F.col("cluster_id").cast("long").alias("cluster_id"),
@@ -8233,7 +8231,7 @@ def q_cluster_split_docs(spark, sf_dir):
     from .text.dedup import prune_clusters
 
     docs = _t(spark, sf_dir)["documents"]
-    pairs = minhash_candidates_md5(docs, num_hashes=8, bands=4)
+    pairs = minhash_candidates_md5(docs)
     pruned = prune_clusters(docs, pairs)
     return _cluster_split(pruned).select(
         F.col("doc_id").cast("long").alias("doc_id"),

@@ -102,7 +102,7 @@ def stage_prune(gated: DataFrame) -> DataFrame:
     one row per gated doc ``(doc_id, cluster_id, cluster_size, kept)``."""
     from .text.dedup import minhash_candidates_md5, prune_clusters
 
-    pairs = minhash_candidates_md5(gated, num_hashes=8, bands=4)
+    pairs = minhash_candidates_md5(gated)
     return prune_clusters(gated, pairs)
 
 

@@ -233,7 +233,7 @@ def ingest_batch(
         pack_sequences,
         token_count,
     )
-    from .text.dedup import cross_corpus_candidates
+    from .text.dedup import MINHASH_NUM_HASHES, cross_corpus_candidates
 
     if pre_probe is not None and not dedup_within_batch:
         raise ValueError(
@@ -347,15 +347,15 @@ def ingest_batch(
             broadcast_batch=(n_gated <= BATCH_BROADCAST_MAX_DOCS),
             **cap_kw,
         )
-        # est_jaccard is matches/num_hashes with num_hashes=8 — exactly
-        # representable, so the threshold compare and the *8 recovery of
+        # est_jaccard is matches / MINHASH_NUM_HASHES — exactly
+        # representable, so the threshold compare and the recovery of
         # the integer match count are both exact.
         rejected = ck(
             pairs.filter(F.col("est_jaccard") >= float(dup_threshold))
             .groupBy(F.col("new_id").alias("doc_id"))
             .agg(
                 F.count(F.lit(1)).alias("n_dups"),
-                F.round(F.max("est_jaccard") * 8)
+                F.round(F.max("est_jaccard") * MINHASH_NUM_HASHES)
                 .cast("long")
                 .alias("max_matches"),
             )
@@ -439,8 +439,6 @@ def ingest_media_batch(
     max_hamming: int = 2,
     id_col: str = "media_id",
     fp_col: str = "phash",
-    bits: int = 48,
-    band_bits: int = 12,
     max_bucket_size: int | None = 10_000,
     batch_id: int | None = None,
     append: bool = True,
@@ -480,21 +478,18 @@ def ingest_media_batch(
     )
 
     kept = phash_keep_one(
-        batch_fp, id_col, fp_col, max_hamming, bits, band_bits,
-        max_bucket_size,
+        batch_fp, id_col, fp_col, max_hamming, max_bucket_size
     ).localCheckpoint(eager=False)
     pairs = phash_probe_index(
-        spark, kept, table_prefix, max_hamming, id_col, fp_col, bits,
-        band_bits, max_bucket_size,
-        exclude_tag=batch_id,
+        spark, kept, table_prefix, max_hamming, id_col, fp_col,
+        max_bucket_size, exclude_tag=batch_id,
     ).localCheckpoint(eager=False)
     rej_ids = pairs.select(id_col).distinct()
     rejected = kept.join(rej_ids, id_col, "semi")
     accepted = kept.join(rej_ids, id_col, "left_anti")
     if append:
         append_phash_index(
-            accepted, table_prefix, id_col, fp_col, bits,
-            band_bits, batch_id=batch_id,
+            accepted, table_prefix, id_col, fp_col, batch_id=batch_id
         )
     return MediaIngestResult(
         kept=kept, rejected=rejected, accepted=accepted, probe_pairs=pairs

@@ -197,9 +197,15 @@ def write_bucketed(
     joined — the sort-merge join reads matching buckets directly; with
     ``sort_cols`` the per-bucket sort is also pre-done.  This is the 100 TB
     answer for repeated fact⋈fact joins that broadcast can't handle.
+
+    The rows are first hash-partitioned on ``bucket_cols`` into
+    ``num_buckets`` partitions (the hash and modulus of the bucket id), so
+    each task writes exactly one bucket: one file per bucket, where a
+    write straight from the input tasks leaves one per task per bucket.
     """
     writer = (
-        df.write.mode("overwrite")
+        df.repartition(num_buckets, *bucket_cols)
+        .write.mode("overwrite")
         .format("parquet")
         .option("path", path)
         .bucketBy(num_buckets, *bucket_cols)

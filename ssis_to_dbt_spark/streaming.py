@@ -902,8 +902,6 @@ def write_stream_media_ingest(
     max_hamming: int = 2,
     id_col: str = "media_id",
     fp_col: str = "phash",
-    bits: int = 48,
-    band_bits: int = 12,
     max_bucket_size: int | None = 10_000,
     audit_every: int | None = None,
     audit_max_bucket_size: int = 10_000,
@@ -935,6 +933,7 @@ def write_stream_media_ingest(
     100 TB: every stage touches the 8-byte/image fingerprint relation;
     the index side of the probe reads matching buckets of the bucketed
     table with zero exchange."""
+    from . import blocks
     from .ingest import ingest_media_batch
     from .text.dedup import (
         append_phash_index,
@@ -949,42 +948,44 @@ def write_stream_media_ingest(
         )
 
     def handle(batch_fp: DataFrame, batch_id: int) -> None:
-        spark = batch_fp.sparkSession
-        bid = int(batch_id)
-        # cloned-session cache: see the crawl sink — without the refresh
-        # batch N probes an index missing batch N-1's acceptances
-        spark.catalog.refreshTable(f"{table_prefix}_phash")
-        if (
-            audit_every is not None
-            and bid > 0
-            and bid % int(audit_every) == 0
-        ):
-            over = phash_index_band_audit(
-                spark, table_prefix, audit_max_bucket_size,
-                tags_below=bid,
-            )
-            if over.take(1):
-                compact_phash_index(
-                    spark, table_prefix, compact_path_prefix,
-                    id_col=id_col, bits=bits, band_bits=band_bits,
-                    keep_tags_at_or_above=bid,
+        # the checkpoints a micro-batch makes (keep-one, its banding, the
+        # probe pairs) are consumed once its outputs and append are
+        # written: release them, or a long-lived stream piles them up
+        with blocks.released_on_exit():
+            spark = batch_fp.sparkSession
+            bid = int(batch_id)
+            # cloned-session cache: see the crawl sink — without the refresh
+            # batch N probes an index missing batch N-1's acceptances
+            spark.catalog.refreshTable(f"{table_prefix}_phash")
+            if (
+                audit_every is not None
+                and bid > 0
+                and bid % int(audit_every) == 0
+            ):
+                over = phash_index_band_audit(
+                    spark, table_prefix, audit_max_bucket_size,
+                    tags_below=bid,
                 )
-                spark.catalog.refreshTable(f"{table_prefix}_phash")
-        r = ingest_media_batch(
-            spark, batch_fp, table_prefix, max_hamming=max_hamming,
-            id_col=id_col, fp_col=fp_col, bits=bits,
-            band_bits=band_bits, max_bucket_size=max_bucket_size,
-            batch_id=bid, append=False,
-        )
-        for name, df in (("accepted", r.accepted),
-                         ("rejected", r.rejected)):
-            df.write.mode("overwrite").parquet(
-                f"{out_dir}/{name}/batch_id={bid}"
+                if over.take(1):
+                    compact_phash_index(
+                        spark, table_prefix, compact_path_prefix,
+                        id_col=id_col, keep_tags_at_or_above=bid,
+                    )
+                    spark.catalog.refreshTable(f"{table_prefix}_phash")
+            r = ingest_media_batch(
+                spark, batch_fp, table_prefix, max_hamming=max_hamming,
+                id_col=id_col, fp_col=fp_col, max_bucket_size=max_bucket_size,
+                batch_id=bid, append=False,
             )
-        append_phash_index(
-            r.accepted, table_prefix, id_col=id_col, fp_col=fp_col,
-            bits=bits, band_bits=band_bits, batch_id=bid,
-        )
+            for name, df in (("accepted", r.accepted),
+                             ("rejected", r.rejected)):
+                df.write.mode("overwrite").parquet(
+                    f"{out_dir}/{name}/batch_id={bid}"
+                )
+            append_phash_index(
+                r.accepted, table_prefix, id_col=id_col, fp_col=fp_col,
+                batch_id=bid,
+            )
 
     return (
         media_stream.writeStream.foreachBatch(handle)

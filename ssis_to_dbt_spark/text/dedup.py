@@ -31,6 +31,22 @@ from ..sources.writers import (
     write_bucketed,
 )
 
+# The shapes of the two persisted near-duplicate indexes.  Every write,
+# append, compaction and probe bands with these values, so an index is
+# always read with the shape it was written with.
+# MinHash (text): 8 md5 permutations over word 3-gram shingles, in 4
+# bands of 2 values (a pair of Jaccard s shares a band with probability
+# 1 - (1 - s^2)^4).
+MINHASH_NUM_HASHES = 8
+MINHASH_BANDS = 4
+MINHASH_SHINGLE_N = 3
+# pHash (image): one bit per cell of an 8 x 6 gray grid, 48 bits (the
+# value stays positive in a signed 64-bit column), in 12-bit bands.
+PHASH_GRID_W = 8
+PHASH_GRID_H = 6
+PHASH_BITS = PHASH_GRID_W * PHASH_GRID_H
+PHASH_BAND_BITS = 12
+
 
 def _cap_band_members(
     banded: DataFrame,
@@ -254,8 +270,6 @@ def minhash_candidates(
 def minhash_signatures_md5(
     df: DataFrame,
     text_col: str = "text",
-    num_hashes: int = 8,
-    shingle_n: int = 3,
     id_col: str = "doc_id",
 ) -> DataFrame:
     """Portable minhash: permutation ``i`` hashes a shingle as
@@ -271,16 +285,17 @@ def minhash_signatures_md5(
     is the production hot path — same plan shape, ~4x cheaper hash.
     """
     sh = df.select(
-        F.col(id_col), F.explode(shingle(F.col(text_col), shingle_n)).alias("_sh")
+        F.col(id_col),
+        F.explode(shingle(F.col(text_col), MINHASH_SHINGLE_N)).alias("_sh"),
     )
     # SQL-text aggregates (r14 perf): identical trees (string-literal
     # permutation prefix, same concat_ws/md5 arguments), one parse each
     aggs = [
         F.expr(f"min(md5(concat_ws(':', '{i}', _sh))) AS _h{i}")
-        for i in range(num_hashes)
+        for i in range(MINHASH_NUM_HASHES)
     ]
     sigs = sh.groupBy(id_col).agg(*aggs)
-    arr = ", ".join(f"_h{i}" for i in range(num_hashes))
+    arr = ", ".join(f"_h{i}" for i in range(MINHASH_NUM_HASHES))
     return sigs.selectExpr(
         f"`{id_col}`", f"array({arr}) AS minhash"
     )
@@ -289,8 +304,6 @@ def minhash_signatures_md5(
 def minhash_signatures_md5_arrow(
     df: DataFrame,
     text_col: str = "text",
-    num_hashes: int = 8,
-    shingle_n: int = 3,
     id_col: str = "doc_id",
 ) -> DataFrame:
     """Arrow (``mapInPandas``) twin of :func:`minhash_signatures_md5` —
@@ -319,7 +332,7 @@ def minhash_signatures_md5_arrow(
     from pyspark.sql import types as T
 
     ws = _re.compile(r"\s+", _re.ASCII)
-    n = int(shingle_n)
+    n = MINHASH_SHINGLE_N
     id_field = df.schema[id_col]
     schema = T.StructType(
         [
@@ -328,7 +341,7 @@ def minhash_signatures_md5_arrow(
         ]
     )
     pre = df.select(F.col(id_col), F.col(text_col).alias("_txt"))
-    prefixes = [f"{i}:".encode() for i in range(num_hashes)]
+    prefixes = [f"{i}:".encode() for i in range(MINHASH_NUM_HASHES)]
 
     def gen(batches):
         import pandas as pd
@@ -364,9 +377,6 @@ def minhash_candidates_md5(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    num_hashes: int = 8,
-    bands: int = 4,
-    shingle_n: int = 3,
     max_bucket_size: int | None = 10_000,
 ) -> DataFrame:
     """MinHash+LSH candidate pairs on the portable md5 signatures — same
@@ -375,31 +385,15 @@ def minhash_candidates_md5(
     on any engine with md5.  The signatures come from the Arrow kernel
     :func:`minhash_signatures_md5_arrow`; the expression form
     :func:`minhash_signatures_md5` is its test reference (bit-identical,
-    pytest-pinned)."""
-    rows = num_hashes // bands
+    pytest-pinned).  Bands as the dedup index does
+    (:func:`_band_signature_table`)."""
     # Three consumers (banding + both signature re-attachments): materialize
     # the signature table once instead of re-running the signature kernel
     # from the corpus scan for each (same as the xxhash64 path).
-    sigs = minhash_signatures_md5_arrow(
-        df, text_col, num_hashes, shingle_n, id_col
-    ).localCheckpoint(eager=False)
-    banded = sigs.select(
-        id_col,
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda b: F.struct(
-                    b.alias("band_idx"),
-                    F.md5(
-                        F.concat_ws("|", F.slice("minhash", b * rows + 1, rows))
-                    ).alias("band_hash"),
-                ),
-            )
-        ).alias("band"),
-    ).select(id_col, "band.band_idx", "band.band_hash")
-    banded = _cap_band_members(
-        banded, id_col, ["band_idx", "band_hash"], max_bucket_size
+    sigs = minhash_signatures_md5_arrow(df, text_col, id_col).localCheckpoint(
+        eager=False
     )
+    banded = _band_signature_table(sigs, id_col, max_bucket_size)
     left = banded.select("band_idx", "band_hash", F.col(id_col).alias("doc_a"))
     right = banded.select("band_idx", "band_hash", F.col(id_col).alias("doc_b"))
     pairs = (
@@ -411,13 +405,19 @@ def minhash_candidates_md5(
     sig_a = sigs.select(F.col(id_col).alias("doc_a"), F.col("minhash").alias("sig_a"))
     sig_b = sigs.select(F.col(id_col).alias("doc_b"), F.col("minhash").alias("sig_b"))
     paired = pairs.join(sig_a, "doc_a").join(sig_b, "doc_b")
-    est = (
+    return paired.select("doc_a", "doc_b", _est_jaccard().alias("est_jaccard"))
+
+
+def _est_jaccard() -> Column:
+    """The fraction of equal components of the signature columns
+    ``sig_a`` and ``sig_b``: a multiple of ``1 / MINHASH_NUM_HASHES``,
+    so exact in a double."""
+    return (
         F.size(
             F.filter(F.zip_with("sig_a", "sig_b", lambda a, b: a == b), lambda m: m)
         ).cast("double")
-        / F.lit(float(num_hashes))
+        / F.lit(float(MINHASH_NUM_HASHES))
     )
-    return paired.select("doc_a", "doc_b", est.alias("est_jaccard"))
 
 
 def _md5_long(col: Column) -> Column:
@@ -601,8 +601,9 @@ def hamming_candidates(
     fp_df: DataFrame,
     id_col: str = "doc_id",
     fp_col: str = "simhash",
-    bits: int = 48,
-    band_bits: int = 12,
+    *,
+    bits: int,
+    band_bits: int,
     max_bucket_size: int | None = 10_000,
     out_a: str = "doc_a",
     out_b: str = "doc_b",
@@ -645,8 +646,6 @@ def phash_candidates(
     fp_df: DataFrame,
     id_col: str = "media_id",
     fp_col: str = "phash",
-    bits: int = 48,
-    band_bits: int = 12,
     max_bucket_size: int | None = 10_000,
 ) -> DataFrame:
     """Perceptual-hash image near-dup candidates (r13, r12 VERDICT #5):
@@ -658,8 +657,8 @@ def phash_candidates(
     hamming_distance)``.  100 TB: blocking touches only the
     1-row-per-image hash relation; per-band buckets are skew-capped."""
     return hamming_candidates(
-        fp_df, id_col=id_col, fp_col=fp_col, bits=bits,
-        band_bits=band_bits, max_bucket_size=max_bucket_size,
+        fp_df, id_col=id_col, fp_col=fp_col, bits=PHASH_BITS,
+        band_bits=PHASH_BAND_BITS, max_bucket_size=max_bucket_size,
         out_a="media_a", out_b="media_b",
     )
 
@@ -679,17 +678,17 @@ def phash_candidates(
 # ---------------------------------------------------------------------------
 
 # Stored bytes per band row (snappy parquet, one bucket), measured on
-# written indexes of random 48-bit fingerprints in 12-bit bands: 13.1 at
-# 100,000 images (400,000 rows, 5,233,048 bytes), 12.6 at 1,000,000
-# images (50,407,303 bytes).
+# written indexes of random fingerprints: 13.1 at 100,000 images
+# (400,000 rows, 5,233,048 bytes), 12.6 at 1,000,000 images (50,407,303
+# bytes).
 _PHASH_ROW_BYTES = 13
 
 
-def _write_phash_table(banded, fps, n_bands: int, table: str, path: str):
+def _write_phash_table(banded, fps, table: str, path: str):
     """Write ``banded`` as the bucketed index table, its bucket count
     sized by the row count of ``fps`` (its lazily checkpointed
     fingerprints, materialized here in one job and released after)."""
-    n_rows = blocks.materialize(fps) * n_bands
+    n_rows = blocks.materialize(fps) * (PHASH_BITS // PHASH_BAND_BITS)
     write_bucketed(
         banded, table, path, ["band_idx", "band_val"],
         bucket_count(fps.sparkSession, n_rows * _PHASH_ROW_BYTES),
@@ -704,8 +703,6 @@ def write_phash_index(
     path_prefix: str,
     id_col: str = "media_id",
     fp_col: str = "phash",
-    bits: int = 48,
-    band_bits: int = 12,
 ) -> str:
     """Persist an image-fingerprint dedup index as a bucketed table (the
     text twin is :func:`write_corpus_dedup_index`).  Against the bucketed
@@ -717,16 +714,15 @@ def write_phash_index(
 
     The bucket count is sized by counting the fingerprints
     (:func:`~ssis_to_dbt_spark.sources.writers.bucket_count`).  100 TB:
-    the table is ``n_bands`` rows x ~13 bytes per image — at 10^9 images
-    and 4 bands that is ~52 GB of index in 512 buckets for petabytes of
-    media, and probes touch only the batch's band buckets."""
+    the table is ``PHASH_BITS // PHASH_BAND_BITS`` rows x ~13 bytes per
+    image — at 10^9 images that is ~52 GB of index in 512 buckets for
+    petabytes of media, and probes touch only the batch's band buckets."""
     fps = fp_df.select(id_col, fp_col).localCheckpoint(eager=False)
     _write_phash_table(
         _hamming_banded(
-            fps, id_col, fp_col, bits, band_bits, max_bucket_size=None
+            fps, id_col, fp_col, PHASH_BITS, PHASH_BAND_BITS, None
         ).select("*", F.lit(-1).cast("long").alias("_ib")),
-        fps, bits // band_bits, f"{table_prefix}_phash",
-        f"{path_prefix}_phash",
+        fps, f"{table_prefix}_phash", f"{path_prefix}_phash",
     )
     return f"{table_prefix}_phash"
 
@@ -769,8 +765,6 @@ def append_phash_index(
     table_prefix: str,
     id_col: str = "media_id",
     fp_col: str = "phash",
-    bits: int = 48,
-    band_bits: int = 12,
     batch_id: int | None = None,
     new_bands: DataFrame | None = None,
 ) -> None:
@@ -794,7 +788,7 @@ def append_phash_index(
         new_bands
         if new_bands is not None
         else _hamming_banded(
-            batch_fp, id_col, fp_col, bits, band_bits, max_bucket_size=None
+            batch_fp, id_col, fp_col, PHASH_BITS, PHASH_BAND_BITS, None
         )
     )
     insert_into(
@@ -832,8 +826,6 @@ def compact_phash_index(
     table_prefix: str,
     path_prefix: str,
     id_col: str = "media_id",
-    bits: int = 48,
-    band_bits: int = 12,
     cleanup: bool = True,
     keep_tags_at_or_above: int | None = None,
 ) -> None:
@@ -866,15 +858,14 @@ def compact_phash_index(
         .localCheckpoint(eager=False)
     )
     banded = _hamming_banded(
-        fps, id_col, "_fp", bits, band_bits, max_bucket_size=None
+        fps, id_col, "_fp", PHASH_BITS, PHASH_BAND_BITS, None
     ).join(fps.select(id_col, "_ib"), id_col)
     if pass_rows is not None:
         banded = banded.unionByName(pass_rows.select(*banded.columns))
     k = _next_compact_version(spark, path_prefix, ("phash",))
     stage = f"{table_prefix}_phash_cstage"
     _write_phash_table(
-        banded, fps, bits // band_bits, stage,
-        f"{path_prefix}_phash_compact_v{k}",
+        banded, fps, stage, f"{path_prefix}_phash_compact_v{k}"
     )
     _swap_in(spark, stage, table, cleanup)
 
@@ -886,8 +877,6 @@ def phash_probe_index(
     max_hamming: int = 2,
     id_col: str = "media_id",
     fp_col: str = "phash",
-    bits: int = 48,
-    band_bits: int = 12,
     max_bucket_size: int | None = 10_000,
     exclude_tag: int | None = None,
 ) -> DataFrame:
@@ -906,7 +895,8 @@ def phash_probe_index(
         idx.drop("_ib"), id_col, ["band_idx", "band_val"], max_bucket_size
     )
     probe = _hamming_banded(
-        batch_fp, id_col, fp_col, bits, band_bits, max_bucket_size
+        batch_fp, id_col, fp_col, PHASH_BITS, PHASH_BAND_BITS,
+        max_bucket_size,
     )
     left = probe.select(
         "band_idx", "band_val",
@@ -934,8 +924,6 @@ def phash_keep_one(
     id_col: str = "media_id",
     fp_col: str = "phash",
     max_hamming: int = 2,
-    bits: int = 48,
-    band_bits: int = 12,
     max_bucket_size: int | None = 10_000,
 ) -> DataFrame:
     """Within-batch keep-one: cluster the batch's Hamming-``<=t`` pairs
@@ -945,8 +933,8 @@ def phash_keep_one(
     filtered to survivors (NULL-fingerprint rows pass through: a
     quarantined decode is not a duplicate of anything)."""
     cand = hamming_candidates(
-        fp_df, id_col=id_col, fp_col=fp_col, bits=bits,
-        band_bits=band_bits, max_bucket_size=max_bucket_size,
+        fp_df, id_col=id_col, fp_col=fp_col, bits=PHASH_BITS,
+        band_bits=PHASH_BAND_BITS, max_bucket_size=max_bucket_size,
         out_a="_a", out_b="_b",
     ).filter(F.col("hamming_distance") <= int(max_hamming))
     comp = connected_components(cand, "_a", "_b")
@@ -1745,9 +1733,6 @@ def corpus_dedup_index(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    num_hashes: int = 8,
-    bands: int = 4,
-    shingle_n: int = 3,
     max_bucket_size: int | None = 10_000,
     checkpoint_sigs: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
@@ -1766,21 +1751,15 @@ def corpus_dedup_index(
     lineage re-runs the minhash on materialization (profiled: the crawl
     suite paid the pass twice per index build).  Values are unchanged;
     in-process sessions only (localCheckpoint)."""
-    sigs = minhash_signatures_md5_arrow(
-        df, text_col, num_hashes, shingle_n, id_col
-    )
+    sigs = minhash_signatures_md5_arrow(df, text_col, id_col)
     if checkpoint_sigs:
         sigs = sigs.localCheckpoint(eager=False)
-    return sigs, _band_signature_table(
-        sigs, id_col, num_hashes, bands, max_bucket_size
-    )
+    return sigs, _band_signature_table(sigs, id_col, max_bucket_size)
 
 
 def _band_signature_table(
     sigs: DataFrame,
     id_col: str,
-    num_hashes: int,
-    bands: int,
     max_bucket_size: int | None,
     carry_cols: list[str] | None = None,
 ) -> DataFrame:
@@ -1791,14 +1770,14 @@ def _band_signature_table(
     stored signatures without ever re-scanning corpus text.
     ``carry_cols`` pass through per-row metadata (the ``_ib`` batch tag
     during compaction) without a re-attach join."""
-    rows = num_hashes // bands
+    rows = MINHASH_NUM_HASHES // MINHASH_BANDS
     carry = list(carry_cols or [])
     banded = sigs.select(
         id_col,
         *carry,
         F.explode(
             F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
+                F.sequence(F.lit(0), F.lit(MINHASH_BANDS - 1)),
                 lambda b: F.struct(
                     b.alias("band_idx"),
                     F.md5(
@@ -1819,10 +1798,10 @@ def _band_signature_table(
 # bucket), measured on written indexes: a band row (id, band_idx, 32-hex
 # band_hash, _ib) is 35.1 B over the sf0.01 documents (2,000 rows,
 # 70,271 bytes) and 34.5 B over sf0.1 (20,000 rows, 690,189 bytes); a
-# signature row per minhash value (8 string values per row) is 27.5 B
-# over sf0.01 (500 rows, 110,000 bytes) and 13.4 B over sf0.1, whose
-# near-duplicate families share values.  The larger figure is the one
-# for distinct documents.
+# signature row per minhash value (MINHASH_NUM_HASHES string values a
+# row) is 27.5 B over sf0.01 (500 rows, 110,000 bytes) and 13.4 B over
+# sf0.1, whose near-duplicate families share values.  The larger figure
+# is the one for distinct documents.
 _BAND_ROW_BYTES = 35
 _SIG_BYTES_PER_HASH = 27.5
 
@@ -1835,16 +1814,16 @@ def _write_dedup_tables(
     path_prefix: str,
     path_suffix: str,
     id_col: str,
-    num_hashes: int,
-    bands: int,
 ) -> None:
     """Write ``{table_prefix}_{bands|sigs}`` at
     ``{path_prefix}_{bands|sigs}{path_suffix}``, each bucket count sized
-    for ``n_docs`` documents (at most ``n_docs * bands`` band rows)."""
+    for ``n_docs`` documents (at most ``n_docs * MINHASH_BANDS`` band
+    rows)."""
     spark = sigs.sparkSession
     for rows, sfx, keys, row_bytes in (
-        (banded, "bands", ["band_idx", "band_hash"], bands * _BAND_ROW_BYTES),
-        (sigs, "sigs", [id_col], num_hashes * _SIG_BYTES_PER_HASH),
+        (banded, "bands", ["band_idx", "band_hash"],
+         MINHASH_BANDS * _BAND_ROW_BYTES),
+        (sigs, "sigs", [id_col], MINHASH_NUM_HASHES * _SIG_BYTES_PER_HASH),
     ):
         write_bucketed(
             rows, f"{table_prefix}_{sfx}", f"{path_prefix}_{sfx}{path_suffix}",
@@ -1858,9 +1837,6 @@ def write_corpus_dedup_index(
     path_prefix: str,
     id_col: str = "doc_id",
     text_col: str = "text",
-    num_hashes: int = 8,
-    bands: int = 4,
-    shingle_n: int = 3,
     max_bucket_size: int | None = 10_000,
 ) -> tuple[str, str]:
     """Persist the corpus dedup index as BUCKETED tables (SURVEY §7 scale
@@ -1887,14 +1863,12 @@ def write_corpus_dedup_index(
     with its tag already exist.  :func:`read_corpus_dedup_index` drops
     the tag by default, so non-streaming consumers never see it."""
     sigs, banded = corpus_dedup_index(
-        corpus_df, id_col, text_col, num_hashes, bands, shingle_n,
-        max_bucket_size, checkpoint_sigs=True,
+        corpus_df, id_col, text_col, max_bucket_size, checkpoint_sigs=True
     )
     tag = F.lit(-1).cast("long").alias("_ib")
     _write_dedup_tables(
         banded.select("*", tag), sigs.select("*", tag),
         blocks.materialize(sigs), table_prefix, path_prefix, "", id_col,
-        num_hashes, bands,
     )
     blocks.release(sigs)
     return f"{table_prefix}_sigs", f"{table_prefix}_bands"
@@ -1971,9 +1945,6 @@ def append_corpus_dedup_index(
     table_prefix: str,
     id_col: str = "doc_id",
     text_col: str = "text",
-    num_hashes: int = 8,
-    bands: int = 4,
-    shingle_n: int = 3,
     max_bucket_size: int | None = 10_000,
     batch_id: int | None = None,
     new_index: tuple[DataFrame, DataFrame] | None = None,
@@ -1983,8 +1954,7 @@ def append_corpus_dedup_index(
     bucketed tables — linear in NEW bytes, never a corpus rebuild.  The
     rows are matched to each table's columns by name and keep its bucket
     spec (``writers.insert_into``), so subsequent batch joins keep their
-    zero-corpus-exchange plan.  The minhash parameters must match the
-    original :func:`write_corpus_dedup_index` call.
+    zero-corpus-exchange plan.
 
     Note on the band cap: ``_cap_band_members`` caps per-band membership
     WITHIN the appended batch only — a band bucket can exceed the cap
@@ -2011,8 +1981,7 @@ def append_corpus_dedup_index(
         sigs, banded = new_index
     else:
         sigs, banded = corpus_dedup_index(
-            batch_df, id_col, text_col, num_hashes, bands, shingle_n,
-            max_bucket_size,
+            batch_df, id_col, text_col, max_bucket_size
         )
     tag_val = -1 if batch_id is None else int(batch_id)
     tag = F.lit(tag_val).cast("long").alias("_ib")
@@ -2069,8 +2038,6 @@ def compact_corpus_dedup_index(
     table_prefix: str,
     path_prefix: str,
     id_col: str = "doc_id",
-    num_hashes: int = 8,
-    bands: int = 4,
     max_bucket_size: int | None = 10_000,
     cleanup: bool = True,
     keep_tags_at_or_above: int | None = None,
@@ -2088,8 +2055,7 @@ def compact_corpus_dedup_index(
     the cap GLOBALLY (restoring the per-probe fan-out bound the
     per-append cap lets erode), and rewrite both bucketed tables via a
     staging-table swap.  Cost: linear in the signature table (id +
-    ``num_hashes`` values — a small fraction of corpus bytes); parameters
-    must match the original :func:`write_corpus_dedup_index` call.
+    ``MINHASH_NUM_HASHES`` values — a small fraction of corpus bytes).
     Counting the deduped signatures re-sizes both bucket counts
     (pass-through rows, one batch's, are not counted).
 
@@ -2129,8 +2095,7 @@ def compact_corpus_dedup_index(
     n_docs = blocks.materialize(core)
     sigs = core
     banded = _band_signature_table(
-        core, id_col, num_hashes, bands, max_bucket_size,
-        carry_cols=["_ib"],
+        core, id_col, max_bucket_size, carry_cols=["_ib"]
     )
     if pass_sigs is not None:
         sigs = core.unionByName(pass_sigs)
@@ -2138,8 +2103,7 @@ def compact_corpus_dedup_index(
     k = _next_compact_version(spark, path_prefix, ("bands", "sigs"))
     stage = f"{table_prefix}_compact_stage"
     _write_dedup_tables(
-        banded, sigs, n_docs, stage, path_prefix, f"_compact_v{k}", id_col,
-        num_hashes, bands,
+        banded, sigs, n_docs, stage, path_prefix, f"_compact_v{k}", id_col
     )
     blocks.release(core)
     for suffix in ("bands", "sigs"):
@@ -2153,9 +2117,6 @@ def cross_corpus_candidates(
     corpus_df: DataFrame | None = None,
     id_col: str = "doc_id",
     text_col: str = "text",
-    num_hashes: int = 8,
-    bands: int = 4,
-    shingle_n: int = 3,
     max_bucket_size: int | None = 10_000,
     corpus_index: tuple[DataFrame, DataFrame] | None = None,
     broadcast_batch: bool = True,
@@ -2193,15 +2154,14 @@ def cross_corpus_candidates(
         sig_new, band_new = new_index
     else:
         sig_new, band_new = corpus_dedup_index(
-            new_df, id_col, text_col, num_hashes, bands, shingle_n,
-            max_bucket_size, checkpoint_sigs=True,
+            new_df, id_col, text_col, max_bucket_size, checkpoint_sigs=True
         )
     if corpus_index is not None:
         sig_corpus, band_corpus = corpus_index
     else:
         sig_corpus, band_corpus = corpus_dedup_index(
-            corpus_df, id_col, text_col, num_hashes, bands, shingle_n,
-            max_bucket_size, checkpoint_sigs=True,
+            corpus_df, id_col, text_col, max_bucket_size,
+            checkpoint_sigs=True,
         )
     # Pin the batch side as the broadcast build side: a batch is tiny
     # relative to the corpus BY CONSTRUCTION, so the plan must not depend
@@ -2234,14 +2194,6 @@ def cross_corpus_candidates(
     sb = sig_corpus.select(
         F.col(id_col).alias("corpus_id"), F.col("minhash").alias("sig_b")
     )
-    est = (
-        F.size(
-            F.filter(
-                F.zip_with("sig_a", "sig_b", lambda a, b: a == b), lambda m: m
-            )
-        ).cast("double")
-        / F.lit(float(num_hashes))
-    )
     # pairs and (pairs x batch sigs) are both pair/batch-sized — broadcast
     # them so the corpus signature table is probed map-side, never shuffled;
     # on the backfill path both stay plain shuffle joins.
@@ -2252,5 +2204,5 @@ def cross_corpus_candidates(
     return (
         pair_sigs
         .join(sb, "corpus_id")
-        .select("new_id", "corpus_id", est.alias("est_jaccard"))
+        .select("new_id", "corpus_id", _est_jaccard().alias("est_jaccard"))
     )

@@ -29,6 +29,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .dedup import PHASH_GRID_H, PHASH_GRID_W
+
 MEDIA_METADATA = T.StructType(
     [
         T.StructField("modality", T.StringType()),    # image | audio | video
@@ -884,34 +886,37 @@ def _gray_grid(data: bytes, dst_w: int, dst_h: int) -> list[list[int]]:
     ]
 
 
-def dhash_image(data: bytes, hash_w: int = 8, hash_h: int = 6) -> int:
-    """Difference hash: resize to (hash_w+1) x hash_h gray, bit
-    ``y*hash_w + x`` set iff ``gray[y][x] > gray[y][x+1]`` — the
-    horizontal-gradient signature (Krawetz's dHash).  Default 48 bits
-    (8x6), matching the text SimHash width so the Hamming-band blocking
-    composes unchanged and the value stays positive in a signed 64-bit
-    column on every engine."""
-    g = _gray_grid(data, hash_w + 1, hash_h)
+def dhash_image(data: bytes) -> int:
+    """Difference hash: resize to (w+1) x h gray, bit ``y*w + x`` set iff
+    ``gray[y][x] > gray[y][x+1]`` — the horizontal-gradient signature
+    (Krawetz's dHash).  The w x h grid is the pHash index's
+    (``dedup.PHASH_GRID_W`` x ``dedup.PHASH_GRID_H``), whose
+    ``PHASH_BITS`` match the text SimHash width, so the Hamming-band
+    blocking composes unchanged and the value stays positive in a signed
+    64-bit column on every engine."""
+    w, h = PHASH_GRID_W, PHASH_GRID_H
+    g = _gray_grid(data, w + 1, h)
     v = 0
-    for y in range(hash_h):
-        for x in range(hash_w):
+    for y in range(h):
+        for x in range(w):
             if g[y][x] > g[y][x + 1]:
-                v |= 1 << (y * hash_w + x)
+                v |= 1 << (y * w + x)
     return v
 
 
-def ahash_image(data: bytes, hash_w: int = 8, hash_h: int = 6) -> int:
-    """Average hash: resize to hash_w x hash_h gray, bit set iff the
-    pixel exceeds the FLOOR-integer mean — exact arithmetic end to end
-    (no float mean), so the hash is engine-portable."""
-    g = _gray_grid(data, hash_w, hash_h)
+def ahash_image(data: bytes) -> int:
+    """Average hash: resize to the pHash grid (w x h) in gray, bit set iff
+    the pixel exceeds the FLOOR-integer mean — exact arithmetic end to
+    end (no float mean), so the hash is engine-portable."""
+    w, h = PHASH_GRID_W, PHASH_GRID_H
+    g = _gray_grid(data, w, h)
     total = sum(v for row in g for v in row)
-    mean = total // (hash_w * hash_h)
+    mean = total // (w * h)
     v = 0
-    for y in range(hash_h):
-        for x in range(hash_w):
+    for y in range(h):
+        for x in range(w):
             if g[y][x] > mean:
-                v |= 1 << (y * hash_w + x)
+                v |= 1 << (y * w + x)
     return v
 
 
@@ -920,8 +925,6 @@ def image_phash(
     id_col: str = "media_id",
     content_col: str = "content",
     method: str = "dhash",
-    hash_w: int = 8,
-    hash_h: int = 6,
 ) -> DataFrame:
     """Perceptual hash per image as an Arrow-batched map
     (``mapInPandas`` — binary decode is genuinely per-row Python; no
@@ -943,9 +946,7 @@ def image_phash(
             hashes, errs = [], []
             for raw in pdf[content_col]:
                 try:
-                    hashes.append(
-                        fn(bytes(raw), hash_w=hash_w, hash_h=hash_h)
-                    )
+                    hashes.append(fn(bytes(raw)))
                     errs.append(None)
                 except (ValueError, IndexError) as exc:
                     hashes.append(None)

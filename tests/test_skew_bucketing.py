@@ -459,7 +459,7 @@ class TestAppendCorpusDedupIndex:
             )
             new_bands = _hamming_banded(
                 fps.filter(F.col("media_id") >= 20), "media_id", "phash",
-                48, 12, None,
+                dedup.PHASH_BITS, dedup.PHASH_BAND_BITS, None,
             )
             append_phash_index(
                 fps, "bn_ph", batch_id=1, new_bands=new_bands.select(
@@ -943,7 +943,7 @@ class TestCompactionSwapSelfHeal:
         sigs = spark.table(f"{prefix}_sigs")
         if "bands" in suffixes:
             banded = _band_signature_table(
-                sigs.drop("_ib"), "doc_id", 8, 4, 10_000
+                sigs.drop("_ib"), "doc_id", 10_000
             ).join(sigs.select("doc_id", "_ib"), "doc_id")
             write_bucketed(
                 banded, f"{prefix}_compact_stage_bands",
@@ -1400,6 +1400,27 @@ class TestPhashIndexLifecycle:
         for t in (f"{prefix}_phash", f"{prefix}_phash_cstage"):
             spark.sql(f"DROP TABLE IF EXISTS {t}")
 
+    def test_one_bucket_write_leaves_one_file(self, spark, tmp_path):
+        """A bucketed write repartitions by its bucket columns first, so
+        a 1-bucket index written from 4 input partitions is 1 file, not
+        one per input task."""
+        from ssis_to_dbt_spark.text.dedup import write_phash_index
+
+        fps = spark.range(0, 1000, 1, 4).select(
+            F.col("id").alias("media_id"),
+            F.xxhash64("id").bitwiseAND(F.lit((1 << 48) - 1)).alias("phash"),
+        )
+        try:
+            write_phash_index(fps, "ph_1f", str(tmp_path / "ph_1f"))
+            assert num_buckets(spark, "ph_1f_phash") == 1
+            parts = [
+                f for f in os.listdir(tmp_path / "ph_1f_phash")
+                if f.startswith("part-")
+            ]
+            assert len(parts) == 1
+        finally:
+            self._drop(spark, "ph_1f")
+
     def test_probe_corpus_side_no_exchange(
         self, spark, tmp_path, monkeypatch
     ):
@@ -1587,7 +1608,8 @@ class TestPhashIndexLifecycle:
             # (A) stage present, live present -> rollback
             stage_rows = _hamming_banded(
                 self._fp(spark, [(3, 0x333333333333)]),
-                "media_id", "phash", 48, 12, None,
+                "media_id", "phash", dedup.PHASH_BITS,
+                dedup.PHASH_BAND_BITS, None,
             ).select("*", F.lit(-1).cast("long").alias("_ib"))
             write_bucketed(
                 stage_rows, "ph_hl_phash_cstage",

@@ -1852,3 +1852,34 @@ class TestStreamingMediaIngest:
         finally:
             for t in (f"{prefix}_phash", f"{prefix}_phash_cstage"):
                 spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+    def test_micro_batches_release_their_checkpoints(
+        self, spark, tmp_path
+    ):
+        """Each micro-batch's checkpoints (keep-one, its banding, the
+        probe pairs) are released once it has written its outputs and
+        appended: three micro-batches leave no persistent RDD behind."""
+        from ssis_to_dbt_spark.text.dedup import write_phash_index
+
+        prefix = "smi_rel"
+        src = str(tmp_path / "src")
+        out = str(tmp_path / "out")
+        ckpt = str(tmp_path / "ckpt")
+        jsc = spark.sparkContext._jsc
+        seed = spark.createDataFrame(
+            [(1, 0x111111111111)], "media_id long, phash long"
+        )
+        try:
+            write_phash_index(seed, prefix, str(tmp_path / "idx"))
+            before = jsc.getPersistentRDDs().size()
+            for b in range(3):
+                self._write_batch(spark, src, [
+                    (10 * b + 11, 0x111111111111 + b),
+                    (10 * b + 12, 0x222222222222 << b),
+                ])
+                self._run(spark, src, prefix, out, ckpt)
+            assert len(spark.read.parquet(f"{out}/accepted").collect()) == 3
+            assert jsc.getPersistentRDDs().size() == before
+        finally:
+            for t in (f"{prefix}_phash", f"{prefix}_phash_cstage"):
+                spark.sql(f"DROP TABLE IF EXISTS {t}")

@@ -2007,6 +2007,44 @@ class TestFarthestPointSeeds:
             kmeans_fit(df, k=1, seeding="random")
 
 
+def test_index_shapes_are_not_options():
+    """The MinHash and pHash index shapes are the ``dedup`` module
+    constants: no write, append, compaction, probe or hashing function
+    takes a shape parameter a caller could set differently."""
+    import inspect
+
+    from ssis_to_dbt_spark import ingest, streaming
+    from ssis_to_dbt_spark.text import dedup, multimodal
+
+    fns = [
+        dedup.minhash_signatures_md5,
+        dedup.minhash_signatures_md5_arrow,
+        dedup.minhash_candidates_md5,
+        dedup.corpus_dedup_index,
+        dedup.write_corpus_dedup_index,
+        dedup.append_corpus_dedup_index,
+        dedup.cross_corpus_candidates,
+        dedup.compact_corpus_dedup_index,
+        dedup.write_phash_index,
+        dedup.append_phash_index,
+        dedup.compact_phash_index,
+        dedup.phash_probe_index,
+        dedup.phash_keep_one,
+        dedup.phash_candidates,
+        ingest.ingest_media_batch,
+        streaming.write_stream_media_ingest,
+        multimodal.image_phash,
+        multimodal.dhash_image,
+        multimodal.ahash_image,
+    ]
+    shape = {
+        "num_hashes", "bands", "shingle_n", "bits", "band_bits",
+        "hash_w", "hash_h",
+    }
+    for fn in fns:
+        assert not shape & set(inspect.signature(fn).parameters), fn.__name__
+
+
 class TestBandCapAdversarial:
     """Round-7 stress test: the band cap's bound must hold END-TO-END under
     the adversarial input it exists for — thousands of copies of one
@@ -2027,9 +2065,7 @@ class TestBandCapAdversarial:
         df = spark.createDataFrame(rows, "doc_id long, text string")
 
         t0 = time.time()
-        pairs = minhash_candidates_md5(
-            df, num_hashes=8, bands=4, max_bucket_size=cap
-        ).collect()
+        pairs = minhash_candidates_md5(df, max_bucket_size=cap).collect()
         dt = time.time() - t0
         # bound: every duplicate band bucket truncates to cap members ->
         # <= cap*(cap-1)/2 distinct pairs per bucket; all 4 bands hold the
@@ -2727,9 +2763,7 @@ class TestPruneClustersSizeAware:
         docs = spark.read.parquet(
             "/root/testdata/sf0.001/documents.parquet"
         ).select("doc_id", "text", "n_chars")
-        pairs = minhash_candidates_md5(
-            docs, num_hashes=8, bands=4
-        ).localCheckpoint()
+        pairs = minhash_candidates_md5(docs).localCheckpoint()
         small = prune_clusters(docs, pairs)
         monkeypatch.setattr(dedup, "PRUNE_BROADCAST_MAX_IDS", 0)
         large = prune_clusters(docs, pairs)
